@@ -25,6 +25,23 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object Metrics {
 
+  /** The JVM's compile counters: Janino compilations of Spark-generated
+    * classes (misses of Spark's compiled-class cache) and the HotSpot
+    * JIT's accumulated compile time in ms. Take one before and one after
+    * a region; the difference is the region's fixed compile cost.
+    */
+  final case class CompileCounters(codegenCompiles: Long, jitMs: Long) {
+    def -(o: CompileCounters): CompileCounters =
+      CompileCounters(codegenCompiles - o.codegenCompiles, jitMs - o.jitMs)
+  }
+
+  def compileCounters(): CompileCounters = CompileCounters(
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount,
+    Option(java.lang.management.ManagementFactory.getCompilationMXBean)
+      .filter(_.isCompilationTimeMonitoringSupported)
+      .map(_.getTotalCompilationTime).getOrElse(0L))
+
   final case class BatchProgress(
       query: String,
       batchId: Long,
@@ -170,16 +187,6 @@ object Metrics {
                          nCentroids: Int, asOfMs: Long): DataFrame =
     searchFreshness(spark, graft.ext.Similarity.ivfCellsTable(dir,
       graft.ext.Similarity.ivfKey(nQueries, nCentroids, 2, 3,
-        graft.ext.Similarity.defaultIvfSampleCap)), asOfMs)
-
-  /** [[searchFreshness]] of the standing PQ codes table at the default
-    * build shape — what [[StreamingSimilarity.startPqSearchStream]]
-    * probes.
-    */
-  def pqSearchFreshness(spark: SparkSession, dir: String, nQueries: Int,
-                        asOfMs: Long): DataFrame =
-    searchFreshness(spark, graft.ext.Pq.pqCodesTable(dir,
-      graft.ext.Pq.pqKey(nQueries, 8, 16, 2, 3,
         graft.ext.Similarity.defaultIvfSampleCap)), asOfMs)
 
   /** [[searchFreshness]] of the three standing compression-rung tables

@@ -78,12 +78,42 @@ object Pipeline {
     def checkpoint(name: String): String = s"$baseDir/checkpoints/$name"
   }
 
-  /** Session configs mirroring the reference's state-store tuning. */
+  /** Session configs for the chain: the reference's state-store tuning
+    * plus a codegen cache sized for three concurrent micro-batch plans.
+    *
+    * `spark.sql.codegen.cache.maxEntries` (a static conf — it must be set
+    * before the session exists): every batch re-plans each stage's sink
+    * and looks its generated classes up in Spark's compiled-class cache,
+    * keyed by source text. The chain's sinks carry no per-batch literal
+    * ([[batchClockSeconds]], the path-addressed sink directories), so a
+    * steady batch's sources are all hits — but only if they fit. The
+    * cache is shared with the serve reader and maintenance jobs and its
+    * 100-entry default is split over the cache's segments: at that size
+    * the chain benchmark (`chain_steady`, 4 cores) still ran 377 Janino
+    * compilations in a 25 s window, against 49 at 1,000 entries. The
+    * larger cache kept ~40 MB more heap live there.
+    */
   def rocksDbConfigs: Map[String, String] = Map(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      "true")
+      "true",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
+  /** The wall clock, in whole epoch seconds, captured once at this call
+    * and served as a column whose generated code does not depend on the
+    * value. `unix_timestamp(current_timestamp())` is folded by Catalyst
+    * into a literal, so every batch emitted new source text and
+    * recompiled its stage; here the value rides in the UDF closure (a
+    * reference object of the compiled class), so batch N reuses batch
+    * 1's classes. One call per batch gives every row of the batch the
+    * same value. Nondeterministic so the optimizer neither folds nor
+    * duplicates it.
+    */
+  private[streaming] def batchClockSeconds(): org.apache.spark.sql.Column = {
+    val now = System.currentTimeMillis() / 1000L
+    udf(() => now).asNondeterministic().asNonNullable()()
+  }
 
   /** Kafka source wiring mirroring the reference's options
     * (silver.py:45-51): subscribe + earliest offsets + per-trigger cap.
@@ -112,10 +142,12 @@ object Pipeline {
       .withColumn("json", from_json(col("value"), Schemas.eventSchema))
       .select("json.*") // flat Event columns; startSilver derives the rest
 
-  /** Same derivations when the stream is already typed (MemoryStream). */
+  /** Same derivations when the stream is already typed (MemoryStream).
+    * `ingest_timestamp` is not derived here: it is a per-batch value, and
+    * [[startSilver]] stamps it on each deduped batch.
+    */
   def withDerived(events: DataFrame): DataFrame =
     events
-      .withColumn("ingest_timestamp", unix_timestamp(current_timestamp()))
       .withColumn("minute_timestamp",
         (col("event_timestamp") / lit(1000) / lit(180)).cast("long"))
       .withColumn("timestamp",
@@ -141,7 +173,9 @@ object Pipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // batchUnique: dropDuplicatesWithinWatermark upstream guarantees
         // one row per id within the batch
-        format.mergeInsertOnly(spark, batch, cfg, batchUnique = true)
+        format.mergeInsertOnly(spark,
+          batch.withColumn("ingest_timestamp", batchClockSeconds()), cfg,
+          batchUnique = true)
         // scheduled compaction (the OPTIMIZE-on-a-cadence analog,
         // reference utils.py:111-124): run synchronously with the merge
         // so the rewrite cannot race a concurrent append. Without a
@@ -650,11 +684,12 @@ object Pipeline {
     // persisted: two actions consume this frame (the touched-bucket
     // collect and the pending append / direct fold), and without the
     // persist each would re-read the batch files and re-run the partial
-    // agg shuffle (tiny frame — one row per (group, batch))
+    // agg shuffle (tiny frame — one row per group). The batch id is NOT a
+    // column: it names the pending directory instead, so the plan's
+    // generated code is the same every batch.
     val partialAll = Aggregate
       .partial(batch, "group_id", "score", "event_timestamp")
       .withColumn("gb", goldBucket(cfg))
-      .withColumn("_pending_batch", lit(batchId))
       .persist()
     try {
       if (cfg.goldFoldEvery <= 1) {
@@ -668,14 +703,15 @@ object Pipeline {
         GoldState.writeBatchId(fs, cfg, batchId)
       } else {
         // LSM path: append the increment, fold only the due buckets.
-        // Dynamic partition overwrite of `_pending_batch=<id>` makes the
-        // append idempotent under micro-batch replay; one file per
-        // (batch, bucket) by the repartition.
+        // Dynamic partition overwrite of the buckets under
+        // `_pending_batch=<id>` makes the append idempotent under
+        // micro-batch replay; one file per (batch, bucket) by the
+        // repartition.
         partialAll.repartition(col("gb"))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_pending_batch", "gb")
-          .parquet(cfg.goldPendingPath)
+          .partitionBy("gb")
+          .parquet(s"${cfg.goldPendingPath}/_pending_batch=$batchId")
         GoldState.writeBatchId(fs, cfg, batchId)
         val due = duePendingBuckets(fs, cfg, batchId)
         if (due.nonEmpty) foldPending(spark, fs, cfg, due, batchId)
@@ -750,10 +786,20 @@ object Pipeline {
                           due: Seq[Int], version: Long): Unit = {
     val leaves = pendingLeaves(fs, cfg, version).filter(l => due.contains(l._2))
     if (leaves.nonEmpty) {
-      val pend = spark.read
+      // merge each group's per-batch partials into one. EXACT: decimal
+      // sums are associative, and the faithful batch-overwrite first/last
+      // semantics (SURVEY §7.5-3) survive coalescing as
+      // max_by(_, _pending_batch) — the last touching batch's min/max,
+      // exactly what folding the batches one at a time would leave
+      val merged = spark.read
         .option("basePath", cfg.goldPendingPath)
         .parquet(leaves.map(_._3.toString): _*)
-      foldBuckets(spark, fs, cfg, pend, due, version)
+        .groupBy(col("group_id"), col("gb")).agg(
+          sum(col("batch_score")).as("batch_score"),
+          sum(col("batch_events")).as("batch_events"),
+          max_by(col("batch_first"), col("_pending_batch")).as("batch_first"),
+          max_by(col("batch_last"), col("_pending_batch")).as("batch_last"))
+      foldBuckets(spark, fs, cfg, merged, due, version)
     }
     // reclaim every leaf the markers now cover (incl. leaves a prior
     // crashed fold consumed but could not delete)
@@ -770,7 +816,9 @@ object Pipeline {
                 fs.delete(g.getPath, true)
             }
           }
-        if (fs.listStatus(v.getPath).isEmpty) fs.delete(v.getPath, true)
+        // only the write's `_SUCCESS` marker may be left beside the leaves
+        if (!fs.listStatus(v.getPath).exists(_.isDirectory))
+          fs.delete(v.getPath, true)
       }
     }
     spark.catalog.refreshByPath(cfg.goldPendingPath)
@@ -782,16 +830,13 @@ object Pipeline {
     * more joins — as a per-batch fixed cost that multiplied at high
     * group cardinality).
     *
-    * `pend` holds per-(group, batch) partials (`_pending_batch` column
-    * present). Merging partials first is EXACT: decimal sums are
-    * associative, and the faithful batch-overwrite first/last semantics
-    * (SURVEY §7.5-3) survive coalescing as max_by(_, _pending_batch) —
-    * the last touching batch's min/max, exactly what folding the batches
-    * one at a time would leave.
+    * `partials` holds ONE partial row per group (group_id, batch_score,
+    * batch_events, batch_first, batch_last, gb): a single batch's
+    * partial aggregate as is, or [[foldPending]]'s merge of several.
     */
   private def foldBuckets(spark: SparkSession,
                           fs: org.apache.hadoop.fs.FileSystem, cfg: Config,
-                          pend: DataFrame, buckets: Seq[Int],
+                          partials: DataFrame, buckets: Seq[Int],
                           version: Long): Unit = {
     val goldDir = new Path(cfg.goldPath)
     // bucket-granular replay guard: a crash mid-swap re-folds only the
@@ -799,12 +844,7 @@ object Pipeline {
     val remaining = buckets
       .filter(b => GoldState.bucketBatchId(fs, cfg, b) < version).sorted
     if (remaining.isEmpty) return
-    val merged = pend.filter(col("gb").isin(remaining: _*))
-      .groupBy(col("group_id")).agg(
-        sum(col("batch_score")).as("batch_score"),
-        sum(col("batch_events")).as("batch_events"),
-        max_by(col("batch_first"), col("_pending_batch")).as("batch_first"),
-        max_by(col("batch_last"), col("_pending_batch")).as("batch_last"))
+    val merged = partials.filter(col("gb").isin(remaining: _*))
     val existing: DataFrame =
       if (!fs.exists(goldDir))
         spark.range(0).select(
@@ -838,8 +878,7 @@ object Pipeline {
         .as("first_event_timestamp"),
       coalesce(col("s.batch_last"), col("t.last_event_timestamp"))
         .as("last_event_timestamp"),
-      (unix_timestamp(current_timestamp()) * 1000).cast("long")
-        .as("updated_at"),
+      (batchClockSeconds() * 1000L).as("updated_at"),
       col("s.batch_events").isNotNull.as("__touched"),
       col("t.event_count").isNotNull.as("__had_prior"))
       .withColumn("gb", goldBucket(cfg))
@@ -875,17 +914,19 @@ object Pipeline {
         col("updated_at"),
         when(col("__had_prior"), lit("update_postimage"))
           .otherwise(lit("insert")).as("_change_type"))
+      //    The version names the directory rather than riding as a
+      //    column, so this plan's generated code is the same every batch;
+      //    dynamic overwrite replaces only the buckets a replay re-folds.
       wide.filter(col("__touched"))
         .select(col("gb"), explode(array(
           when(col("__had_prior"), oldRow), newRow)).as("c"))
         .filter(col("c").isNotNull)
         .select(col("c.*"), col("gb"))
-        .withColumn("_commit_version", lit(version))
         .repartition(col("gb"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_commit_version", "gb")
-        .parquet(cfg.goldChangesPath)
+        .partitionBy("gb")
+        .parquet(s"${cfg.goldChangesPath}/_commit_version=$version")
       // 3. swap each touched bucket in; mark it immediately so a crash
       //    mid-loop replays only the unswapped tail
       fs.mkdirs(goldDir)
@@ -1095,11 +1136,10 @@ object Pipeline {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("_serve_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_serve_batch")
-          .parquet(cfg.servePath)
+        // the batch id names the partition directory (no literal column:
+        // the plan compiles once); overwrite replaces a replay's own dir
+        batch.write.mode("overwrite")
+          .parquet(s"${cfg.servePath}/_serve_batch=$batchId")
       }
       .start()
   }
@@ -1364,36 +1404,17 @@ object Pipeline {
     * surface. Same eager + strict read discipline.
     */
   def serveAnomaly(spark: SparkSession, cfg: Config,
-                   pageNo: Int, pageSize: Int): DataFrame =
-    graft.ops.Serve.page(servedAnomalyFrame(spark, cfg),
-      Seq(col("group_id"), col("day")), pageNo, pageSize)
-
-  /** [[servedRetentionFrame]]'s anomaly sibling — the one frame both
-    * anomaly page forms serve.
-    */
-  private def servedAnomalyFrame(spark: SparkSession,
-                                 cfg: Config): DataFrame = {
+                   pageNo: Int, pageSize: Int): DataFrame = {
     val fs = new Path(anomalyBase(cfg))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = currentAnomalySnapshot(fs, cfg)
     require(cur.nonEmpty, s"anomaly view ${anomalyBase(cfg)} has no data yet")
     val daily = spark.read.option("ignoreMissingFiles", "false")
       .parquet(cur.get._2.toString).localCheckpoint(true)
-    graft.ops.Analytics.anomalyOf(daily, "group_id")
-      .withColumn("_id", concat_ws(":", col("group_id"), col("day")))
+    graft.ops.Serve.page(graft.ops.Analytics.anomalyOf(daily, "group_id")
+        .withColumn("_id", concat_ws(":", col("group_id"), col("day"))),
+      Seq(col("group_id"), col("day")), pageNo, pageSize)
   }
-
-  /** [[serveAnomaly]]'s keyset (deep-page) form — same discipline as
-    * [[serveRetentionKeyset]], seeking `(group_id, day)` after the last
-    * seen key with no offset in the plan.
-    */
-  def serveAnomalyKeyset(spark: SparkSession, cfg: Config,
-                         afterGroup: String, afterDay: Long,
-                         pageSize: Int): DataFrame =
-    graft.ops.Serve.keyset2(servedAnomalyFrame(spark, cfg),
-      col("group_id"), col("day"),
-      lit(afterGroup), lit(afterDay), pageSize)
-
 
   /** Stage-3 source: the gold change feed as a streaming DataFrame
     * (`_change_type` / `_commit_version` carried — the CDF-read analog).
@@ -1441,18 +1462,41 @@ object Pipeline {
     * row per `_id`) unioned with the log's uncompacted tail. The scan
     * [[serveSnapshot]] and the freshness probe pay is O(snapshot + tail),
     * and [[compactServe]] keeps the tail short — NOT O(full history).
+    *
+    * The tail excludes the partitions the resolved snapshot already
+    * folded (its `_folded_tails` marker): their rows are in the snapshot,
+    * and they are exactly what the next [[compactServe]] deletes, so a
+    * reader never names a directory that can vanish before its scan is
+    * planned (a listed-then-deleted path fails the read with
+    * PATH_NOT_FOUND; `ignoreMissingFiles` only covers files).
     */
   def serveLog(spark: SparkSession, cfg: Config): DataFrame = {
     val fs = new Path(cfg.servePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tolerateVacuumedFiles(spark) // a batch read racing compactServe's
-    // vacuum must skip (not crash on) a tail partition folded into the
-    // newer snapshot it is about to read anyway
-    val snap = currentServeSnapshot(fs, cfg).map(_._2.toString)
-    val tail = serveBatchDirs(fs, cfg).map(_._2.toString)
-    val parts = snap.toSeq ++ tail
+    tolerateVacuumedFiles(spark) // a scan outliving two compactions
+    // skips the files reclaimed under it instead of failing
+    val snap = currentServeSnapshot(fs, cfg).map(_._2)
+    val folded = snap.map(foldedTails(fs, _)).getOrElse(Set.empty)
+    val tail = serveBatchDirs(fs, cfg).map(_._2)
+      .filterNot(p => folded.contains(p.getName))
+    val parts = (snap.toSeq ++ tail).map(_.toString)
     require(parts.nonEmpty, s"serve log ${cfg.servePath} has no data yet")
     spark.read.schema(serveRowSchema).parquet(parts: _*)
+  }
+
+  /** Names of the `_serve_batch=<id>` partitions a snapshot version
+    * folded, from its `_folded_tails` marker (empty when it has none).
+    */
+  private def foldedTails(fs: org.apache.hadoop.fs.FileSystem,
+                          version: Path): Set[String] = {
+    val marker = new Path(version, "_folded_tails")
+    val text =
+      try {
+        val in = fs.open(marker)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => "" }
+    text.split("\n").filter(_.nonEmpty).toSet
   }
 
   /** Data columns of a serve row (batch/version partition cols excluded
@@ -1495,7 +1539,10 @@ object Pipeline {
     * anything is deleted, readers take the NEWEST version, and a crash at
     * any point only leaves rows duplicated between snapshot, retained
     * tail, and retained prior version — which the latest-per-key read
-    * collapses and later compactions reclaim. Each compaction is
+    * collapses and later compactions reclaim. A version is staged under a
+    * hidden name and renamed into place with its marker already inside,
+    * so every reader that resolves it also sees which tails to skip
+    * ([[serveLog]]). Each compaction is
     * O(snapshot + tail); scheduling it every N batches keeps
     * [[serveSnapshot]]'s scan flat as history grows (soak evidence:
     * StreamBench full mode).
@@ -1516,16 +1563,18 @@ object Pipeline {
     val folded = graft.ops.Dedup.latestPerKeyAgg(
       spark.read.schema(serveRowSchema).parquet(inputs: _*), Seq("_id"),
       struct(col("_commit_version")), latest = true)
+    val staged = new Path(s"${serveSnapshotBase(cfg)}/_staged_v=$newV")
     folded.select(serveRowSchema.fieldNames.map(col): _*)
       .coalesce(math.max(1, foldable.size / 8))
       .write.mode("overwrite")
-      .parquet(s"${serveSnapshotBase(cfg)}/v=$newV")
+      .parquet(staged.toString)
     // record which tail partitions this version folded (underscore name —
-    // invisible to parquet readers of the version dir)
-    val markerOut = fs.create(
-      new Path(s"${serveSnapshotBase(cfg)}/v=$newV/_folded_tails"), true)
-    markerOut.write(foldable.map(_._2.getName).mkString("\n").getBytes("UTF-8"))
-    markerOut.close()
+    // invisible to parquet readers of the version dir), then publish
+    val markerOut = fs.create(new Path(staged, "_folded_tails"), true)
+    try markerOut.write(
+      foldable.map(_._2.getName).mkString("\n").getBytes("UTF-8"))
+    finally markerOut.close()
+    fs.rename(staged, new Path(s"${serveSnapshotBase(cfg)}/v=$newV"))
     // Reclaim with a ONE-GENERATION retention window: a reader that
     // resolved the prior snapshot + tail layout just before v=newV
     // appeared must be able to finish its scan, so the prior version and
@@ -1542,14 +1591,8 @@ object Pipeline {
       .filter { case (v, _) => prior.exists(v < _._1) }
       .foreach { case (_, p) => fs.delete(p, true) }
     prior.foreach { case (_, priorPath) =>
-      val pm = new Path(priorPath, "_folded_tails")
-      if (fs.exists(pm)) {
-        val in = fs.open(pm)
-        val folded = scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.split("\n").filter(_.nonEmpty)
-        in.close()
-        folded.foreach(n => fs.delete(new Path(cfg.servePath, n), true))
-      }
+      foldedTails(fs, priorPath)
+        .foreach(n => fs.delete(new Path(cfg.servePath, n), true))
     }
     spark.catalog.refreshByPath(cfg.servePath)
     spark.catalog.refreshByPath(serveSnapshotBase(cfg))
@@ -1563,10 +1606,6 @@ object Pipeline {
                  graft.storage.TableFormat.parquet): Seq[StreamingQuery] =
     Seq(startSilver(spark, raw, cfg, format), startGold(spark, cfg, format),
       startServe(spark, cfg, format))
-
-  /** Block until any stage terminates (main.py:20's awaitAnyTermination). */
-  def awaitAny(spark: SparkSession): Unit =
-    spark.streams.awaitAnyTermination()
 
   /** The full maintained surface: the reference's three stages plus the
     * analytics maintenance pair (stages 4–5). Stage 6 is the read path

@@ -1123,4 +1123,77 @@ class PipelineSpec extends SparkTestBase {
       } finally serve2.stop()
     } finally qs.take(2).foreach(_.stop())
   }
+
+  test("serveLog skips the tails its snapshot folded: same rows, and no " +
+    "read of a partition the next compactServe deletes") {
+    val cfg = freshCfg()
+    val input = MemoryStream[Event](34, spark, None)
+    val qs = Pipeline.startAll(spark, input.toDF(), cfg)
+    val t0 = 1700000000000L
+    def batch(b: Int): Unit = {
+      input.addData(ev(s"f$b-1", "g1", 1.0f, t0 + b * 1000),
+        ev(s"f$b-2", s"g${b % 3}", 2.0f, t0 + b * 1000 + 1))
+      qs.foreach(_.processAllAvailable())
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("_id", "event_count", "cumulative_score").orderBy("_id")
+        .collect().map(_.toString).toSeq
+    try {
+      (1 to 2).foreach(batch)
+      Pipeline.compactServe(spark, cfg) // v=0 folds tails 0-1, retains them
+      batch(3)
+      val snap = new java.io.File(s"${cfg.baseDir}/serve_snapshot/v=0")
+      val folded = scala.io.Source.fromFile(new java.io.File(snap,
+        "_folded_tails")).getLines().filter(_.nonEmpty).toSet
+      val tails = new java.io.File(cfg.servePath).listFiles()
+        .map(_.getName).filter(_.startsWith("_serve_batch=")).toSet
+      assert(folded.nonEmpty && folded.subsetOf(tails) && tails.size > folded.size,
+        s"expected retained folded tails beside a live one: $folded of $tails")
+
+      val log = Pipeline.serveLog(spark, cfg)
+      val read = log.inputFiles.toSeq
+      assert(!read.exists(f => folded.exists(n => f.contains(s"/$n/"))),
+        s"serveLog read a tail v=0 already folded: $read")
+      // the same rows as the snapshot plus EVERY tail, latest per _id
+      val everything = spark.read.schema(log.schema).parquet(
+        (snap.toString +: tails.toSeq.map(t => s"${cfg.servePath}/$t")): _*)
+      val expected = graft.ops.Dedup.latestPerKeyAgg(everything, Seq("_id"),
+        struct(col("_commit_version")), latest = true)
+      assert(rows(Pipeline.serveSnapshot(spark, cfg)) == rows(expected))
+
+      // the next compaction deletes exactly the tails v=0 folded; a read
+      // resolved before it still executes and returns the same rows
+      val resolved = Pipeline.serveSnapshot(spark, cfg)
+      val before = rows(resolved)
+      Pipeline.compactServe(spark, cfg)
+      assert(folded.forall(n => !new java.io.File(cfg.servePath, n).exists()))
+      assert(rows(resolved) == before)
+      assert(rows(Pipeline.serveSnapshot(spark, cfg)) == before)
+    } finally qs.foreach(_.stop())
+  }
+
+  test("the chain's micro-batch plans are codegen-stable: after warm-up a " +
+    "batch compiles at most the watermark eviction predicate") {
+    val cfg = Pipeline.Config(
+      Files.createTempDirectory("graft_pipe").toString, goldBuckets = 4)
+    val input = MemoryStream[Event](35, spark, None)
+    val qs = Pipeline.startAll(spark, input.toDF(), cfg)
+    val t0 = 1700000000000L
+    val groups = (0 until 16).map(g => s"g$g")
+    try {
+      // a steady shape: every batch touches the same groups and buckets,
+      // and event time advances a second per batch
+      val compiles = (0 until 6).map { b =>
+        val before = graft.streaming.Metrics.compileCounters()
+        input.addData(groups.zipWithIndex.map { case (g, i) =>
+          ev(s"c$b-$i", g, i.toFloat, t0 + b * 1000L + i) })
+        qs.foreach(_.processAllAvailable())
+        (graft.streaming.Metrics.compileCounters() - before).codegenCompiles
+      }
+      // a per-batch literal in any sink plan (silver, gold, change feed,
+      // serve) would compile new classes every batch
+      assert(compiles.drop(2).forall(_ <= 2),
+        s"Janino compilations per batch: ${compiles.mkString(", ")}")
+    } finally qs.foreach(_.stop())
+  }
 }
