@@ -48,12 +48,3 @@ object Schemas {
 /** Typed rows for Dataset[T] paths and MemoryStream fixtures. */
 case class Event(id: String, group_id: String, score: Float,
                  event_timestamp: Long)
-
-case class SilverRow(id: String, group_id: String, score: Float,
-                     event_timestamp: Long, ingest_timestamp: Long,
-                     minute_timestamp: Long)
-
-case class GoldRow(group_id: String, cumulative_score: Float,
-                   event_count: Long, avg_score: Float,
-                   first_event_timestamp: Long, last_event_timestamp: Long,
-                   updated_at: Long)

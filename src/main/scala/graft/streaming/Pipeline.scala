@@ -42,38 +42,15 @@ import graft.ops.{Aggregate, Dedup}
   */
 object Pipeline {
 
-  /** @param goldFoldEvery fold cadence in micro-batches. 1 (default)
-    *   folds every batch — the reference's per-batch MERGE shape. >1
-    *   COALESCES: each batch appends its per-group partials to a pending
-    *   delta log (one shuffle + one small append, O(increment) whatever
-    *   the active-group count) and a bucket folds into the snapshot only
-    *   when it holds that many pending batches — the LSM-memtable trade
-    *   the ×10 replay soak motivated (r16: per-batch fold cost was
-    *   ACTIVE-GROUP-proportional; at ~10k active groups/batch every
-    *   bucket rewrote every batch). Serve freshness then lags ≤
-    *   goldFoldEvery batches; [[flushGold]] folds the remainder on
-    *   drain/maintenance.
-    * @param silverHbSize minute-buckets per silver partition directory.
-    *   The MERGE key stays (minute_timestamp, id); this only sets the
-    *   DIRECTORY granularity. 20 × 180 s = 1 h — at 3-minute dirs a
-    *   time-ordered replay wrote ~1,440 partition dirs per 10k-event
-    *   batch (the r16 ×10-replay small-file storm: listings, per-dir
-    *   writes, and downstream file-count-driven triggers all scaled
-    *   with it); hourly dirs keep partition pruning while bounding
-    *   dirs at 8,760/year.
-    */
   final case class Config(
       baseDir: String,
       watermarkDelay: String = "30 seconds",
       triggerMs: Long = 0L,
       goldBuckets: Int = 64,
-      compactEvery: Long = 0L,
-      goldFoldEvery: Int = 1,
-      silverHbSize: Int = 20) {
+      compactEvery: Long = 0L) {
     def silverPath: String = s"$baseDir/silver"
     def goldPath: String = s"$baseDir/gold"
     def goldChangesPath: String = s"$baseDir/gold_changes"
-    def goldPendingPath: String = s"$baseDir/gold_pending"
     def servePath: String = s"$baseDir/serve"
     def checkpoint(name: String): String = s"$baseDir/checkpoints/$name"
   }
@@ -188,14 +165,24 @@ object Pipeline {
       .start()
   }
 
-  /** Silver partition-directory value of a minute bucket: `hb` = hour
-    * bucket (with the default [[Config.silverHbSize]] = 20 × 180 s).
-    * A DATA column in every silver frame but a DIRECTORY name on disk —
-    * `minute_timestamp` stays a normal parquet column, and batch/stream
-    * readers get `hb` appended from the dir names.
+  /** Minute-buckets per silver partition directory. The MERGE key stays
+    * (minute_timestamp, id); this only sets the DIRECTORY granularity.
+    * 20 × 180 s = 1 h — at 3-minute dirs a time-ordered replay wrote
+    * ~1,440 partition dirs per 10k-event batch (the r16 ×10-replay
+    * small-file storm: listings, per-dir writes, and downstream
+    * file-count-driven triggers all scaled with it); hourly dirs keep
+    * partition pruning while bounding dirs at 8,760/year.
     */
-  private[streaming] def silverHb(cfg: Config): org.apache.spark.sql.Column =
-    floor(col("minute_timestamp") / lit(cfg.silverHbSize)).cast("long")
+  private val hbMinuteBuckets = 20
+
+  /** Silver partition-directory value of a minute bucket: `hb` = hour
+    * bucket ([[hbMinuteBuckets]] × 180 s). A DATA column in every silver
+    * frame but a DIRECTORY name on disk — `minute_timestamp` stays a
+    * normal parquet column, and batch/stream readers get `hb` appended
+    * from the dir names.
+    */
+  private[streaming] def silverHb: org.apache.spark.sql.Column =
+    floor(col("minute_timestamp") / lit(hbMinuteBuckets)).cast("long")
 
   /** J1: anti-join the batch against the already-written hour buckets
     * only, then append. Idempotent per (minute_timestamp, id).
@@ -223,7 +210,7 @@ object Pipeline {
     // two actions follow (bucket collect + the merge write); without a
     // persist each would re-execute the full batch plan — in the
     // streaming path that plan includes the RocksDB state-store read
-    val batchDedup = batchDedup0.withColumn("hb", silverHb(cfg)).persist()
+    val batchDedup = batchDedup0.withColumn("hb", silverHb).persist()
     try {
       val hbs = batchDedup.select("hb").distinct()
         .collect().map(_.getLong(0)).toSeq.sorted
@@ -476,13 +463,7 @@ object Pipeline {
                         keepVersions: Int = 168): Unit = {
     val dir = new Path(cfg.goldChangesPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val versions = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("_commit_version="))
-      .flatMap(s => s.getPath.getName.stripPrefix("_commit_version=")
-        .toLongOption.map(_ -> s.getPath))
-      .sortBy(_._1)
+    val versions = numberedDirs(fs, dir, "_commit_version=")
     if (versions.isEmpty) return
     val consumedCutoff = committedSourcePaths(fs, cfg.checkpoint("serve")) match {
       case Some(committed) =>
@@ -518,11 +499,7 @@ object Pipeline {
                                           ckptDir: String): Option[Set[String]] = {
     val srcLog = new Path(ckptDir + "/sources/0")
     if (!fs.exists(srcLog)) return None
-    val commitsDir = new Path(ckptDir + "/commits")
-    val lastCommitted: Long =
-      if (!fs.exists(commitsDir)) -1L
-      else fs.listStatus(commitsDir).toSeq
-        .flatMap(_.getPath.getName.toLongOption).foldLeft(-1L)(math.max)
+    val lastCommitted = lastCommittedBatch(fs, ckptDir)
     if (lastCommitted < 0) return Some(Set.empty)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     var sawEntryLine = false
@@ -560,6 +537,30 @@ object Pipeline {
         "yielded zero committed paths — log format drift? (reclaim is a no-op)")
     Some(paths.toSet)
   }
+
+  /** Highest batch id in checkpoint `ckptDir`'s `commits/` log, -1 when
+    * it has none (entries whose name is not a number are skipped).
+    */
+  private def lastCommittedBatch(fs: org.apache.hadoop.fs.FileSystem,
+                                 ckptDir: String): Long = {
+    val commitsDir = new Path(ckptDir + "/commits")
+    if (!fs.exists(commitsDir)) -1L
+    else fs.listStatus(commitsDir).toSeq
+      .flatMap(_.getPath.getName.toLongOption).foldLeft(-1L)(math.max)
+  }
+
+  /** The `<prefix><n>` subdirectories of `dir` (`v=3`,
+    * `_serve_batch=12`, …) as (n, path), ascending by n. Entries whose
+    * suffix is not a number are skipped; empty when `dir` does not exist.
+    */
+  private def numberedDirs(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+                           prefix: String): Seq[(Long, Path)] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .flatMap(s => s.getPath.getName.stripPrefix(prefix).toLongOption
+        .map(_ -> s.getPath))
+      .sortBy(_._1)
 
   /** Every data file under the version directory is in the committed set
     * (hidden/metadata files excluded).
@@ -682,146 +683,19 @@ object Pipeline {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (GoldState.lastBatchId(fs, cfg) >= batchId) return // replayed batch
     // persisted: two actions consume this frame (the touched-bucket
-    // collect and the pending append / direct fold), and without the
-    // persist each would re-read the batch files and re-run the partial
-    // agg shuffle (tiny frame — one row per group). The batch id is NOT a
-    // column: it names the pending directory instead, so the plan's
-    // generated code is the same every batch.
-    val partialAll = Aggregate
+    // collect and the fold), and without the persist each would re-read
+    // the batch files and re-run the partial agg shuffle (tiny frame —
+    // one row per group)
+    val partials = Aggregate
       .partial(batch, "group_id", "score", "event_timestamp")
       .withColumn("gb", goldBucket(cfg))
       .persist()
     try {
-      if (cfg.goldFoldEvery <= 1) {
-        // per-batch fold (the reference's MERGE cadence). A pending log
-        // left by an earlier coalescing configuration folds first so a
-        // cadence change can never strand deltas.
-        if (fs.exists(new Path(cfg.goldPendingPath))) flushGold(spark, cfg)
-        val touched = partialAll.select("gb").distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        foldBuckets(spark, fs, cfg, partialAll, touched, batchId)
-        GoldState.writeBatchId(fs, cfg, batchId)
-      } else {
-        // LSM path: append the increment, fold only the due buckets.
-        // Dynamic partition overwrite of the buckets under
-        // `_pending_batch=<id>` makes the append idempotent under
-        // micro-batch replay; one file per (batch, bucket) by the
-        // repartition.
-        partialAll.repartition(col("gb"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gb")
-          .parquet(s"${cfg.goldPendingPath}/_pending_batch=$batchId")
-        GoldState.writeBatchId(fs, cfg, batchId)
-        val due = duePendingBuckets(fs, cfg, batchId)
-        if (due.nonEmpty) foldPending(spark, fs, cfg, due, batchId)
-      }
-    } finally partialAll.unpersist(false)
-  }
-
-  /** Fold every pending delta into the gold snapshot — the drain /
-    * maintenance flush for `goldFoldEvery > 1` deployments (tests and
-    * benches call it between draining gold and draining serve; the
-    * user-erase calls it so no tombstoned partial can outlive the
-    * scrub in the pending log). No-op when nothing is pending.
-    * Single-maintainer contract: the gold stream must be idle.
-    */
-  def flushGold(spark: SparkSession, cfg: Config): Unit = {
-    val fs = new Path(cfg.goldPendingPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(cfg.goldPendingPath))) return
-    val upTo = GoldState.lastBatchId(fs, cfg)
-    if (upTo < 0L) return
-    val pend = pendingLeaves(fs, cfg, upTo)
-    val due = pend.map(_._2).distinct.sorted
-    if (due.nonEmpty) foldPending(spark, fs, cfg, due, upTo)
-  }
-
-  /** Unconsumed pending leaves `(batchId, gb, path)` with batchId ≤
-    * `upTo` and batchId beyond the bucket's folded-through marker.
-    */
-  private def pendingLeaves(fs: org.apache.hadoop.fs.FileSystem,
-                            cfg: Config, upTo: Long): Seq[(Long, Int, Path)] = {
-    val base = new Path(cfg.goldPendingPath)
-    if (!fs.exists(base)) return Nil
-    val markers = scala.collection.mutable.Map.empty[Int, Long]
-    def markerOf(b: Int): Long =
-      markers.getOrElseUpdate(b, GoldState.bucketBatchId(fs, cfg, b))
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("_pending_batch="))
-      .flatMap { v =>
-        v.getPath.getName.stripPrefix("_pending_batch=").toLongOption
-          .filter(_ <= upTo).toSeq.flatMap { bid =>
-            fs.listStatus(v.getPath).toSeq
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith("gb="))
-              .flatMap(g => g.getPath.getName.stripPrefix("gb=").toIntOption
-                .filter(gb => bid > markerOf(gb))
-                .map(gb => (bid, gb, g.getPath)))
-          }
-      }
-  }
-
-  /** Buckets due a fold at `version`: holding ≥ goldFoldEvery pending
-    * batches, or any pending batch older than goldFoldEvery batches
-    * (the staleness bound for buckets touched rarely).
-    */
-  private def duePendingBuckets(fs: org.apache.hadoop.fs.FileSystem,
-                                cfg: Config, version: Long): Seq[Int] =
-    pendingLeaves(fs, cfg, version)
-      .groupBy(_._2)
-      .collect { case (gb, ls)
-        if ls.size >= cfg.goldFoldEvery ||
-          ls.map(_._1).min <= version - cfg.goldFoldEvery => gb }
-      .toSeq.sorted
-
-  /** Fold the due buckets' pending deltas into the snapshot at
-    * `version`, then reclaim the consumed pending leaves. Crash
-    * anywhere: the per-bucket markers gate re-consumption (a leaf at or
-    * below its bucket's marker is never read again) and reclamation is
-    * pure space cleanup, retried on the next fold.
-    */
-  private def foldPending(spark: SparkSession,
-                          fs: org.apache.hadoop.fs.FileSystem, cfg: Config,
-                          due: Seq[Int], version: Long): Unit = {
-    val leaves = pendingLeaves(fs, cfg, version).filter(l => due.contains(l._2))
-    if (leaves.nonEmpty) {
-      // merge each group's per-batch partials into one. EXACT: decimal
-      // sums are associative, and the faithful batch-overwrite first/last
-      // semantics (SURVEY §7.5-3) survive coalescing as
-      // max_by(_, _pending_batch) — the last touching batch's min/max,
-      // exactly what folding the batches one at a time would leave
-      val merged = spark.read
-        .option("basePath", cfg.goldPendingPath)
-        .parquet(leaves.map(_._3.toString): _*)
-        .groupBy(col("group_id"), col("gb")).agg(
-          sum(col("batch_score")).as("batch_score"),
-          sum(col("batch_events")).as("batch_events"),
-          max_by(col("batch_first"), col("_pending_batch")).as("batch_first"),
-          max_by(col("batch_last"), col("_pending_batch")).as("batch_last"))
-      foldBuckets(spark, fs, cfg, merged, due, version)
-    }
-    // reclaim every leaf the markers now cover (incl. leaves a prior
-    // crashed fold consumed but could not delete)
-    val consumed = fs.listStatus(new Path(cfg.goldPendingPath)).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("_pending_batch="))
-    consumed.foreach { v =>
-      v.getPath.getName.stripPrefix("_pending_batch=").toLongOption.foreach { bid =>
-        fs.listStatus(v.getPath).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("gb="))
-          .foreach { g =>
-            g.getPath.getName.stripPrefix("gb=").toIntOption.foreach { gb =>
-              if (bid <= GoldState.bucketBatchId(fs, cfg, gb))
-                fs.delete(g.getPath, true)
-            }
-          }
-        // only the write's `_SUCCESS` marker may be left beside the leaves
-        if (!fs.listStatus(v.getPath).exists(_.isDirectory))
-          fs.delete(v.getPath, true)
-      }
-    }
-    spark.catalog.refreshByPath(cfg.goldPendingPath)
+      val touched = partials.select("gb").distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      foldBuckets(spark, fs, cfg, partials, touched, batchId)
+      GoldState.writeBatchId(fs, cfg, batchId)
+    } finally partials.unpersist(false)
   }
 
   /** The fold itself — ONE full-outer join computes the new snapshot
@@ -831,8 +705,8 @@ object Pipeline {
     * group cardinality).
     *
     * `partials` holds ONE partial row per group (group_id, batch_score,
-    * batch_events, batch_first, batch_last, gb): a single batch's
-    * partial aggregate as is, or [[foldPending]]'s merge of several.
+    * batch_events, batch_first, batch_last, gb): one batch's partial
+    * aggregate.
     */
   private def foldBuckets(spark: SparkSession,
                           fs: org.apache.hadoop.fs.FileSystem, cfg: Config,
@@ -941,147 +815,6 @@ object Pipeline {
     } finally wide.unpersist(false)
   }
 
-  /** Alternative gold path: per-group running aggregates held in the
-    * state store via mapGroupsWithState — no snapshot rewrite per batch,
-    * update-mode emission of exactly the touched groups. This is the
-    * pure-streaming formulation of the reference's MERGE fold (state =
-    * the gold row; the fold arithmetic is identical to [[Aggregate.fold]],
-    * including the faithful batch-overwrite first/last semantics).
-    *
-    * Scale notes: state is one small row per group_id in RocksDB,
-    * partitioned by the shuffle on group_id; a 100 TB keyspace shards
-    * across executors with no global rewrite — the trade against
-    * [[startGold]] is that serving reads need a changelog sink (update
-    * stream) instead of a self-contained snapshot directory.
-    */
-  def statefulGold(events: org.apache.spark.sql.Dataset[graft.model.SilverRow])
-      : org.apache.spark.sql.Dataset[graft.model.GoldRow] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    import events.sparkSession.implicits._
-    events.groupByKey(_.group_id)
-      .mapGroupsWithState[graft.model.GoldRow, graft.model.GoldRow](
-        GroupStateTimeout.NoTimeout()) {
-        case (gid, rows, state: GroupState[graft.model.GoldRow]) =>
-          var cum = 0.0
-          var cnt = 0L
-          var first = Long.MaxValue
-          var last = Long.MinValue
-          rows.foreach { r =>
-            cum += r.score.toDouble
-            cnt += 1
-            if (r.event_timestamp < first) first = r.event_timestamp
-            if (r.event_timestamp > last) last = r.event_timestamp
-          }
-          val prev = state.getOption
-          val newCum = prev.map(_.cumulative_score.toDouble).getOrElse(0.0) + cum
-          val newCnt = prev.map(_.event_count).getOrElse(0L) + cnt
-          val row = graft.model.GoldRow(gid,
-            newCum.toFloat, newCnt, (newCum / newCnt).toFloat,
-            first, last, System.currentTimeMillis())
-          state.update(row)
-          row
-      }
-  }
-
-  /** The same running-gold fold on Spark 4's transformWithState API — a
-    * [[org.apache.spark.sql.streaming.StatefulProcessor]] with explicit
-    * ValueState (RocksDB-only, composable with TTL/timers for state
-    * hygiene at scale; mapGroupsWithState offers neither).
-    */
-  class GoldProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, graft.model.SilverRow, graft.model.GoldRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig, ValueState}
-    @transient private var state: ValueState[graft.model.GoldRow] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[graft.model.GoldRow]("gold",
-        org.apache.spark.sql.Encoders.product[graft.model.GoldRow],
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[graft.model.SilverRow],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[graft.model.GoldRow] = {
-      var cum = 0.0
-      var cnt = 0L
-      var first = Long.MaxValue
-      var last = Long.MinValue
-      rows.foreach { r =>
-        cum += r.score.toDouble
-        cnt += 1
-        if (r.event_timestamp < first) first = r.event_timestamp
-        if (r.event_timestamp > last) last = r.event_timestamp
-      }
-      if (cnt == 0) Iterator.empty
-      else {
-        val prev = Option(state.get())
-        val newCum = prev.map(_.cumulative_score.toDouble).getOrElse(0.0) + cum
-        val newCnt = prev.map(_.event_count).getOrElse(0L) + cnt
-        val row = graft.model.GoldRow(key, newCum.toFloat, newCnt,
-          (newCum / newCnt).toFloat, first, last, System.currentTimeMillis())
-        state.update(row)
-        Iterator.single(row)
-      }
-    }
-  }
-
-  /** First-seen-wins dedup with an explicit processing-time TTL on the
-    * seen-set — the transformWithState alternative to
-    * dropDuplicatesWithinWatermark when the horizon should be operational
-    * (state budget) rather than event-time. State is one boolean per id in
-    * RocksDB, expired by TTL without any watermark coupling.
-    */
-  class SeenDedupProcessor(ttlMillis: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, graft.model.Event, graft.model.Event] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig, ValueState}
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean]("seen",
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        if (ttlMillis > 0) new TTLConfig(java.time.Duration.ofMillis(ttlMillis))
-        else TTLConfig.NONE)
-
-    override def handleInputRows(id: String,
-        rows: Iterator[graft.model.Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[graft.model.Event] = {
-      if (seen.exists() || rows.isEmpty) Iterator.empty
-      else {
-        seen.update(true)
-        Iterator.single(rows.next())
-      }
-    }
-  }
-
-  /** Dedup a typed event stream by id. `ttlMillis > 0` bounds the
-    * seen-set with a processing-time TTL (the engine then schedules
-    * batches continuously to advance TTL time — fine under a real
-    * trigger, but synchronous processAllAvailable-style tests should use
-    * `ttlMillis = 0`, unbounded state).
-    */
-  def ttlDedup(events: org.apache.spark.sql.Dataset[graft.model.Event],
-               ttlMillis: Long): org.apache.spark.sql.Dataset[graft.model.Event] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import events.sparkSession.implicits._
-    val mode = if (ttlMillis > 0)
-      org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-    else org.apache.spark.sql.streaming.TimeMode.None()
-    events.groupByKey(_.id)
-      .transformWithState(new SeenDedupProcessor(ttlMillis),
-        mode, OutputMode.Append())
-  }
-
-  /** [[statefulGold]] on the transformWithState API. */
-  def statefulGoldTws(events: org.apache.spark.sql.Dataset[graft.model.SilverRow])
-      : org.apache.spark.sql.Dataset[graft.model.GoldRow] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import events.sparkSession.implicits._
-    events.groupByKey(_.group_id)
-      .transformWithState(new GoldProcessor, TimeMode.None(), OutputMode.Update())
-  }
-
   /** Stage 3 (batch form): gold snapshot → serving shape (`_id` = group
     * key), the Mongo-sink analog (S7/P9).
     */
@@ -1151,16 +884,9 @@ object Pipeline {
   /** Newest retention snapshot `retention/v=<batchId>` with id < `below`. */
   private[streaming] def currentRetentionSnapshot(
       fs: org.apache.hadoop.fs.FileSystem,
-      cfg: Config, below: Long = Long.MaxValue): Option[(Long, Path)] = {
-    val base = new Path(retentionBase(cfg))
-    if (!fs.exists(base)) return None
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .flatMap(s => s.getPath.getName.stripPrefix("v=").toLongOption
-        .map(_ -> s.getPath))
-      .filter(_._1 < below)
-      .sortBy(_._1).lastOption
-  }
+      cfg: Config, below: Long = Long.MaxValue): Option[(Long, Path)] =
+    numberedDirs(fs, new Path(retentionBase(cfg)), "v=")
+      .filter(_._1 < below).lastOption
 
   /** Stage 4 — the reference's incremental-aggregate pattern
     * (`gold.py:7-46`) applied to the retention view: the silver insert
@@ -1237,15 +963,9 @@ object Pipeline {
     * in the folds is unaffected.
     */
   private def vacuumSnapshots(fs: org.apache.hadoop.fs.FileSystem,
-                              base: Path): Unit = {
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .flatMap(s => s.getPath.getName.stripPrefix("v=").toLongOption
-        .map(_ -> s.getPath))
-      .sortBy(-_._1)
-      .drop(snapshotRetain)
+                              base: Path): Unit =
+    numberedDirs(fs, base, "v=").dropRight(snapshotRetain)
       .foreach { case (_, p) => fs.delete(p, true) }
-  }
 
   /** The maintained (cohort_day, day_offset, n_active) activity view —
     * feed it to `Analytics.retentionFromActivity` for the serving shape.
@@ -1266,16 +986,9 @@ object Pipeline {
   private def anomalyBase(cfg: Config): String = s"${cfg.baseDir}/anomaly"
 
   private def currentAnomalySnapshot(fs: org.apache.hadoop.fs.FileSystem,
-      cfg: Config, below: Long = Long.MaxValue): Option[(Long, Path)] = {
-    val base = new Path(anomalyBase(cfg))
-    if (!fs.exists(base)) return None
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .flatMap(s => s.getPath.getName.stripPrefix("v=").toLongOption
-        .map(_ -> s.getPath))
-      .filter(_._1 < below)
-      .sortBy(_._1).lastOption
-  }
+      cfg: Config, below: Long = Long.MaxValue): Option[(Long, Path)] =
+    numberedDirs(fs, new Path(anomalyBase(cfg)), "v=")
+      .filter(_._1 < below).lastOption
 
   /** Stage 5 — the anomaly sibling of [[startRetention]]: an update-mode
     * streaming aggregation maintains the per-(group_id, day) running
@@ -1436,27 +1149,13 @@ object Pipeline {
 
   /** Newest compacted snapshot version under `serve_snapshot/v=<n>`. */
   private def currentServeSnapshot(fs: org.apache.hadoop.fs.FileSystem,
-                                   cfg: Config): Option[(Long, Path)] = {
-    val base = new Path(serveSnapshotBase(cfg))
-    if (!fs.exists(base)) return None
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .flatMap(s => s.getPath.getName.stripPrefix("v=").toLongOption
-        .map(_ -> s.getPath))
-      .sortBy(_._1).lastOption
-  }
+                                   cfg: Config): Option[(Long, Path)] =
+    numberedDirs(fs, new Path(serveSnapshotBase(cfg)), "v=").lastOption
 
   /** Live `_serve_batch=<id>` partitions of the serve log. */
   private def serveBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
-                             cfg: Config): Seq[(Long, Path)] = {
-    val dir = new Path(cfg.servePath)
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_serve_batch="))
-      .flatMap(s => s.getPath.getName.stripPrefix("_serve_batch=").toLongOption
-        .map(_ -> s.getPath))
-      .sortBy(_._1)
-  }
+                             cfg: Config): Seq[(Long, Path)] =
+    numberedDirs(fs, new Path(cfg.servePath), "_serve_batch=")
 
   /** Every serve row currently visible: the compacted snapshot (≤ one
     * row per `_id`) unioned with the log's uncompacted tail. The scan
@@ -1550,11 +1249,7 @@ object Pipeline {
   def compactServe(spark: SparkSession, cfg: Config): Unit = {
     val fs = new Path(cfg.servePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commitsDir = new Path(cfg.checkpoint("serve") + "/commits")
-    val lastCommitted: Long =
-      if (!fs.exists(commitsDir)) -1L
-      else fs.listStatus(commitsDir).toSeq
-        .flatMap(_.getPath.getName.toLongOption).foldLeft(-1L)(math.max)
+    val lastCommitted = lastCommittedBatch(fs, cfg.checkpoint("serve"))
     val foldable = serveBatchDirs(fs, cfg).filter(_._1 <= lastCommitted)
     if (foldable.isEmpty) return
     val prior = currentServeSnapshot(fs, cfg)
@@ -1584,10 +1279,7 @@ object Pipeline {
     // under latest-per-_id. Deleted now: versions OLDER than prior
     // (unreachable — every reader resolved prior or newV) and the tails
     // the PRIOR compaction folded (recorded in its marker).
-    fs.listStatus(new Path(serveSnapshotBase(cfg))).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .flatMap(s => s.getPath.getName.stripPrefix("v=").toLongOption
-        .map(_ -> s.getPath))
+    numberedDirs(fs, new Path(serveSnapshotBase(cfg)), "v=")
       .filter { case (v, _) => prior.exists(v < _._1) }
       .foreach { case (_, p) => fs.delete(p, true) }
     prior.foreach { case (_, priorPath) =>
@@ -1607,47 +1299,15 @@ object Pipeline {
     Seq(startSilver(spark, raw, cfg, format), startGold(spark, cfg, format),
       startServe(spark, cfg, format))
 
-  /** The full maintained surface: the reference's three stages plus the
-    * analytics maintenance pair (stages 4–5). Stage 6 is the read path
-    * ([[serveRetention]]/[[serveAnomaly]]) — not a stream. PipelineSpec
-    * runs all five concurrently and pins every maintained view against
-    * its batch oracle.
-    */
-  def startAllWithAnalytics(spark: SparkSession, raw: DataFrame, cfg: Config,
-                            format: graft.storage.TableFormat =
-                              graft.storage.TableFormat.parquet)
-      : Seq[StreamingQuery] =
-    startAll(spark, raw, cfg, format) ++
-      Seq(startRetention(spark, cfg), startAnomaly(spark, cfg))
-
-  /** The orchestration demo extended to the similarity-serving side
-    * (VERDICT r14 next #6): the five maintained event stages PLUS the
-    * vector lifecycle — the composed raw+rung ingest
-    * ([[StreamingSimilarity.startEmbeddingIngest]]: raw embeddings
-    * store and all three standing rung tables, one idempotent batch
-    * body) and the query-side rung search stream serving each query
-    * batch against the SAME standing tables the ingest appends into.
-    * One deployment shape: an event pipeline and a vector search
-    * surface sharing a session, every stage a concurrent
-    * StreamingQuery with its own checkpoint; a query arriving after a
-    * vector's ingest batch sees it, exact rescore included.
-    */
-  def startAllWithSearch(spark: SparkSession, raw: DataFrame, cfg: Config,
-                         corpusDir: String, vecs: DataFrame,
-                         queries: DataFrame, vecCheckpoint: String,
-                         searchCheckpoint: String, nQueries: Int, k: Int,
-                         format: graft.storage.TableFormat =
-                           graft.storage.TableFormat.parquet)
-                        (sink: DataFrame => Unit): Seq[StreamingQuery] =
-    startAllWithAnalytics(spark, raw, cfg, format) ++
-      searchStages(spark, corpusDir, vecs, queries, vecCheckpoint,
-        searchCheckpoint, nQueries, k)(sink)
-
-  /** The vector half of [[startAllWithSearch]] alone — composed ingest
-    * + rung search stream — so a bench or deployment can pair it with
-    * ANY event-side stage set (StreamBench's search soak rides it next
-    * to the same three stages `full` mode runs, keeping the two modes'
-    * event throughput comparable — review r15).
+  /** The similarity-serving stages: the composed raw+rung ingest
+    * ([[StreamingSimilarity.startEmbeddingIngest]]: raw embeddings store
+    * and all three standing rung tables, one idempotent batch body) and
+    * the query-side rung search stream serving each query batch against
+    * the SAME standing tables the ingest appends into, so a query
+    * arriving after a vector's ingest batch sees it, exact rescore
+    * included. Pair it with any event-side stage set: StreamBench's
+    * search soak runs it next to [[startAll]], and PipelineSpec runs it
+    * beside all five event stages.
     */
   def searchStages(spark: SparkSession, corpusDir: String, vecs: DataFrame,
                    queries: DataFrame, vecCheckpoint: String,

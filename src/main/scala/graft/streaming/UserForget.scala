@@ -453,12 +453,6 @@ object UserForget {
     // ——— drain guards (deferral, not failure) — the shared predicate
     // the SLA audit reports on, so a -2 here is never silent ———
     if (deferralReasonOn(fs, cfg).isDefined) return -2L
-    // fold any coalesced pending deltas FIRST (goldFoldEvery > 1): a
-    // tombstoned user's partials must reach the snapshot before the
-    // scrub, or they would resurrect the user at the next fold. The
-    // change rows the flush emits are scrubbed below before the (still
-    // quiesced) serve stream ever lists them.
-    Pipeline.flushGold(spark, cfg)
     val goldCommitted =
       Pipeline.committedSourcePaths(fs, cfg.checkpoint("gold"))
     val serveCommitted =

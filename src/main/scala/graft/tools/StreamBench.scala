@@ -82,15 +82,9 @@ object StreamBench {
     // batch — pure fixed overhead at bench scale
     val goldBuckets =
       sys.env.getOrElse("SPARK_GRAFT_GOLD_BUCKETS", "8").toInt
-    // SPARK_GRAFT_GOLD_FOLD_EVERY > 1 turns on the coalesced (pending
-    // delta-log) gold fold — the increment-proportional shape for
-    // high-group-cardinality replays; drainAll flushes the remainder so
-    // end-state checks are unaffected
-    val goldFoldEvery =
-      sys.env.getOrElse("SPARK_GRAFT_GOLD_FOLD_EVERY", "1").toInt
     val cfg = Pipeline.Config(
       java.nio.file.Files.createTempDirectory("graft_sbench").toString,
-      goldBuckets = goldBuckets, goldFoldEvery = goldFoldEvery)
+      goldBuckets = goldBuckets)
     // per-stage progress (the dashboard-metrics analog): sustained rates
     // reported per query alongside the end-to-end number
     val progress = new graft.streaming.Metrics.ProgressLog()
@@ -115,9 +109,9 @@ object StreamBench {
     // search mode pairs the SAME three event stages `full` runs with the
     // two vector stages, so its events/sec is comparable to full-mode
     // numbers and the delta is attributable to the vector lifecycle
-    // (the 7-stage startAllWithSearch demo is spec-pinned in
-    // PipelineSpec; benching it would fold retention+anomaly cost into
-    // the event rate and misprice the search side)
+    // (PipelineSpec pins the seven-stage shape — the five event stages
+    // plus searchStages; benching it would fold retention+anomaly cost
+    // into the event rate and misprice the search side)
     val forgetInput = MemoryStream[String](96, spark, None)
     val queries =
       if (search)
@@ -135,15 +129,8 @@ object StreamBench {
       else if (full) Pipeline.startAll(spark, input.toDF(), cfg)
       else Seq(Pipeline.startSilver(spark, input.toDF(), cfg))
     // drain the chain in dependency order: silver files feed gold, gold
-    // change files feed serve; under a coalescing fold cadence the gold
-    // remainder flushes between the passes (no-op at the default cadence)
-    def drainAll(): Unit = {
-      queries.foreach(_.processAllAvailable())
-      if (full) {
-        Pipeline.flushGold(spark, cfg)
-        queries.foreach(_.processAllAvailable())
-      }
-    }
+    // change files feed serve
+    def drainAll(): Unit = queries.foreach(_.processAllAvailable())
     // Per-batch pacing: block on stage 1 only. Gold and serve run
     // CONCURRENTLY on their own triggers — exactly how [[Pipeline.startAll]]
     // deploys them (and how the reference's main.py runs its three jobs) —

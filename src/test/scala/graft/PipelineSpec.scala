@@ -337,34 +337,6 @@ class PipelineSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("stateful gold via mapGroupsWithState folds across micro-batches") {
-    val input = MemoryStream[graft.model.SilverRow](5, spark, None)
-    val q = Pipeline.statefulGold(input.toDS())
-      .writeStream.outputMode("update")
-      .format("memory").queryName("graft_stateful_gold").start()
-    try {
-      input.addData(
-        graft.model.SilverRow("a1", "g1", 1.0f, 100L, 0L, 0L),
-        graft.model.SilverRow("a2", "g1", 2.0f, 200L, 0L, 0L))
-      q.processAllAvailable()
-      input.addData(
-        graft.model.SilverRow("a3", "g1", 3.0f, 300L, 0L, 0L),
-        graft.model.SilverRow("b1", "g2", 5.0f, 400L, 0L, 0L))
-      q.processAllAvailable()
-      // memory sink in update mode appends each emission; the emission
-      // with the highest event_count per group is the latest state
-      val rows = spark.table("graft_stateful_gold")
-      val latest = rows.orderBy(col("event_count"))
-        .collect().map(r => r.getAs[String]("group_id") -> r).toMap
-      val g1 = latest("g1")
-      assert(g1.getAs[Long]("event_count") == 3L)
-      assert(math.abs(g1.getAs[Float]("cumulative_score") - 6.0f) < 1e-5)
-      // faithful batch-overwrite semantics: first reflects batch 2 only
-      assert(g1.getAs[Long]("first_event_timestamp") == 300L)
-      assert(latest("g2").getAs[Long]("event_count") == 1L)
-    } finally q.stop()
-  }
-
   test("stream-stream interval join matches events within the time bound") {
     val t0 = 1700000000000L
     val clicks = MemoryStream[Event](6, spark, None)
@@ -422,44 +394,6 @@ class PipelineSpec extends SparkTestBase {
       val got = spark.table("graft_enrich")
         .collect().map(r => r.getString(0) -> r.getString(2)).toMap
       assert(got == Map("a" -> "emea", "b" -> "unknown", "c" -> "apac"))
-    } finally q.stop()
-  }
-
-  test("stateful seen-set dedup processor keeps first-seen across batches") {
-    val input = MemoryStream[Event](9, spark, None)
-    val q = Pipeline.ttlDedup(input.toDS(), ttlMillis = 0L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_ttl_dedup").start()
-    try {
-      val t0 = 1700000000000L
-      input.addData(ev("d1", "g1", 1f, t0), ev("d1", "g1", 2f, t0 + 1),
-        ev("d2", "g1", 3f, t0 + 2))
-      q.processAllAvailable()
-      input.addData(ev("d1", "g1", 4f, t0 + 3), ev("d3", "g2", 5f, t0 + 4))
-      q.processAllAvailable()
-      val ids = spark.table("graft_ttl_dedup")
-        .select("id").as[String].collect().sorted.toSeq
-      assert(ids == Seq("d1", "d2", "d3"))
-    } finally q.stop()
-  }
-
-  test("transformWithState gold processor folds across micro-batches") {
-    val input = MemoryStream[graft.model.SilverRow](8, spark, None)
-    val q = Pipeline.statefulGoldTws(input.toDS())
-      .writeStream.outputMode("update")
-      .format("memory").queryName("graft_tws_gold").start()
-    try {
-      input.addData(
-        graft.model.SilverRow("a1", "g1", 1.0f, 100L, 0L, 0L),
-        graft.model.SilverRow("a2", "g1", 2.0f, 200L, 0L, 0L))
-      q.processAllAvailable()
-      input.addData(graft.model.SilverRow("a3", "g1", 3.0f, 300L, 0L, 0L))
-      q.processAllAvailable()
-      val latest = spark.table("graft_tws_gold").orderBy(col("event_count"))
-        .collect().map(r => r.getAs[String]("group_id") -> r).toMap
-      val g1 = latest("g1")
-      assert(g1.getAs[Long]("event_count") == 3L)
-      assert(math.abs(g1.getAs[Float]("cumulative_score") - 6.0f) < 1e-5)
     } finally q.stop()
   }
 
@@ -630,111 +564,43 @@ class PipelineSpec extends SparkTestBase {
 
   test("gold fold emits an insert/preimage/postimage change feed") {
     val cfg = freshCfg()
-    def fold(g: String, score: Float, ts: Long, batchId: Long) =
+    def fold(batchId: Long, rows: (String, Float, Long)*) =
       Pipeline.foldToGold(spark,
-        Seq((g, score, ts)).toDF("group_id", "score", "event_timestamp"),
-        batchId, cfg)
-    fold("g1", 1.0f, 100L, 0L)
-    fold("g2", 2.0f, 200L, 1L)
-    fold("g1", 3.0f, 300L, 2L)
+        rows.toDF("group_id", "score", "event_timestamp"), batchId, cfg)
+    fold(0L, ("g1", 1.0f, 100L))
+    fold(1L, ("g2", 2.0f, 200L))
+    fold(2L, ("g1", 3.0f, 300L))
+    fold(3L, ("g1", 1.0f, 500L), ("g1", 2.0f, 400L))
+    fold(4L, ("g1", 1.0f, 50L)) // older than everything g1 has seen
     val changes = spark.read.parquet(cfg.goldChangesPath)
       // partition-dir columns come back as inferred INT in batch reads
       .select(col("group_id"), col("_change_type"),
         col("_commit_version").cast("long"),
-        col("cumulative_score"), col("event_count"))
+        col("cumulative_score"), col("event_count"),
+        col("first_event_timestamp"), col("last_event_timestamp"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getDouble(3), r.getLong(4))).toSet
+        r.getDouble(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSet
+    // first/last follow the faithful batch-overwrite semantics (SURVEY
+    // §7.5-3): a touching batch's own min/max replace the stored pair —
+    // batch 3 leaves 400 (not g1's all-time 100) as first, batch 4 moves
+    // last back to 50 — while an untouched group keeps its pair
     assert(changes == Set(
-      ("g1", "insert", 0L, 1.0, 1L),
-      ("g2", "insert", 1L, 2.0, 1L),
-      ("g1", "update_preimage", 2L, 1.0, 1L),
-      ("g1", "update_postimage", 2L, 4.0, 2L)))
-  }
-
-  test("coalesced gold fold (goldFoldEvery > 1): per-batch cost is one " +
-    "pending append, buckets fold on cadence, flushGold drains the " +
-    "remainder to the exact per-batch-fold end state") {
-    val cfg = freshCfg().copy(goldFoldEvery = 3)
-    val goldDir = new java.io.File(cfg.goldPath)
-    val pendDir = new java.io.File(cfg.goldPendingPath)
-    def fold(rows: Seq[(String, Float, Long)], batchId: Long) =
-      Pipeline.foldToGold(spark,
-        rows.toDF("group_id", "score", "event_timestamp"), batchId, cfg)
-    // batches 0 and 1 only append to the pending delta log — no snapshot
-    fold(Seq(("g1", 1.0f, 100L), ("g2", 2.0f, 200L)), 0L)
-    fold(Seq(("g1", 3.0f, 50L)), 1L)
-    assert(!goldDir.exists(), "fold ran before the cadence was due")
-    assert(pendDir.listFiles().count(_.getName.startsWith("_pending_batch=")) == 2)
-    // batch 2 makes g1's bucket due (3 pending batches) — g2's bucket is
-    // due too (its single pending batch is now goldFoldEvery old iff
-    // batch math says so); assert via totals rather than bucket layout
-    fold(Seq(("g1", 5.0f, 400L)), 2L)
-    assert(goldDir.exists(), "cadence-due fold did not run")
-    // a replayed batch id is a no-op (global marker)
-    fold(Seq(("g1", 99.0f, 999L)), 2L)
-    // two more batches, then flush the remainder
-    fold(Seq(("g2", 4.0f, 300L), ("g3", 7.0f, 700L)), 3L)
-    Pipeline.flushGold(spark, cfg)
+      ("g1", "insert", 0L, 1.0, 1L, 100L, 100L),
+      ("g2", "insert", 1L, 2.0, 1L, 200L, 200L),
+      ("g1", "update_preimage", 2L, 1.0, 1L, 100L, 100L),
+      ("g1", "update_postimage", 2L, 4.0, 2L, 300L, 300L),
+      ("g1", "update_preimage", 3L, 4.0, 2L, 300L, 300L),
+      ("g1", "update_postimage", 3L, 7.0, 4L, 400L, 500L),
+      ("g1", "update_preimage", 4L, 7.0, 4L, 400L, 500L),
+      ("g1", "update_postimage", 4L, 8.0, 5L, 50L, 50L)))
     val gold = spark.read.parquet(cfg.goldPath)
       .collect().map(r => r.getAs[String]("group_id") ->
         ((r.getAs[Double]("cumulative_score"), r.getAs[Long]("event_count"),
           r.getAs[Long]("first_event_timestamp"),
           r.getAs[Long]("last_event_timestamp")))).toMap
-    // totals are exact; first/last carry the LAST touching batch's
-    // min/max — the same faithful batch-overwrite semantics folding the
-    // batches one at a time leaves (SURVEY §7.5-3)
-    assert(gold("g1") == ((9.0, 3L, 400L, 400L)), gold("g1").toString)
-    assert(gold("g2") == ((6.0, 2L, 300L, 300L)), gold("g2").toString)
-    assert(gold("g3") == ((7.0, 1L, 700L, 700L)), gold("g3").toString)
-    // the pending log is fully reclaimed after the flush
-    val left = Option(pendDir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(_.getName.startsWith("_pending_batch="))
-    assert(left.isEmpty, s"pending leaves survived the flush: $left")
-    // the change feed's latest postimage per key equals the snapshot —
-    // what a serve consumer folds to
-    val latest = graft.ops.Dedup.latestPerKeyAgg(
-      spark.read.parquet(cfg.goldChangesPath)
-        .filter(col("_change_type").isin("insert", "update_postimage"))
-        .select(col("group_id"), col("cumulative_score"),
-          col("event_count"), col("_commit_version").cast("long")),
-      Seq("group_id"), col("_commit_version"), latest = true)
-      .collect().map(r => r.getAs[String]("group_id") ->
-        ((r.getAs[Double]("cumulative_score"), r.getAs[Long]("event_count"))))
-      .toMap
-    assert(latest == gold.view.mapValues(v => (v._1, v._2)).toMap,
-      s"change feed latest $latest vs gold $gold")
-  }
-
-  test("coalesced chain end-to-end: startAll at goldFoldEvery=2 + flush " +
-    "serves the same state as the per-batch chain") {
-    val cfg = freshCfg().copy(goldFoldEvery = 2)
-    val input = MemoryStream[Event](48, spark, None)
-    val qs = Pipeline.startAll(spark, input.toDF(), cfg)
-    def settle(): Unit = {
-      qs.foreach(_.processAllAvailable())
-      Pipeline.flushGold(spark, cfg)
-      qs.foreach(_.processAllAvailable())
-    }
-    try {
-      val t0 = 1700000000000L
-      input.addData(ev("c1", "g1", 1.0f, t0), ev("c2", "g2", 2.0f, t0 + 1000))
-      qs.foreach(_.processAllAvailable()) // batch 0: pending only
-      input.addData(ev("c3", "g1", 3.0f, t0 + 2000),
-        ev("c1", "g1", 1.0f, t0)) // duplicate — must not reach pending
-      settle()
-      val streamed = Pipeline.serveSnapshot(spark, cfg)
-        .select(col("_id"), col("cumulative_score"), col("event_count"))
-        .orderBy("_id")
-        .collect().map(_.toSeq).toSeq
-      val batch = Pipeline.serveProjection(spark, cfg)
-        .select(col("_id"), col("cumulative_score"), col("event_count"))
-        .orderBy("_id")
-        .collect().map(_.toSeq).toSeq
-      assert(streamed.nonEmpty && streamed == batch,
-        s"\n$streamed\nvs\n$batch")
-      assert(streamed.map(_(2)) == Seq(2L, 1L))
-    } finally qs.foreach(_.stop())
+    assert(gold == Map("g1" -> ((8.0, 5L, 50L, 50L)),
+      "g2" -> ((2.0, 1L, 200L, 200L))), gold.toString)
   }
 
   test("three concurrent stages: streamed serving state == batch projection") {
@@ -774,7 +640,8 @@ class PipelineSpec extends SparkTestBase {
     val D = 86400000L
     val t0 = 1700006400000L
     val input = MemoryStream[Event](14, spark, None)
-    val qs = Pipeline.startAllWithAnalytics(spark, input.toDF(), cfg)
+    val qs = Pipeline.startAll(spark, input.toDF(), cfg) ++
+      Seq(Pipeline.startRetention(spark, cfg), Pipeline.startAnomaly(spark, cfg))
     def settle(): Unit = { qs.foreach(_.processAllAvailable()) }
     try {
       input.addData(
@@ -820,7 +687,7 @@ class PipelineSpec extends SparkTestBase {
     } finally qs.foreach(_.stop())
   }
 
-  test("seven concurrent stages (startAllWithSearch): the event views " +
+  test("seven concurrent stages (five event stages + searchStages): the event views " +
     "hold AND a stream-ingested vector is served through the rung search " +
     "stream, exact rescore included (VERDICT r14 next #6)") {
     import java.nio.file.Files
@@ -833,11 +700,13 @@ class PipelineSpec extends SparkTestBase {
     val vecs = MemoryStream[(Long, Seq[Float])](17, spark, None)
     val panel = MemoryStream[(Long, Seq[Double])](18, spark, None)
     val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    val qs = Pipeline.startAllWithSearch(spark, input.toDF(), cfg, corpus,
-      vecs.toDF().toDF("vec_id", "embedding"),
-      panel.toDF().toDF("qid", "qe"),
-      s"${cfg.baseDir}/vec_ckpt", s"${cfg.baseDir}/search_ckpt",
-      nQueries = 10, k = 3)(res => got.synchronized { got ++= res.collect() })
+    val qs = Pipeline.startAll(spark, input.toDF(), cfg) ++
+      Seq(Pipeline.startRetention(spark, cfg), Pipeline.startAnomaly(spark, cfg)) ++
+      Pipeline.searchStages(spark, corpus,
+        vecs.toDF().toDF("vec_id", "embedding"),
+        panel.toDF().toDF("qid", "qe"),
+        s"${cfg.baseDir}/vec_ckpt", s"${cfg.baseDir}/search_ckpt",
+        nQueries = 10, k = 3)(res => got.synchronized { got ++= res.collect() })
     def settle(): Unit = qs.foreach(_.processAllAvailable())
     try {
       val t0 = 1700000000000L
