@@ -20,46 +20,48 @@ import org.apache.spark.sql.SparkSession
   * repeats of the unlucky one.
   */
 object Bench {
+  /** Best-of-`reps` seconds per query, round-robin over the whole set,
+    * each run under the query's job tag. A query that throws in any rep
+    * is reported in `failed` (sorted) and never timed again: a failure
+    * that returns at once must not read as a fast time.
+    */
+  def time(spark: SparkSession, queries: Seq[(String, GraftSession.Query)],
+           dir: String, reps: Int, verbose: Boolean = false)
+      : (Seq[(String, Double)], Seq[String]) = {
+    val best = scala.collection.mutable.Map[String, Double]()
+    val failed = scala.collection.mutable.Set[String]()
+    for (rep <- 1 to reps; (name, fn) <- queries if !failed(name)) {
+      if (verbose) System.err.println(s"[bench] rep $rep start $name")
+      val t0 = System.nanoTime()
+      try {
+        GraftSession.tagged(spark, name)(fn(spark, dir).count())
+        val sec = (System.nanoTime() - t0) / 1e9
+        if (verbose) System.err.println(f"[bench] rep $rep done  $name $sec%.2f s")
+        best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] rep $rep $name failed: ${e.getMessage}")
+        failed += name
+      }
+    }
+    (queries.collect { case (n, _) if !failed(n) => n -> best(n) },
+      failed.toSeq.sorted)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDirDefault = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // Optional comma-separated subset for targeted perf iteration;
     // the driver's full run leaves this unset.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on a typo'd name — a silent empty selection would emit an
-    // empty benchmark that reads as "nothing regressed"
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not registered: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None    => SparkEntry.queries
-    }
+    val selected = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(SparkEntry.queries)(GraftSession.select(_, "SPARK_GRAFT_BENCH_ONLY"))
 
     // the tombstone fixture (both dirs — warmup runs every query too):
     // registered once so the forget queries time the steady-state read
     // path, not per-rep registration probes
-    Seq(warmDirDefault, sfDir).distinct.foreach { d =>
-      try SparkEntry.registerForgetFixtures(spark, d)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] forget fixture failed for $d: ${e.getMessage}")
-      }
-    }
+    GraftSession.registerForgetFixtures(spark, warmDirDefault, sfDir)
     selected.foreach { case (_, fn) =>
       try fn(spark, warmDirDefault).count() catch { case _: Throwable => () }
     }
@@ -69,7 +71,6 @@ object Bench {
     // instead of a jstack guessing game
     val verbose = sys.env.get("SPARK_GRAFT_BENCH_VERBOSE").contains("1")
     val names = selected.toSeq.sortBy(_._1)
-    val best = scala.collection.mutable.Map[String, Double]()
     // host-load provenance (r15 VERDICT next #2): the r15 driver bench
     // read 22% above the same-HEAD canonical run with the shift diffuse
     // across untouched plans — host noise, but nothing in the artifact
@@ -80,15 +81,7 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val wallStartMs = System.currentTimeMillis()
     val loadStart = loadavg()
-    for (rep <- 1 to reps; (name, fn) <- names) {
-      if (verbose) System.err.println(s"[bench] rep $rep start $name")
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (verbose) System.err.println(f"[bench] rep $rep done  $name $sec%.2f s")
-      best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
-    }
-    val results = names.map { case (name, _) => name -> best(name) }
+    val (results, failed) = time(spark, names, sfDir, reps, verbose)
     val loadEnd = loadavg()
     val wallEndMs = System.currentTimeMillis()
     // Locale.ROOT: f"%.2f" under a comma-decimal default locale (de_DE)
@@ -96,7 +89,8 @@ object Bench {
     // failure this line exists to avoid. Double.toString is locale-safe.
     def fmt2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    def toJson(rs: Seq[(String, Double)], round2: Boolean): String = {
+    def toJson(rs: Seq[(String, Double)], round2: Boolean,
+               extra: String = ""): String = {
       val qs = rs.map { case (k, v) =>
         val vv = if (round2) fmt2(v) else v.toString
         "\"" + k + "\":" + vv
@@ -105,8 +99,12 @@ object Bench {
       val tv = if (round2) fmt2(total) else total.toString
       val prov = s""""loadavg_start":${fmt2(loadStart)},"loadavg_end":${fmt2(loadEnd)},""" +
         s""""wall_start_ms":$wallStartMs,"wall_sec":${fmt2((wallEndMs - wallStartMs) / 1e3)}"""
-      s"""{"metric":"total","value":$tv,"unit":"sec","queries":$qs,"sf":"$sfDir","n":$reps,"n_queries":${results.size},$prov}"""
+      s"""{"metric":"total","value":$tv,"unit":"sec","queries":$qs,"sf":"$sfDir","n":$reps,"n_queries":${results.size},$prov$extra}"""
     }
+    // BENCH_LOCAL.json also lists the failed queries (left out of
+    // `queries` and `value`); stdout keeps its small fixed shape
+    val failedJson =
+      failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
     // The driver scrapes a SMALL tail of stdout (~500 bytes observed):
     // r6/r7 lost the full 115-query line, and r8's slowest-10 compact
     // line STILL lost its head to the window (parsed: null three rounds
@@ -114,7 +112,7 @@ object Bench {
     // line is now slowest-5 at 2 decimals (≈200 bytes) and is printed
     // AFTER spark.stop() so no shutdown log line can land behind it.
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      (toJson(results, round2 = false) + "\n").getBytes("UTF-8"))
+      (toJson(results, round2 = false, failedJson) + "\n").getBytes("UTF-8"))
     spark.stop()
     println(toJson(results.sortBy(-_._2).take(5).sortBy(_._1), round2 = true))
   }

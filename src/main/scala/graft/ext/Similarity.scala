@@ -1071,7 +1071,7 @@ object Similarity {
         col("embedding").as("eb"))
     // both sides are nPanel-row slices, but the JOINED frame has no
     // scan-level stats — without the hint every downstream join of the
-    // panel falls back to sort-merge (r12 Explain audit)
+    // panel falls back to sort-merge (r12 plan audit)
     a.join(broadcast(b), Seq("qid"))
       .select(col("qid"), zip_with(col("ea"), col("eb"),
         (x, y) => x.cast("double") + y.cast("double")).as("qe"))
@@ -1838,7 +1838,7 @@ object Similarity {
     // the query frame is broadcast by CONTRACT (a bounded panel): a
     // caller-supplied frame is often a join result with no stats, and
     // without the hint this join plans sort-merge, shuffling the
-    // cell-side rows (r12 Explain audit)
+    // cell-side rows (r12 plan audit)
     rankTopK(probed.join(corpusFilter(spark.table(ivfCellsTable(dir, key))),
         Seq("cent_id"))
       .join(broadcast(q), Seq("qid"))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * partitionless WindowExec in any registered query" claim while the
   * driver's bench log filled with `WindowExec: No Partition Defined`
   * warnings — the audit was blind, not the plans clean. Every plan-shape
-  * audit (PlanDump, PlanAuditSpec) walks through this instead.
+  * audit (`Inspect plan`, PlanAuditSpec) walks through this instead.
   */
 object PlanWalk {
 

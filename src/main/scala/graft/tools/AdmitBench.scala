@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.TextDedup
@@ -24,15 +23,7 @@ object AdmitBench {
     val dir = args(0)
     val batch = args.lift(1).map(_.toInt).getOrElse(1000)
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val newDocs = TextDedup.documents(spark, dir)
       .filter(col("doc_id") % 10 >= 8)
       .orderBy(col("doc_id")).limit(batch)

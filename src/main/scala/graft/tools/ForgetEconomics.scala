@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Forget, Pq, Rung, Similarity}
@@ -41,15 +40,7 @@ object ForgetEconomics {
     val points = args.lift(1)
       .map(_.split(",").map(_.trim.toLong).toSeq)
       .getOrElse(Seq(1L, 10L, 100L, 1000L, 10000L))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val hconf = spark.sparkContext.hadoopConfiguration
 
     def bytesOf(p: Path): Long = {

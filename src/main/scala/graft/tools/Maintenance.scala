@@ -192,15 +192,7 @@ object Maintenance {
     require(args.nonEmpty, "usage: Maintenance <pipelineBaseDir> [intervalSec]")
     val baseDir = args(0)
     val intervalSec = if (args.length > 1) args(1).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val cfg = Pipeline.Config(baseDir)
     val format = graft.storage.TableFormat.parquet
     // Optional: also fold the substring gram index's per-batch

@@ -175,16 +175,7 @@ object ScaleGen {
     require(args.length == 3,
       "usage: ScaleGen <baseDir> <outDir> <factor>")
     val Array(baseDir, outDir, factorStr) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scalegen")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     generate(spark, baseDir, outDir, factorStr.toInt)
     val counts =
       tables.map(t => t -> spark.read.parquet(s"$outDir/$t.parquet").count())

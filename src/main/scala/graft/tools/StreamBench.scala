@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, unix_millis}
 
@@ -58,22 +57,13 @@ object StreamBench {
     val forget = args.contains("forget")
     val full = args.contains("full") || search || forget
     val batchSize = 10000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val spark = graft.GraftSession.local()
     // Micro-batches of ~10k rows want FEW shuffle partitions: every state
     // op keeps one RocksDB instance per partition and checkpoints all of
     // them each batch, so 32 partitions is pure overhead at this batch
     // size (the reference ran 8 on a 4-core cluster, config.py:69).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Pipeline.rocksDbConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     import spark.implicits._
 
     // gold bucket count should track |gold| (buckets ~ groups/5k so a

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.model.Event
@@ -15,14 +14,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("graft_demo").toString
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Pipeline.rocksDbConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     val cfg = Pipeline.Config(base)

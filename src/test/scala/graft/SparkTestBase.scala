@@ -10,16 +10,8 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.streaming.Pipeline.rocksDbConfigs)
-      .getOrCreate()
+    val s = GraftSession.local(4, Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
