@@ -7,10 +7,13 @@ import graft.ext.{Classifier, Curation, Forget, Layout, Multimodal, Pq, Rung, Si
 import graft.ops.Ingest
 import graft.ops.Exact.round6
 
-/** Registry of the LLM-data-pipeline extension queries (SURVEY §7.6):
-  * dedup (exact / MinHash-LSH / n-gram Jaccard / SimHash), embedding
-  * similarity search, text analysis, multimodal plumbing. Split from
-  * SparkEntry to keep the driver contract file readable.
+/** The LLM-data-pipeline extension specs of the query registry (SURVEY
+  * §7.6): dedup (exact / MinHash-LSH / n-gram Jaccard / SimHash),
+  * embedding similarity search, text analysis, multimodal plumbing —
+  * each a [[QuerySpec]] with its builder beside its oracle SQL, read
+  * through [[SparkEntry.queries]] / [[SparkEntry.oracleSql]]. Split from
+  * SparkEntry to keep the driver contract file readable; the shared
+  * oracle CTE fragments follow the list.
   *
   * Oracle parity: hashes are md5/sha256 hex strings (identical in both
   * engines); ratios are exact small-integer divisions in double; the only
@@ -19,128 +22,446 @@ import graft.ops.Exact.round6
   */
 object ExtEntry {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> ((s, dir) =>
-      TextDedup.exactGroups(s, dir).orderBy(col("keep_doc_id"))),
+  private[graft] lazy val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_exact", (s, dir) =>
+      TextDedup.exactGroups(s, dir).orderBy(col("keep_doc_id")),
+      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_doc_id,
+        |  count(*) AS n_copies
+        |FROM documents GROUP BY md5(text) ORDER BY keep_doc_id""".stripMargin),
 
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      TextDedup.candidatePairs(s, dir).orderBy(col("d1"), col("d2"))),
+    QuerySpec("dedup_minhash_lsh", (s, dir) =>
+      TextDedup.candidatePairs(s, dir).orderBy(col("d1"), col("d2")),
+      s"""WITH $shinglesCte,
+         |$bandsCte
+         |SELECT d1, d2 FROM cand ORDER BY d1, d2""".stripMargin),
 
-    "dedup_jaccard" -> ((s, dir) =>
-      TextDedup.nearDupPairs(s, dir, 0.5).orderBy(col("d1"), col("d2"))),
+    QuerySpec("dedup_jaccard", (s, dir) =>
+      TextDedup.nearDupPairs(s, dir, 0.5).orderBy(col("d1"), col("d2")),
+      s"""WITH $shinglesCte,
+         |$bandsCte
+         |SELECT d1, d2,
+         |  CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS jaccard
+         |FROM cand JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5
+         |ORDER BY d1, d2""".stripMargin),
 
     // banding recall audit: true near-dup pairs (exact panel-bounded
     // Jaccard) vs the pairs the band/bucket stage surfaces — the
     // measured miss rate behind the (bands, rows) setting
-    "dedup_recall" -> ((s, dir) =>
-      TextDedup.bandingRecall(s, dir, nPanel = 50, threshold = 0.5)),
+    // oracle: panel-bounded ground-truth pairs LEFT JOIN the banding
+    // candidates
+    QuerySpec("dedup_recall", (s, dir) =>
+      TextDedup.bandingRecall(s, dir, nPanel = 50, threshold = 0.5),
+      s"""WITH $shinglesCte,
+         |$bandsCte,
+         |panel AS (SELECT doc_id AS p, shingles AS ps FROM sh
+         |  WHERE doc_id < 50),
+         |truth AS (SELECT DISTINCT least(p, s.doc_id) AS d1,
+         |    greatest(p, s.doc_id) AS d2,
+         |    CAST(len(list_intersect(ps, s.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(ps, s.shingles))) AS j
+         |  FROM sh s, panel
+         |  WHERE s.doc_id <> p
+         |    AND CAST(len(list_intersect(ps, s.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(ps, s.shingles))) >= 0.5)
+         |SELECT t.d1, t.d2, floor(CAST((t.j) AS DOUBLE)*1000000 + 0.5)/1000000 AS jaccard,
+         |  (c.d1 IS NOT NULL) AS found
+         |FROM truth t LEFT JOIN cand c ON t.d1 = c.d1 AND t.d2 = c.d2
+         |ORDER BY t.d1, t.d2""".stripMargin),
 
     // per candidate pair: signature-estimated vs exact Jaccard and the
     // absolute error — the evidence behind the 8-slot signature width
-    "dedup_minhash_err" -> ((s, dir) =>
-      TextDedup.minhashEstimateError(s, dir)),
+    // oracle: signature-slot agreement vs exact Jaccard per candidate pair
+    QuerySpec("dedup_minhash_err", (s, dir) =>
+      TextDedup.minhashEstimateError(s, dir),
+      s"""WITH $shinglesCte,
+         |$bandsCte,
+         |mm AS (SELECT c.d1, c.d2,
+         |    CAST(sum(CASE WHEN s1.sig[j+1] = s2.sig[j+1]
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_match
+         |  FROM cand c JOIN sig s1 ON s1.doc_id = c.d1
+         |    JOIN sig s2 ON s2.doc_id = c.d2,
+         |    UNNEST([0,1,2,3,4,5,6,7]) AS u(j)
+         |  GROUP BY c.d1, c.d2),
+         |ex AS (SELECT d1, d2,
+         |    CAST(len(list_intersect(sh1.shingles, sh2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(sh1.shingles, sh2.shingles))) AS j0
+         |  FROM cand JOIN sh sh1 ON sh1.doc_id = d1
+         |    JOIN sh sh2 ON sh2.doc_id = d2)
+         |SELECT m.d1, m.d2, m.n_match,
+         |  floor(CAST((CAST(m.n_match AS DOUBLE) / 8) AS DOUBLE)*1000000 + 0.5)/1000000 AS est,
+         |  floor(CAST((e.j0) AS DOUBLE)*1000000 + 0.5)/1000000 AS jaccard,
+         |  floor(CAST((abs(CAST(m.n_match AS DOUBLE) / 8 - e.j0)) AS DOUBLE)*1000000 + 0.5)/1000000 AS abs_err
+         |FROM mm m JOIN ex e ON m.d1 = e.d1 AND m.d2 = e.d2
+         |ORDER BY m.d1, m.d2""".stripMargin),
 
     // reads the corpus side from the persisted band/shingle index
     // (built on first use in the session, reused after — the amortized
-    // daily-crawl shape); the oracle recomputes the same thing in SQL
-    "dedup_incremental" -> ((s, dir) =>
-      TextDedup.incrementalDedupIndexed(s, dir, 0.5)),
+    // daily-crawl shape); the oracle recomputes the same thing in SQL,
+    // mirroring TextDedup.incrementalDedup: corpus-side buckets rank-capped,
+    // new-side uncapped, candidates strictly new×corpus, Jaccard verify,
+    // then one admission verdict per new doc (best match by jaccard desc /
+    // id asc, left-joined so no-match docs report keep = true)
+    QuerySpec("dedup_incremental", (s, dir) =>
+      TextDedup.incrementalDedupIndexed(s, dir, 0.5),
+      s"""WITH $shinglesCte,
+         |$sigBandsCte,
+         |corpusb AS (SELECT doc_id, b, bh FROM (
+         |    SELECT doc_id, b, bh,
+         |      row_number() OVER (PARTITION BY b, bh ORDER BY doc_id) AS rk
+         |    FROM bands0 WHERE doc_id % 10 < 8) WHERE rk <= ${graft.ext.TextDedup.maxBucket}),
+         |newb AS (SELECT doc_id, b, bh FROM bands0 WHERE doc_id % 10 >= 8),
+         |cand AS (SELECT DISTINCT n.doc_id AS d_new, c.doc_id AS d_old
+         |  FROM newb n JOIN corpusb c ON n.b = c.b AND n.bh = c.bh),
+         |ver AS (SELECT d_new, d_old,
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS j
+         |  FROM cand JOIN sh s1 ON s1.doc_id = d_new JOIN sh s2 ON s2.doc_id = d_old
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |best AS (SELECT d_new, d_old, j,
+         |    row_number() OVER (PARTITION BY d_new ORDER BY j DESC, d_old) AS rk,
+         |    count(*) OVER (PARTITION BY d_new) AS nm FROM ver)
+         |SELECT d.doc_id, coalesce(b.nm, 0) AS n_matches,
+         |  b.d_old AS best_match, floor(CAST((b.j) AS DOUBLE)*1000000 + 0.5)/1000000 AS best_jaccard,
+         |  b.d_old IS NULL AS keep
+         |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 >= 8) d
+         |LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON d.doc_id = b.d_new
+         |ORDER BY d.doc_id""".stripMargin),
 
     // the deployment cost law (VERDICT r16 next #3): a FIXED ~100-doc
     // admission batch against the standing index — the shape AdmitBench
     // measured ~flat in corpus size, now oracle-registered so the scale
     // artifact grades it (dedup_incremental's 20%-holdout batch is
     // corpus-proportional by construction and reads like the corpus)
-    "dedup_incremental_fixed" -> ((s, dir) =>
-      TextDedup.incrementalDedupIndexedFixed(s, dir, 0.5)),
+    // oracle: the fixed-increment twin: identical chain with the new side
+    // (and the verdict frame) bounded to doc_id < 500 — ~100 docs at every
+    // SF, the deployed daily-crawl batch
+    QuerySpec("dedup_incremental_fixed", (s, dir) =>
+      TextDedup.incrementalDedupIndexedFixed(s, dir, 0.5),
+      s"""WITH $shinglesCte,
+         |$sigBandsCte,
+         |corpusb AS (SELECT doc_id, b, bh FROM (
+         |    SELECT doc_id, b, bh,
+         |      row_number() OVER (PARTITION BY b, bh ORDER BY doc_id) AS rk
+         |    FROM bands0 WHERE doc_id % 10 < 8) WHERE rk <= ${graft.ext.TextDedup.maxBucket}),
+         |newb AS (SELECT doc_id, b, bh FROM bands0
+         |  WHERE doc_id % 10 >= 8 AND doc_id < 500),
+         |cand AS (SELECT DISTINCT n.doc_id AS d_new, c.doc_id AS d_old
+         |  FROM newb n JOIN corpusb c ON n.b = c.b AND n.bh = c.bh),
+         |ver AS (SELECT d_new, d_old,
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS j
+         |  FROM cand JOIN sh s1 ON s1.doc_id = d_new JOIN sh s2 ON s2.doc_id = d_old
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |best AS (SELECT d_new, d_old, j,
+         |    row_number() OVER (PARTITION BY d_new ORDER BY j DESC, d_old) AS rk,
+         |    count(*) OVER (PARTITION BY d_new) AS nm FROM ver)
+         |SELECT d.doc_id, coalesce(b.nm, 0) AS n_matches,
+         |  b.d_old AS best_match, floor(CAST((b.j) AS DOUBLE)*1000000 + 0.5)/1000000 AS best_jaccard,
+         |  b.d_old IS NULL AS keep
+         |FROM (SELECT doc_id FROM documents
+         |  WHERE doc_id % 10 >= 8 AND doc_id < 500) d
+         |LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON d.doc_id = b.d_new
+         |ORDER BY d.doc_id""".stripMargin),
 
-    "split_leakage" -> ((s, dir) =>
-      Curation.splitLeakage(s, dir, 0.5)),
+    // mirrors Curation.splitLeakage: the dedup_jaccard verified pairs,
+    // each endpoint's split recomputed from its id (pure hash — no join
+    // back to documents), cross-split rows only
+    QuerySpec("split_leakage", (s, dir) =>
+      Curation.splitLeakage(s, dir, 0.5),
+      s"""WITH $shinglesCte,
+         |$bandsCte,
+         |ver AS (SELECT d1, d2,
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS jaccard
+         |  FROM cand JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |lab AS (SELECT d1, d2, jaccard,
+         |    CASE WHEN substr(md5(CAST(d1 AS VARCHAR)), 1, 4) < '0ccc' THEN 'test'
+         |         WHEN substr(md5(CAST(d1 AS VARCHAR)), 1, 4) < '1999' THEN 'val'
+         |         ELSE 'train' END AS split1,
+         |    CASE WHEN substr(md5(CAST(d2 AS VARCHAR)), 1, 4) < '0ccc' THEN 'test'
+         |         WHEN substr(md5(CAST(d2 AS VARCHAR)), 1, 4) < '1999' THEN 'val'
+         |         ELSE 'train' END AS split2
+         |  FROM ver)
+         |SELECT d1, d2, split1, split2, jaccard FROM lab
+         |WHERE split1 <> split2 ORDER BY d1, d2""".stripMargin),
 
-    "dedup_cluster" -> ((s, dir) =>
-      TextDedup.nearDupClusters(s, dir, 0.5).orderBy(col("cluster_id"))),
+    // connected components stated declaratively: the recursive CTE is the
+    // transitive closure of the verified pair graph (tiny after LSH+
+    // jaccard pruning), label = least id reachable. The Spark side must
+    // reach the identical fixpoint through iterative label propagation.
+    QuerySpec("dedup_cluster", (s, dir) =>
+      TextDedup.nearDupClusters(s, dir, 0.5).orderBy(col("cluster_id")),
+      s"""WITH RECURSIVE $shinglesCte,
+         |$bandsCte,
+         |pairs AS (SELECT d1, d2 FROM cand
+         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
+         |  UNION SELECT d2, d1 FROM pairs),
+         |reach(node, r) AS (
+         |  SELECT a, b FROM edges
+         |  UNION
+         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
+         |lbl AS (SELECT node, least(node, min(r)) AS cluster_id
+         |  FROM reach GROUP BY node)
+         |SELECT cluster_id, count(*) AS n_docs, max(node) AS max_doc
+         |FROM lbl GROUP BY cluster_id ORDER BY cluster_id""".stripMargin),
 
-    "dedup_survivors" -> ((s, dir) =>
-      TextDedup.survivors(s, dir, 0.5)),
+    // mirrors TextDedup.survivors: cluster labels from the same recursive
+    // closure, singletons fall through the left join as their own keeper,
+    // then one merge-aggregation per keeper
+    QuerySpec("dedup_survivors", (s, dir) =>
+      TextDedup.survivors(s, dir, 0.5),
+      s"""WITH RECURSIVE $shinglesCte,
+         |$bandsCte,
+         |pairs AS (SELECT d1, d2 FROM cand
+         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
+         |  UNION SELECT d2, d1 FROM pairs),
+         |reach(node, r) AS (
+         |  SELECT a, b FROM edges
+         |  UNION
+         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
+         |lbl AS (SELECT node, least(node, min(r)) AS cluster_id
+         |  FROM reach GROUP BY node)
+         |SELECT coalesce(l.cluster_id, d.doc_id) AS keeper_doc_id,
+         |  count(*) AS n_members,
+         |  CAST(sum(d.n_chars) AS BIGINT) AS total_chars,
+         |  string_agg(DISTINCT d.lang, ',' ORDER BY d.lang) AS langs,
+         |  max(d.doc_id) AS latest_member
+         |FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node
+         |GROUP BY coalesce(l.cluster_id, d.doc_id)
+         |ORDER BY keeper_doc_id""".stripMargin),
 
-    "text_simhash" -> ((s, dir) =>
-      TextDedup.simhash(s, dir).orderBy(col("doc_id"))),
+    QuerySpec("text_simhash", (s, dir) =>
+      TextDedup.simhash(s, dir).orderBy(col("doc_id")),
+      s"""WITH $simhashCte
+         |SELECT doc_id, simhash FROM hexed ORDER BY doc_id""".stripMargin),
 
-    "dedup_simhash" -> ((s, dir) =>
-      TextDedup.simhashPairs(s, dir, 3).orderBy(col("d1"), col("d2"))),
+    // Mirrors TextDedup.simhashPairsFromHashes: collapse docs by full
+    // simhash (sorted members capped at maxBucket, rep = min), chunk
+    // buckets over reps (rank-capped), hamming filter on rep pairs, then
+    // expansion back through the member lists (cross via least/greatest,
+    // within-class pairs at hamming 0).
+    QuerySpec("dedup_simhash", (s, dir) =>
+      TextDedup.simhashPairs(s, dir, 3).orderBy(col("d1"), col("d2")),
+      s"""WITH $simhashCte,
+         |grp AS (SELECT simhash, (array_agg(doc_id ORDER BY doc_id))[1:$cap] AS members,
+         |    min(doc_id) AS rep FROM hexed GROUP BY simhash),
+         |chunks AS (SELECT rep, simhash, c, substr(simhash, 1 + 4*c, 4) AS chunk
+         |  FROM grp, UNNEST([0,1,2,3]) AS cc(c)),
+         |ranked AS (SELECT rep, simhash, c, chunk,
+         |    row_number() OVER (PARTITION BY c, chunk ORDER BY rep) AS rk
+         |  FROM chunks),
+         |cand AS (SELECT DISTINCT l.rep AS r1, r.rep AS r2,
+         |    l.simhash AS h1, r.simhash AS h2
+         |  FROM ranked l JOIN ranked r
+         |  ON l.c = r.c AND l.chunk = r.chunk AND l.rep < r.rep
+         |  WHERE l.rk <= $cap AND r.rk <= $cap),
+         |ham AS (SELECT r1, r2,
+         |  (SELECT sum(bit_count(xor(
+         |      strpos('0123456789abcdef', substr(h1, i, 1)) - 1,
+         |      strpos('0123456789abcdef', substr(h2, i, 1)) - 1)))
+         |   FROM UNNEST(generate_series(1, 16)) AS g(i)) AS hamming
+         |  FROM cand),
+         |pass AS (SELECT r1, r2, hamming FROM ham WHERE hamming <= 3),
+         |crossp AS (SELECT least(a, b) AS d1, greatest(a, b) AS d2, hamming
+         |  FROM pass JOIN grp g1 ON g1.rep = r1 JOIN grp g2 ON g2.rep = r2,
+         |       UNNEST(g1.members) AS u1(a), UNNEST(g2.members) AS u2(b)),
+         |within AS (SELECT a AS d1, b AS d2, 0 AS hamming
+         |  FROM grp, UNNEST(members) AS u1(a), UNNEST(members) AS u2(b)
+         |  WHERE a < b)
+         |SELECT d1, d2, CAST(hamming AS INT) AS hamming
+         |FROM (SELECT * FROM crossp UNION ALL SELECT * FROM within)
+         |ORDER BY d1, d2""".stripMargin),
 
-    "ann_cosine_topk" -> ((s, dir) =>
-      Similarity.bruteForceTopK(s, dir, nQueries = 10, k = 5)),
+    QuerySpec("ann_cosine_topk", (s, dir) =>
+      Similarity.bruteForceTopK(s, dir, nQueries = 10, k = 5),
+      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
+        |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id >= 10),
+        |sims AS (SELECT qid, cid,
+        |    list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))) /
+        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) *
+        |     sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))) AS sim
+        |  FROM q, c),
+        |rk AS (SELECT qid, cid, sim,
+        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+        |  FROM sims)
+        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
 
-    "ann_lsh_topk" -> ((s, dir) =>
-      Similarity.lshTopK(s, dir, nQueries = 10, k = 3)),
+    QuerySpec("ann_lsh_topk", (s, dir) =>
+      Similarity.lshTopK(s, dir, nQueries = 10, k = 3),
+      """WITH planes AS (SELECT p, list_transform(generate_series(1, 64), i ->
+        |    CASE WHEN (strpos('0123456789abcdef', substr(md5(p || ':' || i), 1, 1)) - 1) % 2 = 1
+        |    THEN 1.0 ELSE -1.0 END) AS r
+        |  FROM UNNEST([0,1,2,3]) AS pp(p)),
+        |sigs AS (SELECT vec_id, embedding, string_agg(CASE WHEN
+        |    list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(embedding[i] AS DOUBLE) * r[i])) > 0
+        |    THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
+        |  FROM embeddings, planes GROUP BY vec_id, embedding),
+        |cand AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+        |    q.embedding AS qe, c.embedding AS ce
+        |  FROM sigs q JOIN sigs c ON q.bucket = c.bucket
+        |  AND q.vec_id < 10 AND c.vec_id >= 10),
+        |sims AS (SELECT qid, cid,
+        |    list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))) /
+        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) *
+        |     sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))) AS sim
+        |  FROM cand),
+        |rk AS (SELECT qid, cid, sim,
+        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+        |  FROM sims)
+        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
 
-    "ann_ivf_topk" -> ((s, dir) =>
-      Similarity.ivfTopK(s, dir, nQueries = 10, nCentroids = 16,
-        nProbe = 2, k = 3)),
+    { val (nQueries, nCentroids, nProbe, k) = (10, 16, 2, 3)
+      QuerySpec("ann_ivf_topk", (s, dir) =>
+        Similarity.ivfTopK(s, dir, nQueries, nCentroids, nProbe, k),
+        ivfOracleSql(nQueries, nCentroids, nProbe, k, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)) },
 
     // the PERSISTED-index form: probe the standing centroid table, search
     // only the probed cells' co-located bucket rows — per-query cost is
     // probe-cells x cell-members; the corpus-wide assignment ran once at
-    // index build (oracle identical to ann_ivf_topk by construction)
-    "ann_ivf_indexed" -> ((s, dir) =>
-      Similarity.ivfIndexedTopK(s, dir, nQueries = 10, nCentroids = 16,
-        nProbe = 2, k = 3)),
+    // index build. Same oracle as ann_ivf_topk: the index changes the
+    // plan, not the rows
+    { val (nQueries, nCentroids, nProbe, k) = (10, 16, 2, 3)
+      QuerySpec("ann_ivf_indexed", (s, dir) =>
+        Similarity.ivfIndexedTopK(s, dir, nQueries, nCentroids, nProbe, k),
+        ivfOracleSql(nQueries, nCentroids, nProbe, k, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)) },
 
     // the EXTERNAL-VECTOR retrieval surface (VERDICT r11 #1): the query
     // side is a caller-supplied frame of OUT-OF-CORPUS vectors (the
     // deterministic adjacent-sum panel), not head rows of the table —
-    // the shape a RAG/eval caller actually brings
-    "ann_external_topk" -> ((s, dir) =>
+    // the shape a RAG/eval caller actually brings; exact scan of the
+    // WHOLE table
+    QuerySpec("ann_external_topk", (s, dir) =>
       Similarity.bruteForceTopK(s, dir,
-        Similarity.externalQueryPanel(s, dir, nPanel = 5), k = 5)),
+        Similarity.externalQueryPanel(s, dir, nPanel = 5), k = 5),
+      s"""WITH ${externalPanelCte(5)},
+         |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings),
+         |sims AS (SELECT qid, cid,
+         |    ${cosSql("qe[i]", "CAST(ce[i] AS DOUBLE)")} AS sim
+         |  FROM q, c),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM sims)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
 
     // external vectors probing the STANDING IVF index: query-side LUT
     // against the persisted centroid table, corpus side untouched
-    "ann_external_ivf" -> ((s, dir) =>
-      Similarity.ivfIndexedTopK(s, dir,
-        Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, nCentroids = 16, nProbe = 2, k = 3,
-        iters = 2, sampleMod = 3,
-        sampleCap = Similarity.defaultIvfSampleCap)),
+    // oracle: the same panel probing the standing IVF index: identical train
+    // / assign / probe chain as ann_ivf_topk, only the query CTE differs
+    { val (nPanel, nQueries, nCentroids, nProbe, k) = (5, 10, 16, 2, 3)
+      val (iters, sampleMod, sampleCap) = (2, 3, Similarity.defaultIvfSampleCap)
+      QuerySpec("ann_external_ivf", (s, dir) =>
+        Similarity.ivfIndexedTopK(s, dir,
+          Similarity.externalQueryPanel(s, dir, nPanel),
+          nQueries, nCentroids, nProbe, k, iters, sampleMod, sampleCap),
+        ivfOracleSql(nQueries, nCentroids, nProbe, k, iters, sampleMod,
+          sampleCap, qCte = Some(externalPanelCte(nPanel)))) },
 
     // external vectors against the STANDING PQ codes: the query-side
     // LUT comes from the persisted codebooks, ADC still reads only the
     // 8-byte code rows
-    "ann_external_pq" -> ((s, dir) =>
-      Pq.pqIndexedTopK(s, dir,
-        Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, k = 3, nSub = 8, kSub = 16, iters = 2,
-        sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap,
-        rescoreFactor = 4)),
+    // oracle: the same panel through the full PQ ADC chain (train / encode /
+    // LUT / pool / rescore) — only the query CTE differs from ann_pq_topk, so
+    // the oracle stays faithful at every rescoreFactor
+    { val (nPanel, nQueries, k, nSub, kSub) = (5, 10, 3, 8, 16)
+      val (iters, sampleMod, sampleCap) = (2, 3, Similarity.defaultIvfSampleCap)
+      val rescoreFactor = 4
+      QuerySpec("ann_external_pq", (s, dir) =>
+        Pq.pqIndexedTopK(s, dir,
+          Similarity.externalQueryPanel(s, dir, nPanel), nQueries, k, nSub,
+          kSub, iters, sampleMod, sampleCap, rescoreFactor),
+        pqOracleSql(nQueries, k, nSub, kSub, iters, sampleMod, sampleCap,
+          rescoreFactor, qCte = Some(externalPanelCte(nPanel)))) },
 
     // external vectors against the STANDING IVF-PQ index: coarse probe
     // + codebook LUT are query-side work; cells/codes tables untouched
-    "ann_external_ivfpq" -> ((s, dir) =>
-      Pq.ivfpqTopK(s, dir,
-        Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, nProbe = 2, k = 3, nCentroids = 16, nSub = 8,
-        kSub = 16, iters = 2, sampleMod = 3,
-        sampleCap = Similarity.defaultIvfSampleCap, rescoreFactor = 4)),
+    // oracle: the external panel through the composed IVF-PQ chain — only the
+    // query CTE differs from ann_ivfpq_topk
+    { val (nPanel, nQueries, nProbe, k, nCentroids) = (5, 10, 2, 3, 16)
+      val (nSub, kSub, rescoreFactor) = (8, 16, 4)
+      val (iters, sampleMod, sampleCap) = (2, 3, Similarity.defaultIvfSampleCap)
+      QuerySpec("ann_external_ivfpq", (s, dir) =>
+        Pq.ivfpqTopK(s, dir,
+          Similarity.externalQueryPanel(s, dir, nPanel), nQueries, nProbe, k,
+          nCentroids, nSub, kSub, iters, sampleMod, sampleCap, rescoreFactor),
+        ivfpqOracleSql(nQueries, nProbe, k, nCentroids, nSub, kSub, iters,
+          sampleMod, sampleCap, rescoreFactor,
+          qCte = Some(externalPanelCte(nPanel)))) },
 
     // recall@k of the external probe vs the exact scan of the SAME
     // indexed corpus partition (minCid = nQueries — the like-for-like
-    // comparison the candidate filter exists for)
-    "ann_external_recall" -> ((s, dir) =>
-      Similarity.annRecallExternal(s, dir,
-        Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, nCentroids = 16, nProbe = 2, k = 3)),
+    // comparison the candidate filter exists for); in the oracle both the
+    // IVF side and the brute-force side run over the q CTE, and cand is
+    // already the vec_id >= nQueries partition
+    { val (nPanel, nQueries, nCentroids, nProbe, k) = (5, 10, 16, 2, 3)
+      QuerySpec("ann_external_recall", (s, dir) =>
+        Similarity.annRecallExternal(s, dir,
+          Similarity.externalQueryPanel(s, dir, nPanel),
+          nQueries, nCentroids, nProbe, k),
+        annRecallOracleSql(nQueries, nCentroids, nProbe, k, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap,
+          qCte = Some(externalPanelCte(nPanel)))) },
 
     // contrastive hard-negative mining: per anchor, the top-3 most
     // similar DIFFERENT-label vectors — broadcast panel, one corpus scan
-    "mine_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(s, dir, nAnchors = 10, k = 3)),
+    // oracle: hardest different-label neighbors per anchor: label filter
+    // inside the sim scan, then the same (sim desc, cid) top-k window as ANN
+    QuerySpec("mine_hard_negatives", (s, dir) =>
+      Similarity.hardNegatives(s, dir, nAnchors = 10, k = 3),
+      {
+        val cos = cosSql("CAST(qe[i] AS DOUBLE)", "CAST(ce[i] AS DOUBLE)")
+        s"""WITH q AS (SELECT vec_id AS qid, label AS q_label,
+           |    embedding AS qe FROM embeddings WHERE vec_id < 10),
+           |c AS (SELECT vec_id AS cid, label AS c_label, embedding AS ce
+           |  FROM embeddings WHERE vec_id >= 10),
+           |s AS (SELECT qid, q_label, cid, c_label, $cos AS sim
+           |  FROM q, c WHERE c_label <> q_label),
+           |r AS (SELECT qid, q_label, cid, c_label, sim, row_number()
+           |    OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+           |  FROM s)
+           |SELECT qid, q_label, cid, c_label, CAST(rank AS BIGINT) AS rank,
+           |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
+           |FROM r WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
+      }),
 
     // the same mining against the standing IVF index: candidates from
     // 2 probed cells per anchor, label filter before the top-k window
-    "mine_hard_negatives_ivf" -> ((s, dir) =>
-      Similarity.hardNegativesIndexed(s, dir, nAnchors = 10,
-        nCentroids = 16, nProbe = 2, k = 3)),
+    // oracle: the IVF-indexed mining twin: full train/assign/probe chain,
+    // then the cross-label sims variant of the search tail
+    { val (nAnchors, nCentroids, nProbe, k) = (10, 16, 2, 3)
+      QuerySpec("mine_hard_negatives_ivf", (s, dir) =>
+        Similarity.hardNegativesIndexed(s, dir, nAnchors, nCentroids,
+          nProbe, k),
+        s"""WITH ${ivfTrainCtes(nAnchors, nCentroids, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)},
+           |${ivfSearchCtes(nAnchors, nProbe, crossLabel = true)}
+           |SELECT qid, q_label, cid, c_label, CAST(rank AS BIGINT) AS rank,
+           |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
+           |FROM rk WHERE rank <= $k ORDER BY qid, rank""".stripMargin) },
 
     // margin-based bitext mining: per label-0 vector its best label-1
     // match by the ratio margin (neighborhood-density-normalized
@@ -148,9 +469,42 @@ object ExtEntry {
     // panel-capped at the sf0.1 corpus size (2,000): identical output
     // at every verify SF, bounded wall on full-registry scale runs —
     // the unbounded baseline survives as the ExtSpec identity pin
-    "mine_bitext" -> ((s, dir) =>
+    // oracle: ratio-margin bitext mining: k-NN averages as DECIMAL sums of
+    // round6 sims (order-free), margin = sim / ((ax + ay) / 2) — one fixed
+    // IEEE sequence in both engines
+    QuerySpec("mine_bitext", (s, dir) =>
       Similarity.mineBitext(s, dir, labelX = 0, labelY = 1, kNN = 4,
-        idCap = 2000L)),
+        idCap = 2000L),
+      {
+        val cos = cosSql("CAST(xe[i] AS DOUBLE)", "CAST(ye[i] AS DOUBLE)")
+        s"""WITH x AS (SELECT vec_id AS xid, embedding AS xe
+           |  FROM embeddings WHERE label = 0 AND vec_id < 2000),
+           |y AS (SELECT vec_id AS yid, embedding AS ye
+           |  FROM embeddings WHERE label = 1 AND vec_id < 2000),
+           |sims AS (SELECT xid, yid, $cos AS sim FROM x, y),
+           |ax AS (SELECT xid,
+           |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
+           |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_x
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY xid
+           |      ORDER BY sim DESC, yid) AS rk FROM sims) t
+           |  WHERE rk <= 4 GROUP BY xid),
+           |ay AS (SELECT yid,
+           |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
+           |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_y
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY yid
+           |      ORDER BY sim DESC, xid) AS rk FROM sims) t
+           |  WHERE rk <= 4 GROUP BY yid),
+           |m AS (SELECT s.xid, s.yid, s.sim,
+           |    s.sim / ((ax.avg_x + ay.avg_y) / 2.0) AS margin
+           |  FROM sims s JOIN ax USING (xid) JOIN ay USING (yid)),
+           |best AS (SELECT xid, yid, sim, margin, row_number()
+           |    OVER (PARTITION BY xid ORDER BY margin DESC, yid) AS rk
+           |  FROM m)
+           |SELECT xid, yid,
+           |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim,
+           |  floor(CAST((margin) AS DOUBLE)*1000000 + 0.5)/1000000 AS margin
+           |FROM best WHERE rk = 1 ORDER BY xid""".stripMargin
+      }),
 
     // the same mining against the standing whole-table IVF index:
     // both directions probe 2 cells per query (the CCMatrix deployment
@@ -158,168 +512,626 @@ object ExtEntry {
     // AutoShape (≈n/128 — r16 ×100 finding: fixed cells made the probe
     // quadratic in corpus size); resolves to the oracle's 16 at every
     // verify SF
-    "mine_bitext_ivf" -> ((s, dir) =>
+    // oracle: the indexed bitext twin: whole-table trained cells (the
+    // dedup_semantic chain), both directions probe 2 cells per query,
+    // candidates are the probed cells' other-label members, then the same
+    // margin tail as mine_bitext
+    QuerySpec("mine_bitext_ivf", (s, dir) =>
       Similarity.mineBitextIndexed(s, dir, labelX = 0, labelY = 1,
-        kNN = 4, nCentroids = Similarity.AutoShape, nProbe = 2)),
+        kNN = 4, nCentroids = Similarity.AutoShape, nProbe = 2),
+      {
+        val pairCos = "list_sum(list_transform(generate_series(1, 64), " +
+          "i -> CAST(x.xe[i] AS DOUBLE) * CAST(y.ye[i] AS DOUBLE))) " +
+          "/ (x.xn * y.yn)"
+        s"""WITH $semanticCellCtes,
+           |x AS (SELECT v.vec_id AS xid, v.embedding AS xe, v.nrm AS xn
+           |  FROM v JOIN embeddings e ON e.vec_id = v.vec_id
+           |  WHERE e.label = 0),
+           |y AS (SELECT v.vec_id AS yid, v.embedding AS ye, v.nrm AS yn
+           |  FROM v JOIN embeddings e ON e.vec_id = v.vec_id
+           |  WHERE e.label = 1),
+           |xp AS (SELECT xid, cent_id FROM (SELECT x.xid, c.cent_id,
+           |    row_number() OVER (PARTITION BY x.xid
+           |      ORDER BY ${cosSql("CAST(x.xe[i] AS DOUBLE)", "c.cemb[i]")}
+           |      DESC, c.cent_id) AS rk
+           |  FROM x, cents c) t WHERE rk <= 2),
+           |yp AS (SELECT yid, cent_id FROM (SELECT y.yid, c.cent_id,
+           |    row_number() OVER (PARTITION BY y.yid
+           |      ORDER BY ${cosSql("CAST(y.ye[i] AS DOUBLE)", "c.cemb[i]")}
+           |      DESC, c.cent_id) AS rk
+           |  FROM y, cents c) t WHERE rk <= 2),
+           |sxy AS (SELECT p.xid, y.yid, $pairCos AS sim
+           |  FROM xp p JOIN cells m USING (cent_id)
+           |  JOIN y ON y.yid = m.vec_id JOIN x ON x.xid = p.xid),
+           |syx AS (SELECT p.yid, x.xid, $pairCos AS sim
+           |  FROM yp p JOIN cells m USING (cent_id)
+           |  JOIN x ON x.xid = m.vec_id JOIN y ON y.yid = p.yid),
+           |ax AS (SELECT xid,
+           |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
+           |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_x
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY xid
+           |      ORDER BY sim DESC, yid) AS rk FROM sxy) t
+           |  WHERE rk <= 4 GROUP BY xid),
+           |ay AS (SELECT yid,
+           |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
+           |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_y
+           |  FROM (SELECT *, row_number() OVER (PARTITION BY yid
+           |      ORDER BY sim DESC, xid) AS rk FROM syx) t
+           |  WHERE rk <= 4 GROUP BY yid),
+           |m AS (SELECT s.xid, s.yid, s.sim,
+           |    s.sim / ((ax.avg_x + ay.avg_y) / 2.0) AS margin
+           |  FROM sxy s JOIN ax USING (xid) JOIN ay USING (yid)),
+           |best AS (SELECT xid, yid, sim, margin, row_number()
+           |    OVER (PARTITION BY xid ORDER BY margin DESC, yid) AS rk
+           |  FROM m)
+           |SELECT xid, yid,
+           |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim,
+           |  floor(CAST((margin) AS DOUBLE)*1000000 + 0.5)/1000000 AS margin
+           |FROM best WHERE rk = 1 ORDER BY xid""".stripMargin
+      }),
 
     // IVF index health: occupancy distribution, exact order-statistic
     // assignment-similarity quantiles, drifted fraction — the inputs to
     // StreamingSimilarity.shouldRetrain's purge+rebuild decision rule
-    "ann_ivf_stats" -> ((s, dir) =>
-      Similarity.ivfStats(s, dir, nQueries = 10, nCentroids = 16,
-        simThreshold = 0.1)),
+    // oracle: the trained assignment re-derived, then the same occupancy /
+    // order-statistic / drift rollups as Similarity.ivfStats
+    { val (nQueries, nCentroids, simThreshold) = (10, 16, 0.1)
+      QuerySpec("ann_ivf_stats", (s, dir) =>
+        Similarity.ivfStats(s, dir, nQueries, nCentroids, simThreshold),
+        ivfStatsOracleSql(nQueries, nCentroids, simThreshold, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)) },
 
     // two-stage hybrid retrieval (the RAG serving shape): BM25 pool of
     // 20 bounds the embedding fetch, exact-cosine rerank emits top-5
-    "hybrid_rerank" -> ((s, dir) =>
+    // oracle: BM25 pool (the text_relevance oracle, nested) -> cosine rerank
+    QuerySpec("hybrid_rerank", (s, dir) =>
       Similarity.hybridRerank(s, dir,
-        terms = Seq("spark", "table", "stream"), rf = 20, k = 5)),
+        terms = Seq("spark", "table", "stream"), rf = 20, k = 5),
+      {
+        val cos = cosSql("CAST(qv.qe[i] AS DOUBLE)", "CAST(e.embedding[i] AS DOUBLE)")
+        s"""WITH pool AS (
+           |${TextAnalysis.relevanceOracleSql(Seq("spark", "table", "stream"), 20)}
+           |),
+           |e AS (SELECT vec_id, embedding FROM embeddings),
+           |qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+           |s AS (SELECT p.doc_id, p.rank AS bm25_rank, $cos AS sim
+           |  FROM pool p JOIN e ON p.doc_id = e.vec_id, qv),
+           |r AS (SELECT doc_id, bm25_rank, sim,
+           |    row_number() OVER (ORDER BY sim DESC, doc_id) AS rank
+           |  FROM s)
+           |SELECT doc_id, bm25_rank, CAST(rank AS BIGINT) AS rank,
+           |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
+           |FROM r WHERE rank <= 5 ORDER BY rank""".stripMargin
+      }),
 
     // recall@k of the IVF search vs exact brute force — the tuning
     // metric behind every (nCentroids, nProbe) decision
-    "ann_recall" -> ((s, dir) =>
-      Similarity.annRecall(s, dir, nQueries = 10, nCentroids = 16,
-        nProbe = 2, k = 3)),
+    // oracle: the IVF chain's top-k vs the brute-force top-k, per query
+    { val (nQueries, nCentroids, nProbe, k) = (10, 16, 2, 3)
+      QuerySpec("ann_recall", (s, dir) =>
+        Similarity.annRecall(s, dir, nQueries, nCentroids, nProbe, k),
+        annRecallOracleSql(nQueries, nCentroids, nProbe, k, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)) },
 
     // first-hit MRR of the IVF search: where does the TRUE top-1 land
     // in the approximate list (0 = missed) — the RAG-serving metric
-    "ann_mrr" -> ((s, dir) =>
-      Similarity.annMrr(s, dir, nQueries = 10, nCentroids = 16,
-        nProbe = 2, k = 3)),
+    // oracle: the true top-1's position in the IVF list; rr is exact IEEE
+    // division (no log discounts), 0 on a miss
+    { val (nQueries, nCentroids, nProbe, k) = (10, 16, 2, 3)
+      QuerySpec("ann_mrr", (s, dir) =>
+        Similarity.annMrr(s, dir, nQueries, nCentroids, nProbe, k),
+        s"""WITH ${ivfTrainCtes(nQueries, nCentroids, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)},
+           |${ivfSearchCtes(nQueries, nProbe)},
+           |truth AS (SELECT qid, cid FROM (
+           |    SELECT q.qid, cd.cid, row_number() OVER (PARTITION BY q.qid
+           |      ORDER BY ${cosSql("CAST(q.qe[i] AS DOUBLE)",
+          "CAST(cd.ce[i] AS DOUBLE)")} DESC, cd.cid) AS brank
+           |    FROM q, cand cd) t
+           |  WHERE brank = 1),
+           |iv AS (SELECT qid, cid, rank FROM rk WHERE rank <= $k)
+           |SELECT t.qid, CAST(COALESCE(iv.rank, 0) AS BIGINT) AS hit_rank,
+           |  floor(CAST((COALESCE(CAST(1.0 AS DOUBLE) / iv.rank, 0.0)) AS DOUBLE)*1000000 + 0.5)/1000000 AS rr
+           |FROM truth t LEFT JOIN iv ON t.qid = iv.qid AND t.cid = iv.cid
+           |ORDER BY t.qid""".stripMargin) },
 
     // recall AND scan-cost per nProbe setting in one pass — the curve
     // whose knee picks the deployment nProbe (the ANN twin of
     // dedup_threshold_sweep)
-    "ann_nprobe_sweep" -> ((s, dir) =>
-      Similarity.annNprobeSweep(s, dir, nQueries = 10, nCentroids = 16,
-        k = 3)),
+    // oracle: reachability recall + posting-list scan cost per sweep point;
+    // grid left-joined so every setting emits its row; probe/assign CTEs
+    // shared with the ann_ivf_topk chain (nProbe = all cells — the unfiltered
+    // rank table the sweep reads)
+    { val (nQueries, nCentroids, k) = (10, 16, 3)
+      QuerySpec("ann_nprobe_sweep", (s, dir) =>
+        Similarity.annNprobeSweep(s, dir, nQueries, nCentroids, k),
+        s"""WITH ${ivfTrainCtes(nQueries, nCentroids, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)},
+           |${ivfSearchCtes(nQueries, nProbe = nCentroids)},
+           |truth AS (SELECT qid, cid FROM (
+           |    SELECT q.qid, cd.cid, row_number() OVER (PARTITION BY q.qid
+           |      ORDER BY ${cosSql("CAST(q.qe[i] AS DOUBLE)",
+          "CAST(cd.ce[i] AS DOUBLE)")} DESC, cd.cid) AS brank
+           |    FROM q, cand cd) t
+           |  WHERE brank <= $k),
+           |grid AS (SELECT t AS n_probe FROM UNNEST([1, 2, 4, 8, 16]) AS g(t)),
+           |reach AS (SELECT g.n_probe, count(*) AS n_reachable
+           |  FROM truth tr JOIN cells c ON tr.cid = c.cid
+           |  JOIN probe p ON p.qid = tr.qid AND p.cent_id = c.cent_id
+           |  JOIN grid g ON p.rk <= g.n_probe
+           |  GROUP BY g.n_probe),
+           |csize AS (SELECT cent_id, count(*) AS sz FROM cells
+           |  GROUP BY cent_id),
+           |scan AS (SELECT g.n_probe, sum(s.sz) AS scanned
+           |  FROM probe p JOIN csize s USING (cent_id)
+           |  JOIN grid g ON p.rk <= g.n_probe
+           |  GROUP BY g.n_probe),
+           |tot AS (SELECT (SELECT count(*) FROM truth) AS n_true,
+           |  (SELECT count(*) FROM cand) AS n_cand)
+           |SELECT CAST(g.n_probe AS BIGINT) AS n_probe,
+           |  CAST(coalesce(r.n_reachable, 0) AS BIGINT) AS n_reachable,
+           |  CAST(t.n_true AS BIGINT) AS n_true,
+           |  floor(CAST((CAST(coalesce(r.n_reachable, 0) AS DOUBLE) /
+           |    t.n_true) AS DOUBLE)*1000000 + 0.5)/1000000 AS recall,
+           |  CAST(coalesce(s.scanned, 0) AS BIGINT) AS scanned,
+           |  floor(CAST((CAST(coalesce(s.scanned, 0) AS DOUBLE) /
+           |    (t.n_cand * $nQueries)) AS DOUBLE)*1000000 + 0.5)/1000000 AS scan_frac
+           |FROM grid g LEFT JOIN reach r USING (n_probe)
+           |LEFT JOIN scan s USING (n_probe), tot t
+           |ORDER BY n_probe""".stripMargin) },
 
     // the compression-rung decision table: recall@k vs stage-1 bytes
     // per vector for float32 / int8 / matryoshka / binary at the same
     // k and rescoreFactor
-    "ann_compression_recall" -> ((s, dir) =>
-      Similarity.compressionRecall(s, dir, nQueries = 10, k = 3)),
+    // oracle: the rung decision table: one q×c pair pass carries the exact
+    // sim AND all three approximate scores; each method pools/rescores from
+    // it, hits count against the shared truth panel
+    QuerySpec("ann_compression_recall", (s, dir) =>
+      Similarity.compressionRecall(s, dir, nQueries = 10, k = 3),
+      s"""WITH s AS (SELECT vec_id, embedding,
+         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
+         |    sqrt(list_sum(list_transform(generate_series(1, 16),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS pn,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS h1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS h2
+         |  FROM embeddings),
+         |s2 AS (SELECT *, list_transform(embedding,
+         |    v -> CASE WHEN scale = 0 THEN 0
+         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi
+         |  FROM s),
+         |q AS (SELECT * FROM s2 WHERE vec_id < 10),
+         |c AS (SELECT * FROM s2 WHERE vec_id >= 10),
+         |ex0 AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
+         |      / (q.nrm * c.nrm) AS sim,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
+         |      / (q.nrm * c.nrm) AS a_i8,
+         |    list_sum(list_transform(generate_series(1, 16),
+         |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
+         |      / (q.pn * c.pn) AS a_mt,
+         |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
+         |  FROM q, c),
+         |truth AS (SELECT qid, cid FROM (SELECT qid, cid,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
+         |  FROM ex0) t WHERE rk <= 3),
+         |i8 AS (SELECT qid, cid FROM (SELECT qid, cid,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
+         |  FROM (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
+         |      row_number() OVER (PARTITION BY qid ORDER BY a_i8 DESC, cid) AS ark
+         |    FROM ex0) p WHERE ark <= 12) pool) r WHERE rk <= 3),
+         |mt AS (SELECT qid, cid FROM (SELECT qid, cid,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
+         |  FROM (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
+         |      row_number() OVER (PARTITION BY qid ORDER BY a_mt DESC, cid) AS ark
+         |    FROM ex0) p WHERE ark <= 12) pool) r WHERE rk <= 3),
+         |bn AS (SELECT qid, cid FROM (SELECT qid, cid,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
+         |  FROM (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
+         |      row_number() OVER (PARTITION BY qid ORDER BY hamm, cid) AS ark
+         |    FROM ex0) p WHERE ark <= 12) pool) r WHERE rk <= 3),
+         |casp1 AS (SELECT qid, cid, sim, a_i8 FROM (SELECT qid, cid, sim,
+         |      a_i8, row_number() OVER (PARTITION BY qid
+         |        ORDER BY hamm, cid) AS brk
+         |    FROM ex0) p WHERE brk <= 24),
+         |casp2 AS (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
+         |      row_number() OVER (PARTITION BY qid
+         |        ORDER BY a_i8 DESC, cid) AS irk
+         |    FROM casp1) p WHERE irk <= 12),
+         |cas AS (SELECT qid, cid FROM (SELECT qid, cid,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
+         |  FROM casp2) r WHERE rk <= 3),
+         |hits AS (
+         |  SELECT 'float32' AS method, 256 AS b, 0 AS b2, count(*) AS n_hits FROM truth
+         |  UNION ALL SELECT 'int8', 64, 256, count(*)
+         |    FROM i8 JOIN truth USING (qid, cid)
+         |  UNION ALL SELECT 'matryoshka16', 64, 256, count(*)
+         |    FROM mt JOIN truth USING (qid, cid)
+         |  UNION ALL SELECT 'binary', 16, 256, count(*)
+         |    FROM bn JOIN truth USING (qid, cid)
+         |  UNION ALL SELECT 'binary_int8', 16, 320, count(*)
+         |    FROM cas JOIN truth USING (qid, cid)),
+         |tot AS (SELECT count(*) AS n_true FROM truth)
+         |SELECT method, CAST(b AS BIGINT) AS stage1_bytes_per_vec,
+         |  CAST(b2 AS BIGINT) AS stage2_bytes_per_pool_row,
+         |  CAST(n_hits AS BIGINT) AS n_hits, CAST(n_true AS BIGINT) AS n_true,
+         |  floor(CAST((CAST(n_hits AS DOUBLE) / n_true) AS DOUBLE)*1000000 + 0.5)/1000000
+         |    AS recall
+         |FROM hits, tot ORDER BY method""".stripMargin),
 
     // cluster-balanced subsampling: cap each IVF cell's membership in a
     // deterministic hash order — over-dense embedding regions capped,
     // sparse regions kept whole (the semantic-coverage sampling move)
-    "sample_cluster_balanced" -> ((s, dir) =>
-      Similarity.clusterBalancedSample(s, dir, nQueries = 10,
-        nCentroids = Similarity.AutoShape, cap = 20)),
+    // oracle: same trained assignment as ann_ivf_topk, then the hash-ordered
+    // per-cell cap
+    { val (nQueries, cellCap) = (10, 20)
+      QuerySpec("sample_cluster_balanced", (s, dir) =>
+        Similarity.clusterBalancedSample(s, dir, nQueries,
+          nCentroids = Similarity.AutoShape, cap = cellCap),
+        clusterBalancedOracleSql(nQueries, nCentroids = 16, cap = cellCap,
+          iters = 2, sampleMod = 3,
+          sampleCap = Similarity.defaultIvfSampleCap)) },
 
     // Product-Quantization ADC search (Jégou et al. 2011): candidates
     // carry 8 code bytes instead of 256 float bytes, scoring is 8
     // LUT lookup-adds per pair, exact float32 rescore on the top pool
-    "ann_pq_topk" -> ((s, dir) =>
-      Pq.pqTopK(s, dir, nQueries = 10, k = 3)),
+    { val (nQueries, k) = (10, 3)
+      QuerySpec("ann_pq_topk", (s, dir) => Pq.pqTopK(s, dir, nQueries, k),
+        pqOracleSql(nQueries, k, nSub = 8, kSub = 16, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap,
+          rescoreFactor = 4)) },
 
     // the PERSISTED-codes form: per query only the 8-byte code rows are
     // scanned for ADC; the train + corpus encode ran once at index
-    // build (oracle identical to ann_pq_topk by construction)
-    "ann_pq_indexed" -> ((s, dir) =>
-      Pq.pqIndexedTopK(s, dir, nQueries = 10, k = 3)),
+    // build. Same oracle as ann_pq_topk: the index changes the plan, not
+    // the rows
+    { val (nQueries, k) = (10, 3)
+      QuerySpec("ann_pq_indexed", (s, dir) =>
+        Pq.pqIndexedTopK(s, dir, nQueries, k),
+        pqOracleSql(nQueries, k, nSub = 8, kSub = 16, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap,
+          rescoreFactor = 4)) },
 
     // the composed deployment shape (faiss IVFPQ): probe nProbe coarse
     // cells, ADC-score only their co-located 8-byte code rows, exact
     // rescore the pool — candidate set AND per-candidate cost bounded
-    "ann_ivfpq_topk" -> ((s, dir) =>
-      Pq.ivfpqTopK(s, dir, nQueries = 10, nProbe = 2, k = 3)),
+    { val (nQueries, nProbe, k) = (10, 2, 3)
+      QuerySpec("ann_ivfpq_topk", (s, dir) =>
+        Pq.ivfpqTopK(s, dir, nQueries, nProbe, k),
+        ivfpqOracleSql(nQueries, nProbe, k, nCentroids = 16, nSub = 8,
+          kSub = 16, iters = 2, sampleMod = 3,
+          sampleCap = Similarity.defaultIvfSampleCap, rescoreFactor = 4)) },
 
     // the PQ encode's observability face: per-subspace code occupancy
     // and exact decimal-summed quantization error
-    "emb_pq_stats" -> ((s, dir) => Pq.pqStats(s, dir, nQueries = 10)),
+    { val nQueries = 10
+      QuerySpec("emb_pq_stats", (s, dir) => Pq.pqStats(s, dir, nQueries),
+        pqStatsOracleSql(nQueries, nSub = 8, kSub = 16, iters = 2,
+          sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)) },
 
     // int8 embedding quantization — scan-local storage-reduction op;
     // payload checked by md5 over the quantized ints, quality by the
     // max reconstruction error
-    "emb_quantize" -> ((s, dir) => Similarity.quantizeInt8(s, dir)),
+    // oracle: mirrors Similarity.quantizeInt8 op-for-op: scale in a subquery
+    // (no same-select alias reference), half-up rounding spelled as
+    // floor(x*127/scale + 0.5) — identical IEEE sequence in both engines
+    QuerySpec("emb_quantize", (s, dir) => Similarity.quantizeInt8(s, dir),
+      """WITH s AS (SELECT vec_id, embedding,
+        |    list_max(list_transform(embedding,
+        |      v -> abs(CAST(v AS DOUBLE)))) AS scale
+        |  FROM embeddings)
+        |SELECT vec_id, CAST(len(embedding) AS BIGINT) AS n_dims, scale,
+        |  md5(array_to_string(list_transform(embedding, v -> CAST(CAST(
+        |    CASE WHEN scale = 0 THEN 0
+        |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END
+        |    AS BIGINT) AS VARCHAR)), ',')) AS q_md5,
+        |  list_max(list_transform(embedding, v ->
+        |    CASE WHEN scale = 0 THEN 0.0
+        |      ELSE abs(floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5)
+        |        * scale / 127.0 - CAST(v AS DOUBLE)) END)) AS max_err
+        |FROM s ORDER BY vec_id""".stripMargin),
 
     // embedding-table health: dims, zero vectors, exact norm quantiles
-    "emb_norm_stats" -> ((s, dir) => Similarity.embStats(s, dir)),
+    // oracle: norm folds left-to-right like the engine's dot kernel;
+    // quantiles are exact order statistics on round6(norm)
+    QuerySpec("emb_norm_stats", (s, dir) => Similarity.embStats(s, dir),
+      """WITH e AS (SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
+        |    floor(CAST((sqrt(list_sum(list_transform(
+        |      generate_series(1, len(embedding)),
+        |      i -> CAST(embedding[i] AS DOUBLE) *
+        |           CAST(embedding[i] AS DOUBLE))))) AS DOUBLE)*1000000 + 0.5)/1000000 AS rnorm
+        |  FROM embeddings),
+        |base AS (SELECT CAST(count(*) AS BIGINT) AS n_vectors,
+        |    CAST(count(DISTINCT dim) AS BIGINT) AS n_dims,
+        |    CAST(min(dim) AS BIGINT) AS dim_min,
+        |    CAST(max(dim) AS BIGINT) AS dim_max,
+        |    CAST(sum(CASE WHEN rnorm = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_zero
+        |  FROM e),
+        |bv AS (SELECT rnorm, count(*) AS c FROM e GROUP BY rnorm),
+        |cm AS (SELECT rnorm, sum(c) OVER (ORDER BY rnorm) AS cum FROM bv),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS nv FROM e),
+        |q AS (SELECT
+        |    min(CASE WHEN cum >= ceil(0.1 * nv) THEN rnorm END) AS p10_norm,
+        |    min(CASE WHEN cum >= ceil(0.5 * nv) THEN rnorm END) AS p50_norm,
+        |    min(CASE WHEN cum >= ceil(0.9 * nv) THEN rnorm END) AS p90_norm
+        |  FROM cm, tot)
+        |SELECT n_vectors, n_dims, dim_min, dim_max, n_zero,
+        |  p10_norm, p50_norm, p90_norm
+        |FROM base, q""".stripMargin),
 
     // Johnson–Lindenstrauss random projection 64→8 dims — scan-local,
     // zero-shuffle; narrows every downstream embedding exchange 8×
-    "emb_project" -> ((s, dir) => Similarity.projectRandom(s, dir, 8)),
+    QuerySpec("emb_project", (s, dir) => Similarity.projectRandom(s, dir, 8),
+      """WITH planes AS (SELECT p, list_transform(generate_series(1, 64), i ->
+        |    CASE WHEN (strpos('0123456789abcdef', substr(md5(p || ':' || i), 1, 1)) - 1) % 2 = 1
+        |    THEN 1.0 ELSE -1.0 END) AS r
+        |  FROM UNNEST([0,1,2,3,4,5,6,7]) AS pp(p)),
+        |proj AS (SELECT vec_id, p,
+        |    floor(CAST((list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(embedding[i] AS DOUBLE) * r[i]))) AS DOUBLE)*1000000 + 0.5)/1000000 AS v
+        |  FROM embeddings, planes)
+        |SELECT vec_id,
+        |  max(CASE WHEN p = 0 THEN v END) AS p0,
+        |  max(CASE WHEN p = 1 THEN v END) AS p1,
+        |  max(CASE WHEN p = 2 THEN v END) AS p2,
+        |  max(CASE WHEN p = 3 THEN v END) AS p3,
+        |  max(CASE WHEN p = 4 THEN v END) AS p4,
+        |  max(CASE WHEN p = 5 THEN v END) AS p5,
+        |  max(CASE WHEN p = 6 THEN v END) AS p6,
+        |  max(CASE WHEN p = 7 THEN v END) AS p7
+        |FROM proj GROUP BY vec_id ORDER BY vec_id""".stripMargin),
 
     // panel-capped at the sf0.1 corpus size (2,000) — see mine_bitext
-    "dedup_embedding" -> ((s, dir) =>
+    QuerySpec("dedup_embedding", (s, dir) =>
       Similarity.labelBlockedPairs(s, dir, 0.4, idCap = 2000L)
-        .orderBy(col("v1"), col("v2"))),
+        .orderBy(col("v1"), col("v2")),
+      """WITH e AS (SELECT vec_id, label, embedding FROM embeddings
+        |  WHERE vec_id < 2000),
+        |p AS (SELECT a.vec_id AS v1, b.vec_id AS v2,
+        |    list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) /
+        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
+        |     sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))) AS cos
+        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
+        |SELECT v1, v2, floor(CAST((cos) AS DOUBLE)*1000000 + 0.5)/1000000 AS cos FROM p WHERE cos >= 0.4
+        |ORDER BY v1, v2""".stripMargin),
 
-    "dedup_embedding_lsh" -> ((s, dir) =>
+    // banded sign-LSH over md5-parity hyperplanes (plane p = band*4 + j),
+    // rank-capped bucket membership mirroring TextDedup.maxBucket, exact
+    // cosine verification — the declarative twin of lshNearDupPairs
+    QuerySpec("dedup_embedding_lsh", (s, dir) =>
       Similarity.lshNearDupPairs(s, dir, 0.4,
           nPlanes = Similarity.AutoShape)
-        .orderBy(col("v1"), col("v2"))),
+        .orderBy(col("v1"), col("v2")),
+      s"""WITH planes AS (SELECT p, p // 4 AS band,
+         |    list_transform(generate_series(1, 64), i ->
+         |    CASE WHEN (strpos('0123456789abcdef', substr(md5(p || ':' || i), 1, 1)) - 1) % 2 = 1
+         |    THEN 1.0 ELSE -1.0 END) AS r
+         |  FROM UNNEST(generate_series(0, 15)) AS pp(p)),
+         |sigs AS (SELECT vec_id, band, string_agg(CASE WHEN
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * r[i])) > 0
+         |    THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
+         |  FROM embeddings, planes GROUP BY vec_id, band),
+         |capped AS (SELECT vec_id, band, bucket FROM (
+         |    SELECT vec_id, band, bucket,
+         |      row_number() OVER (PARTITION BY band, bucket ORDER BY vec_id) AS rk
+         |    FROM sigs) WHERE rk <= ${graft.ext.TextDedup.maxBucket}),
+         |cand AS (SELECT DISTINCT a.vec_id AS v1, b.vec_id AS v2
+         |  FROM capped a JOIN capped b
+         |  ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+         |e AS (SELECT vec_id, embedding FROM embeddings),
+         |sims AS (SELECT v1, v2,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE))) /
+         |    (sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(ea.embedding[i] AS DOUBLE)))) *
+         |     sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(eb.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE))))) AS cos
+         |  FROM cand JOIN e ea ON ea.vec_id = v1 JOIN e eb ON eb.vec_id = v2)
+         |SELECT v1, v2, floor(CAST((cos) AS DOUBLE)*1000000 + 0.5)/1000000 AS cos FROM sims WHERE cos >= 0.4
+         |ORDER BY v1, v2""".stripMargin),
 
     // the langid heuristic's per-language quality report: guess vs
     // true-label confusion counts
-    "langid_confusion" -> ((s, dir) =>
+    QuerySpec("langid_confusion", (s, dir) =>
       TextAnalysis.langId(s, dir)
         .groupBy(col("lang"), col("lang_guess"))
         .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("lang_guess"))),
+        .orderBy(col("lang"), col("lang_guess")),
+      s"""WITH $langidCtes
+        |SELECT lang, lang_guess, CAST(count(*) AS BIGINT) AS n
+        |FROM guess GROUP BY lang, lang_guess
+        |ORDER BY lang, lang_guess""".stripMargin),
 
-    "text_langid" -> ((s, dir) =>
-      TextAnalysis.langId(s, dir).orderBy(col("doc_id"))),
+    QuerySpec("text_langid", (s, dir) =>
+      TextAnalysis.langId(s, dir).orderBy(col("doc_id")),
+      s"""WITH $langidCtes
+        |SELECT doc_id, lang, lang_guess,
+        |  floor(CAST((greatest(s_en, s_de, s_es, s_fr)) AS DOUBLE)*1000000 + 0.5)/1000000 AS lang_score
+        |FROM guess ORDER BY doc_id""".stripMargin),
 
-    "text_quality" -> ((s, dir) =>
-      TextAnalysis.quality(s, dir).orderBy(col("doc_id"))),
+    QuerySpec("text_quality", (s, dir) =>
+      TextAnalysis.quality(s, dir).orderBy(col("doc_id")),
+      """WITH en AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d)
+        |SELECT doc_id,
+        |  length(text) AS n_chars_m,
+        |  len(string_split(text, ' ')) AS n_tokens,
+        |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_tokens_re,
+        |  CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
+        |    / length(text) AS punct_ratio,
+        |  CAST(length(text) AS DOUBLE) / len(string_split(text, ' ')) AS mean_tok_len,
+        |  floor(CAST((CAST(len(list_filter(string_split(lower(text), ' '),
+        |    x -> list_contains(d, x))) AS DOUBLE)
+        |    / len(string_split(lower(text), ' '))) AS DOUBLE)*1000000 + 0.5)/1000000 AS stopword_ratio,
+        |  floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
+        |      / length(text)) * 0.5 +
+        |    least(CAST(len(list_filter(string_split(lower(text), ' '),
+        |      x -> list_contains(d, x))) AS DOUBLE)
+        |      / len(string_split(lower(text), ' ')) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS quality_score
+        |FROM documents, en ORDER BY doc_id""".stripMargin),
 
-    "text_vocab" -> ((s, dir) =>
-      TextAnalysis.vocabTopK(s, dir, 20)),
+    QuerySpec("text_vocab", (s, dir) =>
+      TextAnalysis.vocabTopK(s, dir, 20),
+      """SELECT t AS token, count(*) AS freq
+        |FROM (SELECT string_split(text, ' ') AS w FROM documents), UNNEST(w) AS u(t)
+        |GROUP BY t ORDER BY freq DESC, token LIMIT 20""".stripMargin),
 
     // vocabulary truncation: top-32 corpus vocab, out-of-vocab tokens
     // rewritten to <unk> in one scan-local pass
-    "text_unk_mask" -> ((s, dir) =>
-      TextAnalysis.unkMask(s, dir, 32)),
+    QuerySpec("text_unk_mask", (s, dir) =>
+      TextAnalysis.unkMask(s, dir, 32),
+      """WITH vocab AS (
+        |  SELECT t AS token
+        |  FROM (SELECT string_split(text, ' ') AS w FROM documents), UNNEST(w) AS u(t)
+        |  GROUP BY t ORDER BY count(*) DESC, t LIMIT 32),
+        |vl AS (SELECT list(token) AS v FROM vocab)
+        |SELECT doc_id,
+        |  array_to_string(list_transform(string_split(text, ' '),
+        |    x -> CASE WHEN list_contains(v, x) THEN x ELSE '<unk>' END), ' ')
+        |    AS text_masked,
+        |  CAST(len(list_filter(string_split(text, ' '),
+        |    x -> NOT list_contains(v, x))) AS BIGINT) AS n_unk
+        |FROM documents, vl ORDER BY doc_id""".stripMargin),
 
     // the production-size-vocabulary variant: top-4096 word-trigram
     // vocab probed via broadcast hash join on the exploded gram stream
     // (no O(v) literal array — the plan that survives v = 1e5+)
-    "text_unk_mask_bigvocab" -> ((s, dir) =>
-      TextAnalysis.unkMaskBigVocab(s, dir, 4096)),
+    QuerySpec("text_unk_mask_bigvocab", (s, dir) =>
+      TextAnalysis.unkMaskBigVocab(s, dir, 4096),
+      """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |g AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+2], ' ') AS gram
+        |  FROM s, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) t(i)),
+        |vocab AS (SELECT gram FROM g GROUP BY gram
+        |  ORDER BY count(*) DESC, gram LIMIT 4096)
+        |SELECT doc_id,
+        |  string_agg(CASE WHEN v.gram IS NOT NULL THEN g.gram
+        |    ELSE '<unk>' END, '|' ORDER BY pos) AS text_masked,
+        |  CAST(sum(CASE WHEN v.gram IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_unk
+        |FROM g LEFT JOIN vocab v ON g.gram = v.gram
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "text_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprint(s, dir).orderBy(col("doc_id"))),
+    QuerySpec("text_fingerprint", (s, dir) =>
+      TextAnalysis.fingerprint(s, dir).orderBy(col("doc_id")),
+      """WITH t AS (SELECT doc_id,
+        |    trim(regexp_replace(lower(text), ' +', ' ', 'g')) AS norm FROM documents),
+        |s AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM t)
+        |SELECT doc_id, md5(norm) AS fp,
+        |  (SELECT min(md5(array_to_string(w[i:i+4], ' ')))
+        |   FROM UNNEST(generate_series(1, greatest(len(w) - 4, 1))) AS g(i)) AS min_shingle
+        |FROM s ORDER BY doc_id""".stripMargin),
 
-    "mm_meta" -> ((s, dir) =>
-      Multimodal.meta(s, dir).orderBy(col("doc_id"))),
+    QuerySpec("mm_meta", (s, dir) =>
+      Multimodal.meta(s, dir).orderBy(col("doc_id")),
+      """SELECT doc_id,
+        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+        |  octet_length(encode(text)) AS n_bytes,
+        |  sha256(text) AS sha256
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // byte-strided payload decimation (the resize/thumbnail stand-in):
     // binary in/binary out via narrow mapPartitions; checked by the
     // decimated payload's md5
-    "mm_resize" -> ((s, dir) =>
+    // oracle: the corpus is ASCII (asserted in ExtSpec), so char-strided
+    // substr decimation = the engine's byte-strided decimation; integer-exact
+    // stride/count arithmetic mirrors resizeStub
+    QuerySpec("mm_resize", (s, dir) =>
       Multimodal.resize(s, dir, 1024).toDF()
         .select(col("media_id").as("doc_id"), col("kind"),
           col("n_bytes").as("n_bytes_out"),
           md5(col("payload")).as("payload_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH s AS (SELECT doc_id, text, length(text) AS n,
+        |    greatest(1, (length(text) + 1023) // 1024) AS stride FROM documents),
+        |r AS (SELECT doc_id, n, stride, (n + stride - 1) // stride AS n_out,
+        |    md5(array_to_string(list_transform(
+        |      generate_series(0, (n + stride - 1) // stride - 1),
+        |      i -> substr(text, 1 + i * stride, 1)), '')) AS payload_md5
+        |  FROM s)
+        |SELECT doc_id,
+        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+        |  CAST(n_out AS BIGINT) AS n_bytes_out, payload_md5
+        |FROM r ORDER BY doc_id""".stripMargin),
 
     // perceptual fingerprint of the opaque payload (the pHash stand-in):
     // 64 positional byte-buckets, bit = bucket mean above overall mean
     // by exact integer cross-multiply; narrow mapPartitions, payload
     // bytes never leave the scan stage
-    "mm_phash" -> ((s, dir) => Multimodal.phash(s, dir)),
+    QuerySpec("mm_phash", (s, dir) => Multimodal.phash(s, dir),
+      s"""WITH $phashCtes
+         |SELECT mmd.doc_id AS media_id, kind, ph AS phash
+         |FROM mmhex JOIN mmd USING (doc_id)
+         |ORDER BY media_id""".stripMargin),
 
     // perceptual near-dup media pairs: the fingerprints pair through
     // the SAME banded chunk-bucket + Hamming-verify machinery as text
     // simhash — only 24-byte (id, hash) rows shuffle
-    "mm_phash_pairs" -> ((s, dir) => Multimodal.phashPairs(s, dir, 3)),
+    // oracle: the fingerprints through the simhash pair chain: identical-hash
+    // classes, 4-hex chunk buckets (rank-capped), exact Hamming verify,
+    // member-list expansion
+    QuerySpec("mm_phash_pairs", (s, dir) => Multimodal.phashPairs(s, dir, 3),
+      s"""WITH $phashCtes,
+         |hexed AS (SELECT doc_id, ph AS simhash FROM mmhex),
+         |grp AS (SELECT simhash, (array_agg(doc_id ORDER BY doc_id))[1:1024] AS members,
+         |    min(doc_id) AS rep FROM hexed GROUP BY simhash),
+         |chunks AS (SELECT rep, simhash, c, substr(simhash, 1 + 4*c, 4) AS chunk
+         |  FROM grp, UNNEST([0,1,2,3]) AS cc(c)),
+         |ranked AS (SELECT rep, simhash, c, chunk,
+         |    row_number() OVER (PARTITION BY c, chunk ORDER BY rep) AS rk
+         |  FROM chunks),
+         |cand AS (SELECT DISTINCT l.rep AS r1, r.rep AS r2,
+         |    l.simhash AS h1, r.simhash AS h2
+         |  FROM ranked l JOIN ranked r
+         |  ON l.c = r.c AND l.chunk = r.chunk AND l.rep < r.rep
+         |  WHERE l.rk <= 1024 AND r.rk <= 1024),
+         |ham AS (SELECT r1, r2,
+         |  (SELECT sum(bit_count(xor(
+         |      strpos('0123456789abcdef', substr(h1, i, 1)) - 1,
+         |      strpos('0123456789abcdef', substr(h2, i, 1)) - 1)))
+         |   FROM UNNEST(generate_series(1, 16)) AS g(i)) AS hamming
+         |  FROM cand),
+         |pass AS (SELECT r1, r2, hamming FROM ham WHERE hamming <= 3),
+         |crossp AS (SELECT least(a, b) AS m1, greatest(a, b) AS m2, hamming
+         |  FROM pass JOIN grp g1 ON g1.rep = r1 JOIN grp g2 ON g2.rep = r2,
+         |       UNNEST(g1.members) AS u1(a), UNNEST(g2.members) AS u2(b)),
+         |within AS (SELECT a AS m1, b AS m2, 0 AS hamming
+         |  FROM grp, UNNEST(members) AS u1(a), UNNEST(members) AS u2(b)
+         |  WHERE a < b)
+         |SELECT m1, m2, CAST(hamming AS INT) AS hamming
+         |FROM (SELECT * FROM crossp UNION ALL SELECT * FROM within)
+         |ORDER BY m1, m2""".stripMargin),
 
     // frame-sampling plumbing for the video kind: one row per sampled
     // frame index (stride 2) — the shape a real decoder fans out into
-    "mm_frames" -> ((s, dir) =>
+    QuerySpec("mm_frames", (s, dir) =>
       Ingest.table(s, dir, "documents")
         .filter(col("doc_id") % 3 === 2)
         .withColumn("frames",
           (expr("octet_length(text) div 64") + 1).cast("long"))
         .select(col("doc_id"), col("frames"),
           explode(sequence(lit(0L), col("frames") - 1, lit(2L))).as("frame_no"))
-        .orderBy(col("doc_id"), col("frame_no"))),
+        .orderBy(col("doc_id"), col("frame_no")),
+      """WITH v AS (SELECT doc_id,
+        |    CAST(octet_length(encode(text)) // 64 + 1 AS BIGINT) AS frames
+        |  FROM documents WHERE doc_id % 3 = 2)
+        |SELECT doc_id, frames, f AS frame_no
+        |FROM v, UNNEST(generate_series(0, CAST(frames - 1 AS BIGINT), 2)) AS g(f)
+        |ORDER BY doc_id, frame_no""".stripMargin),
 
     // cleaning: lowercase, strip non-alphanumerics, drop stopwords —
     // the canonical pre-tokenization normalize step
-    "text_clean" -> ((s, dir) => {
+    QuerySpec("text_clean", (s, dir) => {
       val dict = array(TextAnalysis.stopwords("en").map(lit): _*)
       val toks = filter(
         split(trim(regexp_replace(lower(col("text")), "[^a-z0-9 ]", " ")), " "),
@@ -329,11 +1141,20 @@ object ExtEntry {
           array_join(toks, " ").as("cleaned"),
           size(toks).cast("long").as("n_clean_tokens"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH t AS (SELECT doc_id,
+        |    list_filter(string_split(
+        |      trim(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g')), ' '),
+        |      x -> x <> '' AND NOT list_contains(
+        |        ['the','a','of','and','to','in','is','it','you','that'], x)) AS toks
+        |  FROM documents)
+        |SELECT doc_id, array_to_string(toks, ' ') AS cleaned,
+        |  len(toks) AS n_clean_tokens
+        |FROM t ORDER BY doc_id""".stripMargin),
 
     // composed training-data filter: exact-dedup survivors gated by token
     // count and stopword ratio — the end-to-end curation pipeline shape
-    "pipeline_filter" -> ((s, dir) => {
+    QuerySpec("pipeline_filter", (s, dir) => {
       val keep = TextDedup.exactGroups(s, dir)
         .select(col("keep_doc_id").as("doc_id"))
       val dict = array(TextAnalysis.stopwords("en").map(lit): _*)
@@ -351,7 +1172,17 @@ object ExtEntry {
           round6(stopRatio).as("stop_ratio"))
         .filter(col("n_tokens").between(20, 400) && col("stop_ratio") >= 0.01)
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+        |q AS (SELECT d.doc_id, d.lang,
+        |    len(string_split(d.text, ' ')) AS n_tokens,
+        |    CAST(len(list_filter(string_split(lower(d.text), ' '),
+        |      x -> list_contains(['the','a','of','and','to','in','is','it','you','that'], x))) AS DOUBLE)
+        |      / len(string_split(lower(d.text), ' ')) AS stop_ratio
+        |  FROM documents d JOIN keep USING (doc_id))
+        |SELECT doc_id, lang, n_tokens, floor(CAST((stop_ratio) AS DOUBLE)*1000000 + 0.5)/1000000 AS stop_ratio
+        |FROM q WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01
+        |ORDER BY doc_id""".stripMargin),
 
     // the COMPLETE curation pass: exact-dedup survivors, minus every
     // near-dup cluster member except its canonical (the connected-
@@ -362,7 +1193,7 @@ object ExtEntry {
     // VERDICT r12 wrong #2 the same way pipeline_pretrain closed r11
     // #3): the corpus-side minhash work is READ from the persisted
     // band/shingle tables — identical pairs by DedupIndexSpec's pin.
-    "pipeline_curate" -> ((s, dir) => {
+    QuerySpec("pipeline_curate", (s, dir) => {
       // the two deletion sets are independent — materialize them
       // concurrently (r17, guide §2.6; same move as pretrainManifest)
       val Seq(keepExact, nearDrops) = graft.ops.Concurrent.materialize(Seq(
@@ -389,158 +1220,903 @@ object ExtEntry {
           round6(stopRatio).as("stop_ratio"))
         .filter(col("n_tokens").between(20, 400) && col("stop_ratio") >= 0.01)
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH RECURSIVE $shinglesCte,
+         |$bandsCte,
+         |pairs AS (SELECT d1, d2 FROM cand
+         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
+         |  UNION SELECT d2, d1 FROM pairs),
+         |reach(node, r) AS (
+         |  SELECT a, b FROM edges
+         |  UNION
+         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
+         |near_drop AS (SELECT node AS doc_id FROM (
+         |    SELECT node, least(node, min(r)) AS cluster_id
+         |    FROM reach GROUP BY node) WHERE node <> cluster_id),
+         |keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+         |q AS (SELECT d.doc_id, d.lang,
+         |    len(string_split(d.text, ' ')) AS n_tokens,
+         |    CAST(len(list_filter(string_split(lower(d.text), ' '),
+         |      x -> list_contains(['the','a','of','and','to','in','is','it','you','that'], x))) AS DOUBLE)
+         |      / len(string_split(lower(d.text), ' ')) AS stop_ratio
+         |  FROM documents d JOIN keep USING (doc_id)
+         |  WHERE d.doc_id NOT IN (SELECT doc_id FROM near_drop))
+         |SELECT doc_id, lang, n_tokens, floor(CAST((stop_ratio) AS DOUBLE)*1000000 + 0.5)/1000000 AS stop_ratio
+         |FROM q WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01
+         |ORDER BY doc_id""".stripMargin),
 
     // the complete shipping manifest: quality x exact-dedup survivors x
     // near-dup canonicals x benchmark decontamination -> split
     // assignment -> per-(split, lang) doc/token rollup — the dataset-
     // card artifact, composed end-to-end inside the engine
-    "pipeline_pretrain" -> ((s, dir) => Curation.pretrainManifest(s, dir)),
+    // oracle: pipeline_curate's keep set, additionally decontaminated against
+    // the src0 eval slice (5-gram leakage, the decontam_ngram CTEs) and with
+    // src0 itself excluded, rolled up per (split, lang); the split is the
+    // split_assign hex-range function
+    QuerySpec("pipeline_pretrain", (s, dir) => Curation.pretrainManifest(s, dir),
+      s"""WITH RECURSIVE $shinglesCte,
+         |$bandsCte,
+         |pairs AS (SELECT d1, d2 FROM cand
+         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
+         |  UNION SELECT d2, d1 FROM pairs),
+         |reach(node, r) AS (
+         |  SELECT a, b FROM edges
+         |  UNION
+         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
+         |near_drop AS (SELECT node AS doc_id FROM (
+         |    SELECT node, least(node, min(r)) AS cluster_id
+         |    FROM reach GROUP BY node) WHERE node <> cluster_id),
+         |keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+         |d5 AS (SELECT doc_id, source, string_split(text, ' ') AS w
+         |  FROM documents),
+         |sh5 AS (SELECT doc_id, source, list_distinct(list_transform(
+         |    generate_series(1, greatest(len(w) - 4, 1)),
+         |    i -> array_to_string(w[i:i+4], ' '))) AS s5 FROM d5),
+         |ev5 AS (SELECT DISTINCT g FROM (
+         |  SELECT unnest(s5) AS g FROM sh5 WHERE source = 'src0')),
+         |contam AS (SELECT DISTINCT doc_id FROM (
+         |  SELECT doc_id, unnest(s5) AS g FROM sh5 WHERE source <> 'src0')
+         |  WHERE g IN (SELECT g FROM ev5)),
+         |q AS (SELECT d.doc_id, d.lang,
+         |    len(string_split(d.text, ' ')) AS n_tokens,
+         |    CAST(len(list_filter(string_split(lower(d.text), ' '),
+         |      x -> list_contains(['the','a','of','and','to','in','is','it','you','that'], x))) AS DOUBLE)
+         |      / len(string_split(lower(d.text), ' ')) AS stop_ratio
+         |  FROM documents d JOIN keep USING (doc_id)
+         |  WHERE d.source <> 'src0'
+         |    AND d.doc_id NOT IN (SELECT doc_id FROM near_drop)
+         |    AND d.doc_id NOT IN (SELECT doc_id FROM contam)),
+         |f AS (SELECT
+         |    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '0ccc'
+         |         THEN 'test'
+         |         WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999'
+         |         THEN 'val' ELSE 'train' END AS split,
+         |    lang, n_tokens
+         |  FROM q WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01)
+         |SELECT split, lang, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens
+         |FROM f GROUP BY split, lang ORDER BY split, lang""".stripMargin),
 
     // the dataset-paper attrition table: docs/tokens surviving each
     // cumulative curation stage, with kept fractions of raw
-    "pipeline_funnel" -> ((s, dir) => Curation.attritionFunnel(s, dir)),
+    // oracle: composes the proven fragments: exact-hash keeps, the recursive
+    // near-dup closure, the pipeline_filter gate, and decontam_ngram's
+    // shingle probe; fractions are single raw divisions (no round)
+    QuerySpec("pipeline_funnel", (s, dir) => Curation.attritionFunnel(s, dir),
+      s"""WITH RECURSIVE $shinglesCte,
+         |$bandsCte,
+         |fpairs AS (SELECT d1, d2 FROM cand
+         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |fedges AS (SELECT d1 AS a, d2 AS b FROM fpairs
+         |  UNION SELECT d2, d1 FROM fpairs),
+         |freach(node, r) AS (
+         |  SELECT a, b FROM fedges
+         |  UNION
+         |  SELECT rr.node, e.b FROM freach rr JOIN fedges e ON rr.r = e.a),
+         |fnd AS (SELECT node AS doc_id FROM (
+         |  SELECT node, least(node, min(r)) AS cid FROM freach
+         |  GROUP BY node) WHERE node <> cid),
+         |fex AS (SELECT min(doc_id) AS doc_id FROM documents
+         |  GROUP BY md5(text)),
+         |fdict AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d),
+         |fb AS (SELECT doc_id, source,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+         |    CAST(len(list_filter(string_split(lower(text), ' '),
+         |      x -> list_contains(d, x))) AS DOUBLE)
+         |      / len(string_split(lower(text), ' ')) AS stop_ratio
+         |  FROM documents, fdict),
+         |fs1 AS (SELECT * FROM fb
+         |  WHERE doc_id IN (SELECT doc_id FROM fex)),
+         |fs2 AS (SELECT * FROM fs1
+         |  WHERE doc_id NOT IN (SELECT doc_id FROM fnd)),
+         |fs3 AS (SELECT * FROM fs2
+         |  WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01),
+         |fdocs AS (SELECT doc_id, source, string_split(text, ' ') AS w
+         |  FROM documents),
+         |fsh5 AS (SELECT doc_id, source, list_distinct(list_transform(
+         |    generate_series(1, greatest(len(w) - 4, 1)),
+         |    i -> array_to_string(w[i:i+4], ' '))) AS shg FROM fdocs),
+         |fev AS (SELECT DISTINCT g FROM (
+         |  SELECT unnest(shg) AS g FROM fsh5 WHERE source = 'src0')),
+         |fhits AS (SELECT DISTINCT doc_id FROM (
+         |  SELECT doc_id, unnest(shg) AS g FROM fsh5 WHERE source <> 'src0')
+         |  WHERE g IN (SELECT g FROM fev)),
+         |fs4 AS (SELECT * FROM fs3 WHERE source <> 'src0'
+         |  AND doc_id NOT IN (SELECT doc_id FROM fhits)),
+         |ftot AS (SELECT CAST(count(*) AS BIGINT) AS n0d,
+         |    CAST(sum(n_tokens) AS BIGINT) AS n0t FROM fb),
+         |fstages AS (
+         |  SELECT 0 AS stage, 'raw' AS stage_name,
+         |    CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) AS n_tokens FROM fb
+         |  UNION ALL SELECT 1, 'exact_dedup', CAST(count(*) AS BIGINT),
+         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs1
+         |  UNION ALL SELECT 2, 'near_dedup', CAST(count(*) AS BIGINT),
+         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs2
+         |  UNION ALL SELECT 3, 'quality_gate', CAST(count(*) AS BIGINT),
+         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs3
+         |  UNION ALL SELECT 4, 'decontam', CAST(count(*) AS BIGINT),
+         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs4)
+         |SELECT CAST(stage AS BIGINT) AS stage, stage_name, n_docs,
+         |  n_tokens,
+         |  CAST(n_docs AS DOUBLE) / CAST(n0d AS DOUBLE) AS kept_docs_frac,
+         |  CAST(n_tokens AS DOUBLE) / CAST(n0t AS DOUBLE)
+         |    AS kept_tokens_frac
+         |FROM fstages, ftot ORDER BY stage""".stripMargin),
 
     // deterministic stratified sampling: en down-weighted to ~25%, zh to
     // ~12.5%, everything else ~50% — hex thresholds on md5(doc_id), a
     // scan-local filter with zero shuffle (see Curation scaladoc)
-    "sample_stratified" -> ((s, dir) =>
+    QuerySpec("sample_stratified", (s, dir) =>
       Curation.stratifiedSample(s, dir,
-        Seq("en" -> "4000", "zh" -> "2000"), defaultTh = "8000")),
+        Seq("en" -> "4000", "zh" -> "2000"), defaultTh = "8000"),
+      """SELECT doc_id, lang, source,
+        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS sample_key
+        |FROM documents
+        |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
+        |  CASE lang WHEN 'en' THEN '4000' WHEN 'zh' THEN '2000' ELSE '8000' END
+        |ORDER BY doc_id""".stripMargin),
 
     // Duffield–Lund–Thorup priority sampling: fixed-size weighted
     // without-replacement draw (long docs proportionally likelier) with
     // unbiased subset-sum estimator weights; selection is a BIGINT
     // quantized-priority top-k — scan + TakeOrderedAndProject, no libm
-    "sample_priority" -> ((s, dir) =>
-      Curation.samplePriority(s, dir, k = 20)),
+    // oracle: the priority key (draw·2^20 div w) is exact BIGINT floor
+    // division in both engines (positive operands, so DuckDB // ≡ Spark div);
+    // the displayed priority is one exactly-rounded IEEE division of
+    // exact-below-2^53 integers
+    QuerySpec("sample_priority", (s, dir) =>
+      Curation.samplePriority(s, dir, k = 20),
+      """WITH d AS (SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        |    CAST(CAST(('0x' || substr(md5('pri:' || CAST(doc_id AS VARCHAR)),
+        |      1, 8)) AS UBIGINT) AS BIGINT) + 1 AS draw
+        |  FROM documents),
+        |kd AS (SELECT doc_id, n_tokens, draw,
+        |    CAST((draw * 1048576) // n_tokens AS BIGINT) AS pkey,
+        |    CAST(n_tokens AS DOUBLE) * 4294967296.0 / CAST(draw AS DOUBLE)
+        |      AS p
+        |  FROM d),
+        |top AS (SELECT doc_id, n_tokens, draw, pkey, p,
+        |    CAST(row_number() OVER (ORDER BY pkey, doc_id) AS BIGINT)
+        |      AS rank
+        |  FROM kd ORDER BY pkey, doc_id LIMIT 21),
+        |tau AS (SELECT max(CASE WHEN rank = 21 THEN p END) AS tau_raw
+        |  FROM top)
+        |SELECT doc_id, n_tokens, draw, pkey, rank,
+        |  floor(CAST((p) AS DOUBLE)*1000000 + 0.5)/1000000 AS priority,
+        |  floor(CAST((coalesce(tau_raw, 0.0)) AS DOUBLE)*1000000 + 0.5)/1000000 AS tau,
+        |  floor(CAST((greatest(CAST(n_tokens AS DOUBLE),
+        |    coalesce(tau_raw, 0.0))) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS est_weight
+        |FROM top, tau WHERE rank <= 20 ORDER BY rank""".stripMargin),
 
     // Zipf octave audit of the vocabulary head: flat mass_ratio = the
     // law holding; integer bit-length octaves, no log-log regression
-    "corpus_zipf" -> ((s, dir) => TextAnalysis.zipfProfile(s, dir)),
+    // oracle: octave = integer bit-length of rank (see zipfProfile scaladoc:
+    // Spark's log2 is ln/ln and floors wrong at exact powers of two)
+    QuerySpec("corpus_zipf", (s, dir) => TextAnalysis.zipfProfile(s, dir),
+      """WITH v AS (SELECT t AS token, CAST(count(*) AS BIGINT) AS freq
+        |  FROM (SELECT string_split(text, ' ') AS w FROM documents),
+        |    UNNEST(w) AS u(t)
+        |  GROUP BY t),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS vocab_size,
+        |    CAST(sum(freq) AS BIGINT) AS total_mass FROM v),
+        |r AS (SELECT token, freq,
+        |    CAST(row_number() OVER (ORDER BY freq DESC, token) AS BIGINT)
+        |      AS rank
+        |  FROM v ORDER BY freq DESC, token LIMIT 4096),
+        |o AS (SELECT token, freq, rank,
+        |    CAST(length(bin(rank)) - 1 AS BIGINT) AS octave FROM r),
+        |oa AS (SELECT octave, CAST(count(*) AS BIGINT) AS n_tokens,
+        |    CAST(min(rank) AS BIGINT) AS rank_lo,
+        |    CAST(max(rank) AS BIGINT) AS rank_hi,
+        |    CAST(sum(freq) AS BIGINT) AS mass,
+        |    CAST(max(freq) AS BIGINT) AS max_freq,
+        |    CAST(min(freq) AS BIGINT) AS min_freq,
+        |    min_by(token, rank) AS head_token
+        |  FROM o GROUP BY octave),
+        |c AS (SELECT oa.*, lead(mass) OVER (ORDER BY octave) AS next_mass,
+        |    CAST(sum(mass) OVER (ORDER BY octave) AS BIGINT) AS cum_mass
+        |  FROM oa)
+        |SELECT octave, rank_lo, rank_hi, n_tokens, mass, max_freq,
+        |  min_freq, head_token,
+        |  floor(CAST((CAST(mass AS DOUBLE) / CAST(next_mass AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS mass_ratio,
+        |  floor(CAST((CAST(cum_mass AS DOUBLE) / CAST(total_mass AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS coverage,
+        |  vocab_size, total_mass
+        |FROM c, tot ORDER BY octave""".stripMargin),
 
     // Heaps vocabulary-growth audit over deterministic hash-quartiles
-    "corpus_heaps" -> ((s, dir) => TextAnalysis.heapsProfile(s, dir)),
+    // oracle: quartile = hex-digit of md5 div 4, the sample_stratified hash
+    // mechanism; all counts BIGINT, ratios single divisions
+    QuerySpec("corpus_heaps", (s, dir) => TextAnalysis.heapsProfile(s, dir),
+      """WITH tok AS (SELECT
+        |    CAST((strpos('0123456789abcdef',
+        |      substr(md5('hp:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) // 4
+        |      AS BIGINT) AS quarter,
+        |    t AS token
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |    UNNEST(w) AS u(t)),
+        |occ AS (SELECT quarter, CAST(count(*) AS BIGINT) AS n_tokens
+        |  FROM tok GROUP BY quarter),
+        |ft AS (SELECT token, min(quarter) AS first_q FROM tok
+        |  GROUP BY token),
+        |nt AS (SELECT first_q AS quarter,
+        |    CAST(count(*) AS BIGINT) AS n_new_types
+        |  FROM ft GROUP BY first_q),
+        |j AS (SELECT o.quarter, o.n_tokens,
+        |    CAST(coalesce(n.n_new_types, 0) AS BIGINT) AS n_new_types
+        |  FROM occ o LEFT JOIN nt n ON o.quarter = n.quarter),
+        |c AS (SELECT quarter, n_tokens, n_new_types,
+        |    CAST(sum(n_tokens) OVER (ORDER BY quarter) AS BIGINT)
+        |      AS cum_tokens,
+        |    CAST(sum(n_new_types) OVER (ORDER BY quarter) AS BIGINT)
+        |      AS cum_types
+        |  FROM j)
+        |SELECT quarter, n_tokens, n_new_types, cum_tokens, cum_types,
+        |  floor(CAST((CAST(cum_types AS DOUBLE) / CAST(cum_tokens AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS type_token_ratio,
+        |  floor(CAST((CAST(n_new_types AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS new_type_rate
+        |FROM c ORDER BY quarter""".stripMargin),
 
     // at most 10 docs per source, skew-safe two-phase ranking
-    "quota_cap" -> ((s, dir) => Curation.quotaCap(s, dir, n = 10)),
+    // oracle: the two-phase salted cap is value-identical to the direct
+    // window: phase 1 keeps a superset of the global first-n per source
+    QuerySpec("quota_cap", (s, dir) => Curation.quotaCap(s, dir, n = 10),
+      """SELECT doc_id, source,
+        |  CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rk
+        |FROM documents
+        |QUALIFY rk <= 10
+        |ORDER BY source, doc_id""".stripMargin),
 
     // token-budget quota per source: keep each source's doc_id-ordered
     // prefix while cumulative tokens fit the budget — exact distributed
     // prefix sum (packGreedy pattern per group), never one reducer
-    "quota_tokens" -> ((s, dir) =>
-      Curation.quotaTokens(s, dir, budget = 600L)),
+    // oracle: single-window cumulative-sum reference for the block prefix
+    // form
+    QuerySpec("quota_tokens", (s, dir) =>
+      Curation.quotaTokens(s, dir, budget = 600L),
+      """WITH d AS (SELECT doc_id, source,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |c AS (SELECT doc_id, source, n_tokens,
+        |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id)
+        |      AS BIGINT) AS cum_tokens
+        |  FROM d)
+        |SELECT doc_id, source, n_tokens, cum_tokens FROM c
+        |WHERE cum_tokens <= 600 ORDER BY source, doc_id""".stripMargin),
 
     // benchmark-leakage guard: train docs sharing a 5-gram with the
     // held-out src0 split
-    "decontam_ngram" -> ((s, dir) => Curation.decontaminate(s, dir)),
+    QuerySpec("decontam_ngram", (s, dir) => Curation.decontaminate(s, dir),
+      """WITH docs AS (SELECT doc_id, source, string_split(text, ' ') AS w
+        |  FROM documents),
+        |sh5 AS (SELECT doc_id, source, list_distinct(list_transform(
+        |    generate_series(1, greatest(len(w) - 4, 1)),
+        |    i -> array_to_string(w[i:i+4], ' '))) AS sh FROM docs),
+        |ev AS (SELECT DISTINCT g FROM (
+        |  SELECT unnest(sh) AS g FROM sh5 WHERE source = 'src0')),
+        |tr AS (SELECT doc_id, unnest(sh) AS g FROM sh5 WHERE source <> 'src0'),
+        |hits AS (SELECT doc_id, count(*) AS n_hit FROM tr
+        |  WHERE g IN (SELECT g FROM ev) GROUP BY doc_id)
+        |SELECT d.doc_id, d.source,
+        |  COALESCE(h.n_hit, 0) AS n_hit_grams,
+        |  COALESCE(h.n_hit, 0) > 0 AS contaminated
+        |FROM documents d LEFT JOIN hits h USING (doc_id)
+        |WHERE d.source <> 'src0' ORDER BY doc_id""".stripMargin),
 
     // the benchmark-side face of decontamination: per eval doc, how
     // many training docs leak into it and through how many grams
-    "decontam_eval_report" -> ((s, dir) => Curation.evalLeakReport(s, dir)),
+    // oracle: the same gram world as decontam_ngram, rolled up per EVAL doc
+    QuerySpec("decontam_eval_report", (s, dir) => Curation.evalLeakReport(s, dir),
+      """WITH docs AS (SELECT doc_id, source, string_split(text, ' ') AS w
+        |  FROM documents),
+        |sh5 AS (SELECT doc_id, source, list_distinct(list_transform(
+        |    generate_series(1, greatest(len(w) - 4, 1)),
+        |    i -> array_to_string(w[i:i+4], ' '))) AS sh FROM docs),
+        |ev AS (SELECT doc_id AS eval_doc, unnest(sh) AS g
+        |  FROM sh5 WHERE source = 'src0'),
+        |tr AS (SELECT doc_id AS train_doc, unnest(sh) AS g
+        |  FROM sh5 WHERE source <> 'src0'),
+        |leaks AS (SELECT eval_doc,
+        |    CAST(count(DISTINCT train_doc) AS BIGINT) AS n_leaking_docs,
+        |    CAST(count(DISTINCT g) AS BIGINT) AS n_shared_grams
+        |  FROM tr JOIN ev USING (g) GROUP BY eval_doc)
+        |SELECT d.doc_id AS eval_doc,
+        |  COALESCE(l.n_leaking_docs, 0) AS n_leaking_docs,
+        |  COALESCE(l.n_shared_grams, 0) AS n_shared_grams,
+        |  COALESCE(l.n_leaking_docs, 0) > 0 AS compromised
+        |FROM documents d LEFT JOIN leaks l ON d.doc_id = l.eval_doc
+        |WHERE d.source = 'src0' ORDER BY eval_doc""".stripMargin),
 
     // embedding-space decontamination: max cosine of each training doc
     // against the BROADCAST src0 eval panel — the paraphrase-leakage
     // class the 5-gram probe misses; zero corpus shuffle
-    "decontam_semantic" -> ((s, dir) =>
-      Curation.semanticDecontaminate(s, dir)),
+    // oracle: the embedding twin of decontam_ngram: max cosine vs the src0
+    // panel, nearest eval doc by (sim desc, eid asc) window tie-break
+    QuerySpec("decontam_semantic", (s, dir) =>
+      Curation.semanticDecontaminate(s, dir),
+      {
+        val cos = cosSql("CAST(ce[i] AS DOUBLE)", "CAST(ee[i] AS DOUBLE)")
+        s"""WITH d AS (SELECT doc_id, source FROM documents),
+           |e AS (SELECT vec_id, embedding FROM embeddings),
+           |ev AS (SELECT e.vec_id AS eid, e.embedding AS ee
+           |  FROM e JOIN d ON d.doc_id = e.vec_id WHERE d.source = 'src0'),
+           |tr AS (SELECT e.vec_id AS cid, d.source, e.embedding AS ce
+           |  FROM e JOIN d ON d.doc_id = e.vec_id WHERE d.source <> 'src0'),
+           |s AS (SELECT cid, source, eid, floor(CAST(($cos) AS DOUBLE)*1000000 + 0.5)/1000000 AS rsim
+           |  FROM tr, ev),
+           |r AS (SELECT cid, eid, row_number() OVER (
+           |    PARTITION BY cid ORDER BY rsim DESC, eid ASC) AS rk FROM s),
+           |a AS (SELECT cid, max(rsim) AS mx,
+           |    CAST(sum(CASE WHEN rsim >= 0.35 THEN 1 ELSE 0 END) AS BIGINT)
+           |      AS n FROM s GROUP BY cid)
+           |SELECT t.cid AS doc_id, t.source, a.mx AS max_eval_sim,
+           |  r.eid AS nearest_eval, COALESCE(a.n, 0) AS n_eval_hits,
+           |  COALESCE(a.mx >= 0.35, false) AS contaminated
+           |FROM tr t LEFT JOIN a ON a.cid = t.cid
+           |LEFT JOIN r ON r.cid = t.cid AND r.rk = 1
+           |ORDER BY doc_id""".stripMargin
+      }),
 
     // Gopher-style repetition filter signals — scan-local array HOFs
-    "text_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(s, dir).orderBy(col("doc_id"))),
+    // oracle: token-level Gopher repetition twin: bigram = w[i:i+1]
+    // (inclusive DuckDB slice = 2 tokens), trigram = w[i:i+2]; the mode count
+    // folds over the distinct list exactly like the Spark HOF chain
+    QuerySpec("text_repetition", (s, dir) =>
+      TextAnalysis.repetition(s, dir).orderBy(col("doc_id")),
+      """WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |g AS (SELECT doc_id, len(w) AS n_tokens,
+        |    list_transform(generate_series(1, greatest(len(w) - 1, 1)),
+        |      i -> array_to_string(w[i:i+1], ' ')) AS bg,
+        |    list_transform(generate_series(1, greatest(len(w) - 2, 1)),
+        |      i -> array_to_string(w[i:i+2], ' ')) AS tg
+        |  FROM docs),
+        |m AS (SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+        |    floor(CAST((CAST(list_max(list_transform(list_distinct(bg),
+        |      d -> len(list_filter(bg, x -> x = d)))) AS DOUBLE) / len(bg)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |      AS top_bigram_frac,
+        |    floor(CAST((CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / len(tg)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |      AS dup_trigram_frac
+        |  FROM g)
+        |SELECT doc_id, n_tokens, top_bigram_frac, dup_trigram_frac,
+        |  top_bigram_frac <= 0.06 AND dup_trigram_frac <= 0.02
+        |    AS keep_repetition
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // per-language corpus snapshot report
-    "corpus_stats" -> ((s, dir) => TextAnalysis.corpusStats(s, dir)),
+    QuerySpec("corpus_stats", (s, dir) => TextAnalysis.corpusStats(s, dir),
+      """WITH t AS (SELECT lang, n_chars,
+        |    len(string_split(text, ' ')) AS n_tokens FROM documents)
+        |SELECT lang, count(*) AS n_docs,
+        |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+        |  floor(CAST((CAST(sum(n_tokens) AS DOUBLE) / count(*)) AS DOUBLE)*1000000 + 0.5)/1000000 AS avg_tokens,
+        |  min(n_chars) AS min_chars, max(n_chars) AS max_chars,
+        |  floor(CAST((quantile_cont(n_tokens, 0.5)) AS DOUBLE)*1000000 + 0.5)/1000000 AS p50_tokens,
+        |  floor(CAST((quantile_cont(n_tokens, 0.9)) AS DOUBLE)*1000000 + 0.5)/1000000 AS p90_tokens
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
 
     // per-source mixture-decision scorecard: mass, token share, gopher
     // keep rate, mean quality — one scan, sources-sized rollup
-    "source_scorecard" -> ((s, dir) =>
-      TextAnalysis.sourceScorecard(s, dir)),
+    // oracle: the gopher chain + the text_quality score expression, rolled up
+    // per source; mean quality via the exact DECIMAL(27,6) sum
+    QuerySpec("source_scorecard", (s, dir) =>
+      TextAnalysis.sourceScorecard(s, dir),
+      s"""WITH ${gopherChainCtes("sc")},
+         |en AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d),
+         |q AS (SELECT doc_id, source,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+         |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
+         |        / length(text)) * 0.5 +
+         |      least(CAST(len(list_filter(string_split(lower(text), ' '),
+         |        x -> list_contains(d, x))) AS DOUBLE)
+         |        / len(string_split(lower(text), ' ')) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS qs
+         |  FROM documents, en),
+         |j AS (SELECT q.source, q.n_tokens, q.qs, g.keep
+         |  FROM q JOIN scgk g USING (doc_id)),
+         |agg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+         |    CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS n_gopher_keep,
+         |    sum(CAST(qs AS DECIMAL(27,6))) AS qsum
+         |  FROM j GROUP BY source),
+         |tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens
+         |  FROM agg)
+         |SELECT source, n_docs, n_tokens,
+         |  floor(CAST((CAST(n_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
+         |    AS token_share,
+         |  n_gopher_keep,
+         |  floor(CAST((CAST(n_gopher_keep AS DOUBLE) / CAST(n_docs AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
+         |    AS gopher_keep_rate,
+         |  CAST((CAST(qsum * 1000000 AS BIGINT) // n_docs) * 1000
+         |      + ((CAST(qsum * 1000000 AS BIGINT) % n_docs) * 1000)
+         |        // n_docs AS DOUBLE)
+         |    / 1000000000.0 AS mean_quality
+         |FROM agg, tot ORDER BY source""".stripMargin),
 
     // cross-source near-dup matrix: which feeds double-count content
-    "corpus_overlap_matrix" -> ((s, dir) =>
-      TextDedup.sourceOverlapMatrix(s, dir, threshold = 0.5)),
+    // oracle: the verified near-dup pairs labeled by both endpoints' sources,
+    // unordered-pair rollup; n_pairs = half the exploded doc rows
+    QuerySpec("corpus_overlap_matrix", (s, dir) =>
+      TextDedup.sourceOverlapMatrix(s, dir, threshold = 0.5),
+      s"""WITH $shinglesCte,
+         |$bandsCte,
+         |pairs AS (SELECT d1, d2 FROM cand
+         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
+         |lab AS (SELECT least(da.source, db.source) AS source_a,
+         |    greatest(da.source, db.source) AS source_b, d1, d2
+         |  FROM pairs JOIN documents da ON da.doc_id = d1
+         |  JOIN documents db ON db.doc_id = d2),
+         |ex AS (SELECT source_a, source_b, doc
+         |  FROM lab, UNNEST([d1, d2]) AS u(doc))
+         |SELECT source_a, source_b,
+         |  CAST(count(*) // 2 AS BIGINT) AS n_pairs,
+         |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
+         |FROM ex GROUP BY source_a, source_b
+         |ORDER BY source_a, source_b""".stripMargin),
 
     // why-0.5 tuning artifact: pair/doc survival per jaccard threshold
-    "dedup_threshold_sweep" -> ((s, dir) =>
-      TextDedup.thresholdSweep(s, dir)),
+    // oracle: all candidate pairs with their exact jaccard, exploded into the
+    // thresholds each clears; n_pairs = half the exploded doc rows
+    QuerySpec("dedup_threshold_sweep", (s, dir) =>
+      TextDedup.thresholdSweep(s, dir),
+      s"""WITH $shinglesCte,
+         |$bandsCte,
+         |jp AS (SELECT d1, d2,
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(s1.shingles, s2.shingles)))
+         |      AS jaccard
+         |  FROM cand
+         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2),
+         |ex AS (SELECT t AS threshold, doc
+         |  FROM jp, UNNEST([0.3, 0.5, 0.7, 0.9]) AS tt(t),
+         |    UNNEST([d1, d2]) AS u(doc)
+         |  WHERE jaccard >= t)
+         |SELECT threshold, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
+         |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
+         |FROM ex GROUP BY threshold ORDER BY threshold""".stripMargin),
 
     // the embedding-space twin, behind semanticDedup's 0.4
-    "semantic_threshold_sweep" -> ((s, dir) =>
+    // oracle: within-cell verified pairs with their exact cosine, exploded
+    // into the thresholds each clears
+    QuerySpec("semantic_threshold_sweep", (s, dir) =>
       Similarity.semanticThresholdSweep(s, dir,
-        nCentroids = Similarity.AutoShape)),
+        nCentroids = Similarity.AutoShape),
+      s"""WITH $semanticCellCtes,
+         |spairs AS (SELECT a AS v1, b AS v2
+         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b)
+         |  WHERE a < b),
+         |cp AS (SELECT v1, v2,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
+         |    / (e1.nrm * e2.nrm) AS cs
+         |  FROM spairs JOIN v e1 ON e1.vec_id = v1
+         |  JOIN v e2 ON e2.vec_id = v2),
+         |ex AS (SELECT t AS threshold, vec
+         |  FROM cp, UNNEST([0.3, 0.4, 0.6, 0.8]) AS tt(t),
+         |    UNNEST([v1, v2]) AS u(vec)
+         |  WHERE cs >= t)
+         |SELECT threshold, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
+         |  CAST(count(DISTINCT vec) AS BIGINT) AS n_vecs
+         |FROM ex GROUP BY threshold ORDER BY threshold""".stripMargin),
 
     // the quality-axis sweep: docs/tokens surviving each candidate
     // quality cutoff — the filter-strength curve a dataset card quotes
-    "quality_threshold_sweep" -> ((s, dir) =>
-      TextAnalysis.qualitySweep(s, dir)),
+    // oracle: per-doc quality score computed once, exploded into the cutoffs
+    // it clears; grid left-joined so every sweep point emits
+    QuerySpec("quality_threshold_sweep", (s, dir) =>
+      TextAnalysis.qualitySweep(s, dir),
+      """WITH dicts AS (SELECT
+        |  ['the','a','of','and','to','in','is','it','you','that'] AS en),
+        |d AS (SELECT text, string_split(lower(text), ' ') AS wl,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |q AS (SELECT n_tokens,
+        |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
+        |        / length(text)) * 0.5 +
+        |      least(CAST(len(list_filter(wl, x -> list_contains(en, x))) AS DOUBLE)
+        |        / len(wl) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS qs
+        |  FROM d, dicts),
+        |tot AS (SELECT count(*) AS total_docs,
+        |    CAST(sum(n_tokens) AS BIGINT) AS total_tokens FROM q),
+        |grid AS (SELECT CAST(t AS DOUBLE) AS threshold
+        |  FROM UNNEST([0.2, 0.4, 0.6, 0.8]) AS g(t)),
+        |surv AS (SELECT threshold, count(*) AS n_docs,
+        |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens
+        |  FROM q JOIN grid ON qs >= threshold GROUP BY threshold)
+        |SELECT g.threshold,
+        |  CAST(coalesce(s.n_docs, 0) AS BIGINT) AS n_docs,
+        |  CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
+        |  floor(CAST((CAST(coalesce(s.n_docs, 0) AS DOUBLE) / t.total_docs)
+        |    AS DOUBLE)*1000000 + 0.5)/1000000 AS kept_docs_frac,
+        |  floor(CAST((CAST(coalesce(s.n_tokens, 0) AS DOUBLE) / t.total_tokens)
+        |    AS DOUBLE)*1000000 + 0.5)/1000000 AS kept_tokens_frac
+        |FROM grid g LEFT JOIN surv s USING (threshold), tot t
+        |ORDER BY threshold""".stripMargin),
 
     // deterministic ~5%/~5%/~90% test/val/train split, reshard-stable
-    "split_assign" -> ((s, dir) => Curation.splitAssign(s, dir)),
+    QuerySpec("split_assign", (s, dir) => Curation.splitAssign(s, dir),
+      """SELECT doc_id, lang,
+        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS split_key,
+        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '0ccc' THEN 'test'
+        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999' THEN 'val'
+        |       ELSE 'train' END AS split
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // int8-prefilter + exact-rescore ANN — the 4×-scan-reduction path
-    "ann_int8_topk" -> ((s, dir) =>
-      Similarity.int8RescoreTopK(s, dir, nQueries = 10, k = 5)),
+    QuerySpec("ann_int8_topk", (s, dir) =>
+      Similarity.int8RescoreTopK(s, dir, rungQueries, rungK),
+      int8RungOracle),
 
     // binary (1-bit) prefilter + exact-rescore ANN — the 32× path:
     // packed sign fingerprints, Hamming candidate order, float rescore
-    "ann_binary_topk" -> ((s, dir) =>
-      Similarity.binaryRescoreTopK(s, dir, nQueries = 10, k = 5)),
+    QuerySpec("ann_binary_topk", (s, dir) =>
+      Similarity.binaryRescoreTopK(s, dir, rungQueries, rungK),
+      binaryRungOracle),
 
     // Matryoshka prefix-dimension prefilter (first 16 of 64 dims) +
     // exact full-dim rescore — the dimension-truncation rung
-    "ann_matryoshka_topk" -> ((s, dir) =>
-      Similarity.matryoshkaRescoreTopK(s, dir, nQueries = 10, k = 5)),
+    QuerySpec("ann_matryoshka_topk", (s, dir) =>
+      Similarity.matryoshkaRescoreTopK(s, dir, rungQueries, rungK),
+      matryoshkaRungOracle),
 
     // the STANDING-TABLE forms of the three scan rungs (VERDICT r13
     // #1): stage 1 reads ONLY the persisted rung payload — 16 B sign
     // halves / 64 B prefix slice / 64 B packed int8 — never the 256 B
     // float rows; identical output to the on-the-fly forms by
     // construction (RungSpec pins it), so each reuses that oracle
-    "ann_binary_indexed" -> ((s, dir) =>
-      Rung.binaryIndexedTopK(s, dir, nQueries = 10, k = 5)),
+    QuerySpec("ann_binary_indexed", (s, dir) =>
+      Rung.binaryIndexedTopK(s, dir, rungQueries, rungK),
+      binaryRungOracle),
+    QuerySpec("ann_matryoshka_indexed", (s, dir) =>
+      Rung.matryoshkaIndexedTopK(s, dir, rungQueries, rungK),
+      matryoshkaRungOracle),
+    QuerySpec("ann_int8_indexed", (s, dir) =>
+      Rung.int8IndexedTopK(s, dir, rungQueries, rungK),
+      int8RungOracle),
 
     // external caller vectors against the standing rung tables — the
     // r12 every-family-external contract carried to the indexed rungs;
     // candidates are the indexed vec_id >= 10 partition
-    "ann_external_binary_indexed" -> ((s, dir) =>
+    // oracle: the external panel against the STANDING binary rung table: same
+    // math as ann_external_binary over the indexed vec_id >= 10 partition
+    // (the partition the standing table covers)
+    QuerySpec("ann_external_binary_indexed", (s, dir) =>
       Rung.binaryIndexedTopK(s, dir,
         Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, k = 3, rescoreFactor = 4)),
+        nQueries = 10, k = 3, rescoreFactor = 4),
+      s"""WITH ${externalPanelCte(5)},
+         |qs AS (SELECT qid, qe,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * qe[i]))) AS qn,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS qh1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS qh2
+         |  FROM q),
+         |c AS (SELECT vec_id AS cid, embedding AS ce,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS ch1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS ch2
+         |  FROM embeddings WHERE vec_id >= 10),
+         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
+         |    bit_count(xor(qs.qh1, c.ch1)) + bit_count(xor(qs.qh2, c.ch2))
+         |      AS hamm
+         |  FROM qs, c),
+         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 12),
+         |ex AS (SELECT qid, cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
+         |  FROM pool),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM ex)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
 
-    "ann_external_matryoshka_indexed" -> ((s, dir) =>
+    // the external panel against the STANDING matryoshka rung table
+    QuerySpec("ann_external_matryoshka_indexed", (s, dir) =>
       Rung.matryoshkaIndexedTopK(s, dir,
         Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, k = 3, dPrefix = 16, rescoreFactor = 4)),
+        nQueries = 10, k = 3, dPrefix = 16, rescoreFactor = 4),
+      s"""WITH ${externalPanelCte(5)},
+         |qs AS (SELECT qid, qe,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * qe[i]))) AS qn,
+         |    sqrt(list_sum(list_transform(generate_series(1, 16),
+         |      i -> qe[i] * qe[i]))) AS qpn
+         |  FROM q),
+         |c AS (SELECT vec_id AS cid, embedding AS ce,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
+         |    sqrt(list_sum(list_transform(generate_series(1, 16),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cpn
+         |  FROM embeddings WHERE vec_id >= 10),
+         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
+         |    list_sum(list_transform(generate_series(1, 16),
+         |      i -> qs.qe[i] * CAST(c.ce[i] AS DOUBLE))) / (qs.qpn * c.cpn)
+         |      AS ascore
+         |  FROM qs, c),
+         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 12),
+         |ex AS (SELECT qid, cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
+         |  FROM pool),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM ex)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
 
-    "ann_external_int8_indexed" -> ((s, dir) =>
+    // the external panel against the STANDING int8 rung table: panel
+    // quantizes query-side through the same symmetric int8 recipe
+    QuerySpec("ann_external_int8_indexed", (s, dir) =>
       Rung.int8IndexedTopK(s, dir,
         Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, k = 3, rescoreFactor = 4)),
+        nQueries = 10, k = 3, rescoreFactor = 4),
+      s"""WITH ${externalPanelCte(5)},
+         |qs AS (SELECT qid, qe,
+         |    list_max(list_transform(qe, v -> abs(v))) AS qscale,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * qe[i]))) AS qn
+         |  FROM q),
+         |qq AS (SELECT *, list_transform(qe,
+         |    v -> CASE WHEN qscale = 0 THEN 0
+         |      ELSE floor(v * 127.0 / qscale + 0.5) END) AS qqi
+         |  FROM qs),
+         |c AS (SELECT vec_id AS cid, embedding AS ce,
+         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS cscale,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn
+         |  FROM embeddings WHERE vec_id >= 10),
+         |cc AS (SELECT *, list_transform(ce,
+         |    v -> CASE WHEN cscale = 0 THEN 0
+         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / cscale + 0.5) END) AS cqi
+         |  FROM c),
+         |ap AS (SELECT qq.qid, cc.cid, qq.qe, cc.ce, qq.qn, cc.cn,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qq.qqi[i] * cc.cqi[i])) * qq.qscale * cc.cscale / 16129.0
+         |      / (qq.qn * cc.cn) AS ascore
+         |  FROM qq, cc),
+         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 12),
+         |ex AS (SELECT qid, cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
+         |  FROM pool),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM ex)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
 
-    "ann_external_cascade" -> ((s, dir) =>
+    // the external panel through the cascade funnel: hamming pool 24
+    // (2·4·3), int8 re-rank to 12, exact rescore to top-3, candidates
+    // the indexed vec_id >= 10 partition
+    QuerySpec("ann_external_cascade", (s, dir) =>
       Rung.cascadeTopK(s, dir,
         Similarity.externalQueryPanel(s, dir, nPanel = 5),
-        nQueries = 10, k = 3, rescoreInt8 = 4, rescoreBinary = 2)),
-
-    "ann_matryoshka_indexed" -> ((s, dir) =>
-      Rung.matryoshkaIndexedTopK(s, dir, nQueries = 10, k = 5)),
-
-    "ann_int8_indexed" -> ((s, dir) =>
-      Rung.int8IndexedTopK(s, dir, nQueries = 10, k = 5)),
+        nQueries = 10, k = 3, rescoreInt8 = 4, rescoreBinary = 2),
+      s"""WITH ${externalPanelCte(5)},
+         |qs AS (SELECT qid, qe,
+         |    list_max(list_transform(qe, v -> abs(v))) AS qscale,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * qe[i]))) AS qn,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS qh1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS qh2
+         |  FROM q),
+         |qq AS (SELECT *, list_transform(qe,
+         |    v -> CASE WHEN qscale = 0 THEN 0
+         |      ELSE floor(v * 127.0 / qscale + 0.5) END) AS qqi
+         |  FROM qs),
+         |c AS (SELECT vec_id AS cid, embedding AS ce,
+         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS cscale,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS ch1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS ch2
+         |  FROM embeddings WHERE vec_id >= 10),
+         |cc AS (SELECT *, list_transform(ce,
+         |    v -> CASE WHEN cscale = 0 THEN 0
+         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / cscale + 0.5) END) AS cqi
+         |  FROM c),
+         |ap AS (SELECT qq.qid, cc.cid, qq.qe, cc.ce, qq.qn, cc.cn,
+         |    bit_count(xor(qq.qh1, cc.ch1)) + bit_count(xor(qq.qh2, cc.ch2))
+         |      AS hamm,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qq.qqi[i] * cc.cqi[i])) * qq.qscale * cc.cscale / 16129.0
+         |      / (qq.qn * cc.cn) AS a_i8
+         |  FROM qq, cc),
+         |pool1 AS (SELECT qid, cid, qe, ce, qn, cn, a_i8 FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY hamm, cid) AS brk FROM ap) WHERE brk <= 24),
+         |pool2 AS (SELECT qid, cid, qe, ce, qn, cn FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY a_i8 DESC, cid) AS irk FROM pool1) WHERE irk <= 12),
+         |ex AS (SELECT qid, cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
+         |  FROM pool2),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM ex)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
 
     // the composed rung riding the standing tables: 16 B Hamming scan
     // bounds candidates, 64 B int8 payload re-ranks only that pool,
     // exact float tail — IVF-PQ's scan-side analog (VERDICT r13 #7)
-    "ann_cascade_topk" -> ((s, dir) =>
-      Rung.cascadeTopK(s, dir, nQueries = 10, k = 5)),
+    // oracle: the composed binary→int8→float funnel: hamming pool 40 (2·4·5),
+    // int8 re-rank to 20, exact rescore to top-5 — each stage's window the
+    // same tie-break as its standalone rung
+    QuerySpec("ann_cascade_topk", (s, dir) =>
+      Rung.cascadeTopK(s, dir, nQueries = 10, k = 5),
+      s"""WITH s AS (SELECT vec_id, embedding,
+         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS h1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS h2
+         |  FROM embeddings),
+         |s2 AS (SELECT *, list_transform(embedding,
+         |    v -> CASE WHEN scale = 0 THEN 0
+         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi
+         |  FROM s),
+         |q AS (SELECT * FROM s2 WHERE vec_id < 10),
+         |c AS (SELECT * FROM s2 WHERE vec_id >= 10),
+         |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+         |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
+         |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
+         |      / (q.nrm * c.nrm) AS a_i8
+         |  FROM q, c),
+         |pool1 AS (SELECT qid, cid, qe, ce, qnn, cnn, a_i8 FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY hamm, cid) AS brk FROM ap) WHERE brk <= 40),
+         |pool2 AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY a_i8 DESC, cid) AS irk FROM pool1) WHERE irk <= 20),
+         |ex AS (SELECT qid, cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
+         |      / (qnn * cnn) AS sim
+         |  FROM pool2),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM ex)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
 
     // the funnel's width-tuning artifact (round 15) — recall@k +
     // per-stage pool rows across a (rescoreBinary, rescoreInt8) grid,
     // one scored pass feeding every width; the bytes-vs-recall
     // frontier a deployment picks its cascade widths from
-    "ann_cascade_sweep" -> ((s, dir) =>
-      Rung.cascadeSweep(s, dir, nQueries = 10, k = 3)),
+    // oracle: the cascade width grid replayed off ONE pair-scoring CTE chain
+    // (the compression_recall prefix minus the matryoshka columns); the width
+    // CTEs are GENERATED from Rung.cascadeSweepWidths so the engine rows and
+    // the oracle can never drift apart
+    QuerySpec("ann_cascade_sweep", (s, dir) =>
+      Rung.cascadeSweep(s, dir, nQueries = 10, k = 3),
+      {
+        val k = 3
+        val widthCtes = graft.ext.Rung.cascadeSweepWidths.zipWithIndex
+          .map { case ((b, i), n) =>
+            s"""p$n AS (SELECT qid, cid, sim, a_i8 FROM (SELECT qid, cid, sim, a_i8,
+               |    row_number() OVER (PARTITION BY qid ORDER BY hamm, cid) AS brk
+               |  FROM ex0) t WHERE brk <= ${b * i * k}),
+               |r$n AS (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
+               |    row_number() OVER (PARTITION BY qid ORDER BY a_i8 DESC, cid) AS irk
+               |  FROM p$n) t WHERE irk <= ${i * k}),
+               |f$n AS (SELECT qid, cid FROM (SELECT qid, cid,
+               |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
+               |  FROM r$n) t WHERE rk <= $k)""".stripMargin
+          }.mkString(",\n")
+        val hitRows = graft.ext.Rung.cascadeSweepWidths.zipWithIndex
+          .map { case ((b, i), n) =>
+            s"""  SELECT CAST($b AS INTEGER) AS rescore_binary,
+               |    CAST($i AS INTEGER) AS rescore_int8,
+               |    CAST(${b * i * k} AS BIGINT) AS pool1_rows_per_query,
+               |    CAST(${i * k} AS BIGINT) AS pool2_rows_per_query,
+               |    count(*) AS n_hits FROM f$n JOIN truth USING (qid, cid)""".stripMargin
+          }.mkString("\n  UNION ALL\n")
+        s"""WITH s AS (SELECT vec_id, embedding,
+           |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale,
+           |    sqrt(list_sum(list_transform(generate_series(1, 64),
+           |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
+           |    CAST(list_sum(list_transform(generate_series(1, 32),
+           |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+           |        ELSE 0 END)) AS BIGINT) AS h1,
+           |    CAST(list_sum(list_transform(generate_series(33, 64),
+           |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+           |        ELSE 0 END)) AS BIGINT) AS h2
+           |  FROM embeddings),
+           |s2 AS (SELECT *, list_transform(embedding,
+           |    v -> CASE WHEN scale = 0 THEN 0
+           |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi
+           |  FROM s),
+           |q AS (SELECT * FROM s2 WHERE vec_id < 10),
+           |c AS (SELECT * FROM s2 WHERE vec_id >= 10),
+           |ex0 AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+           |    list_sum(list_transform(generate_series(1, 64),
+           |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
+           |      / (q.nrm * c.nrm) AS sim,
+           |    list_sum(list_transform(generate_series(1, 64),
+           |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
+           |      / (q.nrm * c.nrm) AS a_i8,
+           |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
+           |  FROM q, c),
+           |truth AS (SELECT qid, cid FROM (SELECT qid, cid,
+           |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
+           |  FROM ex0) t WHERE rk <= $k),
+           |$widthCtes,
+           |hits AS (
+           |$hitRows),
+           |tot AS (SELECT count(*) AS n_true FROM truth)
+           |SELECT rescore_binary, rescore_int8, pool1_rows_per_query,
+           |  pool2_rows_per_query, CAST(n_hits AS BIGINT) AS n_hits,
+           |  CAST(n_true AS BIGINT) AS n_true,
+           |  floor(CAST((CAST(n_hits AS DOUBLE) / n_true) AS DOUBLE)*1000000 + 0.5)/1000000
+           |    AS recall
+           |FROM hits, tot ORDER BY rescore_binary, rescore_int8""".stripMargin
+      }),
 
     // the operator-health dashboard row set (VERDICT r13 #8): every
     // standing surface probed through the maintenance/freshness
@@ -550,7 +2126,7 @@ object ExtEntry {
     // carries the takedown-SLA guard row: the fixture-registered user
     // tombstones are pending (has_data) and fresh against the 30-day
     // clock (healthy) — a perpetually-deferred erase would flip it
-    "serve_health" -> ((s, dir) =>
+    QuerySpec("serve_health", (s, dir) =>
       // forgetSlaAsOfMs = -2: the guard row's clock anchors at the
       // fixture log's own oldest registration, so the pinned
       // healthy=TRUE verdict is warehouse-age-invariant (live
@@ -558,7 +2134,20 @@ object ExtEntry {
       graft.streaming.Metrics.serveHealth(s, dir,
         forgetSla = Some((graft.streaming.Pipeline.Config(dir),
           30L * 24 * 3600 * 1000)),
-        forgetSlaAsOfMs = -2L)),
+        forgetSlaAsOfMs = -2L),
+      """SELECT surface, index_present, has_data, healthy FROM (VALUES
+        |  ('dedup_bands', TRUE, TRUE, TRUE),
+        |  ('grams', TRUE, TRUE, TRUE),
+        |  ('ivf_cells', TRUE, TRUE, TRUE),
+        |  ('ivfpq_cells', TRUE, TRUE, TRUE),
+        |  ('pq_codes', TRUE, TRUE, TRUE),
+        |  ('rung_binary', TRUE, TRUE, TRUE),
+        |  ('rung_int8', TRUE, TRUE, TRUE),
+        |  ('rung_matryoshka', TRUE, TRUE, TRUE),
+        |  ('user_forget_sla', TRUE, TRUE, TRUE),
+        |  ('winsor_bounds', TRUE, TRUE, TRUE)
+        |) AS t(surface, index_present, has_data, healthy)
+        |ORDER BY surface""".stripMargin),
 
     // the takedown-SLA audit face (r15 VERDICT next #1): per tombstone
     // log, how many requests await physical erase and whether the
@@ -566,8 +2155,8 @@ object ExtEntry {
     // drain-guard deferral reason ('none' here — no consumer owes
     // files on a batch corpus). Ages stay engine-side (wall-clock);
     // the deterministic columns are pinned cross-engine from the
-    // fixture predicates
-    "forget_sla" -> ((s, dir) => {
+    // fixture predicates: pending counts, no deferral, every clock fresh
+    QuerySpec("forget_sla", (s, dir) => {
       // asOfMs = -2: each log's clock anchors at its own oldest
       // registration, so the pinned sla_ok=TRUE verdicts are
       // warehouse-age-invariant (ADVICE r16: the wall-clock form made
@@ -585,22 +2174,48 @@ object ExtEntry {
           col("pending_users").as("pending"), col("deferred_because"),
           col("sla_ok"))
       vd.unionByName(u).orderBy(col("log"))
-    }),
+    },
+      """WITH v AS (SELECT count(*) AS n FROM embeddings
+        |    WHERE vec_id >= 10 AND vec_id % 23 = 5),
+        |  d AS (SELECT count(*) AS n FROM documents WHERE doc_id % 31 = 7),
+        |  u AS (SELECT count(DISTINCT user_id) AS n FROM events
+        |    WHERE user_id % 41 = 11)
+        |SELECT log, CAST(pending AS BIGINT) AS pending, deferred_because,
+        |  sla_ok
+        |FROM (
+        |  SELECT 'docs' AS log, d.n AS pending,
+        |    'none' AS deferred_because, TRUE AS sla_ok FROM d
+        |  UNION ALL SELECT 'users', u.n, 'none', TRUE FROM u
+        |  UNION ALL SELECT 'vectors', v.n, 'none', TRUE FROM v)
+        |ORDER BY log""".stripMargin),
 
     // the rung-admission observability face (VERDICT r14 #5): the three
     // standing tables' cross-table cid agreement — the drift an
     // unreplayed crash window leaves; on a freshly ensured corpus every
     // count equals the candidate partition's row count, which the
     // oracle computes from the raw embeddings table cross-engine
-    "rung_consistency" -> ((s, dir) =>
-      Rung.rungConsistency(s, dir, nQueries = 10)),
+    QuerySpec("rung_consistency", (s, dir) =>
+      Rung.rungConsistency(s, dir, nQueries = 10),
+      """SELECT CAST(n AS BIGINT) AS n_binary,
+        |  CAST(n AS BIGINT) AS n_matryoshka,
+        |  CAST(n AS BIGINT) AS n_int8,
+        |  CAST(n AS BIGINT) AS n_common,
+        |  CAST(1 AS BIGINT) AS max_multiplicity,
+        |  TRUE AS consistent
+        |FROM (SELECT count(*) AS n FROM embeddings WHERE vec_id >= 10)""".stripMargin),
 
     // row-level index completeness (round 15): each per-vector standing
     // index carries exactly one row per raw candidate — the third face
     // of index health (present/fresh, internally consistent, COMPLETE);
     // counts checked cross-engine against the raw embeddings table
-    "index_coverage" -> ((s, dir) =>
-      graft.streaming.Metrics.indexCoverage(s, dir)),
+    QuerySpec("index_coverage", (s, dir) =>
+      graft.streaming.Metrics.indexCoverage(s, dir),
+      """WITH n AS (SELECT count(*) AS c FROM embeddings WHERE vec_id >= 10)
+        |SELECT surface, CAST(c AS BIGINT) AS n_indexed,
+        |  CAST(c AS BIGINT) AS n_candidates, TRUE AS complete
+        |FROM (VALUES ('ivf_cells'), ('ivfpq_cells'), ('pq_codes'),
+        |  ('rung_binary'), ('rung_int8'), ('rung_matryoshka')) t(surface), n
+        |ORDER BY surface""".stripMargin),
 
     // the deletion lifecycle (round 15): tombstones in the standing
     // forget table, then each live search excludes them via ONE
@@ -613,243 +2228,1061 @@ object ExtEntry {
     // anti-join — not per-run registration probes (r15 VERDICT next
     // #5); the DuckDB oracles weave the same predicates into the plain
     // forms' SQL
-    "ann_forget_exact" -> ((s, dir) =>
-      Forget.bruteForceTopKLive(s, dir, nQueries = 10, k = 5)),
+    // oracle: the live (tombstone-filtered) exact search: the ann_cosine_topk
+    // chain with the registered deterministic deletion predicate woven into
+    // the candidate CTE — a vector the engine tombstones must never appear in
+    // any rank, and the ranks close up as if it had never been admitted
+    QuerySpec("ann_forget_exact", (s, dir) =>
+      Forget.bruteForceTopKLive(s, dir, nQueries = 10, k = 5),
+      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
+        |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
+        |  WHERE vec_id >= 10 AND NOT (vec_id % 23 = 5)),
+        |sims AS (SELECT qid, cid,
+        |    list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))) /
+        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) *
+        |     sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))) AS sim
+        |  FROM q, c),
+        |rk AS (SELECT qid, cid, sim,
+        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+        |  FROM sims)
+        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
 
-    "ann_forget_topk" -> ((s, dir) =>
+    // the live binary-rung indexed search: ann_binary_topk's two-stage
+    // chain, candidates filtered by the same deletion predicate BEFORE
+    // the Hamming pool window (the engine's filter-before-rank
+    // contract — a tombstoned row must not occupy a pool slot either)
+    QuerySpec("ann_forget_topk", (s, dir) =>
       Forget.binaryIndexedTopKLive(s, dir, nQueries = 10, k = 5,
-        rescoreFactor = 4)),
+        rescoreFactor = 4),
+      """WITH s AS (SELECT vec_id, embedding,
+        |    sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
+        |    CAST(list_sum(list_transform(generate_series(1, 32),
+        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+        |        ELSE 0 END)) AS BIGINT) AS h1,
+        |    CAST(list_sum(list_transform(generate_series(33, 64),
+        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+        |        ELSE 0 END)) AS BIGINT) AS h2
+        |  FROM embeddings),
+        |q AS (SELECT * FROM s WHERE vec_id < 10),
+        |c AS (SELECT * FROM s WHERE vec_id >= 10 AND NOT (vec_id % 23 = 5)),
+        |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+        |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
+        |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
+        |  FROM q, c),
+        |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY qid
+        |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 20),
+        |ex AS (SELECT qid, cid,
+        |    list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
+        |      / (qnn * cnn) AS sim
+        |  FROM pool),
+        |rk AS (SELECT qid, cid, sim,
+        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+        |  FROM ex)
+        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
 
     // the erasure receipt: per-surface totals and forgotten-but-
     // resident counts over the raw store, the three rung tables, and
     // the tombstone log itself (all counts derivable cross-engine from
-    // the raw table + the deterministic rule)
-    "forget_audit" -> ((s, dir) =>
-      Forget.forgetAudit(s, dir, nQueries = 10, dPrefix = 16)),
+    // the raw table + the deterministic rule). Pre-apply, every
+    // per-vector surface still physically holds the tombstoned rows
+    // (read-path filtering is what serves deletion correctness between
+    // applies), so each resident count equals the deterministic set's size
+    QuerySpec("forget_audit", (s, dir) =>
+      Forget.forgetAudit(s, dir, nQueries = 10, dPrefix = 16),
+      """WITH t AS (SELECT count(*) AS n FROM embeddings
+        |    WHERE vec_id >= 10 AND vec_id % 23 = 5),
+        |  c AS (SELECT count(*) AS n FROM embeddings WHERE vec_id >= 10),
+        |  e AS (SELECT count(*) AS n FROM embeddings)
+        |SELECT surface, CAST(rows_total AS BIGINT) AS rows_total,
+        |  CAST(forgotten_resident AS BIGINT) AS forgotten_resident
+        |FROM (
+        |  SELECT 'raw_embeddings' AS surface, e.n AS rows_total,
+        |    t.n AS forgotten_resident FROM e, t
+        |  UNION ALL SELECT 'rung_binary', c.n, t.n FROM c, t
+        |  UNION ALL SELECT 'rung_int8', c.n, t.n FROM c, t
+        |  UNION ALL SELECT 'rung_matryoshka', c.n, t.n FROM c, t
+        |  UNION ALL SELECT 'tombstones', t.n, t.n FROM t)
+        |ORDER BY surface""".stripMargin),
 
     // the DOCUMENT-side deletion lifecycle: takedown requests name docs
     // at least as often as vectors; tombstoned docs are excluded BEFORE
     // the band-bucket grouping (bucket membership under the cap is
     // order-sensitive — a post-hoc pair filter would differ from a
     // corpus the doc never entered)
-    "dedup_forget_pairs" -> ((s, dir) =>
-      Forget.candidatePairsLive(s, dir).orderBy(col("d1"), col("d2"))),
+    // oracle: the live MinHash-LSH pairs: the dedup_minhash_lsh chain with
+    // the doc deletion predicate woven into its docs source — filtering
+    // BEFORE banding, so capped buckets fill with live docs only
+    QuerySpec("dedup_forget_pairs", (s, dir) =>
+      Forget.candidatePairsLive(s, dir).orderBy(col("d1"), col("d2")),
+      s"""WITH ${shinglesCteFrom(
+             "(SELECT * FROM documents WHERE NOT (doc_id % 31 = 7))")},
+         |$bandsCte
+         |SELECT d1, d2 FROM cand ORDER BY d1, d2""".stripMargin),
 
     // the doc-side erasure receipt — DISTINCT-key semantics (one doc
     // spans many band rows; docs, not rows, are the privacy unit)
-    "forget_docs_audit" -> ((s, dir) =>
-      Forget.forgetDocsAudit(s, dir)),
+    // oracle: doc-side receipt, pre-apply: distinct-key semantics. The
+    // standing band table covers the STANDING-corpus partition (doc_id % 10
+    // in 0..7 — the incremental-admission split ensureDedupIndex builds), so
+    // its key set and resident count carry that predicate; the raw store
+    // covers everything
+    QuerySpec("forget_docs_audit", (s, dir) =>
+      Forget.forgetDocsAudit(s, dir),
+      """WITH t AS (SELECT count(*) AS n FROM documents WHERE doc_id % 31 = 7),
+        |  d AS (SELECT count(*) AS n FROM documents),
+        |  bc AS (SELECT count(*) AS n FROM documents
+        |    WHERE NOT (doc_id % 10 >= 8)),
+        |  bt AS (SELECT count(*) AS n FROM documents
+        |    WHERE doc_id % 31 = 7 AND NOT (doc_id % 10 >= 8))
+        |SELECT surface, CAST(keys_total AS BIGINT) AS keys_total,
+        |  CAST(forgotten_resident AS BIGINT) AS forgotten_resident
+        |FROM (
+        |  SELECT 'dedup_bands' AS surface, bc.n AS keys_total,
+        |    bt.n AS forgotten_resident FROM bc, bt
+        |  UNION ALL SELECT 'raw_documents', d.n, t.n FROM d, t
+        |  UNION ALL SELECT 'tombstones', t.n, t.n FROM t)
+        |ORDER BY surface""".stripMargin),
 
     // the external-vector forms of the two new rungs — every search
     // family carries the caller-supplied-panel surface (r12 contract)
-    "ann_external_binary" -> ((s, dir) =>
+    // oracle: the external panel through the binary rung: double-typed panel
+    // vectors sign-pack through the same shift sum, whole table searched
+    QuerySpec("ann_external_binary", (s, dir) =>
       Similarity.binaryRescoreTopK(s, dir,
         Similarity.externalQueryPanel(s, dir, nPanel = 5), k = 3,
-        rescoreFactor = 4, minCid = Long.MinValue)),
+        rescoreFactor = 4, minCid = Long.MinValue),
+      s"""WITH ${externalPanelCte(5)},
+         |qs AS (SELECT qid, qe,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * qe[i]))) AS qn,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS qh1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS qh2
+         |  FROM q),
+         |c AS (SELECT vec_id AS cid, embedding AS ce,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
+         |    CAST(list_sum(list_transform(generate_series(1, 32),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+         |        ELSE 0 END)) AS BIGINT) AS ch1,
+         |    CAST(list_sum(list_transform(generate_series(33, 64),
+         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+         |        ELSE 0 END)) AS BIGINT) AS ch2
+         |  FROM embeddings),
+         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
+         |    bit_count(xor(qs.qh1, c.ch1)) + bit_count(xor(qs.qh2, c.ch2))
+         |      AS hamm
+         |  FROM qs, c),
+         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 12),
+         |ex AS (SELECT qid, cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
+         |  FROM pool),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM ex)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
 
-    "ann_external_matryoshka" -> ((s, dir) =>
+    // the external panel through the prefix-dim rung
+    QuerySpec("ann_external_matryoshka", (s, dir) =>
       Similarity.matryoshkaRescoreTopK(s, dir,
         Similarity.externalQueryPanel(s, dir, nPanel = 5), k = 3,
-        dPrefix = 16, rescoreFactor = 4, minCid = Long.MinValue)),
+        dPrefix = 16, rescoreFactor = 4, minCid = Long.MinValue),
+      s"""WITH ${externalPanelCte(5)},
+         |qs AS (SELECT qid, qe,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * qe[i]))) AS qn,
+         |    sqrt(list_sum(list_transform(generate_series(1, 16),
+         |      i -> qe[i] * qe[i]))) AS qpn
+         |  FROM q),
+         |c AS (SELECT vec_id AS cid, embedding AS ce,
+         |    sqrt(list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
+         |    sqrt(list_sum(list_transform(generate_series(1, 16),
+         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cpn
+         |  FROM embeddings),
+         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
+         |    list_sum(list_transform(generate_series(1, 16),
+         |      i -> qs.qe[i] * CAST(c.ce[i] AS DOUBLE))) / (qs.qpn * c.cpn)
+         |      AS ascore
+         |  FROM qs, c),
+         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY qid
+         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 12),
+         |ex AS (SELECT qid, cid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
+         |  FROM pool),
+         |rk AS (SELECT qid, cid, sim,
+         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+         |  FROM ex)
+         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
 
     // SemDeDup: centroid-blocked embedding dedup over trained IVF cells
-    "dedup_semantic" -> ((s, dir) =>
+    // oracle: mirrors semanticDedup: trained cells over the WHOLE table
+    // (nQueries = 0), rank-capped membership, within-cell smaller-id neighbor
+    // at cos >= 0.4 drops the vector
+    QuerySpec("dedup_semantic", (s, dir) =>
       Similarity.semanticDedup(s, dir, threshold = 0.4,
-        nCentroids = Similarity.AutoShape)),
+        nCentroids = Similarity.AutoShape),
+      s"""WITH $semanticCellCtes,
+         |pairs AS (SELECT a AS v1, b AS v2
+         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b) WHERE a < b),
+         |drops AS (SELECT DISTINCT v2 AS vec_id FROM pairs
+         |  JOIN v e1 ON e1.vec_id = v1 JOIN v e2 ON e2.vec_id = v2
+         |  WHERE list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
+         |    / (e1.nrm * e2.nrm) >= 0.4),
+         |res AS (SELECT c.vec_id, c.cent_id AS cell, d.vec_id IS NULL AS kept
+         |  FROM cells c LEFT JOIN drops d USING (vec_id))
+         |SELECT vec_id, cell, kept FROM res ORDER BY vec_id""".stripMargin),
 
     // kNN graph: per-vector top-m within-cell neighbors — the batch
     // artifact graph clustering and cluster-balanced sampling consume
-    "knn_graph" -> ((s, dir) => Similarity.knnGraph(s, dir, m = 3,
-      nCentroids = Similarity.AutoShape)),
+    // oracle: same trained cells + rank-cap as dedup_semantic, then DIRECTED
+    // within-cell edges ranked per vector
+    QuerySpec("knn_graph", (s, dir) => Similarity.knnGraph(s, dir, m = 3,
+      nCentroids = Similarity.AutoShape),
+      s"""WITH $semanticCellCtes,
+         |edges AS (SELECT a AS vid, b AS nid
+         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b)
+         |  WHERE a <> b),
+         |sims AS (SELECT vid, nid,
+         |    list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
+         |    / (e1.nrm * e2.nrm) AS sim
+         |  FROM edges JOIN v e1 ON e1.vec_id = vid
+         |  JOIN v e2 ON e2.vec_id = nid),
+         |rk AS (SELECT vid, nid, sim, row_number() OVER (PARTITION BY vid
+         |    ORDER BY sim DESC, nid) AS rank FROM sims)
+         |SELECT vid AS vec_id, nid AS nbr_id, CAST(rank AS BIGINT) AS rank,
+         |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
+         |FROM rk WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin),
 
     // connected components over the verified semantic edges — the
     // embedding-space twin of dedup_cluster
-    "cluster_semantic" -> ((s, dir) =>
+    // oracle: same trained cells + verified pairs as dedup_semantic, closed
+    // into components by the dedup_cluster recursive reachability
+    QuerySpec("cluster_semantic", (s, dir) =>
       Similarity.semanticClusters(s, dir, threshold = 0.4,
-        nCentroids = Similarity.AutoShape)),
+        nCentroids = Similarity.AutoShape),
+      s"""WITH RECURSIVE $semanticCellCtes,
+         |spairs AS (SELECT a AS v1, b AS v2
+         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b)
+         |  WHERE a < b),
+         |vpairs AS (SELECT v1, v2 FROM spairs
+         |  JOIN v e1 ON e1.vec_id = v1 JOIN v e2 ON e2.vec_id = v2
+         |  WHERE list_sum(list_transform(generate_series(1, 64),
+         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
+         |    / (e1.nrm * e2.nrm) >= 0.4),
+         |edges AS (SELECT v1 AS a, v2 AS b FROM vpairs
+         |  UNION SELECT v2, v1 FROM vpairs),
+         |reach(node, r) AS (
+         |  SELECT a, b FROM edges
+         |  UNION
+         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
+         |lbl AS (SELECT node, least(node, min(r)) AS cluster_id
+         |  FROM reach GROUP BY node)
+         |SELECT cluster_id, count(*) AS n_vecs, max(node) AS max_vec
+         |FROM lbl GROUP BY cluster_id ORDER BY cluster_id""".stripMargin),
 
     // label x label-centroid mean-cosine matrix — the linear-probe
     // sanity check; exact micro-int centroids, DECIMAL mean sims
-    "emb_class_sep" -> ((s, dir) => Similarity.classSeparation(s, dir)),
+    // oracle: the trainIvfCentroids micro-int quantization, distributed:
+    // exact per-dim BIGINT sums -> one rounded division per component; mean
+    // sims via the round-6 DECIMAL(27,6) exact-sum convention
+    QuerySpec("emb_class_sep", (s, dir) => Similarity.classSeparation(s, dir),
+      """WITH qd AS (SELECT label, i,
+        |    floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5) AS v
+        |  FROM embeddings, UNNEST(generate_series(1, 64)) AS g(i)),
+        |cd AS (SELECT label, i,
+        |    floor(sum(v) / count(*) + 0.5) / 1000000.0 AS c
+        |  FROM qd GROUP BY label, i),
+        |cent AS (SELECT label AS clabel, array_agg(c ORDER BY i) AS cemb
+        |  FROM cd GROUP BY label),
+        |cn AS (SELECT clabel, cemb,
+        |    sqrt(list_sum(list_transform(cemb, x -> x * x))) AS cnorm
+        |  FROM cent),
+        |v AS (SELECT label, embedding,
+        |    sqrt(list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
+        |      AS en
+        |  FROM embeddings),
+        |sims AS (SELECT v.label, cn.clabel,
+        |    floor(CAST((list_sum(list_transform(generate_series(1, 64),
+        |      i -> CAST(v.embedding[i] AS DOUBLE) * cemb[i]))
+        |      / (v.en * cn.cnorm)) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
+        |  FROM v, cn)
+        |SELECT CAST(label AS BIGINT) AS label,
+        |  CAST(clabel AS BIGINT) AS clabel,
+        |  CAST(count(*) AS BIGINT) AS n_vecs,
+        |  floor(CAST((CAST(sum(CAST(sim AS DECIMAL(27,6))) AS DOUBLE)
+        |    / count(*)) AS DOUBLE)*1000000 + 0.5)/1000000 AS mean_sim,
+        |  label = clabel AS is_self
+        |FROM sims GROUP BY label, clabel ORDER BY label, clabel""".stripMargin),
 
     // word2phrase collocation mining: lift-ranked adjacent pairs (lift
     // order = PMI order, no ln) — the phrase-candidate table a
     // tokenizer build reads
-    "text_collocations" -> ((s, dir) =>
-      TextAnalysis.collocations(s, dir, minCount = 5, k = 50)),
+    // oracle: lift = (n_ab/n_a)·(N/n_b) in the engine's fixed operation order
+    // — two exactly-rounded divisions and a multiply, bit-identical; the
+    // top-50 cut orders by the RAW lift (ties by pair), the output by the
+    // rounded lift
+    QuerySpec("text_collocations", (s, dir) =>
+      TextAnalysis.collocations(s, dir, minCount = 5, k = 50),
+      """WITH d AS (SELECT string_split(text, ' ') AS w FROM documents),
+        |uni AS (SELECT t AS token, CAST(count(*) AS BIGINT) AS cnt
+        |  FROM d, UNNEST(w) AS u(t) GROUP BY t),
+        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM uni),
+        |bg AS (SELECT w[i] AS w1, w[i+1] AS w2
+        |  FROM d, UNNEST(generate_series(1, len(w) - 1)) AS g(i)
+        |  WHERE len(w) >= 2),
+        |pc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_ab
+        |  FROM bg GROUP BY w1, w2 HAVING count(*) >= 5),
+        |sc AS (SELECT w1, w2, n_ab, a.cnt AS n_a, b.cnt AS n_b,
+        |    (CAST(n_ab AS DOUBLE) / CAST(a.cnt AS DOUBLE)) *
+        |    (CAST(n_total AS DOUBLE) / CAST(b.cnt AS DOUBLE)) AS lift_raw
+        |  FROM pc JOIN uni a ON pc.w1 = a.token
+        |  JOIN uni b ON pc.w2 = b.token, tot),
+        |top AS (SELECT w1, w2, n_ab, n_a, n_b, floor(CAST((lift_raw) AS DOUBLE)*1000000 + 0.5)/1000000 AS lift
+        |  FROM sc ORDER BY lift_raw DESC, w1, w2 LIMIT 50)
+        |SELECT w1, w2, n_ab, n_a, n_b, lift FROM top
+        |ORDER BY lift DESC, w1, w2""".stripMargin),
 
     // per-doc top-k ratio-TF-IDF keywords (documented no-log deviation)
-    "text_keywords" -> ((s, dir) => TextAnalysis.keywords(s, dir, k = 5)),
+    // oracle: score = tf·(N/df) in the engine's fixed operation order — one
+    // division, one multiply, exact BIGINT inputs; ranks tie on token
+    QuerySpec("text_keywords", (s, dir) => TextAnalysis.keywords(s, dir, k = 5),
+      """WITH dt AS (SELECT doc_id, t AS token,
+        |    CAST(count(*) AS BIGINT) AS tf
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |    UNNEST(w) AS u(t)
+        |  GROUP BY doc_id, t),
+        |dfq AS (SELECT token, CAST(count(*) AS BIGINT) AS df
+        |  FROM dt GROUP BY token),
+        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+        |s AS (SELECT doc_id, token, tf, df,
+        |    CAST(tf AS DOUBLE) *
+        |      (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) AS score
+        |  FROM dt JOIN dfq USING (token), n),
+        |r AS (SELECT doc_id, token, tf, df, score,
+        |    CAST(row_number() OVER (PARTITION BY doc_id
+        |      ORDER BY score DESC, token) AS BIGINT) AS rank
+        |  FROM s)
+        |SELECT doc_id, token, tf, df, rank, floor(CAST((score) AS DOUBLE)*1000000 + 0.5)/1000000 AS tfidf
+        |FROM r WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin),
 
     // the lmBuckets 100 TB deployment shape: sketch cutoffs, no
-    // per-language sort; error bound asserted as oracle-TRUE booleans
-    "text_lm_buckets_approx" -> ((s, dir) =>
-      TextAnalysis.lmBucketsApprox(s, dir)),
+    // per-language sort. Sketch cutoffs have no cross-engine twin, so the
+    // ±5%-rank bucket-size bound is asserted as oracle-TRUE booleans (the
+    // agg_approx_percentile pattern); lang masses stay exact
+    QuerySpec("text_lm_buckets_approx", (s, dir) =>
+      TextAnalysis.lmBucketsApprox(s, dir),
+      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+        |  TRUE AS head_within_rank_eps, TRUE AS middle_within_rank_eps,
+        |  TRUE AS tail_within_rank_eps
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
 
     // bigram conditional-probability scoring — the rung above
     // text_unigram_lm; exact BIGINT ratios, DECIMAL mean, no ln
-    "text_bigram_lm" -> ((s, dir) => TextAnalysis.bigramLm(s, dir)),
+    // oracle: transitions explode once; p = exact BIGINT ratio rounded 6,
+    // mean via the DECIMAL(27,6) exact sum; rare compare is integer
+    QuerySpec("text_bigram_lm", (s, dir) => TextAnalysis.bigramLm(s, dir),
+      """WITH t AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |    UNNEST(generate_series(1, len(w) - 1)) AS g(i)
+        |  WHERE len(w) >= 2),
+        |big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_ab
+        |  FROM t GROUP BY w1, w2),
+        |lf AS (SELECT w1, CAST(sum(n_ab) AS BIGINT) AS n_a
+        |  FROM big GROUP BY w1),
+        |sc AS (SELECT doc_id,
+        |    floor(CAST((CAST(n_ab AS DOUBLE) / CAST(n_a AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000 AS p,
+        |    n_ab, n_a
+        |  FROM t JOIN big USING (w1, w2) JOIN lf USING (w1)),
+        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trans,
+        |    sum(CAST(p AS DECIMAL(27,6))) AS psum,
+        |    min(p) AS min_p,
+        |    CAST(sum(CASE WHEN n_ab * 100 < n_a THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n_rare
+        |  FROM sc GROUP BY doc_id)
+        |SELECT doc_id, n_trans,
+        |  CAST(CAST(psum * 1000000 AS BIGINT) * 1000 // n_trans AS DOUBLE)
+        |    / 1000000000.0 AS mean_p,
+        |  min_p, n_rare
+        |FROM agg ORDER BY doc_id""".stripMargin),
 
     // sliding context-window chunking (HF stride convention)
-    "chunk_windows" -> ((s, dir) => TextAnalysis.chunkWindows(s, dir)),
+    // oracle: chunk i covers w[i*48+1 : i*48+64] (inclusive DuckDB slice,
+    // clamped at the list end exactly like Spark's slice)
+    QuerySpec("chunk_windows", (s, dir) => TextAnalysis.chunkWindows(s, dir),
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |x AS (SELECT doc_id, w, (len(w) + 47) // 48 AS n_chunks FROM d),
+        |c AS (SELECT doc_id, i AS chunk_no, w
+        |  FROM x, UNNEST(generate_series(0, CAST(n_chunks - 1 AS BIGINT))) AS g(i))
+        |SELECT doc_id, CAST(chunk_no AS BIGINT) AS chunk_no,
+        |  CAST(chunk_no * 48 + 1 AS BIGINT) AS start_tok,
+        |  CAST(len(w[chunk_no*48+1 : chunk_no*48+64]) AS BIGINT) AS n_chunk_tokens,
+        |  md5(array_to_string(w[chunk_no*48+1 : chunk_no*48+64], ' ')) AS chunk_md5
+        |FROM c ORDER BY doc_id, chunk_no""".stripMargin),
 
     // corpus packing layout via a distributed prefix sum
-    "pack_greedy" -> ((s, dir) => Curation.packGreedy(s, dir)),
+    // the oracle states the GLOBAL running sum declaratively; the engine
+    // must reproduce it through the block-and-rollup distributed form
+    QuerySpec("pack_greedy", (s, dir) => Curation.packGreedy(s, dir),
+      """WITH t AS (SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |o AS (SELECT doc_id, n_tokens,
+        |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+        |      AS tok_offset
+        |  FROM t)
+        |SELECT doc_id, n_tokens, tok_offset,
+        |  tok_offset // 256 AS first_bin,
+        |  (tok_offset + n_tokens - 1) // 256 AS last_bin
+        |FROM o ORDER BY doc_id""".stripMargin),
 
     // LSH candidates verified by exact edit distance (typo-level dups)
-    "dedup_editdist" -> ((s, dir) =>
+    QuerySpec("dedup_editdist", (s, dir) =>
       TextDedup.editDistPairs(s, dir, maxDist = 16)
-        .orderBy(col("d1"), col("d2"))),
+        .orderBy(col("d1"), col("d2")),
+      s"""WITH $shinglesCte,
+         |$bandsCte
+         |SELECT d1, d2, CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist
+         |FROM cand JOIN documents a ON a.doc_id = d1
+         |JOIN documents b ON b.doc_id = d2
+         |WHERE levenshtein(a.text, b.text) <= 16
+         |ORDER BY d1, d2""".stripMargin),
 
     // the all-scan-local quality gate: repetition keep × composite
     // quality score × language-ID agreement — one pass, zero shuffles
     // before the output sort (contrast pipeline_curate, whose dedup
     // gates need joins); the gate set a filter stage runs BEFORE any
     // expensive dedup at 100 TB
-    "pipeline_quality" -> ((s, dir) => TextAnalysis.qualityGate(s, dir)),
+    // oracle: one-pass gate: the repetition, quality-score, and langid
+    // formulas verbatim from their standalone oracles, conjoined
+    QuerySpec("pipeline_quality", (s, dir) => TextAnalysis.qualityGate(s, dir),
+      """WITH dicts AS (SELECT
+        |  ['the','a','of','and','to','in','is','it','you','that'] AS en,
+        |  ['der','die','das','und','ist','nicht','mit','ein','ich','zu'] AS de,
+        |  ['el','la','que','y','en','un','por','con','los','se'] AS es,
+        |  ['le','la','et','les','des','en','un','une','que','dans'] AS fr),
+        |g AS (SELECT doc_id, lang, text,
+        |    string_split(text, ' ') AS w,
+        |    string_split(lower(text), ' ') AS wl
+        |  FROM documents),
+        |m AS (SELECT doc_id, lang, text, wl,
+        |    list_transform(generate_series(1, greatest(len(w) - 1, 1)),
+        |      i -> array_to_string(w[i:i+1], ' ')) AS bg,
+        |    list_transform(generate_series(1, greatest(len(w) - 2, 1)),
+        |      i -> array_to_string(w[i:i+2], ' ')) AS tg
+        |  FROM g),
+        |r AS (SELECT doc_id, lang, text, wl,
+        |    floor(CAST((CAST(list_max(list_transform(list_distinct(bg),
+        |      d -> len(list_filter(bg, x -> x = d)))) AS DOUBLE) / len(bg)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |      AS top_bigram_frac,
+        |    floor(CAST((CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / len(tg)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |      AS dup_trigram_frac
+        |  FROM m),
+        |q AS (SELECT doc_id, lang, top_bigram_frac, dup_trigram_frac,
+        |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
+        |        / length(text)) * 0.5 +
+        |      least(CAST(len(list_filter(wl, x -> list_contains(en, x))) AS DOUBLE)
+        |        / len(wl) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS quality_score,
+        |    CAST(len(list_filter(wl, x -> list_contains(en, x))) AS DOUBLE) / len(wl) AS s_en,
+        |    CAST(len(list_filter(wl, x -> list_contains(de, x))) AS DOUBLE) / len(wl) AS s_de,
+        |    CAST(len(list_filter(wl, x -> list_contains(es, x))) AS DOUBLE) / len(wl) AS s_es,
+        |    CAST(len(list_filter(wl, x -> list_contains(fr, x))) AS DOUBLE) / len(wl) AS s_fr
+        |  FROM r, dicts)
+        |SELECT doc_id, lang, quality_score, top_bigram_frac
+        |FROM q
+        |WHERE top_bigram_frac <= 0.06 AND dup_trigram_frac <= 0.02
+        |  AND quality_score >= 0.5
+        |  AND (CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
+        |       WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
+        |       WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END) = lang
+        |ORDER BY doc_id""".stripMargin),
 
     // measure → emit the sample_stratified thresholds, inside the engine
-    "mixture_weights" -> ((s, dir) =>
+    QuerySpec("mixture_weights", (s, dir) =>
       Curation.mixtureWeights(s, dir, Seq("en" -> 0.125, "de" -> 0.25,
-        "es" -> 0.25, "fr" -> 0.25, "zh" -> 0.125))),
+        "es" -> 0.25, "fr" -> 0.25, "zh" -> 0.125)),
+      """WITH p AS (SELECT lang,
+        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS lang_tokens
+        |  FROM documents GROUP BY lang),
+        |t AS (SELECT CAST(sum(lang_tokens) AS BIGINT) AS total_tokens FROM p),
+        |m AS (SELECT lang, lang_tokens, total_tokens,
+        |    CAST(CASE lang WHEN 'en' THEN 0.125 WHEN 'de' THEN 0.25
+        |      WHEN 'es' THEN 0.25 WHEN 'fr' THEN 0.25
+        |      WHEN 'zh' THEN 0.125 ELSE 0.0 END AS DOUBLE) AS target_share,
+        |    least(CAST(1.0 AS DOUBLE),
+        |      CAST(CASE lang WHEN 'en' THEN 0.125 WHEN 'de' THEN 0.25
+        |      WHEN 'es' THEN 0.25 WHEN 'fr' THEN 0.25
+        |      WHEN 'zh' THEN 0.125 ELSE 0.0 END AS DOUBLE)
+        |      * total_tokens / lang_tokens) AS rate
+        |  FROM p, t)
+        |SELECT lang, lang_tokens,
+        |  CAST(lang_tokens AS DOUBLE) / total_tokens AS actual_share,
+        |  target_share, floor(CAST((rate) AS DOUBLE)*1000000 + 0.5)/1000000 AS sample_rate,
+        |  CASE WHEN rate >= 1.0 THEN 'zzzz'
+        |    ELSE lpad(lower(to_hex(CAST(floor(rate * 65536.0) AS BIGINT))), 4, '0')
+        |  END AS sample_threshold
+        |FROM m ORDER BY lang""".stripMargin),
 
     // sqrt-temperature (tau = 1/2) multilingual rebalancing: closed-form
     // rate sqrt(n_min/n_l), emitted as sample_stratified thresholds
-    "mixture_temperature" -> ((s, dir) =>
-      Curation.mixtureTemperature(s, dir)),
+    // oracle: sqrt is correctly rounded per IEEE in both engines, so the
+    // closed-form tau=1/2 rate needs no ordered summation anywhere
+    QuerySpec("mixture_temperature", (s, dir) =>
+      Curation.mixtureTemperature(s, dir),
+      """WITH p AS (SELECT lang,
+        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS lang_tokens
+        |  FROM documents GROUP BY lang),
+        |t AS (SELECT CAST(min(lang_tokens) AS BIGINT) AS min_tokens,
+        |    CAST(sum(lang_tokens) AS BIGINT) AS total_tokens FROM p),
+        |m AS (SELECT lang, lang_tokens, total_tokens,
+        |    sqrt(CAST(min_tokens AS DOUBLE) / lang_tokens) AS rate
+        |  FROM p, t)
+        |SELECT lang, lang_tokens,
+        |  CAST(lang_tokens AS DOUBLE) / total_tokens AS actual_share,
+        |  floor(CAST((rate) AS DOUBLE)*1000000 + 0.5)/1000000 AS sample_rate,
+        |  CASE WHEN rate >= 1.0 THEN 'zzzz'
+        |    ELSE lpad(lower(to_hex(CAST(floor(rate * 65536.0) AS BIGINT))), 4, '0')
+        |  END AS sample_threshold
+        |FROM m ORDER BY lang""".stripMargin),
 
     // data-constrained epoch planning: per-source repetition counts
     // under a uniform token budget, capped at 4 epochs (Muennighoff
     // et al. 2022), with the unmet deficit a planner re-allocates
-    "mixture_epochs" -> ((s, dir) =>
-      Curation.mixtureEpochs(s, dir, budget = 100000L)),
+    // oracle: same token convention as quota_tokens; epoch arithmetic mirrors
+    // the engine expression-for-expression (IEEE-exact divisions)
+    QuerySpec("mixture_epochs", (s, dir) =>
+      Curation.mixtureEpochs(s, dir, budget = 100000L),
+      """WITH p AS (SELECT source,
+        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+        |  FROM documents GROUP BY source),
+        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_src FROM p),
+        |m AS (SELECT source, n_tokens,
+        |    CAST(100000 AS DOUBLE) / n_src AS target,
+        |    least((CAST(100000 AS DOUBLE) / n_src) / n_tokens,
+        |      CAST(4.0 AS DOUBLE)) AS epochs
+        |  FROM p, n)
+        |SELECT source, n_tokens,
+        |  floor(CAST((target) AS DOUBLE)*1000000 + 0.5)/1000000 AS target_tokens,
+        |  floor(CAST((epochs) AS DOUBLE)*1000000 + 0.5)/1000000 AS epochs,
+        |  epochs >= CAST(4.0 AS DOUBLE) AS capped,
+        |  floor(CAST((epochs * n_tokens) AS DOUBLE)*1000000 + 0.5)/1000000 AS effective_tokens,
+        |  floor(CAST((greatest(target - epochs * n_tokens, CAST(0.0 AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS deficit_tokens
+        |FROM m ORDER BY source""".stripMargin),
 
     // BM25-shaped retrieval (ratio idf — see relevanceTopK scaladoc)
-    "text_relevance" -> ((s, dir) =>
-      TextAnalysis.relevanceTopK(s, dir,
-        terms = Seq("spark", "table", "stream"), k = 20)),
+    { val (terms, k) = (Seq("spark", "table", "stream"), 20)
+      QuerySpec("text_relevance", (s, dir) =>
+        TextAnalysis.relevanceTopK(s, dir, terms, k),
+        TextAnalysis.relevanceOracleSql(terms, k)) },
 
     // asymmetric containment: doc-inside-doc dups Jaccard under-scores
-    "dedup_containment" -> ((s, dir) =>
+    QuerySpec("dedup_containment", (s, dir) =>
       TextDedup.containmentPairs(s, dir, threshold = 0.7)
-        .orderBy(col("d1"), col("d2"))),
+        .orderBy(col("d1"), col("d2")),
+      s"""WITH $shinglesCte,
+         |$bandsCte
+         |SELECT d1, d2,
+         |  greatest(
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(s1.shingles),
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(s2.shingles)) AS containment
+         |FROM cand JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
+         |WHERE greatest(
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(s1.shingles),
+         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
+         |      len(s2.shingles)) >= 0.7
+         |ORDER BY d1, d2""".stripMargin),
 
     // the full mapPartitions decode pipeline, oracle-checked on its
     // SQL-reproducible outputs (mean byte = exact rational, frame count);
     // the wrapping-multiply checksum stays unit-tested (ExtSpec) — DuckDB
     // BIGINT overflow traps instead of wrapping
-    "mm_features" -> ((s, dir) =>
+    // oracle: ASCII corpus (asserted in ExtSpec): bytes == characters, so the
+    // byte-mean is the mean of ord() over the chars — exact integer sum, one
+    // IEEE divide, identical in both engines
+    QuerySpec("mm_features", (s, dir) =>
       Multimodal.extractFeatures(s, dir).toDF()
         .select(col("media_id").as("doc_id"), col("kind"),
           col("n_bytes"), round6(col("mean_byte")).as("mean_byte"),
           col("frames").cast("long").as("frames"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH m AS (SELECT doc_id,
+        |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+        |    octet_length(encode(text)) AS n_bytes,
+        |    CAST(list_sum(list_transform(generate_series(1, length(text)),
+        |      i -> ord(substr(text, i, 1)))) AS DOUBLE) / length(text) AS mb
+        |  FROM documents)
+        |SELECT doc_id, kind, n_bytes, floor(CAST((mb) AS DOUBLE)*1000000 + 0.5)/1000000 AS mean_byte,
+        |  CAST(CASE kind WHEN 'video' THEN n_bytes // 64 + 1
+        |    WHEN 'audio' THEN n_bytes // 16 + 1 ELSE 1 END AS BIGINT) AS frames
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // Z-order layout: per-file min/max extent manifests under range vs
-    // Morton layouts — the file-skipping evidence (see Layout scaladoc)
-    "layout_zorder" -> ((s, dir) => Layout.zOrderManifest(s, dir)),
+    // Morton layouts — the file-skipping evidence (see Layout scaladoc);
+    // the Morton interleave is the identical bit expression in both
+    // engines (Layout.zValueSql generates the SQL spelling); file ids
+    // are top-of-key bit shifts, manifests plain min/max aggregates
+    QuerySpec("layout_zorder", (s, dir) => Layout.zOrderManifest(s, dir),
+      s"""WITH ev AS (SELECT user_id % 1024 AS u,
+         |    CAST(floor(epoch_ms(ts) / 1000.0 / 180.0) AS BIGINT) % 1024 AS tslot
+         |  FROM events),
+         |z AS (SELECT 'zorder' AS layout,
+         |    (${Layout.zValueSql("u", "tslot", 10)} >> 14) AS file_id, u, tslot
+         |  FROM ev),
+         |r AS (SELECT 'range' AS layout, (u >> 4) AS file_id, u, tslot FROM ev),
+         |a AS (SELECT * FROM z UNION ALL SELECT * FROM r)
+         |SELECT layout, file_id, count(*) AS n_rows,
+         |  min(u) AS min_u, max(u) AS max_u,
+         |  min(tslot) AS min_t, max(tslot) AS max_t,
+         |  max(tslot) - min(tslot) AS tslot_span
+         |FROM a GROUP BY layout, file_id ORDER BY layout, file_id""".stripMargin),
 
     // reproducible pretraining shuffle: hash-keyed shard + within-shard
-    // rank via the distributed block prefix sum (never one task/shard)
-    "layout_shuffle" -> ((s, dir) => Layout.shuffleLayout(s, dir)),
+    // rank via the distributed block prefix sum (never one task/shard);
+    // oracle: pos via cumulative count (RANGE frame = the engine's grid-cum
+    // semantics, identical under ties)
+    QuerySpec("layout_shuffle", (s, dir) => Layout.shuffleLayout(s, dir),
+      """WITH k AS (SELECT doc_id,
+        |    md5(concat('s42:', doc_id)) AS h FROM documents),
+        |p AS (SELECT doc_id,
+        |    CAST(concat('0x', substr(h, 1, 13)) AS BIGINT) AS hkey,
+        |    CAST(concat('0x', substr(h, 14, 2)) AS BIGINT) % 4 AS shard
+        |  FROM k),
+        |c AS (SELECT doc_id, shard,
+        |    count(*) OVER (PARTITION BY shard ORDER BY hkey) AS pos
+        |  FROM p)
+        |SELECT doc_id, CAST(shard AS BIGINT) AS shard,
+        |  CAST(pos AS BIGINT) AS pos
+        |FROM c ORDER BY shard, pos, doc_id""".stripMargin),
 
     // stratified source interleave: every prefix of the training order
     // stays within ±1 doc per source of exact proportionality
-    "layout_interleave" -> ((s, dir) => Layout.interleaveLayout(s, dir)),
+    // oracle: per-source hash-order ranks (the layout_shuffle window
+    // reference for the engine's block prefix sum), stride positions as the
+    // same fixed-order double ops, doc_id tie-break
+    QuerySpec("layout_interleave", (s, dir) => Layout.interleaveLayout(s, dir),
+      """WITH k AS (SELECT doc_id, source,
+        |    CAST(concat('0x',
+        |      substr(md5(concat('s42:', doc_id)), 1, 13)) AS BIGINT)
+        |      AS hkey
+        |  FROM documents),
+        |r AS (SELECT doc_id, source, hkey,
+        |    CAST(count(*) OVER (PARTITION BY source ORDER BY hkey)
+        |      AS BIGINT) AS src_rank
+        |  FROM k),
+        |s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_src
+        |  FROM documents GROUP BY source),
+        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents)
+        |SELECT doc_id, source, src_rank,
+        |  floor(CAST((CAST(src_rank * 2 - 1 AS DOUBLE) *
+        |    (CAST(n_total AS DOUBLE) / CAST(n_src AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000 AS ipos
+        |FROM r JOIN s USING (source), t
+        |ORDER BY ipos, doc_id""".stripMargin),
 
     // annealing order: quality tertiles phase the shuffle so each
     // shard reads its highest-quality docs LAST (mid-training recipe)
-    "layout_curriculum" -> ((s, dir) => Layout.curriculumLayout(s, dir)),
+    // oracle: quality-banded shuffle: the text_quality score expression,
+    // exact cumulative-count bands via cross-multiplied integer comparisons,
+    // then the layout_shuffle hash machinery over (phase·2^53 + hkey)
+    QuerySpec("layout_curriculum", (s, dir) => Layout.curriculumLayout(s, dir),
+      """WITH en AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d),
+        |q AS (SELECT doc_id,
+        |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
+        |        / length(text)) * 0.5 +
+        |      least(CAST(len(list_filter(string_split(lower(text), ' '),
+        |        x -> list_contains(d, x))) AS DOUBLE)
+        |        / len(string_split(lower(text), ' ')) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS qs
+        |  FROM documents, en),
+        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM q),
+        |c AS (SELECT doc_id, count(*) OVER (ORDER BY qs) AS cnt FROM q),
+        |p AS (SELECT doc_id,
+        |    CAST((cnt - 1) * 3 >= n_total AS BIGINT) +
+        |      CAST((cnt - 1) * 3 >= 2 * n_total AS BIGINT) AS phase,
+        |    CAST(concat('0x', substr(md5(concat('s42:', doc_id)), 1, 13)) AS BIGINT) AS hkey,
+        |    CAST(concat('0x', substr(md5(concat('s42:', doc_id)), 14, 2)) AS BIGINT) % 4 AS shard
+        |  FROM c, n),
+        |s AS (SELECT doc_id, phase, shard,
+        |    count(*) OVER (PARTITION BY shard
+        |      ORDER BY phase * 9007199254740992 + hkey) AS pos
+        |  FROM p)
+        |SELECT doc_id, phase, CAST(shard AS BIGINT) AS shard,
+        |  CAST(pos AS BIGINT) AS pos
+        |FROM s ORDER BY shard, pos, doc_id""".stripMargin),
 
     // cross-document repeated-span removal (C4 §2.2 / RefinedWeb)
-    "clean_boilerplate" -> ((s, dir) => Curation.cleanBoilerplate(s, dir)),
+    // oracle: non-overlapping 3-token spans; boilerplate = span present in ≥
+    // ceil(1% of docs) distinct documents; docs rebuilt from surviving spans
+    // in position order (string_agg ORDER BY pos ≅ the engine's
+    // array_sort(collect_list(struct(pos, span))))
+    QuerySpec("clean_boilerplate", (s, dir) => Curation.cleanBoilerplate(s, dir),
+      """WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |sp AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+2], ' ') AS span
+        |  FROM docs, UNNEST(generate_series(1, len(w), 3)) AS t(i)),
+        |nd AS (SELECT count(*) AS n_docs FROM docs),
+        |boiler AS (SELECT span FROM (
+        |    SELECT span, count(DISTINCT doc_id) AS df FROM sp GROUP BY span),
+        |    nd WHERE df >= ceil(n_docs * 0.01)),
+        |kept AS (SELECT * FROM sp WHERE span NOT IN (SELECT span FROM boiler)),
+        |rebuilt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans_kept,
+        |    md5(string_agg(span, ' ' ORDER BY pos)) AS cleaned_md5
+        |  FROM kept GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  CAST(len(generate_series(1, len(d.w), 3)) AS BIGINT) AS n_spans,
+        |  coalesce(r.n_spans_kept, 0) AS n_spans_kept,
+        |  CAST(len(generate_series(1, len(d.w), 3)) AS BIGINT)
+        |    - coalesce(r.n_spans_kept, 0) AS n_spans_dropped,
+        |  coalesce(r.cleaned_md5, md5('')) AS cleaned_md5
+        |FROM docs d LEFT JOIN rebuilt r USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin),
 
     // inverted-index build: token → df + capped posting list
-    "index_postings" -> ((s, dir) => TextAnalysis.invertedIndex(s, dir)),
+    QuerySpec("index_postings", (s, dir) => TextAnalysis.invertedIndex(s, dir),
+      """WITH td AS (SELECT DISTINCT token, doc_id FROM
+        |    (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |    UNNEST(w) AS t(token)),
+        |r AS (SELECT token, doc_id,
+        |    row_number() OVER (PARTITION BY token ORDER BY doc_id) AS rk
+        |  FROM td)
+        |SELECT token, CAST(count(*) AS BIGINT) AS df,
+        |  string_agg(CASE WHEN rk <= 8 THEN CAST(doc_id AS VARCHAR) END,
+        |    ',' ORDER BY doc_id) AS postings
+        |FROM r GROUP BY token
+        |ORDER BY df DESC, token ASC LIMIT 50""".stripMargin),
 
     // salted equi-join: hot-key-proof shuffle spread, result identical
     // to the plain join (the oracle's check)
-    "join_skew_salted" -> ((s, dir) =>
-      graft.ops.SkewJoin.saltedJoin(s, dir)),
+    QuerySpec("join_skew_salted", (s, dir) =>
+      graft.ops.SkewJoin.saltedJoin(s, dir),
+      """SELECT o.o_orderpriority,
+        |  count(*) AS n_items,
+        |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(27,4))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(27,4))) AS DOUBLE)
+        |    AS sum_price
+        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin),
 
     // bloom runtime-filter prune before the join shuffle; exact join
     // clears false positives so the oracle is the plain join
-    "join_bloom_prune" -> ((s, dir) =>
-      graft.ops.SkewJoin.bloomPrunedJoin(s, dir)),
+    QuerySpec("join_bloom_prune", (s, dir) =>
+      graft.ops.SkewJoin.bloomPrunedJoin(s, dir),
+      """SELECT l.l_returnflag, count(*) AS n_items,
+        |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(27,4))) AS DOUBLE) AS sum_qty
+        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |WHERE o.o_orderpriority = '1-URGENT'
+        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin),
 
     // sub-document exact dedup: 5-token segments, first occurrence wins
     // corpus-wide, docs rebuilt from surviving segments (CCNet ¶-dedup)
-    "dedup_segments" -> ((s, dir) =>
-      TextDedup.segmentDedup(s, dir, k = 5).orderBy(col("doc_id"))),
+    // oracle: first-occurrence = rank 1 over (doc_id, seg_no) within the
+    // segment hash — identical keeper to the engine's min(struct) aggregation
+    QuerySpec("dedup_segments", (s, dir) =>
+      TextDedup.segmentDedup(s, dir, k = 5).orderBy(col("doc_id")),
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |segs AS (SELECT doc_id, s AS seg_no,
+        |    array_to_string(w[1 + 5*s : 5 + 5*s], ' ') AS seg
+        |  FROM d, UNNEST(generate_series(0,
+        |    CAST((len(w) + 4) // 5 AS INT) - 1)) AS g(s)),
+        |rk AS (SELECT doc_id, seg_no, seg,
+        |    row_number() OVER (PARTITION BY md5(seg)
+        |      ORDER BY doc_id, seg_no) AS rk
+        |  FROM segs)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_segs,
+        |  CAST(sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        |  CAST(sum(CASE WHEN rk = 1 THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
+        |  md5(coalesce(string_agg(CASE WHEN rk = 1 THEN seg END,
+        |    ' ' ORDER BY seg_no), '')) AS dedup_md5
+        |FROM rk GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // exact substring-level dedup: OVERLAPPING 5-gram runs repeated
     // across >= 2 docs removed from every occurrence, docs reassembled
     // in order (Lee et al. 2021 exact-substring family)
-    "dedup_substring" -> ((s, dir) =>
+    QuerySpec("dedup_substring", (s, dir) =>
       TextDedup.substringDedup(s, dir, n = 5, minDocs = 2)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |g0 AS (SELECT doc_id, w,
+        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
+        |  FROM t),
+        |g AS (SELECT doc_id, p,
+        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
+        |  FROM g0),
+        |rep AS (SELECT gh FROM g GROUP BY gh
+        |  HAVING count(DISTINCT doc_id) >= 2),
+        |cov AS (SELECT DISTINCT doc_id, pos FROM (
+        |  SELECT g.doc_id, unnest(generate_series(g.p, g.p + 4)) AS pos
+        |  FROM g JOIN rep USING (gh))),
+        |tok AS (SELECT doc_id, unnest(w) AS tok,
+        |    generate_subscripts(w, 1) AS pos
+        |  FROM t)
+        |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |  CAST(count(cov.pos) AS BIGINT) AS n_removed,
+        |  md5(coalesce(string_agg(CASE WHEN cov.pos IS NULL THEN tok.tok END,
+        |    ' ' ORDER BY tok.pos), '')) AS clean_md5
+        |FROM tok LEFT JOIN cov
+        |  ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
+        |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin),
 
     // the observability face of substring dedup: per-language share of
     // token mass inside cross-doc repeated runs (crawl-health metric)
-    "corpus_dup_profile" -> ((s, dir) =>
-      TextDedup.dupProfile(s, dir, n = 5, minDocs = 2)),
+    QuerySpec("corpus_dup_profile", (s, dir) =>
+      TextDedup.dupProfile(s, dir, n = 5, minDocs = 2),
+      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w
+        |  FROM documents),
+        |g0 AS (SELECT doc_id, w,
+        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
+        |  FROM t),
+        |g AS (SELECT doc_id, p,
+        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
+        |  FROM g0),
+        |rep AS (SELECT gh FROM g GROUP BY gh
+        |  HAVING count(DISTINCT doc_id) >= 2),
+        |cov AS (SELECT doc_id, count(*) AS covered FROM (
+        |  SELECT DISTINCT doc_id, pos FROM (
+        |    SELECT g.doc_id, unnest(generate_series(g.p, g.p + 4)) AS pos
+        |    FROM g JOIN rep USING (gh))) GROUP BY doc_id)
+        |SELECT t.lang, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(len(t.w)) AS BIGINT) AS n_tokens,
+        |  CAST(sum(coalesce(cov.covered, 0)) AS BIGINT) AS dup_tokens,
+        |  floor(CAST((CAST(sum(coalesce(cov.covered, 0)) AS DOUBLE)
+        |    / sum(len(t.w))) AS DOUBLE)*1000000 + 0.5)/1000000 AS dup_ratio
+        |FROM t LEFT JOIN cov USING (doc_id)
+        |GROUP BY t.lang ORDER BY t.lang""".stripMargin),
 
     // winnowing fingerprints (Schleimer et al. 2003, the MOSS selection
     // rule): w-window minima over k-gram hashes — any shared run of
     // >= w+k-1 tokens forces a shared fingerprint; partial-overlap pairs
-    "dedup_winnow" -> ((s, dir) =>
-      TextDedup.winnowPairs(s, dir, k = 4, w = 4, minShared = 2)),
+    // oracle: window minima replayed with the same frame (CURRENT ROW .. w-1
+    // FOLLOWING, truncating at the partition end for short docs); the bucket
+    // cap is the usual rank-on-sorted-ids <= cap
+    QuerySpec("dedup_winnow", (s, dir) =>
+      TextDedup.winnowPairs(s, dir, k = 4, w = 4, minShared = 2),
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+         |g0 AS (SELECT doc_id, w,
+         |    unnest(generate_series(1, greatest(len(w) - 3, 0))) AS p
+         |  FROM t),
+         |g AS (SELECT doc_id, p,
+         |    md5(array_to_string(w[p : p + 3], ' ')) AS gh
+         |  FROM g0),
+         |wins AS (SELECT doc_id, p,
+         |    min(gh) OVER (PARTITION BY doc_id ORDER BY p
+         |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
+         |    count(*) OVER (PARTITION BY doc_id) AS ng
+         |  FROM g),
+         |fps AS (SELECT DISTINCT doc_id, fp FROM wins
+         |  WHERE p <= greatest(ng - 3, 1)),
+         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nf
+         |  FROM fps GROUP BY doc_id),
+         |capped AS (SELECT doc_id, fp FROM (SELECT doc_id, fp,
+         |    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
+         |  FROM fps) t2 WHERE rk <= $cap),
+         |shared AS (SELECT a.doc_id AS d1, b.doc_id AS d2,
+         |    CAST(count(*) AS BIGINT) AS n_shared
+         |  FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
+         |  GROUP BY a.doc_id, b.doc_id
+         |  HAVING count(*) >= 2)
+         |SELECT d1, d2, n_shared,
+         |  floor(CAST((CAST(n_shared AS DOUBLE) /
+         |    CAST(least(c1.nf, c2.nf) AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000 AS overlap
+         |FROM shared JOIN cnt c1 ON shared.d1 = c1.doc_id
+         |JOIN cnt c2 ON shared.d2 = c2.doc_id
+         |ORDER BY d1, d2""".stripMargin),
 
     // content-defined chunking (LBFS/FastCDC): hash-class boundaries
     // move WITH content, so insertions reshape one chunk, not the grid;
     // per-language storage-dedup rollup (distinct-chunk ratio)
-    "chunk_cdc" -> ((s, dir) => TextDedup.cdcChunkStats(s, dir, k = 4)),
+    // oracle: the boundary rule and the running-sum chunk assignment replayed
+    // with the same window frames; exact BIGINT counts, two final divisions
+    QuerySpec("chunk_cdc", (s, dir) => TextDedup.cdcChunkStats(s, dir, k = 4),
+      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w
+        |  FROM documents),
+        |tok AS (SELECT doc_id, lang, unnest(w) AS tok,
+        |    generate_subscripts(w, 1) AS pos
+        |  FROM t),
+        |g0 AS (SELECT doc_id, w,
+        |    unnest(generate_series(1, greatest(len(w) - 3, 0))) AS p
+        |  FROM t),
+        |g AS (SELECT doc_id, p + 3 AS pos, 1 AS is_end FROM g0
+        |  WHERE substr(md5(array_to_string(w[p : p + 3], ' ')), 1, 1) = '0'),
+        |ch AS (SELECT tok.doc_id, tok.lang, tok.pos, tok.tok,
+        |    coalesce(sum(g.is_end) OVER (PARTITION BY tok.doc_id
+        |      ORDER BY tok.pos
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS chunk_id
+        |  FROM tok LEFT JOIN g ON tok.doc_id = g.doc_id AND tok.pos = g.pos),
+        |chunks AS (SELECT doc_id, lang, chunk_id,
+        |    CAST(count(*) AS BIGINT) AS n_tok,
+        |    md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_hash
+        |  FROM ch GROUP BY doc_id, lang, chunk_id)
+        |SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+        |  CAST(count(*) AS BIGINT) AS n_chunks,
+        |  CAST(count(DISTINCT chunk_hash) AS BIGINT) AS n_distinct_chunks,
+        |  floor(CAST((CAST(count(DISTINCT chunk_hash) AS DOUBLE) /
+        |    CAST(count(*) AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000 AS distinct_ratio,
+        |  floor(CAST((CAST(sum(n_tok) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS avg_chunk_tokens
+        |FROM chunks GROUP BY lang ORDER BY lang""".stripMargin),
 
     // tokenizer-training statistics: BPE's first-merge pair counts
     // (in-word adjacent symbol pairs + word-final </w> pairs), top-40
-    "tokenizer_pair_counts" -> ((s, dir) =>
-      TextAnalysis.bpePairCounts(s, dir, k = 40)),
+    QuerySpec("tokenizer_pair_counts", (s, dir) =>
+      TextAnalysis.bpePairCounts(s, dir, k = 40),
+      """WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS w
+        |  FROM documents),
+        |ww AS (SELECT w FROM w0 WHERE len(w) > 0),
+        |inner_pairs AS (SELECT unnest(list_transform(
+        |    generate_series(1, greatest(len(w) - 1, 0)),
+        |    i -> substring(w, i, 2))) AS pair
+        |  FROM ww WHERE len(w) >= 2),
+        |term_pairs AS (SELECT substring(w, -1, 1) || '</w>' AS pair FROM ww),
+        |allp AS (SELECT pair FROM inner_pairs
+        |  UNION ALL SELECT pair FROM term_pairs)
+        |SELECT pair, CAST(count(*) AS BIGINT) AS cnt
+        |FROM allp GROUP BY pair
+        |ORDER BY cnt DESC, pair LIMIT 40""".stripMargin),
 
     // the FULL BPE trainer (VERDICT r9 missing #3): 10 iterations of
     // count-pairs -> argmax -> merge over the distinct-word frequency
     // dict; the corpus is touched once, each iteration is vocab-sized
     // with a single-row argmax collect (the k-means driver-loop pattern)
-    "tokenizer_bpe_merges" -> ((s, dir) =>
-      TextAnalysis.bpeMerges(s, dir, nMerges = 10)),
+    { val nMerges = 10
+      QuerySpec("tokenizer_bpe_merges", (s, dir) =>
+        TextAnalysis.bpeMerges(s, dir, nMerges), bpeMergesOracle(nMerges)) },
 
     // the APPLY half: per-doc word/BPE-token/char counts + compression
     // ratio after the 10 trained merges — encoding joins the exploded
     // corpus words against the trained dict's subword counts, never
     // re-merging per doc
-    "tokenizer_bpe_encode" -> ((s, dir) =>
-      TextAnalysis.bpeEncode(s, dir, nMerges = 10)),
+    { val nMerges = 10
+      QuerySpec("tokenizer_bpe_encode", (s, dir) =>
+        TextAnalysis.bpeEncode(s, dir, nMerges), bpeEncodeOracle(nMerges)) },
 
     // the induced vocabulary: every subword unit with corpus occurrence
     // mass and distinct-word coverage — the vocab-size-vs-coverage table
-    "tokenizer_bpe_vocab" -> ((s, dir) =>
-      TextAnalysis.bpeVocab(s, dir, nMerges = 10)),
+    { val nMerges = 10
+      QuerySpec("tokenizer_bpe_vocab", (s, dir) =>
+        TextAnalysis.bpeVocab(s, dir, nMerges), bpeVocabOracle(nMerges)) },
 
     // tokenizer-efficiency curve at 0/5/10 merges: chars-per-token and
     // tokens-per-word — the vocab-size decision artifact
-    "tokenizer_merge_curve" -> ((s, dir) =>
-      TextAnalysis.bpeMergeCurve(s, dir)),
+    // oracle: all three curve points replay off ONE training chain: d0/d5/d10
+    // are intermediate dicts of the same 10-merge CTE cascade
+    QuerySpec("tokenizer_merge_curve", (s, dir) =>
+      TextAnalysis.bpeMergeCurve(s, dir),
+      {
+        val points = Seq(0, 5, 10).map { m =>
+          s"""r$m AS (SELECT CAST($m AS BIGINT) AS n_merges,
+             |    CAST(count(*) AS BIGINT) AS n_words,
+             |    CAST(sum(e.n_sub) AS BIGINT) AS n_bpe_tokens,
+             |    CAST(sum(length(dw.w)) AS BIGINT) AS n_chars
+             |  FROM dw JOIN (SELECT w, CAST(len(syms) AS BIGINT) AS n_sub
+             |    FROM d$m) e ON dw.w = e.w)""".stripMargin
+        }.mkString(",\n")
+        s"""${bpeChainCtes(10)},
+           |dw AS (SELECT doc_id, w FROM (SELECT doc_id,
+           |    unnest(string_split(text, ' ')) AS w FROM documents)
+           |  WHERE len(w) > 0),
+           |$points
+           |SELECT n_merges, n_words, n_bpe_tokens, n_chars,
+           |  floor(CAST((CAST(n_chars AS DOUBLE) / n_bpe_tokens) AS DOUBLE)*1000000 + 0.5)/1000000
+           |    AS chars_per_token,
+           |  floor(CAST((CAST(n_bpe_tokens AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000
+           |    AS tokens_per_word
+           |FROM (SELECT * FROM r0 UNION ALL SELECT * FROM r5
+           |  UNION ALL SELECT * FROM r10)
+           |ORDER BY n_merges""".stripMargin
+      }),
 
     // between-crawls snapshot diff: per-language added/removed/changed/
     // unchanged counts + token-mass delta, one full-outer join on the
     // doc key comparing content hashes (texts never cross the shuffle)
-    "snapshot_diff" -> ((s, dir) => Curation.snapshotDiff(s, dir)),
+    QuerySpec("snapshot_diff", (s, dir) => Curation.snapshotDiff(s, dir),
+      """WITH v1 AS (SELECT doc_id, lang AS lang1, md5(text) AS h1,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok1
+        |  FROM documents WHERE doc_id % 7 <> 0),
+        |v2 AS (SELECT doc_id, lang AS lang2,
+        |    md5(CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END) AS h2,
+        |    CAST(len(string_split(
+        |      CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END,
+        |      ' ')) AS BIGINT) AS tok2
+        |  FROM documents WHERE doc_id % 5 <> 0),
+        |d AS (SELECT coalesce(lang1, lang2) AS lang,
+        |    CASE WHEN h1 IS NULL THEN 'added'
+        |      WHEN h2 IS NULL THEN 'removed'
+        |      WHEN h1 = h2 THEN 'unchanged'
+        |      ELSE 'changed' END AS status,
+        |    coalesce(tok2, 0) - coalesce(tok1, 0) AS tok_delta
+        |  FROM v1 FULL OUTER JOIN v2 USING (doc_id))
+        |SELECT lang, status, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(tok_delta) AS BIGINT) AS tok_delta
+        |FROM d GROUP BY lang, status ORDER BY lang, status""".stripMargin),
 
     // the Lee et al. minimum-run-length knob: only covered runs of >= 8
     // tokens are removed — short incidental repeats (common phrases)
     // survive, long verbatim boilerplate still vanishes wholesale
-    "dedup_substring_runs" -> ((s, dir) =>
+    QuerySpec("dedup_substring_runs", (s, dir) =>
       TextDedup.substringDedupRuns(s, dir, n = 5, minDocs = 2, minRun = 8)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |g0 AS (SELECT doc_id, w,
+        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
+        |  FROM t),
+        |g AS (SELECT doc_id, p,
+        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
+        |  FROM g0),
+        |rep AS (SELECT gh FROM g GROUP BY gh
+        |  HAVING count(DISTINCT doc_id) >= 2),
+        |cov AS (SELECT DISTINCT doc_id, pos FROM (
+        |  SELECT g.doc_id, unnest(generate_series(g.p, g.p + 4)) AS pos
+        |  FROM g JOIN rep USING (gh))),
+        |runs AS (SELECT doc_id, pos,
+        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+        |  FROM cov),
+        |kept AS (SELECT doc_id, pos FROM (
+        |  SELECT doc_id, pos,
+        |      count(*) OVER (PARTITION BY doc_id, grp) AS run_len
+        |    FROM runs) WHERE run_len >= 8),
+        |tok AS (SELECT doc_id, unnest(w) AS tok,
+        |    generate_subscripts(w, 1) AS pos
+        |  FROM t)
+        |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |  CAST(count(kept.pos) AS BIGINT) AS n_removed,
+        |  md5(coalesce(string_agg(CASE WHEN kept.pos IS NULL THEN tok.tok END,
+        |    ' ' ORDER BY tok.pos), '')) AS clean_md5
+        |FROM tok LEFT JOIN kept
+        |  ON tok.doc_id = kept.doc_id AND tok.pos = kept.pos
+        |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin),
 
     // the daily-crawl form: the 20% batch admitted against the STANDING
     // gram-frequency index of the 80% corpus — per-batch cost scales
     // with the increment, corpus side probed in place (bucketed)
-    "dedup_substring_admit" -> ((s, dir) =>
+    // the oracle recomputes what the engine answers from the standing
+    // index: gram totals = corpus distinct docs + batch distinct docs
+    QuerySpec("dedup_substring_admit", (s, dir) =>
       TextDedup.admitSubstringIndexed(s, dir,
           TextDedup.documents(s, dir).filter(col("doc_id") % 10 >= 8),
           n = 5, minDocs = 2,
@@ -858,52 +3291,288 @@ object ExtEntry {
           pruneHint = Some(false))
         .select(col("doc_id"), col("n_tokens"), col("n_removed"),
           md5(col("clean_text").cast("binary")).as("clean_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH b AS (SELECT doc_id, string_split(text, ' ') AS w
+        |  FROM documents WHERE doc_id % 10 >= 8),
+        |c AS (SELECT doc_id, string_split(text, ' ') AS w
+        |  FROM documents WHERE doc_id % 10 < 8),
+        |gb0 AS (SELECT doc_id, w,
+        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
+        |  FROM b),
+        |gb AS (SELECT doc_id, p,
+        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
+        |  FROM gb0),
+        |gc0 AS (SELECT doc_id, w,
+        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
+        |  FROM c),
+        |gc AS (SELECT doc_id,
+        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
+        |  FROM gc0),
+        |bc AS (SELECT gh, count(DISTINCT doc_id) AS b_docs
+        |  FROM gb GROUP BY gh),
+        |cc AS (SELECT gh, count(DISTINCT doc_id) AS n_docs
+        |  FROM gc GROUP BY gh),
+        |tot AS (SELECT bc.gh FROM bc LEFT JOIN cc USING (gh)
+        |  WHERE bc.b_docs + coalesce(cc.n_docs, 0) >= 2),
+        |cov AS (SELECT DISTINCT doc_id, pos FROM (
+        |  SELECT gb.doc_id, unnest(generate_series(gb.p, gb.p + 4)) AS pos
+        |  FROM gb JOIN tot USING (gh))),
+        |tok AS (SELECT doc_id, unnest(w) AS tok,
+        |    generate_subscripts(w, 1) AS pos
+        |  FROM b)
+        |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |  CAST(count(cov.pos) AS BIGINT) AS n_removed,
+        |  md5(coalesce(string_agg(CASE WHEN cov.pos IS NULL THEN tok.tok END,
+        |    ' ' ORDER BY tok.pos), '')) AS clean_md5
+        |FROM tok LEFT JOIN cov
+        |  ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
+        |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin),
 
     // PII scrub (email/IP/card/phone sentinels) over the doc_id-augmented
     // corpus; redactPii itself is generic over any text column
-    "pii_redact" -> ((s, dir) => Curation.piiRedact(s, dir)),
+    // oracle: same augmentation, same four patterns applied in the same
+    // order, counts taken on the string each pattern actually sees
+    QuerySpec("pii_redact", (s, dir) => Curation.piiRedact(s, dir),
+      """WITH aug AS (SELECT doc_id,
+        |    text || ' contact user' || CAST(doc_id AS VARCHAR)
+        |    || '@example.com ip 10.' || CAST(doc_id % 256 AS VARCHAR)
+        |    || '.' || CAST((doc_id * 7) % 256 AS VARCHAR)
+        |    || '.' || CAST(doc_id % 250 + 1 AS VARCHAR)
+        |    || ' card ' || lpad(CAST((doc_id * 31) % 10000 AS VARCHAR), 16, '4')
+        |    || ' tel +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+        |      AS t0
+        |  FROM documents),
+        |s1 AS (SELECT doc_id, t0, regexp_replace(t0,
+        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g') AS t1
+        |  FROM aug),
+        |s2 AS (SELECT *, regexp_replace(t1,
+        |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g')
+        |    AS t2 FROM s1),
+        |s3 AS (SELECT *, regexp_replace(t2,
+        |    '\b[0-9]{13,16}\b', '<CARD>', 'g') AS t3 FROM s2),
+        |s4 AS (SELECT *, regexp_replace(t3,
+        |    '\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS t4 FROM s3)
+        |SELECT doc_id, md5(t4) AS redacted_md5,
+        |  CAST(len(regexp_extract_all(t0,
+        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT) AS n_email,
+        |  CAST(len(regexp_extract_all(t1,
+        |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS BIGINT)
+        |    AS n_ip,
+        |  CAST(len(regexp_extract_all(t2, '\b[0-9]{13,16}\b')) AS BIGINT)
+        |    AS n_card,
+        |  CAST(len(regexp_extract_all(t3,
+        |    '\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phone
+        |FROM s4 ORDER BY doc_id""".stripMargin),
 
     // the complete Gopher §A1.1 document-rule family, one flag per rule
     // + the AND gate — flags decided by exact integer cross-
     // multiplication, one codegen'd projection over the corpus scan
-    "text_gopher_rules" -> ((s, dir) => TextAnalysis.gopherRules(s, dir)),
+    QuerySpec("text_gopher_rules", (s, dir) => TextAnalysis.gopherRules(s, dir),
+      s"""WITH ${gopherChainCtes("")}
+        |SELECT doc_id, lang, n_words,
+        |  floor(CAST((CAST(tot_chars AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000 AS mean_word_len,
+        |  floor(CAST((CAST(n_symbols AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000 AS symbol_ratio,
+        |  floor(CAST((CAST(n_alpha AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000 AS alpha_frac,
+        |  stop_hits, r_words, r_meanlen, r_symbol, r_alpha, r_bullet,
+        |  r_ellipsis, r_stop, keep
+        |FROM gk ORDER BY doc_id""".stripMargin),
 
     // the Gopher repetition rules by CHARACTER MASS (dup spans / top
     // 2-gram char coverage / duplicated 5-gram char coverage,
     // integer-exact thresholds) — one codegen'd kernel pass per
     // document, zero shuffles before the output sort
-    "text_repetition_mass" -> ((s, dir) => TextAnalysis.repetitionMass(s, dir)),
+    // oracle: spans are non-overlapping 8-token windows; top/dup gram views
+    // are overlapping 2-/5-grams; ties on the top gram break to the
+    // lexicographically smallest (ORDER BY c DESC, g — the kernel's tie
+    // rule); flags are exact-integer threshold comparisons
+    QuerySpec("text_repetition_mass", (s, dir) => TextAnalysis.repetitionMass(s, dir),
+      """WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w,
+        |    CAST(len(text) AS BIGINT) AS n_chars FROM documents),
+        |sp AS (SELECT doc_id, array_to_string(w[(s-1)*8+1:(s-1)*8+8], ' ') AS g
+        |  FROM d, UNNEST(generate_series(1,
+        |    greatest(CAST(ceil(len(w) / 8.0) AS BIGINT), 1))) AS t(s)),
+        |spc AS (SELECT doc_id, g, count(*) AS c FROM sp GROUP BY doc_id, g),
+        |spm AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_spans,
+        |    CAST(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT)
+        |      AS n_dup_spans
+        |  FROM spc GROUP BY doc_id),
+        |g2 AS (SELECT doc_id, array_to_string(w[i:i+1], ' ') AS g
+        |  FROM d, UNNEST(generate_series(1, greatest(len(w) - 1, 1))) AS t(i)),
+        |g2c AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY doc_id, g),
+        |top2 AS (SELECT doc_id, g AS top_gram, CAST(c AS BIGINT) AS top_cnt,
+        |    CAST(len(g) AS BIGINT) AS top_chars
+        |  FROM (SELECT doc_id, g, c, row_number() OVER (PARTITION BY doc_id
+        |      ORDER BY c DESC, g) AS rk FROM g2c) t WHERE rk = 1),
+        |g5 AS (SELECT doc_id, array_to_string(w[i:i+4], ' ') AS g
+        |  FROM d, UNNEST(generate_series(1, greatest(len(w) - 4, 1))) AS t(i)),
+        |g5c AS (SELECT doc_id, g, count(*) AS c FROM g5 GROUP BY doc_id, g),
+        |d5 AS (SELECT doc_id,
+        |    CAST(sum(CASE WHEN c >= 2 THEN c * len(g) ELSE 0 END) AS BIGINT)
+        |      AS dup_chars
+        |  FROM g5c GROUP BY doc_id)
+        |SELECT d.doc_id, n_chars, n_spans, n_dup_spans,
+        |  floor(CAST((CAST(n_dup_spans AS DOUBLE) / n_spans) AS DOUBLE)*1000000 + 0.5)/1000000 AS dup_span_frac,
+        |  top_gram, top_cnt,
+        |  floor(CAST((CAST(top_cnt AS DOUBLE) * top_chars / n_chars) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS top_gram_char_frac,
+        |  floor(CAST((CAST(dup_chars AS DOUBLE) / n_chars) AS DOUBLE)*1000000 + 0.5)/1000000
+        |    AS dup_gram_char_frac,
+        |  (10 * n_dup_spans <= 3 * n_spans) AS r_dupspan,
+        |  (5 * top_cnt * top_chars <= n_chars) AS r_topgram,
+        |  (20 * dup_chars <= 3 * n_chars) AS r_dupgram,
+        |  ((10 * n_dup_spans <= 3 * n_spans) AND
+        |   (5 * top_cnt * top_chars <= n_chars) AND
+        |   (20 * dup_chars <= 3 * n_chars)) AS keep
+        |FROM d JOIN spm USING (doc_id) JOIN top2 USING (doc_id)
+        |  JOIN d5 USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
 
     // corpus-trained unigram-LM likelihood summary per document (the
     // CCNet LM-filter shape; arithmetic-mean deviation documented)
-    "text_unigram_lm" -> ((s, dir) => TextAnalysis.unigramLm(s, dir)),
+    // oracle: exact BIGINT sums; the only doubles are the two final
+    // divisions, the same IEEE op sequence the engine runs
+    QuerySpec("text_unigram_lm", (s, dir) => TextAnalysis.unigramLm(s, dir),
+      """WITH tok AS (SELECT doc_id, t AS token FROM
+        |    (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |    UNNEST(w) AS u(t)),
+        |model AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt
+        |  FROM tok GROUP BY token),
+        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM model),
+        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |    CAST(sum(cnt) AS BIGINT) AS sum_cnt,
+        |    CAST(min(cnt) AS BIGINT) AS min_cnt,
+        |    CAST(sum(CASE WHEN cnt * 1000 < total THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_rare,
+        |    CAST(max(total) AS BIGINT) AS total
+        |  FROM tok JOIN model USING (token), tot
+        |  GROUP BY doc_id)
+        |SELECT doc_id, n_tokens, sum_cnt, min_cnt, n_rare,
+        |  floor(CAST((CAST(sum_cnt AS DOUBLE) /
+        |    (CAST(n_tokens AS DOUBLE) * CAST(total AS DOUBLE))) AS DOUBLE)*1000000000 + 0.5)/1000000000
+        |    AS mean_p,
+        |  floor(CAST((CAST(min_cnt AS DOUBLE) / CAST(total AS DOUBLE)) AS DOUBLE)*1000000000 + 0.5)/1000000000 AS min_p
+        |FROM agg ORDER BY doc_id""".stripMargin),
 
     // CCNet's head/middle/tail split: per-language LM score tertiles
     // (keep head+middle, drop tail — the selection face of the LM filter)
-    "text_lm_buckets" -> ((s, dir) => TextAnalysis.lmBuckets(s, dir)),
+    // oracle: per-language models, exact BIGINT sums, ONE division before the
+    // rank — rank order is bit-identical, ties break by doc_id; the tertile
+    // compare is integer arithmetic
+    QuerySpec("text_lm_buckets", (s, dir) => TextAnalysis.lmBuckets(s, dir),
+      s"""WITH ${lmChainCtes("")}
+        |SELECT doc_id, lang, n_tokens, floor(CAST((score) AS DOUBLE)*1000000000 + 0.5)/1000000000 AS mean_p, lm_rank,
+        |  CASE WHEN lm_rank * 3 <= n_docs THEN 'head'
+        |       WHEN lm_rank * 3 <= 2 * n_docs THEN 'middle'
+        |       ELSE 'tail' END AS bucket
+        |FROM rk ORDER BY doc_id""".stripMargin),
 
     // DSIR hashed-bigram importance weights, target = the en slice
-    "dsir_weights" -> ((s, dir) => Curation.dsirWeights(s, dir)),
+    // oracle: hashed-bigram buckets via the first two md5 hex chars (the
+    // strpos arithmetic equals the engine's conv(hex, 16, 10)); target_like
+    // compares the ROUNDED weight, as the engine does
+    QuerySpec("dsir_weights", (s, dir) => Curation.dsirWeights(s, dir),
+      """WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w
+        |  FROM documents),
+        |grams AS (SELECT doc_id, lang, g,
+        |    (strpos('0123456789abcdef', substr(md5(g), 1, 1)) - 1) * 16 +
+        |    (strpos('0123456789abcdef', substr(md5(g), 2, 1)) - 1) AS b
+        |  FROM d, UNNEST(list_transform(
+        |    generate_series(1, greatest(len(w) - 1, 1)),
+        |    i -> array_to_string(w[i:i+1], ' '))) AS t(g)),
+        |model AS (SELECT b, CAST(count(*) AS BIGINT) AS s_cnt,
+        |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS t_cnt
+        |  FROM grams GROUP BY b),
+        |tot AS (SELECT CAST(sum(s_cnt) AS BIGINT) AS s_total,
+        |    CAST(sum(t_cnt) AS BIGINT) AS t_total FROM model),
+        |agg AS (SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_grams,
+        |    CAST(sum(t_cnt + 1) AS BIGINT) AS num,
+        |    CAST(sum(s_cnt + 1) AS BIGINT) AS den
+        |  FROM grams JOIN model USING (b) GROUP BY doc_id, lang),
+        |w2 AS (SELECT doc_id, lang, n_grams,
+        |    floor(CAST(((CAST(num AS DOUBLE) * CAST(s_total + 256 AS DOUBLE)) /
+        |      (CAST(den AS DOUBLE) * CAST(t_total + 256 AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000
+        |      AS weight
+        |  FROM agg, tot)
+        |SELECT doc_id, lang, n_grams, weight, weight > 1.0 AS target_like
+        |FROM w2 ORDER BY doc_id""".stripMargin),
 
     // DSIR's selection half: hash-uniform draw vs the weight-scaled cut
     // (expected keep rate 0.25, biased toward target-like docs) —
     // measure -> weights -> resample closed inside the engine
-    "sample_importance" -> ((s, dir) => Curation.sampleImportance(s, dir)),
+    // oracle: same weight chain as dsir_weights, then the selection cut
+    QuerySpec("sample_importance", (s, dir) => Curation.sampleImportance(s, dir),
+      """WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w
+        |  FROM documents),
+        |grams AS (SELECT doc_id, lang, g,
+        |    (strpos('0123456789abcdef', substr(md5(g), 1, 1)) - 1) * 16 +
+        |    (strpos('0123456789abcdef', substr(md5(g), 2, 1)) - 1) AS b
+        |  FROM d, UNNEST(list_transform(
+        |    generate_series(1, greatest(len(w) - 1, 1)),
+        |    i -> array_to_string(w[i:i+1], ' '))) AS t(g)),
+        |model AS (SELECT b, CAST(count(*) AS BIGINT) AS s_cnt,
+        |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS t_cnt
+        |  FROM grams GROUP BY b),
+        |tot AS (SELECT CAST(sum(s_cnt) AS BIGINT) AS s_total,
+        |    CAST(sum(t_cnt) AS BIGINT) AS t_total FROM model),
+        |agg AS (SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_grams,
+        |    CAST(sum(t_cnt + 1) AS BIGINT) AS num,
+        |    CAST(sum(s_cnt + 1) AS BIGINT) AS den
+        |  FROM grams JOIN model USING (b) GROUP BY doc_id, lang),
+        |w2 AS (SELECT doc_id, lang,
+        |    floor(CAST(((CAST(num AS DOUBLE) * CAST(s_total + 256 AS DOUBLE)) /
+        |      (CAST(den AS DOUBLE) * CAST(t_total + 256 AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000
+        |      AS weight
+        |  FROM agg, tot),
+        |mean AS (SELECT CAST(sum(CAST(weight AS DECIMAL(27,6))) AS DOUBLE)
+        |    / count(*) AS mw FROM w2),
+        |sel AS (SELECT doc_id, lang, weight,
+        |    (strpos('0123456789abcdef',
+        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096 +
+        |    (strpos('0123456789abcdef',
+        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256 +
+        |    (strpos('0123456789abcdef',
+        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16 +
+        |    (strpos('0123456789abcdef',
+        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1) AS u16,
+        |    CAST(floor(least(1.0, weight * 0.25 / mw) * 65536.0) AS BIGINT)
+        |      AS cut
+        |  FROM w2, mean)
+        |SELECT doc_id, lang, weight, CAST(u16 AS BIGINT) AS u16, cut
+        |FROM sel WHERE u16 < cut ORDER BY doc_id""".stripMargin),
 
     // the classifier slot of CCNet/DCLM/FineWeb pipelines: hashed-bigram
     // NB fit on a bounded hash-sampled labeled set (one aggregation
     // pass, exact integers), scored corpus-wide by a scan-local codegen
     // kernel — train / score / confusion share one memoized model pass
-    "text_clf_train" -> ((s, dir) => Classifier.trainedModel(s, dir)),
-    "text_clf_score" -> ((s, dir) => Classifier.scoreAll(s, dir)),
-    "text_clf_eval" -> ((s, dir) => Classifier.confusion(s, dir)),
-    "text_clf_pr_sweep" -> ((s, dir) => Classifier.prSweep(s, dir)),
+    QuerySpec("text_clf_train", (s, dir) => Classifier.trainedModel(s, dir),
+      Classifier.trainOracle()),
+    QuerySpec("text_clf_score", (s, dir) => Classifier.scoreAll(s, dir),
+      Classifier.scoreOracle()),
+    QuerySpec("text_clf_eval", (s, dir) => Classifier.confusion(s, dir),
+      Classifier.confusionOracle()),
+    QuerySpec("text_clf_pr_sweep", (s, dir) => Classifier.prSweep(s, dir),
+      Classifier.prSweepOracle()),
 
     // the three quality gates' 2x2x2 contingency cube — how much do
     // Gopher rules, the trained classifier, and the LM tertile filter
-    // agree on what to remove?
-    "filter_agreement" -> ((s, dir) => Curation.filterAgreement(s, dir))
+    // agree on what to remove? The oracle joins the classifier chain (c_),
+    // gopher chain (g_) and LM-tertile chain (l_) on the doc key — each
+    // keep bit recomputed by its own oracle chain
+    QuerySpec("filter_agreement", (s, dir) => Curation.filterAgreement(s, dir),
+      s"""WITH ${graft.ext.Classifier.scoreChain(p = "c_")},
+        |${gopherChainCtes("g_")},
+        |${lmChainCtes("l_")},
+        |j AS (SELECT g.doc_id, g.keep AS gopher_keep,
+        |    c.weight > 1.0 AS clf_keep,
+        |    (l.lm_rank * 3 <= 2 * l.n_docs) AS lm_keep
+        |  FROM g_gk g JOIN c_sc c ON g.doc_id = c.doc_id
+        |  JOIN l_rk l ON g.doc_id = l.doc_id)
+        |SELECT gopher_keep, clf_keep, lm_keep,
+        |  CAST(count(*) AS BIGINT) AS n
+        |FROM j GROUP BY 1, 2, 3
+        |ORDER BY gopher_keep, clf_keep, lm_keep""".stripMargin)
   )
 
   /** The deterministic tombstone set the registered forget queries
@@ -938,7 +3607,7 @@ object ExtEntry {
       .filter(col("doc_id") % 31 === 7)
       .select(col("doc_id"))
 
-  // DuckDB equivalents. Shared fragments:
+  // Shared oracle fragments:
   private val cap = graft.ext.TextDedup.maxBucket
 
   // Parameterized by the docs source so the live (tombstone-filtered)
@@ -1649,3057 +4318,111 @@ object ExtEntry {
     s"$base$iters"
   }
 
-  def oracleSql: Map[String, String] = {
-    val base = baseOracleSql
-    // the standing-table rung searches change the PLAN, not the rows
-    // (RungSpec pins the identity) — same oracle, the
-    // ann_ivf_indexed/ann_pq_indexed convention
-    base ++ Map(
-      "ann_binary_indexed" -> base("ann_binary_topk"),
-      "ann_matryoshka_indexed" -> base("ann_matryoshka_topk"),
-      "ann_int8_indexed" -> base("ann_int8_topk"))
-  }
-
-  private def baseOracleSql: Map[String, String] = Map(
-    "text_gopher_rules" ->
-      s"""WITH ${gopherChainCtes("")}
-        |SELECT doc_id, lang, n_words,
-        |  floor(CAST((CAST(tot_chars AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000 AS mean_word_len,
-        |  floor(CAST((CAST(n_symbols AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000 AS symbol_ratio,
-        |  floor(CAST((CAST(n_alpha AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000 AS alpha_frac,
-        |  stop_hits, r_words, r_meanlen, r_symbol, r_alpha, r_bullet,
-        |  r_ellipsis, r_stop, keep
-        |FROM gk ORDER BY doc_id""".stripMargin,
-    // spans are non-overlapping 8-token windows; top/dup gram views are
-    // overlapping 2-/5-grams; ties on the top gram break to the
-    // lexicographically smallest (ORDER BY c DESC, g — the kernel's
-    // tie rule); flags are exact-integer threshold comparisons
-    "text_repetition_mass" ->
-      """WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w,
-        |    CAST(len(text) AS BIGINT) AS n_chars FROM documents),
-        |sp AS (SELECT doc_id, array_to_string(w[(s-1)*8+1:(s-1)*8+8], ' ') AS g
-        |  FROM d, UNNEST(generate_series(1,
-        |    greatest(CAST(ceil(len(w) / 8.0) AS BIGINT), 1))) AS t(s)),
-        |spc AS (SELECT doc_id, g, count(*) AS c FROM sp GROUP BY doc_id, g),
-        |spm AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_spans,
-        |    CAST(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT)
-        |      AS n_dup_spans
-        |  FROM spc GROUP BY doc_id),
-        |g2 AS (SELECT doc_id, array_to_string(w[i:i+1], ' ') AS g
-        |  FROM d, UNNEST(generate_series(1, greatest(len(w) - 1, 1))) AS t(i)),
-        |g2c AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY doc_id, g),
-        |top2 AS (SELECT doc_id, g AS top_gram, CAST(c AS BIGINT) AS top_cnt,
-        |    CAST(len(g) AS BIGINT) AS top_chars
-        |  FROM (SELECT doc_id, g, c, row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY c DESC, g) AS rk FROM g2c) t WHERE rk = 1),
-        |g5 AS (SELECT doc_id, array_to_string(w[i:i+4], ' ') AS g
-        |  FROM d, UNNEST(generate_series(1, greatest(len(w) - 4, 1))) AS t(i)),
-        |g5c AS (SELECT doc_id, g, count(*) AS c FROM g5 GROUP BY doc_id, g),
-        |d5 AS (SELECT doc_id,
-        |    CAST(sum(CASE WHEN c >= 2 THEN c * len(g) ELSE 0 END) AS BIGINT)
-        |      AS dup_chars
-        |  FROM g5c GROUP BY doc_id)
-        |SELECT d.doc_id, n_chars, n_spans, n_dup_spans,
-        |  floor(CAST((CAST(n_dup_spans AS DOUBLE) / n_spans) AS DOUBLE)*1000000 + 0.5)/1000000 AS dup_span_frac,
-        |  top_gram, top_cnt,
-        |  floor(CAST((CAST(top_cnt AS DOUBLE) * top_chars / n_chars) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS top_gram_char_frac,
-        |  floor(CAST((CAST(dup_chars AS DOUBLE) / n_chars) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS dup_gram_char_frac,
-        |  (10 * n_dup_spans <= 3 * n_spans) AS r_dupspan,
-        |  (5 * top_cnt * top_chars <= n_chars) AS r_topgram,
-        |  (20 * dup_chars <= 3 * n_chars) AS r_dupgram,
-        |  ((10 * n_dup_spans <= 3 * n_spans) AND
-        |   (5 * top_cnt * top_chars <= n_chars) AND
-        |   (20 * dup_chars <= 3 * n_chars)) AS keep
-        |FROM d JOIN spm USING (doc_id) JOIN top2 USING (doc_id)
-        |  JOIN d5 USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_clf_train" -> Classifier.trainOracle(),
-    "text_clf_score" -> Classifier.scoreOracle(),
-    "text_clf_eval" -> Classifier.confusionOracle(),
-    "text_clf_pr_sweep" -> Classifier.prSweepOracle(),
-    "tokenizer_bpe_merges" -> bpeMergesOracle(10),
-    "tokenizer_bpe_encode" -> bpeEncodeOracle(10),
-
-    // all three curve points replay off ONE training chain: d0/d5/d10
-    // are intermediate dicts of the same 10-merge CTE cascade
-    "tokenizer_merge_curve" -> {
-      val points = Seq(0, 5, 10).map { m =>
-        s"""r$m AS (SELECT CAST($m AS BIGINT) AS n_merges,
-           |    CAST(count(*) AS BIGINT) AS n_words,
-           |    CAST(sum(e.n_sub) AS BIGINT) AS n_bpe_tokens,
-           |    CAST(sum(length(dw.w)) AS BIGINT) AS n_chars
-           |  FROM dw JOIN (SELECT w, CAST(len(syms) AS BIGINT) AS n_sub
-           |    FROM d$m) e ON dw.w = e.w)""".stripMargin
-      }.mkString(",\n")
-      s"""${bpeChainCtes(10)},
-         |dw AS (SELECT doc_id, w FROM (SELECT doc_id,
-         |    unnest(string_split(text, ' ')) AS w FROM documents)
-         |  WHERE len(w) > 0),
-         |$points
-         |SELECT n_merges, n_words, n_bpe_tokens, n_chars,
-         |  floor(CAST((CAST(n_chars AS DOUBLE) / n_bpe_tokens) AS DOUBLE)*1000000 + 0.5)/1000000
-         |    AS chars_per_token,
-         |  floor(CAST((CAST(n_bpe_tokens AS DOUBLE) / n_words) AS DOUBLE)*1000000 + 0.5)/1000000
-         |    AS tokens_per_word
-         |FROM (SELECT * FROM r0 UNION ALL SELECT * FROM r5
-         |  UNION ALL SELECT * FROM r10)
-         |ORDER BY n_merges""".stripMargin
-    },
-    "tokenizer_bpe_vocab" -> bpeVocabOracle(10),
-    "dedup_exact" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_doc_id,
-        |  count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_doc_id""".stripMargin,
-
-    "dedup_minhash_lsh" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte
-         |SELECT d1, d2 FROM cand ORDER BY d1, d2""".stripMargin,
-
-    "dedup_jaccard" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte
-         |SELECT d1, d2,
-         |  CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS jaccard
-         |FROM cand JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5
-         |ORDER BY d1, d2""".stripMargin,
-
-    // signature-slot agreement vs exact Jaccard per candidate pair
-    "dedup_minhash_err" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte,
-         |mm AS (SELECT c.d1, c.d2,
-         |    CAST(sum(CASE WHEN s1.sig[j+1] = s2.sig[j+1]
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_match
-         |  FROM cand c JOIN sig s1 ON s1.doc_id = c.d1
-         |    JOIN sig s2 ON s2.doc_id = c.d2,
-         |    UNNEST([0,1,2,3,4,5,6,7]) AS u(j)
-         |  GROUP BY c.d1, c.d2),
-         |ex AS (SELECT d1, d2,
-         |    CAST(len(list_intersect(sh1.shingles, sh2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(sh1.shingles, sh2.shingles))) AS j0
-         |  FROM cand JOIN sh sh1 ON sh1.doc_id = d1
-         |    JOIN sh sh2 ON sh2.doc_id = d2)
-         |SELECT m.d1, m.d2, m.n_match,
-         |  floor(CAST((CAST(m.n_match AS DOUBLE) / 8) AS DOUBLE)*1000000 + 0.5)/1000000 AS est,
-         |  floor(CAST((e.j0) AS DOUBLE)*1000000 + 0.5)/1000000 AS jaccard,
-         |  floor(CAST((abs(CAST(m.n_match AS DOUBLE) / 8 - e.j0)) AS DOUBLE)*1000000 + 0.5)/1000000 AS abs_err
-         |FROM mm m JOIN ex e ON m.d1 = e.d1 AND m.d2 = e.d2
-         |ORDER BY m.d1, m.d2""".stripMargin,
-
-    // panel-bounded ground-truth pairs LEFT JOIN the banding candidates
-    "dedup_recall" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte,
-         |panel AS (SELECT doc_id AS p, shingles AS ps FROM sh
-         |  WHERE doc_id < 50),
-         |truth AS (SELECT DISTINCT least(p, s.doc_id) AS d1,
-         |    greatest(p, s.doc_id) AS d2,
-         |    CAST(len(list_intersect(ps, s.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(ps, s.shingles))) AS j
-         |  FROM sh s, panel
-         |  WHERE s.doc_id <> p
-         |    AND CAST(len(list_intersect(ps, s.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(ps, s.shingles))) >= 0.5)
-         |SELECT t.d1, t.d2, floor(CAST((t.j) AS DOUBLE)*1000000 + 0.5)/1000000 AS jaccard,
-         |  (c.d1 IS NOT NULL) AS found
-         |FROM truth t LEFT JOIN cand c ON t.d1 = c.d1 AND t.d2 = c.d2
-         |ORDER BY t.d1, t.d2""".stripMargin,
-
-    // mirrors TextDedup.incrementalDedup: corpus-side buckets rank-capped,
-    // new-side uncapped, candidates strictly new×corpus, Jaccard verify,
-    // then one admission verdict per new doc (best match by jaccard desc /
-    // id asc, left-joined so no-match docs report keep = true)
-    "dedup_incremental" ->
-      s"""WITH $shinglesCte,
-         |$sigBandsCte,
-         |corpusb AS (SELECT doc_id, b, bh FROM (
-         |    SELECT doc_id, b, bh,
-         |      row_number() OVER (PARTITION BY b, bh ORDER BY doc_id) AS rk
-         |    FROM bands0 WHERE doc_id % 10 < 8) WHERE rk <= ${graft.ext.TextDedup.maxBucket}),
-         |newb AS (SELECT doc_id, b, bh FROM bands0 WHERE doc_id % 10 >= 8),
-         |cand AS (SELECT DISTINCT n.doc_id AS d_new, c.doc_id AS d_old
-         |  FROM newb n JOIN corpusb c ON n.b = c.b AND n.bh = c.bh),
-         |ver AS (SELECT d_new, d_old,
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS j
-         |  FROM cand JOIN sh s1 ON s1.doc_id = d_new JOIN sh s2 ON s2.doc_id = d_old
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |best AS (SELECT d_new, d_old, j,
-         |    row_number() OVER (PARTITION BY d_new ORDER BY j DESC, d_old) AS rk,
-         |    count(*) OVER (PARTITION BY d_new) AS nm FROM ver)
-         |SELECT d.doc_id, coalesce(b.nm, 0) AS n_matches,
-         |  b.d_old AS best_match, floor(CAST((b.j) AS DOUBLE)*1000000 + 0.5)/1000000 AS best_jaccard,
-         |  b.d_old IS NULL AS keep
-         |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 >= 8) d
-         |LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON d.doc_id = b.d_new
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // the fixed-increment twin: identical chain with the new side (and
-    // the verdict frame) bounded to doc_id < 500 — ~100 docs at every
-    // SF, the deployed daily-crawl batch
-    "dedup_incremental_fixed" ->
-      s"""WITH $shinglesCte,
-         |$sigBandsCte,
-         |corpusb AS (SELECT doc_id, b, bh FROM (
-         |    SELECT doc_id, b, bh,
-         |      row_number() OVER (PARTITION BY b, bh ORDER BY doc_id) AS rk
-         |    FROM bands0 WHERE doc_id % 10 < 8) WHERE rk <= ${graft.ext.TextDedup.maxBucket}),
-         |newb AS (SELECT doc_id, b, bh FROM bands0
-         |  WHERE doc_id % 10 >= 8 AND doc_id < 500),
-         |cand AS (SELECT DISTINCT n.doc_id AS d_new, c.doc_id AS d_old
-         |  FROM newb n JOIN corpusb c ON n.b = c.b AND n.bh = c.bh),
-         |ver AS (SELECT d_new, d_old,
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS j
-         |  FROM cand JOIN sh s1 ON s1.doc_id = d_new JOIN sh s2 ON s2.doc_id = d_old
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |best AS (SELECT d_new, d_old, j,
-         |    row_number() OVER (PARTITION BY d_new ORDER BY j DESC, d_old) AS rk,
-         |    count(*) OVER (PARTITION BY d_new) AS nm FROM ver)
-         |SELECT d.doc_id, coalesce(b.nm, 0) AS n_matches,
-         |  b.d_old AS best_match, floor(CAST((b.j) AS DOUBLE)*1000000 + 0.5)/1000000 AS best_jaccard,
-         |  b.d_old IS NULL AS keep
-         |FROM (SELECT doc_id FROM documents
-         |  WHERE doc_id % 10 >= 8 AND doc_id < 500) d
-         |LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON d.doc_id = b.d_new
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // mirrors Curation.splitLeakage: the dedup_jaccard verified pairs,
-    // each endpoint's split recomputed from its id (pure hash — no join
-    // back to documents), cross-split rows only
-    "split_leakage" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte,
-         |ver AS (SELECT d1, d2,
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) AS jaccard
-         |  FROM cand JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |lab AS (SELECT d1, d2, jaccard,
-         |    CASE WHEN substr(md5(CAST(d1 AS VARCHAR)), 1, 4) < '0ccc' THEN 'test'
-         |         WHEN substr(md5(CAST(d1 AS VARCHAR)), 1, 4) < '1999' THEN 'val'
-         |         ELSE 'train' END AS split1,
-         |    CASE WHEN substr(md5(CAST(d2 AS VARCHAR)), 1, 4) < '0ccc' THEN 'test'
-         |         WHEN substr(md5(CAST(d2 AS VARCHAR)), 1, 4) < '1999' THEN 'val'
-         |         ELSE 'train' END AS split2
-         |  FROM ver)
-         |SELECT d1, d2, split1, split2, jaccard FROM lab
-         |WHERE split1 <> split2 ORDER BY d1, d2""".stripMargin,
-
-    // connected components stated declaratively: the recursive CTE is the
-    // transitive closure of the verified pair graph (tiny after LSH+
-    // jaccard pruning), label = least id reachable. The Spark side must
-    // reach the identical fixpoint through iterative label propagation.
-    "dedup_cluster" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |$bandsCte,
-         |pairs AS (SELECT d1, d2 FROM cand
-         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-         |  UNION SELECT d2, d1 FROM pairs),
-         |reach(node, r) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
-         |lbl AS (SELECT node, least(node, min(r)) AS cluster_id
-         |  FROM reach GROUP BY node)
-         |SELECT cluster_id, count(*) AS n_docs, max(node) AS max_doc
-         |FROM lbl GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
-
-    // mirrors TextDedup.survivors: cluster labels from the same recursive
-    // closure, singletons fall through the left join as their own keeper,
-    // then one merge-aggregation per keeper
-    "dedup_survivors" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |$bandsCte,
-         |pairs AS (SELECT d1, d2 FROM cand
-         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-         |  UNION SELECT d2, d1 FROM pairs),
-         |reach(node, r) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
-         |lbl AS (SELECT node, least(node, min(r)) AS cluster_id
-         |  FROM reach GROUP BY node)
-         |SELECT coalesce(l.cluster_id, d.doc_id) AS keeper_doc_id,
-         |  count(*) AS n_members,
-         |  CAST(sum(d.n_chars) AS BIGINT) AS total_chars,
-         |  string_agg(DISTINCT d.lang, ',' ORDER BY d.lang) AS langs,
-         |  max(d.doc_id) AS latest_member
-         |FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node
-         |GROUP BY coalesce(l.cluster_id, d.doc_id)
-         |ORDER BY keeper_doc_id""".stripMargin,
-
-    "text_simhash" ->
-      s"""WITH $simhashCte
-         |SELECT doc_id, simhash FROM hexed ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextDedup.simhashPairsFromHashes: collapse docs by full
-    // simhash (sorted members capped at maxBucket, rep = min), chunk
-    // buckets over reps (rank-capped), hamming filter on rep pairs, then
-    // expansion back through the member lists (cross via least/greatest,
-    // within-class pairs at hamming 0).
-    "dedup_simhash" ->
-      s"""WITH $simhashCte,
-         |grp AS (SELECT simhash, (array_agg(doc_id ORDER BY doc_id))[1:$cap] AS members,
-         |    min(doc_id) AS rep FROM hexed GROUP BY simhash),
-         |chunks AS (SELECT rep, simhash, c, substr(simhash, 1 + 4*c, 4) AS chunk
-         |  FROM grp, UNNEST([0,1,2,3]) AS cc(c)),
-         |ranked AS (SELECT rep, simhash, c, chunk,
-         |    row_number() OVER (PARTITION BY c, chunk ORDER BY rep) AS rk
-         |  FROM chunks),
-         |cand AS (SELECT DISTINCT l.rep AS r1, r.rep AS r2,
-         |    l.simhash AS h1, r.simhash AS h2
-         |  FROM ranked l JOIN ranked r
-         |  ON l.c = r.c AND l.chunk = r.chunk AND l.rep < r.rep
-         |  WHERE l.rk <= $cap AND r.rk <= $cap),
-         |ham AS (SELECT r1, r2,
-         |  (SELECT sum(bit_count(xor(
-         |      strpos('0123456789abcdef', substr(h1, i, 1)) - 1,
-         |      strpos('0123456789abcdef', substr(h2, i, 1)) - 1)))
-         |   FROM UNNEST(generate_series(1, 16)) AS g(i)) AS hamming
-         |  FROM cand),
-         |pass AS (SELECT r1, r2, hamming FROM ham WHERE hamming <= 3),
-         |crossp AS (SELECT least(a, b) AS d1, greatest(a, b) AS d2, hamming
-         |  FROM pass JOIN grp g1 ON g1.rep = r1 JOIN grp g2 ON g2.rep = r2,
-         |       UNNEST(g1.members) AS u1(a), UNNEST(g2.members) AS u2(b)),
-         |within AS (SELECT a AS d1, b AS d2, 0 AS hamming
-         |  FROM grp, UNNEST(members) AS u1(a), UNNEST(members) AS u2(b)
-         |  WHERE a < b)
-         |SELECT d1, d2, CAST(hamming AS INT) AS hamming
-         |FROM (SELECT * FROM crossp UNION ALL SELECT * FROM within)
-         |ORDER BY d1, d2""".stripMargin,
-
-    "ann_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id >= 10),
-        |sims AS (SELECT qid, cid,
-        |    list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))) AS sim
-        |  FROM q, c),
-        |rk AS (SELECT qid, cid, sim,
-        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-        |  FROM sims)
-        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    "ann_lsh_topk" ->
-      """WITH planes AS (SELECT p, list_transform(generate_series(1, 64), i ->
-        |    CASE WHEN (strpos('0123456789abcdef', substr(md5(p || ':' || i), 1, 1)) - 1) % 2 = 1
-        |    THEN 1.0 ELSE -1.0 END) AS r
-        |  FROM UNNEST([0,1,2,3]) AS pp(p)),
-        |sigs AS (SELECT vec_id, embedding, string_agg(CASE WHEN
-        |    list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(embedding[i] AS DOUBLE) * r[i])) > 0
-        |    THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-        |  FROM embeddings, planes GROUP BY vec_id, embedding),
-        |cand AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |    q.embedding AS qe, c.embedding AS ce
-        |  FROM sigs q JOIN sigs c ON q.bucket = c.bucket
-        |  AND q.vec_id < 10 AND c.vec_id >= 10),
-        |sims AS (SELECT qid, cid,
-        |    list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))) AS sim
-        |  FROM cand),
-        |rk AS (SELECT qid, cid, sim,
-        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-        |  FROM sims)
-        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    "ann_ivf_topk" -> ivfOracleSql(nQueries = 10, nCentroids = 16,
-      nProbe = 2, k = 3, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap),
-
-    // out-of-corpus query panel (adjacent-sum vectors), exact scan of
-    // the WHOLE table — the external brute-force retrieval surface
-    "ann_external_topk" ->
-      s"""WITH ${externalPanelCte(5)},
-         |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings),
-         |sims AS (SELECT qid, cid,
-         |    ${cosSql("qe[i]", "CAST(ce[i] AS DOUBLE)")} AS sim
-         |  FROM q, c),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM sims)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // the same panel probing the standing IVF index: identical train /
-    // assign / probe chain as ann_ivf_topk, only the query CTE differs
-    "ann_external_ivf" -> ivfOracleSql(nQueries = 10, nCentroids = 16,
-      nProbe = 2, k = 3, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap,
-      qCte = Some(externalPanelCte(5))),
-
-    // the same panel through the full PQ ADC chain (train / encode /
-    // LUT / pool / rescore) — only the query CTE differs from
-    // ann_pq_topk, so the oracle stays faithful at every rescoreFactor
-    "ann_external_pq" -> pqOracleSql(nQueries = 10, k = 3, nSub = 8,
-      kSub = 16, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap, rescoreFactor = 4,
-      qCte = Some(externalPanelCte(5))),
-
-    // the external panel through the composed IVF-PQ chain — only the
-    // query CTE differs from ann_ivfpq_topk
-    "ann_external_ivfpq" -> ivfpqOracleSql(nQueries = 10, nProbe = 2,
-      k = 3, nCentroids = 16, nSub = 8, kSub = 16, iters = 2,
-      sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap,
-      rescoreFactor = 4, qCte = Some(externalPanelCte(5))),
-
-    // the recall chain with the external panel: both the IVF side and
-    // the brute-force side run over the q CTE; cand is already the
-    // vec_id >= nQueries partition, so the comparison is like-for-like
-    "ann_external_recall" -> annRecallOracleSql(nQueries = 10,
-      nCentroids = 16, nProbe = 2, k = 3, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap,
-      qCte = Some(externalPanelCte(5))),
-
-    // hardest different-label neighbors per anchor: label filter inside
-    // the sim scan, then the same (sim desc, cid) top-k window as ANN
-    "mine_hard_negatives" -> {
-      val cos = cosSql("CAST(qe[i] AS DOUBLE)", "CAST(ce[i] AS DOUBLE)")
-      s"""WITH q AS (SELECT vec_id AS qid, label AS q_label,
-         |    embedding AS qe FROM embeddings WHERE vec_id < 10),
-         |c AS (SELECT vec_id AS cid, label AS c_label, embedding AS ce
-         |  FROM embeddings WHERE vec_id >= 10),
-         |s AS (SELECT qid, q_label, cid, c_label, $cos AS sim
-         |  FROM q, c WHERE c_label <> q_label),
-         |r AS (SELECT qid, q_label, cid, c_label, sim, row_number()
-         |    OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM s)
-         |SELECT qid, q_label, cid, c_label, CAST(rank AS BIGINT) AS rank,
-         |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
-         |FROM r WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
-    },
-
-    // the IVF-indexed mining twin: full train/assign/probe chain, then
-    // the cross-label sims variant of the search tail
-    "mine_hard_negatives_ivf" ->
-      s"""WITH ${ivfTrainCtes(nQueries = 10, nCentroids = 16, iters = 2,
-        sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)},
-         |${ivfSearchCtes(nQueries = 10, nProbe = 2, crossLabel = true)}
-         |SELECT qid, q_label, cid, c_label, CAST(rank AS BIGINT) AS rank,
-         |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
-         |FROM rk WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // the indexed bitext twin: whole-table trained cells (the
-    // dedup_semantic chain), both directions probe 2 cells per query,
-    // candidates are the probed cells' other-label members, then the
-    // same margin tail as mine_bitext
-    "mine_bitext_ivf" -> {
-      val pairCos = "list_sum(list_transform(generate_series(1, 64), " +
-        "i -> CAST(x.xe[i] AS DOUBLE) * CAST(y.ye[i] AS DOUBLE))) " +
-        "/ (x.xn * y.yn)"
-      s"""WITH $semanticCellCtes,
-         |x AS (SELECT v.vec_id AS xid, v.embedding AS xe, v.nrm AS xn
-         |  FROM v JOIN embeddings e ON e.vec_id = v.vec_id
-         |  WHERE e.label = 0),
-         |y AS (SELECT v.vec_id AS yid, v.embedding AS ye, v.nrm AS yn
-         |  FROM v JOIN embeddings e ON e.vec_id = v.vec_id
-         |  WHERE e.label = 1),
-         |xp AS (SELECT xid, cent_id FROM (SELECT x.xid, c.cent_id,
-         |    row_number() OVER (PARTITION BY x.xid
-         |      ORDER BY ${cosSql("CAST(x.xe[i] AS DOUBLE)", "c.cemb[i]")}
-         |      DESC, c.cent_id) AS rk
-         |  FROM x, cents c) t WHERE rk <= 2),
-         |yp AS (SELECT yid, cent_id FROM (SELECT y.yid, c.cent_id,
-         |    row_number() OVER (PARTITION BY y.yid
-         |      ORDER BY ${cosSql("CAST(y.ye[i] AS DOUBLE)", "c.cemb[i]")}
-         |      DESC, c.cent_id) AS rk
-         |  FROM y, cents c) t WHERE rk <= 2),
-         |sxy AS (SELECT p.xid, y.yid, $pairCos AS sim
-         |  FROM xp p JOIN cells m USING (cent_id)
-         |  JOIN y ON y.yid = m.vec_id JOIN x ON x.xid = p.xid),
-         |syx AS (SELECT p.yid, x.xid, $pairCos AS sim
-         |  FROM yp p JOIN cells m USING (cent_id)
-         |  JOIN x ON x.xid = m.vec_id JOIN y ON y.yid = p.yid),
-         |ax AS (SELECT xid,
-         |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
-         |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_x
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY xid
-         |      ORDER BY sim DESC, yid) AS rk FROM sxy) t
-         |  WHERE rk <= 4 GROUP BY xid),
-         |ay AS (SELECT yid,
-         |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
-         |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_y
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY yid
-         |      ORDER BY sim DESC, xid) AS rk FROM syx) t
-         |  WHERE rk <= 4 GROUP BY yid),
-         |m AS (SELECT s.xid, s.yid, s.sim,
-         |    s.sim / ((ax.avg_x + ay.avg_y) / 2.0) AS margin
-         |  FROM sxy s JOIN ax USING (xid) JOIN ay USING (yid)),
-         |best AS (SELECT xid, yid, sim, margin, row_number()
-         |    OVER (PARTITION BY xid ORDER BY margin DESC, yid) AS rk
-         |  FROM m)
-         |SELECT xid, yid,
-         |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim,
-         |  floor(CAST((margin) AS DOUBLE)*1000000 + 0.5)/1000000 AS margin
-         |FROM best WHERE rk = 1 ORDER BY xid""".stripMargin
-    },
-
-    // ratio-margin bitext mining: k-NN averages as DECIMAL sums of
-    // round6 sims (order-free), margin = sim / ((ax + ay) / 2) — one
-    // fixed IEEE sequence in both engines
-    "mine_bitext" -> {
-      val cos = cosSql("CAST(xe[i] AS DOUBLE)", "CAST(ye[i] AS DOUBLE)")
-      s"""WITH x AS (SELECT vec_id AS xid, embedding AS xe
-         |  FROM embeddings WHERE label = 0 AND vec_id < 2000),
-         |y AS (SELECT vec_id AS yid, embedding AS ye
-         |  FROM embeddings WHERE label = 1 AND vec_id < 2000),
-         |sims AS (SELECT xid, yid, $cos AS sim FROM x, y),
-         |ax AS (SELECT xid,
-         |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
-         |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_x
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY xid
-         |      ORDER BY sim DESC, yid) AS rk FROM sims) t
-         |  WHERE rk <= 4 GROUP BY xid),
-         |ay AS (SELECT yid,
-         |    CAST(sum(CAST(floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000
-         |      AS DECIMAL(27,6))) AS DOUBLE) / 4.0 AS avg_y
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY yid
-         |      ORDER BY sim DESC, xid) AS rk FROM sims) t
-         |  WHERE rk <= 4 GROUP BY yid),
-         |m AS (SELECT s.xid, s.yid, s.sim,
-         |    s.sim / ((ax.avg_x + ay.avg_y) / 2.0) AS margin
-         |  FROM sims s JOIN ax USING (xid) JOIN ay USING (yid)),
-         |best AS (SELECT xid, yid, sim, margin, row_number()
-         |    OVER (PARTITION BY xid ORDER BY margin DESC, yid) AS rk
-         |  FROM m)
-         |SELECT xid, yid,
-         |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim,
-         |  floor(CAST((margin) AS DOUBLE)*1000000 + 0.5)/1000000 AS margin
-         |FROM best WHERE rk = 1 ORDER BY xid""".stripMargin
-    },
-
-    // BM25 pool (the text_relevance oracle, nested) -> cosine rerank
-    "hybrid_rerank" -> {
-      val cos = cosSql("CAST(qv.qe[i] AS DOUBLE)", "CAST(e.embedding[i] AS DOUBLE)")
-      s"""WITH pool AS (
-         |${TextAnalysis.relevanceOracleSql(Seq("spark", "table", "stream"), 20)}
-         |),
-         |e AS (SELECT vec_id, embedding FROM embeddings),
-         |qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |s AS (SELECT p.doc_id, p.rank AS bm25_rank, $cos AS sim
-         |  FROM pool p JOIN e ON p.doc_id = e.vec_id, qv),
-         |r AS (SELECT doc_id, bm25_rank, sim,
-         |    row_number() OVER (ORDER BY sim DESC, doc_id) AS rank
-         |  FROM s)
-         |SELECT doc_id, bm25_rank, CAST(rank AS BIGINT) AS rank,
-         |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
-         |FROM r WHERE rank <= 5 ORDER BY rank""".stripMargin
-    },
-
-    // norm folds left-to-right like the engine's dot kernel; quantiles
-    // are exact order statistics on round6(norm)
-    "emb_norm_stats" ->
-      """WITH e AS (SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
-        |    floor(CAST((sqrt(list_sum(list_transform(
-        |      generate_series(1, len(embedding)),
-        |      i -> CAST(embedding[i] AS DOUBLE) *
-        |           CAST(embedding[i] AS DOUBLE))))) AS DOUBLE)*1000000 + 0.5)/1000000 AS rnorm
-        |  FROM embeddings),
-        |base AS (SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-        |    CAST(count(DISTINCT dim) AS BIGINT) AS n_dims,
-        |    CAST(min(dim) AS BIGINT) AS dim_min,
-        |    CAST(max(dim) AS BIGINT) AS dim_max,
-        |    CAST(sum(CASE WHEN rnorm = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_zero
-        |  FROM e),
-        |bv AS (SELECT rnorm, count(*) AS c FROM e GROUP BY rnorm),
-        |cm AS (SELECT rnorm, sum(c) OVER (ORDER BY rnorm) AS cum FROM bv),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS nv FROM e),
-        |q AS (SELECT
-        |    min(CASE WHEN cum >= ceil(0.1 * nv) THEN rnorm END) AS p10_norm,
-        |    min(CASE WHEN cum >= ceil(0.5 * nv) THEN rnorm END) AS p50_norm,
-        |    min(CASE WHEN cum >= ceil(0.9 * nv) THEN rnorm END) AS p90_norm
-        |  FROM cm, tot)
-        |SELECT n_vectors, n_dims, dim_min, dim_max, n_zero,
-        |  p10_norm, p50_norm, p90_norm
-        |FROM base, q""".stripMargin,
-
-    // the IVF chain's top-k vs the brute-force top-k, per query
-    "ann_recall" -> annRecallOracleSql(nQueries = 10, nCentroids = 16,
-      nProbe = 2, k = 3, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap),
-
-    // the true top-1's position in the IVF list; rr is exact IEEE
-    // division (no log discounts), 0 on a miss
-    "ann_mrr" ->
-      s"""WITH ${ivfTrainCtes(nQueries = 10, nCentroids = 16, iters = 2,
-        sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)},
-         |${ivfSearchCtes(nQueries = 10, nProbe = 2)},
-         |truth AS (SELECT qid, cid FROM (
-         |    SELECT q.qid, cd.cid, row_number() OVER (PARTITION BY q.qid
-         |      ORDER BY ${cosSql("CAST(q.qe[i] AS DOUBLE)",
-        "CAST(cd.ce[i] AS DOUBLE)")} DESC, cd.cid) AS brank
-         |    FROM q, cand cd) t
-         |  WHERE brank = 1),
-         |iv AS (SELECT qid, cid, rank FROM rk WHERE rank <= 3)
-         |SELECT t.qid, CAST(COALESCE(iv.rank, 0) AS BIGINT) AS hit_rank,
-         |  floor(CAST((COALESCE(CAST(1.0 AS DOUBLE) / iv.rank, 0.0)) AS DOUBLE)*1000000 + 0.5)/1000000 AS rr
-         |FROM truth t LEFT JOIN iv ON t.qid = iv.qid AND t.cid = iv.cid
-         |ORDER BY t.qid""".stripMargin,
-
-    // reachability recall + posting-list scan cost per sweep point;
-    // grid left-joined so every setting emits its row; probe/assign
-    // CTEs shared with the ann_ivf_topk chain (nProbe = all cells —
-    // the unfiltered rank table the sweep reads)
-    "ann_nprobe_sweep" ->
-      s"""WITH ${ivfTrainCtes(nQueries = 10, nCentroids = 16, iters = 2,
-        sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap)},
-         |${ivfSearchCtes(nQueries = 10, nProbe = 16)},
-         |truth AS (SELECT qid, cid FROM (
-         |    SELECT q.qid, cd.cid, row_number() OVER (PARTITION BY q.qid
-         |      ORDER BY ${cosSql("CAST(q.qe[i] AS DOUBLE)",
-        "CAST(cd.ce[i] AS DOUBLE)")} DESC, cd.cid) AS brank
-         |    FROM q, cand cd) t
-         |  WHERE brank <= 3),
-         |grid AS (SELECT t AS n_probe FROM UNNEST([1, 2, 4, 8, 16]) AS g(t)),
-         |reach AS (SELECT g.n_probe, count(*) AS n_reachable
-         |  FROM truth tr JOIN cells c ON tr.cid = c.cid
-         |  JOIN probe p ON p.qid = tr.qid AND p.cent_id = c.cent_id
-         |  JOIN grid g ON p.rk <= g.n_probe
-         |  GROUP BY g.n_probe),
-         |csize AS (SELECT cent_id, count(*) AS sz FROM cells
-         |  GROUP BY cent_id),
-         |scan AS (SELECT g.n_probe, sum(s.sz) AS scanned
-         |  FROM probe p JOIN csize s USING (cent_id)
-         |  JOIN grid g ON p.rk <= g.n_probe
-         |  GROUP BY g.n_probe),
-         |tot AS (SELECT (SELECT count(*) FROM truth) AS n_true,
-         |  (SELECT count(*) FROM cand) AS n_cand)
-         |SELECT CAST(g.n_probe AS BIGINT) AS n_probe,
-         |  CAST(coalesce(r.n_reachable, 0) AS BIGINT) AS n_reachable,
-         |  CAST(t.n_true AS BIGINT) AS n_true,
-         |  floor(CAST((CAST(coalesce(r.n_reachable, 0) AS DOUBLE) /
-         |    t.n_true) AS DOUBLE)*1000000 + 0.5)/1000000 AS recall,
-         |  CAST(coalesce(s.scanned, 0) AS BIGINT) AS scanned,
-         |  floor(CAST((CAST(coalesce(s.scanned, 0) AS DOUBLE) /
-         |    (t.n_cand * 10)) AS DOUBLE)*1000000 + 0.5)/1000000 AS scan_frac
-         |FROM grid g LEFT JOIN reach r USING (n_probe)
-         |LEFT JOIN scan s USING (n_probe), tot t
-         |ORDER BY n_probe""".stripMargin,
-
-    // same trained assignment as ann_ivf_topk, then the hash-ordered
-    // per-cell cap
-    "sample_cluster_balanced" -> clusterBalancedOracleSql(nQueries = 10,
-      nCentroids = 16, cap = 20, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap),
-
-    // same contract as ann_ivf_topk — the index changes the plan, not
-    // the rows
-    "ann_ivf_indexed" -> ivfOracleSql(nQueries = 10, nCentroids = 16,
-      nProbe = 2, k = 3, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap),
-
-    // the trained assignment re-derived, then the same occupancy /
-    // order-statistic / drift rollups as Similarity.ivfStats
-    "ann_ivf_stats" -> ivfStatsOracleSql(nQueries = 10, nCentroids = 16,
-      simThreshold = 0.1, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap),
-
-    "ann_pq_topk" -> pqOracleSql(nQueries = 10, k = 3, nSub = 8, kSub = 16,
-      iters = 2, sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap,
-      rescoreFactor = 4),
-
-    // same contract as ann_pq_topk — the index changes the plan, not
-    // the rows
-    "ann_pq_indexed" -> pqOracleSql(nQueries = 10, k = 3, nSub = 8,
-      kSub = 16, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap, rescoreFactor = 4),
-
-    "ann_ivfpq_topk" -> ivfpqOracleSql(nQueries = 10, nProbe = 2, k = 3,
-      nCentroids = 16, nSub = 8, kSub = 16, iters = 2, sampleMod = 3,
-      sampleCap = Similarity.defaultIvfSampleCap, rescoreFactor = 4),
-
-    "emb_pq_stats" -> pqStatsOracleSql(nQueries = 10, nSub = 8, kSub = 16,
-      iters = 2, sampleMod = 3, sampleCap = Similarity.defaultIvfSampleCap),
-
-    "dedup_embedding" ->
-      """WITH e AS (SELECT vec_id, label, embedding FROM embeddings
-        |  WHERE vec_id < 2000),
-        |p AS (SELECT a.vec_id AS v1, b.vec_id AS v2,
-        |    list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))) AS cos
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
-        |SELECT v1, v2, floor(CAST((cos) AS DOUBLE)*1000000 + 0.5)/1000000 AS cos FROM p WHERE cos >= 0.4
-        |ORDER BY v1, v2""".stripMargin,
-
-    // banded sign-LSH over md5-parity hyperplanes (plane p = band*4 + j),
-    // rank-capped bucket membership mirroring TextDedup.maxBucket, exact
-    // cosine verification — the declarative twin of lshNearDupPairs
-    "dedup_embedding_lsh" ->
-      s"""WITH planes AS (SELECT p, p // 4 AS band,
-         |    list_transform(generate_series(1, 64), i ->
-         |    CASE WHEN (strpos('0123456789abcdef', substr(md5(p || ':' || i), 1, 1)) - 1) % 2 = 1
-         |    THEN 1.0 ELSE -1.0 END) AS r
-         |  FROM UNNEST(generate_series(0, 15)) AS pp(p)),
-         |sigs AS (SELECT vec_id, band, string_agg(CASE WHEN
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * r[i])) > 0
-         |    THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-         |  FROM embeddings, planes GROUP BY vec_id, band),
-         |capped AS (SELECT vec_id, band, bucket FROM (
-         |    SELECT vec_id, band, bucket,
-         |      row_number() OVER (PARTITION BY band, bucket ORDER BY vec_id) AS rk
-         |    FROM sigs) WHERE rk <= ${graft.ext.TextDedup.maxBucket}),
-         |cand AS (SELECT DISTINCT a.vec_id AS v1, b.vec_id AS v2
-         |  FROM capped a JOIN capped b
-         |  ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |e AS (SELECT vec_id, embedding FROM embeddings),
-         |sims AS (SELECT v1, v2,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE))) /
-         |    (sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(ea.embedding[i] AS DOUBLE)))) *
-         |     sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(eb.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE))))) AS cos
-         |  FROM cand JOIN e ea ON ea.vec_id = v1 JOIN e eb ON eb.vec_id = v2)
-         |SELECT v1, v2, floor(CAST((cos) AS DOUBLE)*1000000 + 0.5)/1000000 AS cos FROM sims WHERE cos >= 0.4
-         |ORDER BY v1, v2""".stripMargin,
-
-    "text_langid" ->
-      s"""WITH $langidCtes
-        |SELECT doc_id, lang, lang_guess,
-        |  floor(CAST((greatest(s_en, s_de, s_es, s_fr)) AS DOUBLE)*1000000 + 0.5)/1000000 AS lang_score
-        |FROM guess ORDER BY doc_id""".stripMargin,
-
-    // argmax-guess vs true label confusion — the langid heuristic's
-    // per-language quality report
-    "langid_confusion" ->
-      s"""WITH $langidCtes
-        |SELECT lang, lang_guess, CAST(count(*) AS BIGINT) AS n
-        |FROM guess GROUP BY lang, lang_guess
-        |ORDER BY lang, lang_guess""".stripMargin,
-
-    "text_quality" ->
-      """WITH en AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d)
-        |SELECT doc_id,
-        |  length(text) AS n_chars_m,
-        |  len(string_split(text, ' ')) AS n_tokens,
-        |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_tokens_re,
-        |  CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-        |    / length(text) AS punct_ratio,
-        |  CAST(length(text) AS DOUBLE) / len(string_split(text, ' ')) AS mean_tok_len,
-        |  floor(CAST((CAST(len(list_filter(string_split(lower(text), ' '),
-        |    x -> list_contains(d, x))) AS DOUBLE)
-        |    / len(string_split(lower(text), ' '))) AS DOUBLE)*1000000 + 0.5)/1000000 AS stopword_ratio,
-        |  floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-        |      / length(text)) * 0.5 +
-        |    least(CAST(len(list_filter(string_split(lower(text), ' '),
-        |      x -> list_contains(d, x))) AS DOUBLE)
-        |      / len(string_split(lower(text), ' ')) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS quality_score
-        |FROM documents, en ORDER BY doc_id""".stripMargin,
-
-    "text_vocab" ->
-      """SELECT t AS token, count(*) AS freq
-        |FROM (SELECT string_split(text, ' ') AS w FROM documents), UNNEST(w) AS u(t)
-        |GROUP BY t ORDER BY freq DESC, token LIMIT 20""".stripMargin,
-
-    // transitions explode once; p = exact BIGINT ratio rounded 6, mean
-    // via the DECIMAL(27,6) exact sum; rare compare is integer
-    "text_bigram_lm" ->
-      """WITH t AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |    UNNEST(generate_series(1, len(w) - 1)) AS g(i)
-        |  WHERE len(w) >= 2),
-        |big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM t GROUP BY w1, w2),
-        |lf AS (SELECT w1, CAST(sum(n_ab) AS BIGINT) AS n_a
-        |  FROM big GROUP BY w1),
-        |sc AS (SELECT doc_id,
-        |    floor(CAST((CAST(n_ab AS DOUBLE) / CAST(n_a AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000 AS p,
-        |    n_ab, n_a
-        |  FROM t JOIN big USING (w1, w2) JOIN lf USING (w1)),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trans,
-        |    sum(CAST(p AS DECIMAL(27,6))) AS psum,
-        |    min(p) AS min_p,
-        |    CAST(sum(CASE WHEN n_ab * 100 < n_a THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_rare
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_trans,
-        |  CAST(CAST(psum * 1000000 AS BIGINT) * 1000 // n_trans AS DOUBLE)
-        |    / 1000000000.0 AS mean_p,
-        |  min_p, n_rare
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    // sketch cutoffs have no cross-engine twin: the registered query
-    // asserts the ±5%-rank bucket-size bound as booleans (the
-    // agg_approx_percentile pattern); lang masses stay exact
-    "text_lm_buckets_approx" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  TRUE AS head_within_rank_eps, TRUE AS middle_within_rank_eps,
-        |  TRUE AS tail_within_rank_eps
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // score = tf·(N/df) in the engine's fixed operation order — one
-    // division, one multiply, exact BIGINT inputs; ranks tie on token
-    "text_keywords" ->
-      """WITH dt AS (SELECT doc_id, t AS token,
-        |    CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |    UNNEST(w) AS u(t)
-        |  GROUP BY doc_id, t),
-        |dfq AS (SELECT token, CAST(count(*) AS BIGINT) AS df
-        |  FROM dt GROUP BY token),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |s AS (SELECT doc_id, token, tf, df,
-        |    CAST(tf AS DOUBLE) *
-        |      (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) AS score
-        |  FROM dt JOIN dfq USING (token), n),
-        |r AS (SELECT doc_id, token, tf, df, score,
-        |    CAST(row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score DESC, token) AS BIGINT) AS rank
-        |  FROM s)
-        |SELECT doc_id, token, tf, df, rank, floor(CAST((score) AS DOUBLE)*1000000 + 0.5)/1000000 AS tfidf
-        |FROM r WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-
-    // lift = (n_ab/n_a)·(N/n_b) in the engine's fixed operation order —
-    // two exactly-rounded divisions and a multiply, bit-identical; the
-    // top-50 cut orders by the RAW lift (ties by pair), the output by
-    // the rounded lift
-    "text_collocations" ->
-      """WITH d AS (SELECT string_split(text, ' ') AS w FROM documents),
-        |uni AS (SELECT t AS token, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM d, UNNEST(w) AS u(t) GROUP BY t),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM uni),
-        |bg AS (SELECT w[i] AS w1, w[i+1] AS w2
-        |  FROM d, UNNEST(generate_series(1, len(w) - 1)) AS g(i)
-        |  WHERE len(w) >= 2),
-        |pc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM bg GROUP BY w1, w2 HAVING count(*) >= 5),
-        |sc AS (SELECT w1, w2, n_ab, a.cnt AS n_a, b.cnt AS n_b,
-        |    (CAST(n_ab AS DOUBLE) / CAST(a.cnt AS DOUBLE)) *
-        |    (CAST(n_total AS DOUBLE) / CAST(b.cnt AS DOUBLE)) AS lift_raw
-        |  FROM pc JOIN uni a ON pc.w1 = a.token
-        |  JOIN uni b ON pc.w2 = b.token, tot),
-        |top AS (SELECT w1, w2, n_ab, n_a, n_b, floor(CAST((lift_raw) AS DOUBLE)*1000000 + 0.5)/1000000 AS lift
-        |  FROM sc ORDER BY lift_raw DESC, w1, w2 LIMIT 50)
-        |SELECT w1, w2, n_ab, n_a, n_b, lift FROM top
-        |ORDER BY lift DESC, w1, w2""".stripMargin,
-
-    "text_unk_mask" ->
-      """WITH vocab AS (
-        |  SELECT t AS token
-        |  FROM (SELECT string_split(text, ' ') AS w FROM documents), UNNEST(w) AS u(t)
-        |  GROUP BY t ORDER BY count(*) DESC, t LIMIT 32),
-        |vl AS (SELECT list(token) AS v FROM vocab)
-        |SELECT doc_id,
-        |  array_to_string(list_transform(string_split(text, ' '),
-        |    x -> CASE WHEN list_contains(v, x) THEN x ELSE '<unk>' END), ' ')
-        |    AS text_masked,
-        |  CAST(len(list_filter(string_split(text, ' '),
-        |    x -> NOT list_contains(v, x))) AS BIGINT) AS n_unk
-        |FROM documents, vl ORDER BY doc_id""".stripMargin,
-
-    "text_unk_mask_bigvocab" ->
-      """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+2], ' ') AS gram
-        |  FROM s, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) t(i)),
-        |vocab AS (SELECT gram FROM g GROUP BY gram
-        |  ORDER BY count(*) DESC, gram LIMIT 4096)
-        |SELECT doc_id,
-        |  string_agg(CASE WHEN v.gram IS NOT NULL THEN g.gram
-        |    ELSE '<unk>' END, '|' ORDER BY pos) AS text_masked,
-        |  CAST(sum(CASE WHEN v.gram IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_unk
-        |FROM g LEFT JOIN vocab v ON g.gram = v.gram
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "text_fingerprint" ->
-      """WITH t AS (SELECT doc_id,
-        |    trim(regexp_replace(lower(text), ' +', ' ', 'g')) AS norm FROM documents),
-        |s AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM t)
-        |SELECT doc_id, md5(norm) AS fp,
-        |  (SELECT min(md5(array_to_string(w[i:i+4], ' ')))
-        |   FROM UNNEST(generate_series(1, greatest(len(w) - 4, 1))) AS g(i)) AS min_shingle
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "mm_frames" ->
-      """WITH v AS (SELECT doc_id,
-        |    CAST(octet_length(encode(text)) // 64 + 1 AS BIGINT) AS frames
-        |  FROM documents WHERE doc_id % 3 = 2)
-        |SELECT doc_id, frames, f AS frame_no
-        |FROM v, UNNEST(generate_series(0, CAST(frames - 1 AS BIGINT), 2)) AS g(f)
-        |ORDER BY doc_id, frame_no""".stripMargin,
-
-    "text_clean" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(
-        |      trim(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g')), ' '),
-        |      x -> x <> '' AND NOT list_contains(
-        |        ['the','a','of','and','to','in','is','it','you','that'], x)) AS toks
-        |  FROM documents)
-        |SELECT doc_id, array_to_string(toks, ' ') AS cleaned,
-        |  len(toks) AS n_clean_tokens
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "pipeline_filter" ->
-      """WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-        |q AS (SELECT d.doc_id, d.lang,
-        |    len(string_split(d.text, ' ')) AS n_tokens,
-        |    CAST(len(list_filter(string_split(lower(d.text), ' '),
-        |      x -> list_contains(['the','a','of','and','to','in','is','it','you','that'], x))) AS DOUBLE)
-        |      / len(string_split(lower(d.text), ' ')) AS stop_ratio
-        |  FROM documents d JOIN keep USING (doc_id))
-        |SELECT doc_id, lang, n_tokens, floor(CAST((stop_ratio) AS DOUBLE)*1000000 + 0.5)/1000000 AS stop_ratio
-        |FROM q WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01
-        |ORDER BY doc_id""".stripMargin,
-
-    "pipeline_curate" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |$bandsCte,
-         |pairs AS (SELECT d1, d2 FROM cand
-         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-         |  UNION SELECT d2, d1 FROM pairs),
-         |reach(node, r) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
-         |near_drop AS (SELECT node AS doc_id FROM (
-         |    SELECT node, least(node, min(r)) AS cluster_id
-         |    FROM reach GROUP BY node) WHERE node <> cluster_id),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         |q AS (SELECT d.doc_id, d.lang,
-         |    len(string_split(d.text, ' ')) AS n_tokens,
-         |    CAST(len(list_filter(string_split(lower(d.text), ' '),
-         |      x -> list_contains(['the','a','of','and','to','in','is','it','you','that'], x))) AS DOUBLE)
-         |      / len(string_split(lower(d.text), ' ')) AS stop_ratio
-         |  FROM documents d JOIN keep USING (doc_id)
-         |  WHERE d.doc_id NOT IN (SELECT doc_id FROM near_drop))
-         |SELECT doc_id, lang, n_tokens, floor(CAST((stop_ratio) AS DOUBLE)*1000000 + 0.5)/1000000 AS stop_ratio
-         |FROM q WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01
-         |ORDER BY doc_id""".stripMargin,
-
-    // pipeline_curate's keep set, additionally decontaminated against
-    // the src0 eval slice (5-gram leakage, the decontam_ngram CTEs) and
-    // with src0 itself excluded, rolled up per (split, lang); the split
-    // is the split_assign hex-range function
-    "pipeline_pretrain" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |$bandsCte,
-         |pairs AS (SELECT d1, d2 FROM cand
-         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-         |  UNION SELECT d2, d1 FROM pairs),
-         |reach(node, r) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
-         |near_drop AS (SELECT node AS doc_id FROM (
-         |    SELECT node, least(node, min(r)) AS cluster_id
-         |    FROM reach GROUP BY node) WHERE node <> cluster_id),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         |d5 AS (SELECT doc_id, source, string_split(text, ' ') AS w
-         |  FROM documents),
-         |sh5 AS (SELECT doc_id, source, list_distinct(list_transform(
-         |    generate_series(1, greatest(len(w) - 4, 1)),
-         |    i -> array_to_string(w[i:i+4], ' '))) AS s5 FROM d5),
-         |ev5 AS (SELECT DISTINCT g FROM (
-         |  SELECT unnest(s5) AS g FROM sh5 WHERE source = 'src0')),
-         |contam AS (SELECT DISTINCT doc_id FROM (
-         |  SELECT doc_id, unnest(s5) AS g FROM sh5 WHERE source <> 'src0')
-         |  WHERE g IN (SELECT g FROM ev5)),
-         |q AS (SELECT d.doc_id, d.lang,
-         |    len(string_split(d.text, ' ')) AS n_tokens,
-         |    CAST(len(list_filter(string_split(lower(d.text), ' '),
-         |      x -> list_contains(['the','a','of','and','to','in','is','it','you','that'], x))) AS DOUBLE)
-         |      / len(string_split(lower(d.text), ' ')) AS stop_ratio
-         |  FROM documents d JOIN keep USING (doc_id)
-         |  WHERE d.source <> 'src0'
-         |    AND d.doc_id NOT IN (SELECT doc_id FROM near_drop)
-         |    AND d.doc_id NOT IN (SELECT doc_id FROM contam)),
-         |f AS (SELECT
-         |    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '0ccc'
-         |         THEN 'test'
-         |         WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999'
-         |         THEN 'val' ELSE 'train' END AS split,
-         |    lang, n_tokens
-         |  FROM q WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01)
-         |SELECT split, lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-         |FROM f GROUP BY split, lang ORDER BY split, lang""".stripMargin,
-
-    "mm_meta" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  octet_length(encode(text)) AS n_bytes,
-        |  sha256(text) AS sha256
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the corpus is ASCII (asserted in ExtSpec), so char-strided substr
-    // decimation = the engine's byte-strided decimation; integer-exact
-    // stride/count arithmetic mirrors resizeStub
-    "mm_resize" ->
-      """WITH s AS (SELECT doc_id, text, length(text) AS n,
-        |    greatest(1, (length(text) + 1023) // 1024) AS stride FROM documents),
-        |r AS (SELECT doc_id, n, stride, (n + stride - 1) // stride AS n_out,
-        |    md5(array_to_string(list_transform(
-        |      generate_series(0, (n + stride - 1) // stride - 1),
-        |      i -> substr(text, 1 + i * stride, 1)), '')) AS payload_md5
-        |  FROM s)
-        |SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  CAST(n_out AS BIGINT) AS n_bytes_out, payload_md5
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // mirrors Similarity.quantizeInt8 op-for-op: scale in a subquery (no
-    // same-select alias reference), half-up rounding spelled as
-    // floor(x*127/scale + 0.5) — identical IEEE sequence in both engines
-    "emb_quantize" ->
-      """WITH s AS (SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding,
-        |      v -> abs(CAST(v AS DOUBLE)))) AS scale
-        |  FROM embeddings)
-        |SELECT vec_id, CAST(len(embedding) AS BIGINT) AS n_dims, scale,
-        |  md5(array_to_string(list_transform(embedding, v -> CAST(CAST(
-        |    CASE WHEN scale = 0 THEN 0
-        |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END
-        |    AS BIGINT) AS VARCHAR)), ',')) AS q_md5,
-        |  list_max(list_transform(embedding, v ->
-        |    CASE WHEN scale = 0 THEN 0.0
-        |      ELSE abs(floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5)
-        |        * scale / 127.0 - CAST(v AS DOUBLE)) END)) AS max_err
-        |FROM s ORDER BY vec_id""".stripMargin,
-
-    "emb_project" ->
-      """WITH planes AS (SELECT p, list_transform(generate_series(1, 64), i ->
-        |    CASE WHEN (strpos('0123456789abcdef', substr(md5(p || ':' || i), 1, 1)) - 1) % 2 = 1
-        |    THEN 1.0 ELSE -1.0 END) AS r
-        |  FROM UNNEST([0,1,2,3,4,5,6,7]) AS pp(p)),
-        |proj AS (SELECT vec_id, p,
-        |    floor(CAST((list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(embedding[i] AS DOUBLE) * r[i]))) AS DOUBLE)*1000000 + 0.5)/1000000 AS v
-        |  FROM embeddings, planes)
-        |SELECT vec_id,
-        |  max(CASE WHEN p = 0 THEN v END) AS p0,
-        |  max(CASE WHEN p = 1 THEN v END) AS p1,
-        |  max(CASE WHEN p = 2 THEN v END) AS p2,
-        |  max(CASE WHEN p = 3 THEN v END) AS p3,
-        |  max(CASE WHEN p = 4 THEN v END) AS p4,
-        |  max(CASE WHEN p = 5 THEN v END) AS p5,
-        |  max(CASE WHEN p = 6 THEN v END) AS p6,
-        |  max(CASE WHEN p = 7 THEN v END) AS p7
-        |FROM proj GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "mm_phash" ->
-      s"""WITH $phashCtes
-         |SELECT mmd.doc_id AS media_id, kind, ph AS phash
-         |FROM mmhex JOIN mmd USING (doc_id)
-         |ORDER BY media_id""".stripMargin,
-
-    // the fingerprints through the simhash pair chain: identical-hash
-    // classes, 4-hex chunk buckets (rank-capped), exact Hamming verify,
-    // member-list expansion
-    "mm_phash_pairs" ->
-      s"""WITH $phashCtes,
-         |hexed AS (SELECT doc_id, ph AS simhash FROM mmhex),
-         |grp AS (SELECT simhash, (array_agg(doc_id ORDER BY doc_id))[1:1024] AS members,
-         |    min(doc_id) AS rep FROM hexed GROUP BY simhash),
-         |chunks AS (SELECT rep, simhash, c, substr(simhash, 1 + 4*c, 4) AS chunk
-         |  FROM grp, UNNEST([0,1,2,3]) AS cc(c)),
-         |ranked AS (SELECT rep, simhash, c, chunk,
-         |    row_number() OVER (PARTITION BY c, chunk ORDER BY rep) AS rk
-         |  FROM chunks),
-         |cand AS (SELECT DISTINCT l.rep AS r1, r.rep AS r2,
-         |    l.simhash AS h1, r.simhash AS h2
-         |  FROM ranked l JOIN ranked r
-         |  ON l.c = r.c AND l.chunk = r.chunk AND l.rep < r.rep
-         |  WHERE l.rk <= 1024 AND r.rk <= 1024),
-         |ham AS (SELECT r1, r2,
-         |  (SELECT sum(bit_count(xor(
-         |      strpos('0123456789abcdef', substr(h1, i, 1)) - 1,
-         |      strpos('0123456789abcdef', substr(h2, i, 1)) - 1)))
-         |   FROM UNNEST(generate_series(1, 16)) AS g(i)) AS hamming
-         |  FROM cand),
-         |pass AS (SELECT r1, r2, hamming FROM ham WHERE hamming <= 3),
-         |crossp AS (SELECT least(a, b) AS m1, greatest(a, b) AS m2, hamming
-         |  FROM pass JOIN grp g1 ON g1.rep = r1 JOIN grp g2 ON g2.rep = r2,
-         |       UNNEST(g1.members) AS u1(a), UNNEST(g2.members) AS u2(b)),
-         |within AS (SELECT a AS m1, b AS m2, 0 AS hamming
-         |  FROM grp, UNNEST(members) AS u1(a), UNNEST(members) AS u2(b)
-         |  WHERE a < b)
-         |SELECT m1, m2, CAST(hamming AS INT) AS hamming
-         |FROM (SELECT * FROM crossp UNION ALL SELECT * FROM within)
-         |ORDER BY m1, m2""".stripMargin,
-
-    "sample_stratified" ->
-      """SELECT doc_id, lang, source,
-        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS sample_key
-        |FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
-        |  CASE lang WHEN 'en' THEN '4000' WHEN 'zh' THEN '2000' ELSE '8000' END
-        |ORDER BY doc_id""".stripMargin,
-
-    // the priority key (draw·2^20 div w) is exact BIGINT floor division
-    // in both engines (positive operands, so DuckDB // ≡ Spark div);
-    // the displayed priority is one exactly-rounded IEEE division of
-    // exact-below-2^53 integers
-    "sample_priority" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    CAST(CAST(('0x' || substr(md5('pri:' || CAST(doc_id AS VARCHAR)),
-        |      1, 8)) AS UBIGINT) AS BIGINT) + 1 AS draw
-        |  FROM documents),
-        |kd AS (SELECT doc_id, n_tokens, draw,
-        |    CAST((draw * 1048576) // n_tokens AS BIGINT) AS pkey,
-        |    CAST(n_tokens AS DOUBLE) * 4294967296.0 / CAST(draw AS DOUBLE)
-        |      AS p
-        |  FROM d),
-        |top AS (SELECT doc_id, n_tokens, draw, pkey, p,
-        |    CAST(row_number() OVER (ORDER BY pkey, doc_id) AS BIGINT)
-        |      AS rank
-        |  FROM kd ORDER BY pkey, doc_id LIMIT 21),
-        |tau AS (SELECT max(CASE WHEN rank = 21 THEN p END) AS tau_raw
-        |  FROM top)
-        |SELECT doc_id, n_tokens, draw, pkey, rank,
-        |  floor(CAST((p) AS DOUBLE)*1000000 + 0.5)/1000000 AS priority,
-        |  floor(CAST((coalesce(tau_raw, 0.0)) AS DOUBLE)*1000000 + 0.5)/1000000 AS tau,
-        |  floor(CAST((greatest(CAST(n_tokens AS DOUBLE),
-        |    coalesce(tau_raw, 0.0))) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS est_weight
-        |FROM top, tau WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    // octave = integer bit-length of rank (see zipfProfile scaladoc:
-    // Spark's log2 is ln/ln and floors wrong at exact powers of two)
-    "corpus_zipf" ->
-      """WITH v AS (SELECT t AS token, CAST(count(*) AS BIGINT) AS freq
-        |  FROM (SELECT string_split(text, ' ') AS w FROM documents),
-        |    UNNEST(w) AS u(t)
-        |  GROUP BY t),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS vocab_size,
-        |    CAST(sum(freq) AS BIGINT) AS total_mass FROM v),
-        |r AS (SELECT token, freq,
-        |    CAST(row_number() OVER (ORDER BY freq DESC, token) AS BIGINT)
-        |      AS rank
-        |  FROM v ORDER BY freq DESC, token LIMIT 4096),
-        |o AS (SELECT token, freq, rank,
-        |    CAST(length(bin(rank)) - 1 AS BIGINT) AS octave FROM r),
-        |oa AS (SELECT octave, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(min(rank) AS BIGINT) AS rank_lo,
-        |    CAST(max(rank) AS BIGINT) AS rank_hi,
-        |    CAST(sum(freq) AS BIGINT) AS mass,
-        |    CAST(max(freq) AS BIGINT) AS max_freq,
-        |    CAST(min(freq) AS BIGINT) AS min_freq,
-        |    min_by(token, rank) AS head_token
-        |  FROM o GROUP BY octave),
-        |c AS (SELECT oa.*, lead(mass) OVER (ORDER BY octave) AS next_mass,
-        |    CAST(sum(mass) OVER (ORDER BY octave) AS BIGINT) AS cum_mass
-        |  FROM oa)
-        |SELECT octave, rank_lo, rank_hi, n_tokens, mass, max_freq,
-        |  min_freq, head_token,
-        |  floor(CAST((CAST(mass AS DOUBLE) / CAST(next_mass AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS mass_ratio,
-        |  floor(CAST((CAST(cum_mass AS DOUBLE) / CAST(total_mass AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS coverage,
-        |  vocab_size, total_mass
-        |FROM c, tot ORDER BY octave""".stripMargin,
-
-    // quartile = hex-digit of md5 div 4, the sample_stratified hash
-    // mechanism; all counts BIGINT, ratios single divisions
-    "corpus_heaps" ->
-      """WITH tok AS (SELECT
-        |    CAST((strpos('0123456789abcdef',
-        |      substr(md5('hp:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) // 4
-        |      AS BIGINT) AS quarter,
-        |    t AS token
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |    UNNEST(w) AS u(t)),
-        |occ AS (SELECT quarter, CAST(count(*) AS BIGINT) AS n_tokens
-        |  FROM tok GROUP BY quarter),
-        |ft AS (SELECT token, min(quarter) AS first_q FROM tok
-        |  GROUP BY token),
-        |nt AS (SELECT first_q AS quarter,
-        |    CAST(count(*) AS BIGINT) AS n_new_types
-        |  FROM ft GROUP BY first_q),
-        |j AS (SELECT o.quarter, o.n_tokens,
-        |    CAST(coalesce(n.n_new_types, 0) AS BIGINT) AS n_new_types
-        |  FROM occ o LEFT JOIN nt n ON o.quarter = n.quarter),
-        |c AS (SELECT quarter, n_tokens, n_new_types,
-        |    CAST(sum(n_tokens) OVER (ORDER BY quarter) AS BIGINT)
-        |      AS cum_tokens,
-        |    CAST(sum(n_new_types) OVER (ORDER BY quarter) AS BIGINT)
-        |      AS cum_types
-        |  FROM j)
-        |SELECT quarter, n_tokens, n_new_types, cum_tokens, cum_types,
-        |  floor(CAST((CAST(cum_types AS DOUBLE) / CAST(cum_tokens AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS type_token_ratio,
-        |  floor(CAST((CAST(n_new_types AS DOUBLE) / CAST(n_tokens AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS new_type_rate
-        |FROM c ORDER BY quarter""".stripMargin,
-
-    // the two-phase salted cap is value-identical to the direct window:
-    // phase 1 keeps a superset of the global first-n per source
-    "quota_cap" ->
-      """SELECT doc_id, source,
-        |  CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rk
-        |FROM documents
-        |QUALIFY rk <= 10
-        |ORDER BY source, doc_id""".stripMargin,
-
-    // single-window cumulative-sum reference for the block prefix form
-    "quota_tokens" ->
-      """WITH d AS (SELECT doc_id, source,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, source, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id)
-        |      AS BIGINT) AS cum_tokens
-        |  FROM d)
-        |SELECT doc_id, source, n_tokens, cum_tokens FROM c
-        |WHERE cum_tokens <= 600 ORDER BY source, doc_id""".stripMargin,
-
-    "decontam_ngram" ->
-      """WITH docs AS (SELECT doc_id, source, string_split(text, ' ') AS w
-        |  FROM documents),
-        |sh5 AS (SELECT doc_id, source, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(w) - 4, 1)),
-        |    i -> array_to_string(w[i:i+4], ' '))) AS sh FROM docs),
-        |ev AS (SELECT DISTINCT g FROM (
-        |  SELECT unnest(sh) AS g FROM sh5 WHERE source = 'src0')),
-        |tr AS (SELECT doc_id, unnest(sh) AS g FROM sh5 WHERE source <> 'src0'),
-        |hits AS (SELECT doc_id, count(*) AS n_hit FROM tr
-        |  WHERE g IN (SELECT g FROM ev) GROUP BY doc_id)
-        |SELECT d.doc_id, d.source,
-        |  COALESCE(h.n_hit, 0) AS n_hit_grams,
-        |  COALESCE(h.n_hit, 0) > 0 AS contaminated
-        |FROM documents d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.source <> 'src0' ORDER BY doc_id""".stripMargin,
-
-    // the embedding twin of decontam_ngram: max cosine vs the src0
-    // panel, nearest eval doc by (sim desc, eid asc) window tie-break
-    "decontam_semantic" -> {
-      val cos = cosSql("CAST(ce[i] AS DOUBLE)", "CAST(ee[i] AS DOUBLE)")
-      s"""WITH d AS (SELECT doc_id, source FROM documents),
-         |e AS (SELECT vec_id, embedding FROM embeddings),
-         |ev AS (SELECT e.vec_id AS eid, e.embedding AS ee
-         |  FROM e JOIN d ON d.doc_id = e.vec_id WHERE d.source = 'src0'),
-         |tr AS (SELECT e.vec_id AS cid, d.source, e.embedding AS ce
-         |  FROM e JOIN d ON d.doc_id = e.vec_id WHERE d.source <> 'src0'),
-         |s AS (SELECT cid, source, eid, floor(CAST(($cos) AS DOUBLE)*1000000 + 0.5)/1000000 AS rsim
-         |  FROM tr, ev),
-         |r AS (SELECT cid, eid, row_number() OVER (
-         |    PARTITION BY cid ORDER BY rsim DESC, eid ASC) AS rk FROM s),
-         |a AS (SELECT cid, max(rsim) AS mx,
-         |    CAST(sum(CASE WHEN rsim >= 0.35 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n FROM s GROUP BY cid)
-         |SELECT t.cid AS doc_id, t.source, a.mx AS max_eval_sim,
-         |  r.eid AS nearest_eval, COALESCE(a.n, 0) AS n_eval_hits,
-         |  COALESCE(a.mx >= 0.35, false) AS contaminated
-         |FROM tr t LEFT JOIN a ON a.cid = t.cid
-         |LEFT JOIN r ON r.cid = t.cid AND r.rk = 1
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // the same gram world as decontam_ngram, rolled up per EVAL doc
-    "decontam_eval_report" ->
-      """WITH docs AS (SELECT doc_id, source, string_split(text, ' ') AS w
-        |  FROM documents),
-        |sh5 AS (SELECT doc_id, source, list_distinct(list_transform(
-        |    generate_series(1, greatest(len(w) - 4, 1)),
-        |    i -> array_to_string(w[i:i+4], ' '))) AS sh FROM docs),
-        |ev AS (SELECT doc_id AS eval_doc, unnest(sh) AS g
-        |  FROM sh5 WHERE source = 'src0'),
-        |tr AS (SELECT doc_id AS train_doc, unnest(sh) AS g
-        |  FROM sh5 WHERE source <> 'src0'),
-        |leaks AS (SELECT eval_doc,
-        |    CAST(count(DISTINCT train_doc) AS BIGINT) AS n_leaking_docs,
-        |    CAST(count(DISTINCT g) AS BIGINT) AS n_shared_grams
-        |  FROM tr JOIN ev USING (g) GROUP BY eval_doc)
-        |SELECT d.doc_id AS eval_doc,
-        |  COALESCE(l.n_leaking_docs, 0) AS n_leaking_docs,
-        |  COALESCE(l.n_shared_grams, 0) AS n_shared_grams,
-        |  COALESCE(l.n_leaking_docs, 0) > 0 AS compromised
-        |FROM documents d LEFT JOIN leaks l ON d.doc_id = l.eval_doc
-        |WHERE d.source = 'src0' ORDER BY eval_doc""".stripMargin,
-
-    // token-level Gopher repetition twin: bigram = w[i:i+1] (inclusive
-    // DuckDB slice = 2 tokens), trigram = w[i:i+2]; the mode count folds
-    // over the distinct list exactly like the Spark HOF chain
-    "text_repetition" ->
-      """WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT doc_id, len(w) AS n_tokens,
-        |    list_transform(generate_series(1, greatest(len(w) - 1, 1)),
-        |      i -> array_to_string(w[i:i+1], ' ')) AS bg,
-        |    list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-        |      i -> array_to_string(w[i:i+2], ' ')) AS tg
-        |  FROM docs),
-        |m AS (SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |    floor(CAST((CAST(list_max(list_transform(list_distinct(bg),
-        |      d -> len(list_filter(bg, x -> x = d)))) AS DOUBLE) / len(bg)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |      AS top_bigram_frac,
-        |    floor(CAST((CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / len(tg)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |      AS dup_trigram_frac
-        |  FROM g)
-        |SELECT doc_id, n_tokens, top_bigram_frac, dup_trigram_frac,
-        |  top_bigram_frac <= 0.06 AND dup_trigram_frac <= 0.02
-        |    AS keep_repetition
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "corpus_stats" ->
-      """WITH t AS (SELECT lang, n_chars,
-        |    len(string_split(text, ' ')) AS n_tokens FROM documents)
-        |SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-        |  floor(CAST((CAST(sum(n_tokens) AS DOUBLE) / count(*)) AS DOUBLE)*1000000 + 0.5)/1000000 AS avg_tokens,
-        |  min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-        |  floor(CAST((quantile_cont(n_tokens, 0.5)) AS DOUBLE)*1000000 + 0.5)/1000000 AS p50_tokens,
-        |  floor(CAST((quantile_cont(n_tokens, 0.9)) AS DOUBLE)*1000000 + 0.5)/1000000 AS p90_tokens
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "split_assign" ->
-      """SELECT doc_id, lang,
-        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS split_key,
-        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '0ccc' THEN 'test'
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999' THEN 'val'
-        |       ELSE 'train' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // mirrors int8RescoreTopK: per-vector int8 quantization (the
-    // emb_quantize formula), exact-integer dot as the stage-1 score
-    // (de-quantized through the identical left-assoc IEEE sequence),
-    // top-20 pool per query, exact float rescore to top-5
-    "ann_int8_topk" ->
-      s"""WITH s AS (SELECT vec_id, embedding,
-         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale
-         |  FROM embeddings),
-         |qn AS (SELECT vec_id, embedding, scale,
-         |    list_transform(embedding, v -> CASE WHEN scale = 0 THEN 0
-         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-         |  FROM s),
-         |q AS (SELECT * FROM qn WHERE vec_id < 10),
-         |c AS (SELECT * FROM qn WHERE vec_id >= 10),
-         |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
-         |      / (q.nrm * c.nrm) AS ascore
-         |  FROM q, c),
-         |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 20),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
-         |      / (qnn * cnn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // the rung decision table: one q×c pair pass carries the exact sim
-    // AND all three approximate scores; each method pools/rescores from
-    // it, hits count against the shared truth panel
-    "ann_compression_recall" ->
-      s"""WITH s AS (SELECT vec_id, embedding,
-         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-         |    sqrt(list_sum(list_transform(generate_series(1, 16),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS pn,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h2
-         |  FROM embeddings),
-         |s2 AS (SELECT *, list_transform(embedding,
-         |    v -> CASE WHEN scale = 0 THEN 0
-         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi
-         |  FROM s),
-         |q AS (SELECT * FROM s2 WHERE vec_id < 10),
-         |c AS (SELECT * FROM s2 WHERE vec_id >= 10),
-         |ex0 AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
-         |      / (q.nrm * c.nrm) AS sim,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
-         |      / (q.nrm * c.nrm) AS a_i8,
-         |    list_sum(list_transform(generate_series(1, 16),
-         |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
-         |      / (q.pn * c.pn) AS a_mt,
-         |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
-         |  FROM q, c),
-         |truth AS (SELECT qid, cid FROM (SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
-         |  FROM ex0) t WHERE rk <= 3),
-         |i8 AS (SELECT qid, cid FROM (SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
-         |  FROM (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
-         |      row_number() OVER (PARTITION BY qid ORDER BY a_i8 DESC, cid) AS ark
-         |    FROM ex0) p WHERE ark <= 12) pool) r WHERE rk <= 3),
-         |mt AS (SELECT qid, cid FROM (SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
-         |  FROM (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
-         |      row_number() OVER (PARTITION BY qid ORDER BY a_mt DESC, cid) AS ark
-         |    FROM ex0) p WHERE ark <= 12) pool) r WHERE rk <= 3),
-         |bn AS (SELECT qid, cid FROM (SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
-         |  FROM (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
-         |      row_number() OVER (PARTITION BY qid ORDER BY hamm, cid) AS ark
-         |    FROM ex0) p WHERE ark <= 12) pool) r WHERE rk <= 3),
-         |casp1 AS (SELECT qid, cid, sim, a_i8 FROM (SELECT qid, cid, sim,
-         |      a_i8, row_number() OVER (PARTITION BY qid
-         |        ORDER BY hamm, cid) AS brk
-         |    FROM ex0) p WHERE brk <= 24),
-         |casp2 AS (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
-         |      row_number() OVER (PARTITION BY qid
-         |        ORDER BY a_i8 DESC, cid) AS irk
-         |    FROM casp1) p WHERE irk <= 12),
-         |cas AS (SELECT qid, cid FROM (SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
-         |  FROM casp2) r WHERE rk <= 3),
-         |hits AS (
-         |  SELECT 'float32' AS method, 256 AS b, 0 AS b2, count(*) AS n_hits FROM truth
-         |  UNION ALL SELECT 'int8', 64, 256, count(*)
-         |    FROM i8 JOIN truth USING (qid, cid)
-         |  UNION ALL SELECT 'matryoshka16', 64, 256, count(*)
-         |    FROM mt JOIN truth USING (qid, cid)
-         |  UNION ALL SELECT 'binary', 16, 256, count(*)
-         |    FROM bn JOIN truth USING (qid, cid)
-         |  UNION ALL SELECT 'binary_int8', 16, 320, count(*)
-         |    FROM cas JOIN truth USING (qid, cid)),
-         |tot AS (SELECT count(*) AS n_true FROM truth)
-         |SELECT method, CAST(b AS BIGINT) AS stage1_bytes_per_vec,
-         |  CAST(b2 AS BIGINT) AS stage2_bytes_per_pool_row,
-         |  CAST(n_hits AS BIGINT) AS n_hits, CAST(n_true AS BIGINT) AS n_true,
-         |  floor(CAST((CAST(n_hits AS DOUBLE) / n_true) AS DOUBLE)*1000000 + 0.5)/1000000
-         |    AS recall
-         |FROM hits, tot ORDER BY method""".stripMargin,
-
-    // the external panel through the binary rung: double-typed panel
-    // vectors sign-pack through the same shift sum, whole table searched
-    "ann_external_binary" ->
-      s"""WITH ${externalPanelCte(5)},
-         |qs AS (SELECT qid, qe,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * qe[i]))) AS qn,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS qh1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS qh2
-         |  FROM q),
-         |c AS (SELECT vec_id AS cid, embedding AS ce,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS ch1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS ch2
-         |  FROM embeddings),
-         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
-         |    bit_count(xor(qs.qh1, c.ch1)) + bit_count(xor(qs.qh2, c.ch2))
-         |      AS hamm
-         |  FROM qs, c),
-         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 12),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // the external panel through the prefix-dim rung
-    "ann_external_matryoshka" ->
-      s"""WITH ${externalPanelCte(5)},
-         |qs AS (SELECT qid, qe,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * qe[i]))) AS qn,
-         |    sqrt(list_sum(list_transform(generate_series(1, 16),
-         |      i -> qe[i] * qe[i]))) AS qpn
-         |  FROM q),
-         |c AS (SELECT vec_id AS cid, embedding AS ce,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
-         |    sqrt(list_sum(list_transform(generate_series(1, 16),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cpn
-         |  FROM embeddings),
-         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
-         |    list_sum(list_transform(generate_series(1, 16),
-         |      i -> qs.qe[i] * CAST(c.ce[i] AS DOUBLE))) / (qs.qpn * c.cpn)
-         |      AS ascore
-         |  FROM qs, c),
-         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 12),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // the external panel against the STANDING binary rung table: same
-    // math as ann_external_binary over the indexed vec_id >= 10
-    // partition (the partition the standing table covers)
-    "ann_external_binary_indexed" ->
-      s"""WITH ${externalPanelCte(5)},
-         |qs AS (SELECT qid, qe,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * qe[i]))) AS qn,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS qh1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS qh2
-         |  FROM q),
-         |c AS (SELECT vec_id AS cid, embedding AS ce,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS ch1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS ch2
-         |  FROM embeddings WHERE vec_id >= 10),
-         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
-         |    bit_count(xor(qs.qh1, c.ch1)) + bit_count(xor(qs.qh2, c.ch2))
-         |      AS hamm
-         |  FROM qs, c),
-         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 12),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // the external panel against the STANDING matryoshka rung table
-    "ann_external_matryoshka_indexed" ->
-      s"""WITH ${externalPanelCte(5)},
-         |qs AS (SELECT qid, qe,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * qe[i]))) AS qn,
-         |    sqrt(list_sum(list_transform(generate_series(1, 16),
-         |      i -> qe[i] * qe[i]))) AS qpn
-         |  FROM q),
-         |c AS (SELECT vec_id AS cid, embedding AS ce,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
-         |    sqrt(list_sum(list_transform(generate_series(1, 16),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cpn
-         |  FROM embeddings WHERE vec_id >= 10),
-         |ap AS (SELECT qs.qid, c.cid, qs.qe, c.ce, qs.qn, c.cn,
-         |    list_sum(list_transform(generate_series(1, 16),
-         |      i -> qs.qe[i] * CAST(c.ce[i] AS DOUBLE))) / (qs.qpn * c.cpn)
-         |      AS ascore
-         |  FROM qs, c),
-         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 12),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // the external panel against the STANDING int8 rung table: panel
-    // quantizes query-side through the same symmetric int8 recipe
-    "ann_external_int8_indexed" ->
-      s"""WITH ${externalPanelCte(5)},
-         |qs AS (SELECT qid, qe,
-         |    list_max(list_transform(qe, v -> abs(v))) AS qscale,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * qe[i]))) AS qn
-         |  FROM q),
-         |qq AS (SELECT *, list_transform(qe,
-         |    v -> CASE WHEN qscale = 0 THEN 0
-         |      ELSE floor(v * 127.0 / qscale + 0.5) END) AS qqi
-         |  FROM qs),
-         |c AS (SELECT vec_id AS cid, embedding AS ce,
-         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS cscale,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn
-         |  FROM embeddings WHERE vec_id >= 10),
-         |cc AS (SELECT *, list_transform(ce,
-         |    v -> CASE WHEN cscale = 0 THEN 0
-         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / cscale + 0.5) END) AS cqi
-         |  FROM c),
-         |ap AS (SELECT qq.qid, cc.cid, qq.qe, cc.ce, qq.qn, cc.cn,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qq.qqi[i] * cc.cqi[i])) * qq.qscale * cc.cscale / 16129.0
-         |      / (qq.qn * cc.cn) AS ascore
-         |  FROM qq, cc),
-         |pool AS (SELECT qid, cid, qe, ce, qn, cn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 12),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // the external panel through the cascade funnel: hamming pool 24
-    // (2·4·3), int8 re-rank to 12, exact rescore to top-3, candidates
-    // the indexed vec_id >= 10 partition
-    "ann_external_cascade" ->
-      s"""WITH ${externalPanelCte(5)},
-         |qs AS (SELECT qid, qe,
-         |    list_max(list_transform(qe, v -> abs(v))) AS qscale,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * qe[i]))) AS qn,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS qh1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN qe[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS qh2
-         |  FROM q),
-         |qq AS (SELECT *, list_transform(qe,
-         |    v -> CASE WHEN qscale = 0 THEN 0
-         |      ELSE floor(v * 127.0 / qscale + 0.5) END) AS qqi
-         |  FROM qs),
-         |c AS (SELECT vec_id AS cid, embedding AS ce,
-         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS cscale,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS cn,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS ch1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS ch2
-         |  FROM embeddings WHERE vec_id >= 10),
-         |cc AS (SELECT *, list_transform(ce,
-         |    v -> CASE WHEN cscale = 0 THEN 0
-         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / cscale + 0.5) END) AS cqi
-         |  FROM c),
-         |ap AS (SELECT qq.qid, cc.cid, qq.qe, cc.ce, qq.qn, cc.cn,
-         |    bit_count(xor(qq.qh1, cc.ch1)) + bit_count(xor(qq.qh2, cc.ch2))
-         |      AS hamm,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qq.qqi[i] * cc.cqi[i])) * qq.qscale * cc.cscale / 16129.0
-         |      / (qq.qn * cc.cn) AS a_i8
-         |  FROM qq, cc),
-         |pool1 AS (SELECT qid, cid, qe, ce, qn, cn, a_i8 FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY hamm, cid) AS brk FROM ap) WHERE brk <= 24),
-         |pool2 AS (SELECT qid, cid, qe, ce, qn, cn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY a_i8 DESC, cid) AS irk FROM pool1) WHERE irk <= 12),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> qe[i] * CAST(ce[i] AS DOUBLE))) / (qn * cn) AS sim
-         |  FROM pool2),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // prefix-dim cosine over the first 16 dims ranks the pool; the
-    // exact full-dim rescore mirrors ann_int8_topk's tail
-    "ann_matryoshka_topk" ->
-      s"""WITH s AS (SELECT vec_id, embedding,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-         |    sqrt(list_sum(list_transform(generate_series(1, 16),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS pn
-         |  FROM embeddings),
-         |q AS (SELECT * FROM s WHERE vec_id < 10),
-         |c AS (SELECT * FROM s WHERE vec_id >= 10),
-         |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
-         |    list_sum(list_transform(generate_series(1, 16),
-         |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
-         |      / (q.pn * c.pn) AS ascore
-         |  FROM q, c),
-         |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 20),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
-         |      / (qnn * cnn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // sign-bit fingerprints packed MSB-first into two 32-bit halves
-    // (engine fold acc*2+bit == Σ bit·2^(32-i)); Hamming = XOR +
-    // bit_count, integer-exact; rescore mirrors ann_int8_topk's tail
-    "ann_binary_topk" ->
-      s"""WITH s AS (SELECT vec_id, embedding,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h2
-         |  FROM embeddings),
-         |q AS (SELECT * FROM s WHERE vec_id < 10),
-         |c AS (SELECT * FROM s WHERE vec_id >= 10),
-         |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
-         |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
-         |  FROM q, c),
-         |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 20),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
-         |      / (qnn * cnn) AS sim
-         |  FROM pool),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // the composed binary→int8→float funnel: hamming pool 40 (2·4·5),
-    // int8 re-rank to 20, exact rescore to top-5 — each stage's window
-    // the same tie-break as its standalone rung
-    "ann_cascade_topk" ->
-      s"""WITH s AS (SELECT vec_id, embedding,
-         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h2
-         |  FROM embeddings),
-         |s2 AS (SELECT *, list_transform(embedding,
-         |    v -> CASE WHEN scale = 0 THEN 0
-         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi
-         |  FROM s),
-         |q AS (SELECT * FROM s2 WHERE vec_id < 10),
-         |c AS (SELECT * FROM s2 WHERE vec_id >= 10),
-         |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
-         |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
-         |      / (q.nrm * c.nrm) AS a_i8
-         |  FROM q, c),
-         |pool1 AS (SELECT qid, cid, qe, ce, qnn, cnn, a_i8 FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY hamm, cid) AS brk FROM ap) WHERE brk <= 40),
-         |pool2 AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qid
-         |      ORDER BY a_i8 DESC, cid) AS irk FROM pool1) WHERE irk <= 20),
-         |ex AS (SELECT qid, cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
-         |      / (qnn * cnn) AS sim
-         |  FROM pool2),
-         |rk AS (SELECT qid, cid, sim,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-         |  FROM ex)
-         |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // deterministic health booleans only — the mtime/lag numbers stay
-    // engine-side (agg_approx_percentile error-bound pattern); the
-    // oracle pins the expected-healthy verdict per standing surface.
-    // user_forget_sla: the fixture-registered tombstones are pending
-    // (has_data) and inside the 30-day clock (healthy)
-    "serve_health" ->
-      """SELECT surface, index_present, has_data, healthy FROM (VALUES
-        |  ('dedup_bands', TRUE, TRUE, TRUE),
-        |  ('grams', TRUE, TRUE, TRUE),
-        |  ('ivf_cells', TRUE, TRUE, TRUE),
-        |  ('ivfpq_cells', TRUE, TRUE, TRUE),
-        |  ('pq_codes', TRUE, TRUE, TRUE),
-        |  ('rung_binary', TRUE, TRUE, TRUE),
-        |  ('rung_int8', TRUE, TRUE, TRUE),
-        |  ('rung_matryoshka', TRUE, TRUE, TRUE),
-        |  ('user_forget_sla', TRUE, TRUE, TRUE),
-        |  ('winsor_bounds', TRUE, TRUE, TRUE)
-        |) AS t(surface, index_present, has_data, healthy)
-        |ORDER BY surface""".stripMargin,
-
-    // the takedown-SLA face: pending counts from the three fixture
-    // predicates, no deferral (a batch corpus has no consumer debt),
-    // every clock fresh; the age numbers stay engine-side
-    "forget_sla" ->
-      """WITH v AS (SELECT count(*) AS n FROM embeddings
-        |    WHERE vec_id >= 10 AND vec_id % 23 = 5),
-        |  d AS (SELECT count(*) AS n FROM documents WHERE doc_id % 31 = 7),
-        |  u AS (SELECT count(DISTINCT user_id) AS n FROM events
-        |    WHERE user_id % 41 = 11)
-        |SELECT log, CAST(pending AS BIGINT) AS pending, deferred_because,
-        |  sla_ok
-        |FROM (
-        |  SELECT 'docs' AS log, d.n AS pending,
-        |    'none' AS deferred_because, TRUE AS sla_ok FROM d
-        |  UNION ALL SELECT 'users', u.n, 'none', TRUE FROM u
-        |  UNION ALL SELECT 'vectors', v.n, 'none', TRUE FROM v)
-        |ORDER BY log""".stripMargin,
-
-    // the cascade width grid replayed off ONE pair-scoring CTE chain
-    // (the compression_recall prefix minus the matryoshka columns);
-    // the width CTEs are GENERATED from Rung.cascadeSweepWidths so the
-    // engine rows and the oracle can never drift apart
-    "ann_cascade_sweep" -> {
-      val k = 3
-      val widthCtes = graft.ext.Rung.cascadeSweepWidths.zipWithIndex
-        .map { case ((b, i), n) =>
-          s"""p$n AS (SELECT qid, cid, sim, a_i8 FROM (SELECT qid, cid, sim, a_i8,
-             |    row_number() OVER (PARTITION BY qid ORDER BY hamm, cid) AS brk
-             |  FROM ex0) t WHERE brk <= ${b * i * k}),
-             |r$n AS (SELECT qid, cid, sim FROM (SELECT qid, cid, sim,
-             |    row_number() OVER (PARTITION BY qid ORDER BY a_i8 DESC, cid) AS irk
-             |  FROM p$n) t WHERE irk <= ${i * k}),
-             |f$n AS (SELECT qid, cid FROM (SELECT qid, cid,
-             |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
-             |  FROM r$n) t WHERE rk <= $k)""".stripMargin
-        }.mkString(",\n")
-      val hitRows = graft.ext.Rung.cascadeSweepWidths.zipWithIndex
-        .map { case ((b, i), n) =>
-          s"""  SELECT CAST($b AS INTEGER) AS rescore_binary,
-             |    CAST($i AS INTEGER) AS rescore_int8,
-             |    CAST(${b * i * k} AS BIGINT) AS pool1_rows_per_query,
-             |    CAST(${i * k} AS BIGINT) AS pool2_rows_per_query,
-             |    count(*) AS n_hits FROM f$n JOIN truth USING (qid, cid)""".stripMargin
-        }.mkString("\n  UNION ALL\n")
-      s"""WITH s AS (SELECT vec_id, embedding,
-         |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale,
-         |    sqrt(list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-         |    CAST(list_sum(list_transform(generate_series(1, 32),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h1,
-         |    CAST(list_sum(list_transform(generate_series(33, 64),
-         |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-         |        ELSE 0 END)) AS BIGINT) AS h2
-         |  FROM embeddings),
-         |s2 AS (SELECT *, list_transform(embedding,
-         |    v -> CASE WHEN scale = 0 THEN 0
-         |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi
-         |  FROM s),
-         |q AS (SELECT * FROM s2 WHERE vec_id < 10),
-         |c AS (SELECT * FROM s2 WHERE vec_id >= 10),
-         |ex0 AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
-         |      / (q.nrm * c.nrm) AS sim,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
-         |      / (q.nrm * c.nrm) AS a_i8,
-         |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
-         |  FROM q, c),
-         |truth AS (SELECT qid, cid FROM (SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rk
-         |  FROM ex0) t WHERE rk <= $k),
-         |$widthCtes,
-         |hits AS (
-         |$hitRows),
-         |tot AS (SELECT count(*) AS n_true FROM truth)
-         |SELECT rescore_binary, rescore_int8, pool1_rows_per_query,
-         |  pool2_rows_per_query, CAST(n_hits AS BIGINT) AS n_hits,
-         |  CAST(n_true AS BIGINT) AS n_true,
-         |  floor(CAST((CAST(n_hits AS DOUBLE) / n_true) AS DOUBLE)*1000000 + 0.5)/1000000
-         |    AS recall
-         |FROM hits, tot ORDER BY rescore_binary, rescore_int8""".stripMargin
-    },
-
-    // every per-vector index carries exactly the candidate partition —
-    // the counts are checked cross-engine against the raw corpus
-    "index_coverage" ->
-      """WITH n AS (SELECT count(*) AS c FROM embeddings WHERE vec_id >= 10)
-        |SELECT surface, CAST(c AS BIGINT) AS n_indexed,
-        |  CAST(c AS BIGINT) AS n_candidates, TRUE AS complete
-        |FROM (VALUES ('ivf_cells'), ('ivfpq_cells'), ('pq_codes'),
-        |  ('rung_binary'), ('rung_int8'), ('rung_matryoshka')) t(surface), n
-        |ORDER BY surface""".stripMargin,
-
-    // every rung table carries exactly the candidate partition once —
-    // the counts are checked cross-engine against the raw corpus
-    "rung_consistency" ->
-      """SELECT CAST(n AS BIGINT) AS n_binary,
-        |  CAST(n AS BIGINT) AS n_matryoshka,
-        |  CAST(n AS BIGINT) AS n_int8,
-        |  CAST(n AS BIGINT) AS n_common,
-        |  CAST(1 AS BIGINT) AS max_multiplicity,
-        |  TRUE AS consistent
-        |FROM (SELECT count(*) AS n FROM embeddings WHERE vec_id >= 10)""".stripMargin,
-
-    // the live (tombstone-filtered) exact search: the ann_cosine_topk
-    // chain with the registered deterministic deletion predicate woven
-    // into the candidate CTE — a vector the engine tombstones must
-    // never appear in any rank, and the ranks close up as if it had
-    // never been admitted
-    "ann_forget_exact" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-        |  WHERE vec_id >= 10 AND NOT (vec_id % 23 = 5)),
-        |sims AS (SELECT qid, cid,
-        |    list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))) AS sim
-        |  FROM q, c),
-        |rk AS (SELECT qid, cid, sim,
-        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-        |  FROM sims)
-        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // the live binary-rung indexed search: ann_binary_topk's two-stage
-    // chain, candidates filtered by the same deletion predicate BEFORE
-    // the Hamming pool window (the engine's filter-before-rank
-    // contract — a tombstoned row must not occupy a pool slot either)
-    "ann_forget_topk" ->
-      """WITH s AS (SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
-        |    CAST(list_sum(list_transform(generate_series(1, 32),
-        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
-        |        ELSE 0 END)) AS BIGINT) AS h1,
-        |    CAST(list_sum(list_transform(generate_series(33, 64),
-        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
-        |        ELSE 0 END)) AS BIGINT) AS h2
-        |  FROM embeddings),
-        |q AS (SELECT * FROM s WHERE vec_id < 10),
-        |c AS (SELECT * FROM s WHERE vec_id >= 10 AND NOT (vec_id % 23 = 5)),
-        |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
-        |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
-        |  FROM q, c),
-        |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY qid
-        |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 20),
-        |ex AS (SELECT qid, cid,
-        |    list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
-        |      / (qnn * cnn) AS sim
-        |  FROM pool),
-        |rk AS (SELECT qid, cid, sim,
-        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
-        |  FROM ex)
-        |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // the erasure receipt, pre-apply: every per-vector surface still
-    // physically holds the tombstoned rows (read-path filtering is
-    // what serves deletion correctness between applies), so each
-    // resident count equals the deterministic set's size — all counts
-    // derivable cross-engine from the raw table + the rule
-    "forget_audit" ->
-      """WITH t AS (SELECT count(*) AS n FROM embeddings
-        |    WHERE vec_id >= 10 AND vec_id % 23 = 5),
-        |  c AS (SELECT count(*) AS n FROM embeddings WHERE vec_id >= 10),
-        |  e AS (SELECT count(*) AS n FROM embeddings)
-        |SELECT surface, CAST(rows_total AS BIGINT) AS rows_total,
-        |  CAST(forgotten_resident AS BIGINT) AS forgotten_resident
-        |FROM (
-        |  SELECT 'raw_embeddings' AS surface, e.n AS rows_total,
-        |    t.n AS forgotten_resident FROM e, t
-        |  UNION ALL SELECT 'rung_binary', c.n, t.n FROM c, t
-        |  UNION ALL SELECT 'rung_int8', c.n, t.n FROM c, t
-        |  UNION ALL SELECT 'rung_matryoshka', c.n, t.n FROM c, t
-        |  UNION ALL SELECT 'tombstones', t.n, t.n FROM t)
-        |ORDER BY surface""".stripMargin,
-
-    // the live MinHash-LSH pairs: the dedup_minhash_lsh chain with the
-    // doc deletion predicate woven into its docs source — filtering
-    // BEFORE banding, so capped buckets fill with live docs only
-    "dedup_forget_pairs" ->
-      s"""WITH ${shinglesCteFrom(
-             "(SELECT * FROM documents WHERE NOT (doc_id % 31 = 7))")},
-         |$bandsCte
-         |SELECT d1, d2 FROM cand ORDER BY d1, d2""".stripMargin,
-
-    // doc-side receipt, pre-apply: distinct-key semantics. The standing
-    // band table covers the STANDING-corpus partition (doc_id % 10 in
-    // 0..7 — the incremental-admission split ensureDedupIndex builds),
-    // so its key set and resident count carry that predicate; the raw
-    // store covers everything
-    "forget_docs_audit" ->
-      """WITH t AS (SELECT count(*) AS n FROM documents WHERE doc_id % 31 = 7),
-        |  d AS (SELECT count(*) AS n FROM documents),
-        |  bc AS (SELECT count(*) AS n FROM documents
-        |    WHERE NOT (doc_id % 10 >= 8)),
-        |  bt AS (SELECT count(*) AS n FROM documents
-        |    WHERE doc_id % 31 = 7 AND NOT (doc_id % 10 >= 8))
-        |SELECT surface, CAST(keys_total AS BIGINT) AS keys_total,
-        |  CAST(forgotten_resident AS BIGINT) AS forgotten_resident
-        |FROM (
-        |  SELECT 'dedup_bands' AS surface, bc.n AS keys_total,
-        |    bt.n AS forgotten_resident FROM bc, bt
-        |  UNION ALL SELECT 'raw_documents', d.n, t.n FROM d, t
-        |  UNION ALL SELECT 'tombstones', t.n, t.n FROM t)
-        |ORDER BY surface""".stripMargin,
-
-    // mirrors semanticDedup: trained cells over the WHOLE table
-    // (nQueries = 0), rank-capped membership, within-cell smaller-id
-    // neighbor at cos >= 0.4 drops the vector
-    "dedup_semantic" ->
-      s"""WITH $semanticCellCtes,
-         |pairs AS (SELECT a AS v1, b AS v2
-         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b) WHERE a < b),
-         |drops AS (SELECT DISTINCT v2 AS vec_id FROM pairs
-         |  JOIN v e1 ON e1.vec_id = v1 JOIN v e2 ON e2.vec_id = v2
-         |  WHERE list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
-         |    / (e1.nrm * e2.nrm) >= 0.4),
-         |res AS (SELECT c.vec_id, c.cent_id AS cell, d.vec_id IS NULL AS kept
-         |  FROM cells c LEFT JOIN drops d USING (vec_id))
-         |SELECT vec_id, cell, kept FROM res ORDER BY vec_id""".stripMargin,
-
-    // composes the proven fragments: exact-hash keeps, the recursive
-    // near-dup closure, the pipeline_filter gate, and decontam_ngram's
-    // shingle probe; fractions are single raw divisions (no round)
-    "pipeline_funnel" ->
-      s"""WITH RECURSIVE $shinglesCte,
-         |$bandsCte,
-         |fpairs AS (SELECT d1, d2 FROM cand
-         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |fedges AS (SELECT d1 AS a, d2 AS b FROM fpairs
-         |  UNION SELECT d2, d1 FROM fpairs),
-         |freach(node, r) AS (
-         |  SELECT a, b FROM fedges
-         |  UNION
-         |  SELECT rr.node, e.b FROM freach rr JOIN fedges e ON rr.r = e.a),
-         |fnd AS (SELECT node AS doc_id FROM (
-         |  SELECT node, least(node, min(r)) AS cid FROM freach
-         |  GROUP BY node) WHERE node <> cid),
-         |fex AS (SELECT min(doc_id) AS doc_id FROM documents
-         |  GROUP BY md5(text)),
-         |fdict AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d),
-         |fb AS (SELECT doc_id, source,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter(string_split(lower(text), ' '),
-         |      x -> list_contains(d, x))) AS DOUBLE)
-         |      / len(string_split(lower(text), ' ')) AS stop_ratio
-         |  FROM documents, fdict),
-         |fs1 AS (SELECT * FROM fb
-         |  WHERE doc_id IN (SELECT doc_id FROM fex)),
-         |fs2 AS (SELECT * FROM fs1
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM fnd)),
-         |fs3 AS (SELECT * FROM fs2
-         |  WHERE n_tokens BETWEEN 20 AND 400 AND stop_ratio >= 0.01),
-         |fdocs AS (SELECT doc_id, source, string_split(text, ' ') AS w
-         |  FROM documents),
-         |fsh5 AS (SELECT doc_id, source, list_distinct(list_transform(
-         |    generate_series(1, greatest(len(w) - 4, 1)),
-         |    i -> array_to_string(w[i:i+4], ' '))) AS shg FROM fdocs),
-         |fev AS (SELECT DISTINCT g FROM (
-         |  SELECT unnest(shg) AS g FROM fsh5 WHERE source = 'src0')),
-         |fhits AS (SELECT DISTINCT doc_id FROM (
-         |  SELECT doc_id, unnest(shg) AS g FROM fsh5 WHERE source <> 'src0')
-         |  WHERE g IN (SELECT g FROM fev)),
-         |fs4 AS (SELECT * FROM fs3 WHERE source <> 'src0'
-         |  AND doc_id NOT IN (SELECT doc_id FROM fhits)),
-         |ftot AS (SELECT CAST(count(*) AS BIGINT) AS n0d,
-         |    CAST(sum(n_tokens) AS BIGINT) AS n0t FROM fb),
-         |fstages AS (
-         |  SELECT 0 AS stage, 'raw' AS stage_name,
-         |    CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) AS n_tokens FROM fb
-         |  UNION ALL SELECT 1, 'exact_dedup', CAST(count(*) AS BIGINT),
-         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs1
-         |  UNION ALL SELECT 2, 'near_dedup', CAST(count(*) AS BIGINT),
-         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs2
-         |  UNION ALL SELECT 3, 'quality_gate', CAST(count(*) AS BIGINT),
-         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs3
-         |  UNION ALL SELECT 4, 'decontam', CAST(count(*) AS BIGINT),
-         |    CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM fs4)
-         |SELECT CAST(stage AS BIGINT) AS stage, stage_name, n_docs,
-         |  n_tokens,
-         |  CAST(n_docs AS DOUBLE) / CAST(n0d AS DOUBLE) AS kept_docs_frac,
-         |  CAST(n_tokens AS DOUBLE) / CAST(n0t AS DOUBLE)
-         |    AS kept_tokens_frac
-         |FROM fstages, ftot ORDER BY stage""".stripMargin,
-
-    // all candidate pairs with their exact jaccard, exploded into the
-    // thresholds each clears; n_pairs = half the exploded doc rows
-    "dedup_threshold_sweep" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte,
-         |jp AS (SELECT d1, d2,
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(s1.shingles, s2.shingles)))
-         |      AS jaccard
-         |  FROM cand
-         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2),
-         |ex AS (SELECT t AS threshold, doc
-         |  FROM jp, UNNEST([0.3, 0.5, 0.7, 0.9]) AS tt(t),
-         |    UNNEST([d1, d2]) AS u(doc)
-         |  WHERE jaccard >= t)
-         |SELECT threshold, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
-         |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
-         |FROM ex GROUP BY threshold ORDER BY threshold""".stripMargin,
-
-    // per-doc quality score computed once, exploded into the cutoffs
-    // it clears; grid left-joined so every sweep point emits
-    "quality_threshold_sweep" ->
-      """WITH dicts AS (SELECT
-        |  ['the','a','of','and','to','in','is','it','you','that'] AS en),
-        |d AS (SELECT text, string_split(lower(text), ' ') AS wl,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |q AS (SELECT n_tokens,
-        |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-        |        / length(text)) * 0.5 +
-        |      least(CAST(len(list_filter(wl, x -> list_contains(en, x))) AS DOUBLE)
-        |        / len(wl) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS qs
-        |  FROM d, dicts),
-        |tot AS (SELECT count(*) AS total_docs,
-        |    CAST(sum(n_tokens) AS BIGINT) AS total_tokens FROM q),
-        |grid AS (SELECT CAST(t AS DOUBLE) AS threshold
-        |  FROM UNNEST([0.2, 0.4, 0.6, 0.8]) AS g(t)),
-        |surv AS (SELECT threshold, count(*) AS n_docs,
-        |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-        |  FROM q JOIN grid ON qs >= threshold GROUP BY threshold)
-        |SELECT g.threshold,
-        |  CAST(coalesce(s.n_docs, 0) AS BIGINT) AS n_docs,
-        |  CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |  floor(CAST((CAST(coalesce(s.n_docs, 0) AS DOUBLE) / t.total_docs)
-        |    AS DOUBLE)*1000000 + 0.5)/1000000 AS kept_docs_frac,
-        |  floor(CAST((CAST(coalesce(s.n_tokens, 0) AS DOUBLE) / t.total_tokens)
-        |    AS DOUBLE)*1000000 + 0.5)/1000000 AS kept_tokens_frac
-        |FROM grid g LEFT JOIN surv s USING (threshold), tot t
-        |ORDER BY threshold""".stripMargin,
-
-    // within-cell verified pairs with their exact cosine, exploded into
-    // the thresholds each clears
-    "semantic_threshold_sweep" ->
-      s"""WITH $semanticCellCtes,
-         |spairs AS (SELECT a AS v1, b AS v2
-         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b)
-         |  WHERE a < b),
-         |cp AS (SELECT v1, v2,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
-         |    / (e1.nrm * e2.nrm) AS cs
-         |  FROM spairs JOIN v e1 ON e1.vec_id = v1
-         |  JOIN v e2 ON e2.vec_id = v2),
-         |ex AS (SELECT t AS threshold, vec
-         |  FROM cp, UNNEST([0.3, 0.4, 0.6, 0.8]) AS tt(t),
-         |    UNNEST([v1, v2]) AS u(vec)
-         |  WHERE cs >= t)
-         |SELECT threshold, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
-         |  CAST(count(DISTINCT vec) AS BIGINT) AS n_vecs
-         |FROM ex GROUP BY threshold ORDER BY threshold""".stripMargin,
-
-    // the gopher chain + the text_quality score expression, rolled up
-    // per source; mean quality via the exact DECIMAL(27,6) sum
-    "source_scorecard" ->
-      s"""WITH ${gopherChainCtes("sc")},
-         |en AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d),
-         |q AS (SELECT doc_id, source,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-         |        / length(text)) * 0.5 +
-         |      least(CAST(len(list_filter(string_split(lower(text), ' '),
-         |        x -> list_contains(d, x))) AS DOUBLE)
-         |        / len(string_split(lower(text), ' ')) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS qs
-         |  FROM documents, en),
-         |j AS (SELECT q.source, q.n_tokens, q.qs, g.keep
-         |  FROM q JOIN scgk g USING (doc_id)),
-         |agg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-         |    CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_gopher_keep,
-         |    sum(CAST(qs AS DECIMAL(27,6))) AS qsum
-         |  FROM j GROUP BY source),
-         |tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-         |  FROM agg)
-         |SELECT source, n_docs, n_tokens,
-         |  floor(CAST((CAST(n_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
-         |    AS token_share,
-         |  n_gopher_keep,
-         |  floor(CAST((CAST(n_gopher_keep AS DOUBLE) / CAST(n_docs AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
-         |    AS gopher_keep_rate,
-         |  CAST((CAST(qsum * 1000000 AS BIGINT) // n_docs) * 1000
-         |      + ((CAST(qsum * 1000000 AS BIGINT) % n_docs) * 1000)
-         |        // n_docs AS DOUBLE)
-         |    / 1000000000.0 AS mean_quality
-         |FROM agg, tot ORDER BY source""".stripMargin,
-
-    // the verified near-dup pairs labeled by both endpoints' sources,
-    // unordered-pair rollup; n_pairs = half the exploded doc rows
-    "corpus_overlap_matrix" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte,
-         |pairs AS (SELECT d1, d2 FROM cand
-         |  JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |  WHERE CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(s1.shingles, s2.shingles))) >= 0.5),
-         |lab AS (SELECT least(da.source, db.source) AS source_a,
-         |    greatest(da.source, db.source) AS source_b, d1, d2
-         |  FROM pairs JOIN documents da ON da.doc_id = d1
-         |  JOIN documents db ON db.doc_id = d2),
-         |ex AS (SELECT source_a, source_b, doc
-         |  FROM lab, UNNEST([d1, d2]) AS u(doc))
-         |SELECT source_a, source_b,
-         |  CAST(count(*) // 2 AS BIGINT) AS n_pairs,
-         |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
-         |FROM ex GROUP BY source_a, source_b
-         |ORDER BY source_a, source_b""".stripMargin,
-
-    // the trainIvfCentroids micro-int quantization, distributed:
-    // exact per-dim BIGINT sums -> one rounded division per component;
-    // mean sims via the round-6 DECIMAL(27,6) exact-sum convention
-    "emb_class_sep" ->
-      """WITH qd AS (SELECT label, i,
-        |    floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5) AS v
-        |  FROM embeddings, UNNEST(generate_series(1, 64)) AS g(i)),
-        |cd AS (SELECT label, i,
-        |    floor(sum(v) / count(*) + 0.5) / 1000000.0 AS c
-        |  FROM qd GROUP BY label, i),
-        |cent AS (SELECT label AS clabel, array_agg(c ORDER BY i) AS cemb
-        |  FROM cd GROUP BY label),
-        |cn AS (SELECT clabel, cemb,
-        |    sqrt(list_sum(list_transform(cemb, x -> x * x))) AS cnorm
-        |  FROM cent),
-        |v AS (SELECT label, embedding,
-        |    sqrt(list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
-        |      AS en
-        |  FROM embeddings),
-        |sims AS (SELECT v.label, cn.clabel,
-        |    floor(CAST((list_sum(list_transform(generate_series(1, 64),
-        |      i -> CAST(v.embedding[i] AS DOUBLE) * cemb[i]))
-        |      / (v.en * cn.cnorm)) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
-        |  FROM v, cn)
-        |SELECT CAST(label AS BIGINT) AS label,
-        |  CAST(clabel AS BIGINT) AS clabel,
-        |  CAST(count(*) AS BIGINT) AS n_vecs,
-        |  floor(CAST((CAST(sum(CAST(sim AS DECIMAL(27,6))) AS DOUBLE)
-        |    / count(*)) AS DOUBLE)*1000000 + 0.5)/1000000 AS mean_sim,
-        |  label = clabel AS is_self
-        |FROM sims GROUP BY label, clabel ORDER BY label, clabel""".stripMargin,
-
-    // same trained cells + verified pairs as dedup_semantic, closed
-    // into components by the dedup_cluster recursive reachability
-    "cluster_semantic" ->
-      s"""WITH RECURSIVE $semanticCellCtes,
-         |spairs AS (SELECT a AS v1, b AS v2
-         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b)
-         |  WHERE a < b),
-         |vpairs AS (SELECT v1, v2 FROM spairs
-         |  JOIN v e1 ON e1.vec_id = v1 JOIN v e2 ON e2.vec_id = v2
-         |  WHERE list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
-         |    / (e1.nrm * e2.nrm) >= 0.4),
-         |edges AS (SELECT v1 AS a, v2 AS b FROM vpairs
-         |  UNION SELECT v2, v1 FROM vpairs),
-         |reach(node, r) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT rr.node, e.b FROM reach rr JOIN edges e ON rr.r = e.a),
-         |lbl AS (SELECT node, least(node, min(r)) AS cluster_id
-         |  FROM reach GROUP BY node)
-         |SELECT cluster_id, count(*) AS n_vecs, max(node) AS max_vec
-         |FROM lbl GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
-
-    // same trained cells + rank-cap as dedup_semantic, then DIRECTED
-    // within-cell edges ranked per vector
-    "knn_graph" ->
-      s"""WITH $semanticCellCtes,
-         |edges AS (SELECT a AS vid, b AS nid
-         |  FROM grp, UNNEST(ids) AS u1(a), UNNEST(ids) AS u2(b)
-         |  WHERE a <> b),
-         |sims AS (SELECT vid, nid,
-         |    list_sum(list_transform(generate_series(1, 64),
-         |      i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
-         |    / (e1.nrm * e2.nrm) AS sim
-         |  FROM edges JOIN v e1 ON e1.vec_id = vid
-         |  JOIN v e2 ON e2.vec_id = nid),
-         |rk AS (SELECT vid, nid, sim, row_number() OVER (PARTITION BY vid
-         |    ORDER BY sim DESC, nid) AS rank FROM sims)
-         |SELECT vid AS vec_id, nid AS nbr_id, CAST(rank AS BIGINT) AS rank,
-         |  floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim
-         |FROM rk WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin,
-
-    // chunk i covers w[i*48+1 : i*48+64] (inclusive DuckDB slice, clamped
-    // at the list end exactly like Spark's slice)
-    "chunk_windows" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |x AS (SELECT doc_id, w, (len(w) + 47) // 48 AS n_chunks FROM d),
-        |c AS (SELECT doc_id, i AS chunk_no, w
-        |  FROM x, UNNEST(generate_series(0, CAST(n_chunks - 1 AS BIGINT))) AS g(i))
-        |SELECT doc_id, CAST(chunk_no AS BIGINT) AS chunk_no,
-        |  CAST(chunk_no * 48 + 1 AS BIGINT) AS start_tok,
-        |  CAST(len(w[chunk_no*48+1 : chunk_no*48+64]) AS BIGINT) AS n_chunk_tokens,
-        |  md5(array_to_string(w[chunk_no*48+1 : chunk_no*48+64], ' ')) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_no""".stripMargin,
-
-    // ASCII corpus (asserted in ExtSpec): bytes == characters, so the
-    // byte-mean is the mean of ord() over the chars — exact integer sum,
-    // one IEEE divide, identical in both engines
-    "mm_features" ->
-      """WITH m AS (SELECT doc_id,
-        |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |    octet_length(encode(text)) AS n_bytes,
-        |    CAST(list_sum(list_transform(generate_series(1, length(text)),
-        |      i -> ord(substr(text, i, 1)))) AS DOUBLE) / length(text) AS mb
-        |  FROM documents)
-        |SELECT doc_id, kind, n_bytes, floor(CAST((mb) AS DOUBLE)*1000000 + 0.5)/1000000 AS mean_byte,
-        |  CAST(CASE kind WHEN 'video' THEN n_bytes // 64 + 1
-        |    WHEN 'audio' THEN n_bytes // 16 + 1 ELSE 1 END AS BIGINT) AS frames
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "text_relevance" ->
-      TextAnalysis.relevanceOracleSql(Seq("spark", "table", "stream"), 20),
-
-    // one-pass gate: the repetition, quality-score, and langid formulas
-    // verbatim from their standalone oracles, conjoined
-    "pipeline_quality" ->
-      """WITH dicts AS (SELECT
-        |  ['the','a','of','and','to','in','is','it','you','that'] AS en,
-        |  ['der','die','das','und','ist','nicht','mit','ein','ich','zu'] AS de,
-        |  ['el','la','que','y','en','un','por','con','los','se'] AS es,
-        |  ['le','la','et','les','des','en','un','une','que','dans'] AS fr),
-        |g AS (SELECT doc_id, lang, text,
-        |    string_split(text, ' ') AS w,
-        |    string_split(lower(text), ' ') AS wl
-        |  FROM documents),
-        |m AS (SELECT doc_id, lang, text, wl,
-        |    list_transform(generate_series(1, greatest(len(w) - 1, 1)),
-        |      i -> array_to_string(w[i:i+1], ' ')) AS bg,
-        |    list_transform(generate_series(1, greatest(len(w) - 2, 1)),
-        |      i -> array_to_string(w[i:i+2], ' ')) AS tg
-        |  FROM g),
-        |r AS (SELECT doc_id, lang, text, wl,
-        |    floor(CAST((CAST(list_max(list_transform(list_distinct(bg),
-        |      d -> len(list_filter(bg, x -> x = d)))) AS DOUBLE) / len(bg)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |      AS top_bigram_frac,
-        |    floor(CAST((CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / len(tg)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |      AS dup_trigram_frac
-        |  FROM m),
-        |q AS (SELECT doc_id, lang, top_bigram_frac, dup_trigram_frac,
-        |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-        |        / length(text)) * 0.5 +
-        |      least(CAST(len(list_filter(wl, x -> list_contains(en, x))) AS DOUBLE)
-        |        / len(wl) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS quality_score,
-        |    CAST(len(list_filter(wl, x -> list_contains(en, x))) AS DOUBLE) / len(wl) AS s_en,
-        |    CAST(len(list_filter(wl, x -> list_contains(de, x))) AS DOUBLE) / len(wl) AS s_de,
-        |    CAST(len(list_filter(wl, x -> list_contains(es, x))) AS DOUBLE) / len(wl) AS s_es,
-        |    CAST(len(list_filter(wl, x -> list_contains(fr, x))) AS DOUBLE) / len(wl) AS s_fr
-        |  FROM r, dicts)
-        |SELECT doc_id, lang, quality_score, top_bigram_frac
-        |FROM q
-        |WHERE top_bigram_frac <= 0.06 AND dup_trigram_frac <= 0.02
-        |  AND quality_score >= 0.5
-        |  AND (CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
-        |       WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
-        |       WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END) = lang
-        |ORDER BY doc_id""".stripMargin,
-
-    "mixture_weights" ->
-      """WITH p AS (SELECT lang,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS lang_tokens
-        |  FROM documents GROUP BY lang),
-        |t AS (SELECT CAST(sum(lang_tokens) AS BIGINT) AS total_tokens FROM p),
-        |m AS (SELECT lang, lang_tokens, total_tokens,
-        |    CAST(CASE lang WHEN 'en' THEN 0.125 WHEN 'de' THEN 0.25
-        |      WHEN 'es' THEN 0.25 WHEN 'fr' THEN 0.25
-        |      WHEN 'zh' THEN 0.125 ELSE 0.0 END AS DOUBLE) AS target_share,
-        |    least(CAST(1.0 AS DOUBLE),
-        |      CAST(CASE lang WHEN 'en' THEN 0.125 WHEN 'de' THEN 0.25
-        |      WHEN 'es' THEN 0.25 WHEN 'fr' THEN 0.25
-        |      WHEN 'zh' THEN 0.125 ELSE 0.0 END AS DOUBLE)
-        |      * total_tokens / lang_tokens) AS rate
-        |  FROM p, t)
-        |SELECT lang, lang_tokens,
-        |  CAST(lang_tokens AS DOUBLE) / total_tokens AS actual_share,
-        |  target_share, floor(CAST((rate) AS DOUBLE)*1000000 + 0.5)/1000000 AS sample_rate,
-        |  CASE WHEN rate >= 1.0 THEN 'zzzz'
-        |    ELSE lpad(lower(to_hex(CAST(floor(rate * 65536.0) AS BIGINT))), 4, '0')
-        |  END AS sample_threshold
-        |FROM m ORDER BY lang""".stripMargin,
-
-    // sqrt is correctly rounded per IEEE in both engines, so the
-    // closed-form tau=1/2 rate needs no ordered summation anywhere
-    "mixture_temperature" ->
-      """WITH p AS (SELECT lang,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS lang_tokens
-        |  FROM documents GROUP BY lang),
-        |t AS (SELECT CAST(min(lang_tokens) AS BIGINT) AS min_tokens,
-        |    CAST(sum(lang_tokens) AS BIGINT) AS total_tokens FROM p),
-        |m AS (SELECT lang, lang_tokens, total_tokens,
-        |    sqrt(CAST(min_tokens AS DOUBLE) / lang_tokens) AS rate
-        |  FROM p, t)
-        |SELECT lang, lang_tokens,
-        |  CAST(lang_tokens AS DOUBLE) / total_tokens AS actual_share,
-        |  floor(CAST((rate) AS DOUBLE)*1000000 + 0.5)/1000000 AS sample_rate,
-        |  CASE WHEN rate >= 1.0 THEN 'zzzz'
-        |    ELSE lpad(lower(to_hex(CAST(floor(rate * 65536.0) AS BIGINT))), 4, '0')
-        |  END AS sample_threshold
-        |FROM m ORDER BY lang""".stripMargin,
-
-    // same token convention as quota_tokens; epoch arithmetic mirrors
-    // the engine expression-for-expression (IEEE-exact divisions)
-    "mixture_epochs" ->
-      """WITH p AS (SELECT source,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_src FROM p),
-        |m AS (SELECT source, n_tokens,
-        |    CAST(100000 AS DOUBLE) / n_src AS target,
-        |    least((CAST(100000 AS DOUBLE) / n_src) / n_tokens,
-        |      CAST(4.0 AS DOUBLE)) AS epochs
-        |  FROM p, n)
-        |SELECT source, n_tokens,
-        |  floor(CAST((target) AS DOUBLE)*1000000 + 0.5)/1000000 AS target_tokens,
-        |  floor(CAST((epochs) AS DOUBLE)*1000000 + 0.5)/1000000 AS epochs,
-        |  epochs >= CAST(4.0 AS DOUBLE) AS capped,
-        |  floor(CAST((epochs * n_tokens) AS DOUBLE)*1000000 + 0.5)/1000000 AS effective_tokens,
-        |  floor(CAST((greatest(target - epochs * n_tokens, CAST(0.0 AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS deficit_tokens
-        |FROM m ORDER BY source""".stripMargin,
-
-    "dedup_containment" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte
-         |SELECT d1, d2,
-         |  greatest(
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(s1.shingles),
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(s2.shingles)) AS containment
-         |FROM cand JOIN sh s1 ON s1.doc_id = d1 JOIN sh s2 ON s2.doc_id = d2
-         |WHERE greatest(
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(s1.shingles),
-         |    CAST(len(list_intersect(s1.shingles, s2.shingles)) AS DOUBLE) /
-         |      len(s2.shingles)) >= 0.7
-         |ORDER BY d1, d2""".stripMargin,
-
-    "dedup_editdist" ->
-      s"""WITH $shinglesCte,
-         |$bandsCte
-         |SELECT d1, d2, CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist
-         |FROM cand JOIN documents a ON a.doc_id = d1
-         |JOIN documents b ON b.doc_id = d2
-         |WHERE levenshtein(a.text, b.text) <= 16
-         |ORDER BY d1, d2""".stripMargin,
-
-    // the oracle states the GLOBAL running sum declaratively; the engine
-    // must reproduce it through the block-and-rollup distributed form
-    "pack_greedy" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |o AS (SELECT doc_id, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS tok_offset
-        |  FROM t)
-        |SELECT doc_id, n_tokens, tok_offset,
-        |  tok_offset // 256 AS first_bin,
-        |  (tok_offset + n_tokens - 1) // 256 AS last_bin
-        |FROM o ORDER BY doc_id""".stripMargin,
-
-    // the Morton interleave is the identical bit expression in both
-    // engines (Layout.zValueSql generates the SQL spelling); file ids
-    // are top-of-key bit shifts, manifests plain min/max aggregates
-    // hash-keyed reproducible shuffle; pos via cumulative count (RANGE
-    // frame = the engine's grid-cum semantics, identical under ties)
-    "layout_shuffle" ->
-      """WITH k AS (SELECT doc_id,
-        |    md5(concat('s42:', doc_id)) AS h FROM documents),
-        |p AS (SELECT doc_id,
-        |    CAST(concat('0x', substr(h, 1, 13)) AS BIGINT) AS hkey,
-        |    CAST(concat('0x', substr(h, 14, 2)) AS BIGINT) % 4 AS shard
-        |  FROM k),
-        |c AS (SELECT doc_id, shard,
-        |    count(*) OVER (PARTITION BY shard ORDER BY hkey) AS pos
-        |  FROM p)
-        |SELECT doc_id, CAST(shard AS BIGINT) AS shard,
-        |  CAST(pos AS BIGINT) AS pos
-        |FROM c ORDER BY shard, pos, doc_id""".stripMargin,
-
-    // per-source hash-order ranks (the layout_shuffle window reference
-    // for the engine's block prefix sum), stride positions as the same
-    // fixed-order double ops, doc_id tie-break
-    "layout_interleave" ->
-      """WITH k AS (SELECT doc_id, source,
-        |    CAST(concat('0x',
-        |      substr(md5(concat('s42:', doc_id)), 1, 13)) AS BIGINT)
-        |      AS hkey
-        |  FROM documents),
-        |r AS (SELECT doc_id, source, hkey,
-        |    CAST(count(*) OVER (PARTITION BY source ORDER BY hkey)
-        |      AS BIGINT) AS src_rank
-        |  FROM k),
-        |s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_src
-        |  FROM documents GROUP BY source),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents)
-        |SELECT doc_id, source, src_rank,
-        |  floor(CAST((CAST(src_rank * 2 - 1 AS DOUBLE) *
-        |    (CAST(n_total AS DOUBLE) / CAST(n_src AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000 AS ipos
-        |FROM r JOIN s USING (source), t
-        |ORDER BY ipos, doc_id""".stripMargin,
-
-    // quality-banded shuffle: the text_quality score expression, exact
-    // cumulative-count bands via cross-multiplied integer comparisons,
-    // then the layout_shuffle hash machinery over (phase·2^53 + hkey)
-    "layout_curriculum" ->
-      """WITH en AS (SELECT ['the','a','of','and','to','in','is','it','you','that'] AS d),
-        |q AS (SELECT doc_id,
-        |    floor(CAST(((1.0 - CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS DOUBLE)
-        |        / length(text)) * 0.5 +
-        |      least(CAST(len(list_filter(string_split(lower(text), ' '),
-        |        x -> list_contains(d, x))) AS DOUBLE)
-        |        / len(string_split(lower(text), ' ')) * 10, 1.0) * 0.5) AS DOUBLE)*1000000 + 0.5)/1000000 AS qs
-        |  FROM documents, en),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM q),
-        |c AS (SELECT doc_id, count(*) OVER (ORDER BY qs) AS cnt FROM q),
-        |p AS (SELECT doc_id,
-        |    CAST((cnt - 1) * 3 >= n_total AS BIGINT) +
-        |      CAST((cnt - 1) * 3 >= 2 * n_total AS BIGINT) AS phase,
-        |    CAST(concat('0x', substr(md5(concat('s42:', doc_id)), 1, 13)) AS BIGINT) AS hkey,
-        |    CAST(concat('0x', substr(md5(concat('s42:', doc_id)), 14, 2)) AS BIGINT) % 4 AS shard
-        |  FROM c, n),
-        |s AS (SELECT doc_id, phase, shard,
-        |    count(*) OVER (PARTITION BY shard
-        |      ORDER BY phase * 9007199254740992 + hkey) AS pos
-        |  FROM p)
-        |SELECT doc_id, phase, CAST(shard AS BIGINT) AS shard,
-        |  CAST(pos AS BIGINT) AS pos
-        |FROM s ORDER BY shard, pos, doc_id""".stripMargin,
-
-    "layout_zorder" ->
-      s"""WITH ev AS (SELECT user_id % 1024 AS u,
-         |    CAST(floor(epoch_ms(ts) / 1000.0 / 180.0) AS BIGINT) % 1024 AS tslot
-         |  FROM events),
-         |z AS (SELECT 'zorder' AS layout,
-         |    (${Layout.zValueSql("u", "tslot", 10)} >> 14) AS file_id, u, tslot
-         |  FROM ev),
-         |r AS (SELECT 'range' AS layout, (u >> 4) AS file_id, u, tslot FROM ev),
-         |a AS (SELECT * FROM z UNION ALL SELECT * FROM r)
-         |SELECT layout, file_id, count(*) AS n_rows,
-         |  min(u) AS min_u, max(u) AS max_u,
-         |  min(tslot) AS min_t, max(tslot) AS max_t,
-         |  max(tslot) - min(tslot) AS tslot_span
-         |FROM a GROUP BY layout, file_id ORDER BY layout, file_id""".stripMargin,
-
-    // non-overlapping 3-token spans; boilerplate = span present in
-    // ≥ ceil(1% of docs) distinct documents; docs rebuilt from surviving
-    // spans in position order (string_agg ORDER BY pos ≅ the engine's
-    // array_sort(collect_list(struct(pos, span))))
-    "clean_boilerplate" ->
-      """WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |sp AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+2], ' ') AS span
-        |  FROM docs, UNNEST(generate_series(1, len(w), 3)) AS t(i)),
-        |nd AS (SELECT count(*) AS n_docs FROM docs),
-        |boiler AS (SELECT span FROM (
-        |    SELECT span, count(DISTINCT doc_id) AS df FROM sp GROUP BY span),
-        |    nd WHERE df >= ceil(n_docs * 0.01)),
-        |kept AS (SELECT * FROM sp WHERE span NOT IN (SELECT span FROM boiler)),
-        |rebuilt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans_kept,
-        |    md5(string_agg(span, ' ' ORDER BY pos)) AS cleaned_md5
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(len(generate_series(1, len(d.w), 3)) AS BIGINT) AS n_spans,
-        |  coalesce(r.n_spans_kept, 0) AS n_spans_kept,
-        |  CAST(len(generate_series(1, len(d.w), 3)) AS BIGINT)
-        |    - coalesce(r.n_spans_kept, 0) AS n_spans_dropped,
-        |  coalesce(r.cleaned_md5, md5('')) AS cleaned_md5
-        |FROM docs d LEFT JOIN rebuilt r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "index_postings" ->
-      """WITH td AS (SELECT DISTINCT token, doc_id FROM
-        |    (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |    UNNEST(w) AS t(token)),
-        |r AS (SELECT token, doc_id,
-        |    row_number() OVER (PARTITION BY token ORDER BY doc_id) AS rk
-        |  FROM td)
-        |SELECT token, CAST(count(*) AS BIGINT) AS df,
-        |  string_agg(CASE WHEN rk <= 8 THEN CAST(doc_id AS VARCHAR) END,
-        |    ',' ORDER BY doc_id) AS postings
-        |FROM r GROUP BY token
-        |ORDER BY df DESC, token ASC LIMIT 50""".stripMargin,
-
-    // the salted plan must be value-identical to the plain join
-    "join_skew_salted" ->
-      """SELECT o.o_orderpriority,
-        |  count(*) AS n_items,
-        |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(27,4))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(27,4))) AS DOUBLE)
-        |    AS sum_price
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin,
-
-    // bloom false positives are cleared by the exact join, so the
-    // pruned plan equals the plain join
-    "join_bloom_prune" ->
-      """SELECT l.l_returnflag, count(*) AS n_items,
-        |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(27,4))) AS DOUBLE) AS sum_qty
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT'
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-
-    // first-occurrence = rank 1 over (doc_id, seg_no) within the segment
-    // hash — identical keeper to the engine's min(struct) aggregation
-    "dedup_segments" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |segs AS (SELECT doc_id, s AS seg_no,
-        |    array_to_string(w[1 + 5*s : 5 + 5*s], ' ') AS seg
-        |  FROM d, UNNEST(generate_series(0,
-        |    CAST((len(w) + 4) // 5 AS INT) - 1)) AS g(s)),
-        |rk AS (SELECT doc_id, seg_no, seg,
-        |    row_number() OVER (PARTITION BY md5(seg)
-        |      ORDER BY doc_id, seg_no) AS rk
-        |  FROM segs)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_segs,
-        |  CAST(sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(sum(CASE WHEN rk = 1 THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
-        |  md5(coalesce(string_agg(CASE WHEN rk = 1 THEN seg END,
-        |    ' ' ORDER BY seg_no), '')) AS dedup_md5
-        |FROM rk GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "dedup_substring" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g0 AS (SELECT doc_id, w,
-        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
-        |  FROM t),
-        |g AS (SELECT doc_id, p,
-        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
-        |  FROM g0),
-        |rep AS (SELECT gh FROM g GROUP BY gh
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |cov AS (SELECT DISTINCT doc_id, pos FROM (
-        |  SELECT g.doc_id, unnest(generate_series(g.p, g.p + 4)) AS pos
-        |  FROM g JOIN rep USING (gh))),
-        |tok AS (SELECT doc_id, unnest(w) AS tok,
-        |    generate_subscripts(w, 1) AS pos
-        |  FROM t)
-        |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(count(cov.pos) AS BIGINT) AS n_removed,
-        |  md5(coalesce(string_agg(CASE WHEN cov.pos IS NULL THEN tok.tok END,
-        |    ' ' ORDER BY tok.pos), '')) AS clean_md5
-        |FROM tok LEFT JOIN cov
-        |  ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-        |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin,
-
-    // the boundary rule and the running-sum chunk assignment replayed
-    // with the same window frames; exact BIGINT counts, two final
-    // divisions
-    "chunk_cdc" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w
-        |  FROM documents),
-        |tok AS (SELECT doc_id, lang, unnest(w) AS tok,
-        |    generate_subscripts(w, 1) AS pos
-        |  FROM t),
-        |g0 AS (SELECT doc_id, w,
-        |    unnest(generate_series(1, greatest(len(w) - 3, 0))) AS p
-        |  FROM t),
-        |g AS (SELECT doc_id, p + 3 AS pos, 1 AS is_end FROM g0
-        |  WHERE substr(md5(array_to_string(w[p : p + 3], ' ')), 1, 1) = '0'),
-        |ch AS (SELECT tok.doc_id, tok.lang, tok.pos, tok.tok,
-        |    coalesce(sum(g.is_end) OVER (PARTITION BY tok.doc_id
-        |      ORDER BY tok.pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS chunk_id
-        |  FROM tok LEFT JOIN g ON tok.doc_id = g.doc_id AND tok.pos = g.pos),
-        |chunks AS (SELECT doc_id, lang, chunk_id,
-        |    CAST(count(*) AS BIGINT) AS n_tok,
-        |    md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_hash
-        |  FROM ch GROUP BY doc_id, lang, chunk_id)
-        |SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_chunks,
-        |  CAST(count(DISTINCT chunk_hash) AS BIGINT) AS n_distinct_chunks,
-        |  floor(CAST((CAST(count(DISTINCT chunk_hash) AS DOUBLE) /
-        |    CAST(count(*) AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000 AS distinct_ratio,
-        |  floor(CAST((CAST(sum(n_tok) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000
-        |    AS avg_chunk_tokens
-        |FROM chunks GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // window minima replayed with the same frame (CURRENT ROW .. w-1
-    // FOLLOWING, truncating at the partition end for short docs); the
-    // bucket cap is the usual rank-on-sorted-ids <= cap
-    "dedup_winnow" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |g0 AS (SELECT doc_id, w,
-         |    unnest(generate_series(1, greatest(len(w) - 3, 0))) AS p
-         |  FROM t),
-         |g AS (SELECT doc_id, p,
-         |    md5(array_to_string(w[p : p + 3], ' ')) AS gh
-         |  FROM g0),
-         |wins AS (SELECT doc_id, p,
-         |    min(gh) OVER (PARTITION BY doc_id ORDER BY p
-         |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-         |    count(*) OVER (PARTITION BY doc_id) AS ng
-         |  FROM g),
-         |fps AS (SELECT DISTINCT doc_id, fp FROM wins
-         |  WHERE p <= greatest(ng - 3, 1)),
-         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nf
-         |  FROM fps GROUP BY doc_id),
-         |capped AS (SELECT doc_id, fp FROM (SELECT doc_id, fp,
-         |    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
-         |  FROM fps) t2 WHERE rk <= $cap),
-         |shared AS (SELECT a.doc_id AS d1, b.doc_id AS d2,
-         |    CAST(count(*) AS BIGINT) AS n_shared
-         |  FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id
-         |  HAVING count(*) >= 2)
-         |SELECT d1, d2, n_shared,
-         |  floor(CAST((CAST(n_shared AS DOUBLE) /
-         |    CAST(least(c1.nf, c2.nf) AS DOUBLE)) AS DOUBLE)*1000000 + 0.5)/1000000 AS overlap
-         |FROM shared JOIN cnt c1 ON shared.d1 = c1.doc_id
-         |JOIN cnt c2 ON shared.d2 = c2.doc_id
-         |ORDER BY d1, d2""".stripMargin,
-
-    "tokenizer_pair_counts" ->
-      """WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |ww AS (SELECT w FROM w0 WHERE len(w) > 0),
-        |inner_pairs AS (SELECT unnest(list_transform(
-        |    generate_series(1, greatest(len(w) - 1, 0)),
-        |    i -> substring(w, i, 2))) AS pair
-        |  FROM ww WHERE len(w) >= 2),
-        |term_pairs AS (SELECT substring(w, -1, 1) || '</w>' AS pair FROM ww),
-        |allp AS (SELECT pair FROM inner_pairs
-        |  UNION ALL SELECT pair FROM term_pairs)
-        |SELECT pair, CAST(count(*) AS BIGINT) AS cnt
-        |FROM allp GROUP BY pair
-        |ORDER BY cnt DESC, pair LIMIT 40""".stripMargin,
-
-    "snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, lang AS lang1, md5(text) AS h1,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok1
-        |  FROM documents WHERE doc_id % 7 <> 0),
-        |v2 AS (SELECT doc_id, lang AS lang2,
-        |    md5(CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END) AS h2,
-        |    CAST(len(string_split(
-        |      CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END,
-        |      ' ')) AS BIGINT) AS tok2
-        |  FROM documents WHERE doc_id % 5 <> 0),
-        |d AS (SELECT coalesce(lang1, lang2) AS lang,
-        |    CASE WHEN h1 IS NULL THEN 'added'
-        |      WHEN h2 IS NULL THEN 'removed'
-        |      WHEN h1 = h2 THEN 'unchanged'
-        |      ELSE 'changed' END AS status,
-        |    coalesce(tok2, 0) - coalesce(tok1, 0) AS tok_delta
-        |  FROM v1 FULL OUTER JOIN v2 USING (doc_id))
-        |SELECT lang, status, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(tok_delta) AS BIGINT) AS tok_delta
-        |FROM d GROUP BY lang, status ORDER BY lang, status""".stripMargin,
-
-    "corpus_dup_profile" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w
-        |  FROM documents),
-        |g0 AS (SELECT doc_id, w,
-        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
-        |  FROM t),
-        |g AS (SELECT doc_id, p,
-        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
-        |  FROM g0),
-        |rep AS (SELECT gh FROM g GROUP BY gh
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |cov AS (SELECT doc_id, count(*) AS covered FROM (
-        |  SELECT DISTINCT doc_id, pos FROM (
-        |    SELECT g.doc_id, unnest(generate_series(g.p, g.p + 4)) AS pos
-        |    FROM g JOIN rep USING (gh))) GROUP BY doc_id)
-        |SELECT t.lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(t.w)) AS BIGINT) AS n_tokens,
-        |  CAST(sum(coalesce(cov.covered, 0)) AS BIGINT) AS dup_tokens,
-        |  floor(CAST((CAST(sum(coalesce(cov.covered, 0)) AS DOUBLE)
-        |    / sum(len(t.w))) AS DOUBLE)*1000000 + 0.5)/1000000 AS dup_ratio
-        |FROM t LEFT JOIN cov USING (doc_id)
-        |GROUP BY t.lang ORDER BY t.lang""".stripMargin,
-
-    "dedup_substring_runs" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g0 AS (SELECT doc_id, w,
-        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
-        |  FROM t),
-        |g AS (SELECT doc_id, p,
-        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
-        |  FROM g0),
-        |rep AS (SELECT gh FROM g GROUP BY gh
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |cov AS (SELECT DISTINCT doc_id, pos FROM (
-        |  SELECT g.doc_id, unnest(generate_series(g.p, g.p + 4)) AS pos
-        |  FROM g JOIN rep USING (gh))),
-        |runs AS (SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        |  FROM cov),
-        |kept AS (SELECT doc_id, pos FROM (
-        |  SELECT doc_id, pos,
-        |      count(*) OVER (PARTITION BY doc_id, grp) AS run_len
-        |    FROM runs) WHERE run_len >= 8),
-        |tok AS (SELECT doc_id, unnest(w) AS tok,
-        |    generate_subscripts(w, 1) AS pos
-        |  FROM t)
-        |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(count(kept.pos) AS BIGINT) AS n_removed,
-        |  md5(coalesce(string_agg(CASE WHEN kept.pos IS NULL THEN tok.tok END,
-        |    ' ' ORDER BY tok.pos), '')) AS clean_md5
-        |FROM tok LEFT JOIN kept
-        |  ON tok.doc_id = kept.doc_id AND tok.pos = kept.pos
-        |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin,
-
-    // the oracle recomputes what the engine answers from the standing
-    // index: gram totals = corpus distinct docs + batch distinct docs
-    "dedup_substring_admit" ->
-      """WITH b AS (SELECT doc_id, string_split(text, ' ') AS w
-        |  FROM documents WHERE doc_id % 10 >= 8),
-        |c AS (SELECT doc_id, string_split(text, ' ') AS w
-        |  FROM documents WHERE doc_id % 10 < 8),
-        |gb0 AS (SELECT doc_id, w,
-        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
-        |  FROM b),
-        |gb AS (SELECT doc_id, p,
-        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
-        |  FROM gb0),
-        |gc0 AS (SELECT doc_id, w,
-        |    unnest(generate_series(1, greatest(len(w) - 4, 0))) AS p
-        |  FROM c),
-        |gc AS (SELECT doc_id,
-        |    md5(array_to_string(w[p : p + 4], ' ')) AS gh
-        |  FROM gc0),
-        |bc AS (SELECT gh, count(DISTINCT doc_id) AS b_docs
-        |  FROM gb GROUP BY gh),
-        |cc AS (SELECT gh, count(DISTINCT doc_id) AS n_docs
-        |  FROM gc GROUP BY gh),
-        |tot AS (SELECT bc.gh FROM bc LEFT JOIN cc USING (gh)
-        |  WHERE bc.b_docs + coalesce(cc.n_docs, 0) >= 2),
-        |cov AS (SELECT DISTINCT doc_id, pos FROM (
-        |  SELECT gb.doc_id, unnest(generate_series(gb.p, gb.p + 4)) AS pos
-        |  FROM gb JOIN tot USING (gh))),
-        |tok AS (SELECT doc_id, unnest(w) AS tok,
-        |    generate_subscripts(w, 1) AS pos
-        |  FROM b)
-        |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(count(cov.pos) AS BIGINT) AS n_removed,
-        |  md5(coalesce(string_agg(CASE WHEN cov.pos IS NULL THEN tok.tok END,
-        |    ' ' ORDER BY tok.pos), '')) AS clean_md5
-        |FROM tok LEFT JOIN cov
-        |  ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-        |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin,
-
-    // same augmentation, same four patterns applied in the same order,
-    // counts taken on the string each pattern actually sees
-    "pii_redact" ->
-      """WITH aug AS (SELECT doc_id,
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |    || '@example.com ip 10.' || CAST(doc_id % 256 AS VARCHAR)
-        |    || '.' || CAST((doc_id * 7) % 256 AS VARCHAR)
-        |    || '.' || CAST(doc_id % 250 + 1 AS VARCHAR)
-        |    || ' card ' || lpad(CAST((doc_id * 31) % 10000 AS VARCHAR), 16, '4')
-        |    || ' tel +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-        |      AS t0
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, t0, regexp_replace(t0,
-        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g') AS t1
-        |  FROM aug),
-        |s2 AS (SELECT *, regexp_replace(t1,
-        |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g')
-        |    AS t2 FROM s1),
-        |s3 AS (SELECT *, regexp_replace(t2,
-        |    '\b[0-9]{13,16}\b', '<CARD>', 'g') AS t3 FROM s2),
-        |s4 AS (SELECT *, regexp_replace(t3,
-        |    '\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS t4 FROM s3)
-        |SELECT doc_id, md5(t4) AS redacted_md5,
-        |  CAST(len(regexp_extract_all(t0,
-        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT) AS n_email,
-        |  CAST(len(regexp_extract_all(t1,
-        |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS BIGINT)
-        |    AS n_ip,
-        |  CAST(len(regexp_extract_all(t2, '\b[0-9]{13,16}\b')) AS BIGINT)
-        |    AS n_card,
-        |  CAST(len(regexp_extract_all(t3,
-        |    '\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phone
-        |FROM s4 ORDER BY doc_id""".stripMargin,
-
-    // exact BIGINT sums; the only doubles are the two final divisions,
-    // the same IEEE op sequence the engine runs
-    "text_unigram_lm" ->
-      """WITH tok AS (SELECT doc_id, t AS token FROM
-        |    (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |    UNNEST(w) AS u(t)),
-        |model AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM tok GROUP BY token),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM model),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(sum(cnt) AS BIGINT) AS sum_cnt,
-        |    CAST(min(cnt) AS BIGINT) AS min_cnt,
-        |    CAST(sum(CASE WHEN cnt * 1000 < total THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_rare,
-        |    CAST(max(total) AS BIGINT) AS total
-        |  FROM tok JOIN model USING (token), tot
-        |  GROUP BY doc_id)
-        |SELECT doc_id, n_tokens, sum_cnt, min_cnt, n_rare,
-        |  floor(CAST((CAST(sum_cnt AS DOUBLE) /
-        |    (CAST(n_tokens AS DOUBLE) * CAST(total AS DOUBLE))) AS DOUBLE)*1000000000 + 0.5)/1000000000
-        |    AS mean_p,
-        |  floor(CAST((CAST(min_cnt AS DOUBLE) / CAST(total AS DOUBLE)) AS DOUBLE)*1000000000 + 0.5)/1000000000 AS min_p
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    // per-language models, exact BIGINT sums, ONE division before the
-    // rank — rank order is bit-identical, ties break by doc_id; the
-    // tertile compare is integer arithmetic
-    "text_lm_buckets" ->
-      s"""WITH ${lmChainCtes("")}
-        |SELECT doc_id, lang, n_tokens, floor(CAST((score) AS DOUBLE)*1000000000 + 0.5)/1000000000 AS mean_p, lm_rank,
-        |  CASE WHEN lm_rank * 3 <= n_docs THEN 'head'
-        |       WHEN lm_rank * 3 <= 2 * n_docs THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM rk ORDER BY doc_id""".stripMargin,
-
-    // the three quality gates' 2x2x2 contingency cube: classifier chain
-    // (c_), gopher chain (g_), LM-tertile chain (l_) joined on the doc
-    // key — each keep bit recomputed by its own oracle chain
-    "filter_agreement" ->
-      s"""WITH ${graft.ext.Classifier.scoreChain(p = "c_")},
-        |${gopherChainCtes("g_")},
-        |${lmChainCtes("l_")},
-        |j AS (SELECT g.doc_id, g.keep AS gopher_keep,
-        |    c.weight > 1.0 AS clf_keep,
-        |    (l.lm_rank * 3 <= 2 * l.n_docs) AS lm_keep
-        |  FROM g_gk g JOIN c_sc c ON g.doc_id = c.doc_id
-        |  JOIN l_rk l ON g.doc_id = l.doc_id)
-        |SELECT gopher_keep, clf_keep, lm_keep,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM j GROUP BY 1, 2, 3
-        |ORDER BY gopher_keep, clf_keep, lm_keep""".stripMargin,
-
-    // hashed-bigram buckets via the first two md5 hex chars (the strpos
-    // arithmetic equals the engine's conv(hex, 16, 10)); target_like
-    // compares the ROUNDED weight, as the engine does
-    "dsir_weights" ->
-      """WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w
-        |  FROM documents),
-        |grams AS (SELECT doc_id, lang, g,
-        |    (strpos('0123456789abcdef', substr(md5(g), 1, 1)) - 1) * 16 +
-        |    (strpos('0123456789abcdef', substr(md5(g), 2, 1)) - 1) AS b
-        |  FROM d, UNNEST(list_transform(
-        |    generate_series(1, greatest(len(w) - 1, 1)),
-        |    i -> array_to_string(w[i:i+1], ' '))) AS t(g)),
-        |model AS (SELECT b, CAST(count(*) AS BIGINT) AS s_cnt,
-        |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS t_cnt
-        |  FROM grams GROUP BY b),
-        |tot AS (SELECT CAST(sum(s_cnt) AS BIGINT) AS s_total,
-        |    CAST(sum(t_cnt) AS BIGINT) AS t_total FROM model),
-        |agg AS (SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(sum(t_cnt + 1) AS BIGINT) AS num,
-        |    CAST(sum(s_cnt + 1) AS BIGINT) AS den
-        |  FROM grams JOIN model USING (b) GROUP BY doc_id, lang),
-        |w2 AS (SELECT doc_id, lang, n_grams,
-        |    floor(CAST(((CAST(num AS DOUBLE) * CAST(s_total + 256 AS DOUBLE)) /
-        |      (CAST(den AS DOUBLE) * CAST(t_total + 256 AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000
-        |      AS weight
-        |  FROM agg, tot)
-        |SELECT doc_id, lang, n_grams, weight, weight > 1.0 AS target_like
-        |FROM w2 ORDER BY doc_id""".stripMargin,
-
-    // same weight chain as dsir_weights, then the selection cut
-    "sample_importance" ->
-      """WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w
-        |  FROM documents),
-        |grams AS (SELECT doc_id, lang, g,
-        |    (strpos('0123456789abcdef', substr(md5(g), 1, 1)) - 1) * 16 +
-        |    (strpos('0123456789abcdef', substr(md5(g), 2, 1)) - 1) AS b
-        |  FROM d, UNNEST(list_transform(
-        |    generate_series(1, greatest(len(w) - 1, 1)),
-        |    i -> array_to_string(w[i:i+1], ' '))) AS t(g)),
-        |model AS (SELECT b, CAST(count(*) AS BIGINT) AS s_cnt,
-        |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS t_cnt
-        |  FROM grams GROUP BY b),
-        |tot AS (SELECT CAST(sum(s_cnt) AS BIGINT) AS s_total,
-        |    CAST(sum(t_cnt) AS BIGINT) AS t_total FROM model),
-        |agg AS (SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(sum(t_cnt + 1) AS BIGINT) AS num,
-        |    CAST(sum(s_cnt + 1) AS BIGINT) AS den
-        |  FROM grams JOIN model USING (b) GROUP BY doc_id, lang),
-        |w2 AS (SELECT doc_id, lang,
-        |    floor(CAST(((CAST(num AS DOUBLE) * CAST(s_total + 256 AS DOUBLE)) /
-        |      (CAST(den AS DOUBLE) * CAST(t_total + 256 AS DOUBLE))) AS DOUBLE)*1000000 + 0.5)/1000000
-        |      AS weight
-        |  FROM agg, tot),
-        |mean AS (SELECT CAST(sum(CAST(weight AS DECIMAL(27,6))) AS DOUBLE)
-        |    / count(*) AS mw FROM w2),
-        |sel AS (SELECT doc_id, lang, weight,
-        |    (strpos('0123456789abcdef',
-        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096 +
-        |    (strpos('0123456789abcdef',
-        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256 +
-        |    (strpos('0123456789abcdef',
-        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16 +
-        |    (strpos('0123456789abcdef',
-        |       substr(md5('imp:' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1) AS u16,
-        |    CAST(floor(least(1.0, weight * 0.25 / mw) * 65536.0) AS BIGINT)
-        |      AS cut
-        |  FROM w2, mean)
-        |SELECT doc_id, lang, weight, CAST(u16 AS BIGINT) AS u16, cut
-        |FROM sel WHERE u16 < cut ORDER BY doc_id""".stripMargin
-  )
+  // the three scan rungs' oracles — each shared by the on-the-fly
+  // `*_topk` form and its standing-table `*_indexed` form, which change
+  // the PLAN, not the rows (RungSpec pins the identity); both forms search
+  // the first `rungQueries` vectors for their top `rungK`
+  private val rungQueries = 10
+  private val rungK = 5
+
+  // mirrors int8RescoreTopK: per-vector int8 quantization (the
+  // emb_quantize formula), exact-integer dot as the stage-1 score
+  // (de-quantized through the identical left-assoc IEEE sequence),
+  // top-20 pool per query, exact float rescore to top-5
+  private val int8RungOracle =
+    s"""WITH s AS (SELECT vec_id, embedding,
+       |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale
+       |  FROM embeddings),
+       |qn AS (SELECT vec_id, embedding, scale,
+       |    list_transform(embedding, v -> CASE WHEN scale = 0 THEN 0
+       |      ELSE floor(CAST(v AS DOUBLE) * 127.0 / scale + 0.5) END) AS qi,
+       |    sqrt(list_sum(list_transform(generate_series(1, 64),
+       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
+       |  FROM s),
+       |q AS (SELECT * FROM qn WHERE vec_id < $rungQueries),
+       |c AS (SELECT * FROM qn WHERE vec_id >= $rungQueries),
+       |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+       |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
+       |    list_sum(list_transform(generate_series(1, 64),
+       |      i -> q.qi[i] * c.qi[i])) * q.scale * c.scale / 16129.0
+       |      / (q.nrm * c.nrm) AS ascore
+       |  FROM q, c),
+       |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY qid
+       |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 20),
+       |ex AS (SELECT qid, cid,
+       |    list_sum(list_transform(generate_series(1, 64),
+       |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
+       |      / (qnn * cnn) AS sim
+       |  FROM pool),
+       |rk AS (SELECT qid, cid, sim,
+       |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+       |  FROM ex)
+       |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+       |WHERE rank <= $rungK ORDER BY qid, rank""".stripMargin
+
+  // sign-bit fingerprints packed MSB-first into two 32-bit halves
+  // (engine fold acc*2+bit == Σ bit·2^(32-i)); Hamming = XOR +
+  // bit_count, integer-exact; rescore mirrors ann_int8_topk's tail
+  private val binaryRungOracle =
+    s"""WITH s AS (SELECT vec_id, embedding,
+       |    sqrt(list_sum(list_transform(generate_series(1, 64),
+       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
+       |    CAST(list_sum(list_transform(generate_series(1, 32),
+       |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i))
+       |        ELSE 0 END)) AS BIGINT) AS h1,
+       |    CAST(list_sum(list_transform(generate_series(33, 64),
+       |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (64 - i))
+       |        ELSE 0 END)) AS BIGINT) AS h2
+       |  FROM embeddings),
+       |q AS (SELECT * FROM s WHERE vec_id < $rungQueries),
+       |c AS (SELECT * FROM s WHERE vec_id >= $rungQueries),
+       |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+       |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
+       |    bit_count(xor(q.h1, c.h1)) + bit_count(xor(q.h2, c.h2)) AS hamm
+       |  FROM q, c),
+       |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY qid
+       |      ORDER BY hamm, cid) AS ark FROM ap) WHERE ark <= 20),
+       |ex AS (SELECT qid, cid,
+       |    list_sum(list_transform(generate_series(1, 64),
+       |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
+       |      / (qnn * cnn) AS sim
+       |  FROM pool),
+       |rk AS (SELECT qid, cid, sim,
+       |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+       |  FROM ex)
+       |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+       |WHERE rank <= $rungK ORDER BY qid, rank""".stripMargin
+
+  // prefix-dim cosine over the first 16 dims ranks the pool; the
+  // exact full-dim rescore mirrors ann_int8_topk's tail
+  private val matryoshkaRungOracle =
+    s"""WITH s AS (SELECT vec_id, embedding,
+       |    sqrt(list_sum(list_transform(generate_series(1, 64),
+       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm,
+       |    sqrt(list_sum(list_transform(generate_series(1, 16),
+       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS pn
+       |  FROM embeddings),
+       |q AS (SELECT * FROM s WHERE vec_id < $rungQueries),
+       |c AS (SELECT * FROM s WHERE vec_id >= $rungQueries),
+       |ap AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+       |    q.embedding AS qe, c.embedding AS ce, q.nrm AS qnn, c.nrm AS cnn,
+       |    list_sum(list_transform(generate_series(1, 16),
+       |      i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
+       |      / (q.pn * c.pn) AS ascore
+       |  FROM q, c),
+       |pool AS (SELECT qid, cid, qe, ce, qnn, cnn FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY qid
+       |      ORDER BY ascore DESC, cid) AS ark FROM ap) WHERE ark <= 20),
+       |ex AS (SELECT qid, cid,
+       |    list_sum(list_transform(generate_series(1, 64),
+       |      i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)))
+       |      / (qnn * cnn) AS sim
+       |  FROM pool),
+       |rk AS (SELECT qid, cid, sim,
+       |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
+       |  FROM ex)
+       |SELECT qid, cid, rank, floor(CAST((sim) AS DOUBLE)*1000000 + 0.5)/1000000 AS sim FROM rk
+       |WHERE rank <= $rungK ORDER BY qid, rank""".stripMargin
 }

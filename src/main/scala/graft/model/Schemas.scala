@@ -4,10 +4,10 @@ import org.apache.spark.sql.types._
 
 /** Schemas of the rebuilt engine.
   *
-  * Mirrors the reference's static schema system (three StructTypes at
-  * stream-processor/config.py:24-56) plus the driver testdata shapes
+  * Mirrors the reference's static event and raw schemas
+  * (stream-processor/config.py:24-42) plus the driver testdata shapes
   * (FIXTURES.md §A). All time is epoch milliseconds in LongType, as in the
-  * reference (config.py:28,38-41,51-54); `minuteTimestamp` is a 180-second
+  * reference (config.py:28,38-41); `minuteTimestamp` is a 180-second
   * bucket despite its name (processing/silver.py:61).
   */
 object Schemas {
@@ -24,19 +24,6 @@ object Schemas {
   val silverSchema: StructType = StructType(eventSchema.fields ++ Seq(
     StructField("ingest_timestamp", LongType, nullable = false),
     StructField("minute_timestamp", LongType, nullable = false)
-  ))
-
-  /** Gold table — AGGREGATION_SCHEMA (config.py:44-56). Scores are computed
-    * in double and cast to float only at the table boundary (SURVEY §1.3).
-    */
-  val goldSchema: StructType = StructType(Seq(
-    StructField("group_id", StringType, nullable = false),
-    StructField("cumulative_score", FloatType, nullable = false),
-    StructField("event_count", LongType, nullable = false),
-    StructField("avg_score", FloatType, nullable = false),
-    StructField("first_event_timestamp", LongType, nullable = false),
-    StructField("last_event_timestamp", LongType, nullable = false),
-    StructField("updated_at", LongType, nullable = false)
   ))
 
   /** Schema of the JSON `props` column on the testdata `events` table. */

@@ -613,7 +613,7 @@ class CurationSpec extends SparkTestBase {
     assert(docs(1) == TextDedup.exactGroups(spark, sf).count())
     // pipeline_curate applies exactly the funnel's first three cuts
     assert(docs(3) ==
-      graft.ExtEntry.queries("pipeline_curate")(spark, sf).count())
+      SparkEntry.queries("pipeline_curate")(spark, sf).count())
     rows.foreach { r =>
       assert(r.getAs[Double]("kept_docs_frac") ==
         r.getAs[Long]("n_docs").toDouble / docs(0))

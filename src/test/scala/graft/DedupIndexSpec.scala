@@ -27,7 +27,7 @@ class DedupIndexSpec extends SparkTestBase {
     dropIndex()
     try {
       assert(!spark.catalog.tableExists(TextDedup.bandsTable(dir)))
-      val out = graft.ExtEntry.queries("pipeline_curate")(spark, dir)
+      val out = SparkEntry.queries("pipeline_curate")(spark, dir)
       assert(out.count() > 0)
       assert(spark.catalog.tableExists(TextDedup.bandsTable(dir)),
         "curate must read (and therefore ensure) the standing band table")

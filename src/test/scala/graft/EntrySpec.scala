@@ -22,6 +22,13 @@ class EntrySpec extends SparkTestBase {
     assert(unchecked.isEmpty, s"queries without oracle SQL: $unchecked")
   }
 
+  test("a query name declared twice fails the registry instead of dropping one") {
+    val specs = Seq("SELECT 1 AS id", "SELECT 2 AS id").map(sql =>
+      QuerySpec("twice", (s, _) => s.sql(sql), sql))
+    val e = intercept[IllegalArgumentException](SparkEntry.byName(specs)(_.oracle))
+    assert(e.getMessage.contains("twice"), e.getMessage)
+  }
+
   test("all queries execute and are non-degenerate on sf0.001") {
     val sf = "/root/testdata/sf0.001"
     // the Verify/Bench contract: the tombstone fixture registers before

@@ -428,7 +428,7 @@ class ExtSpec extends SparkTestBase {
 
   test("langid confusion sums to the corpus and matches the langId frame") {
     val dir = "/root/testdata/sf0.001"
-    val cm = ExtEntry.queries("langid_confusion")(spark, dir).collect()
+    val cm = SparkEntry.queries("langid_confusion")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val docs = graft.ops.Ingest.table(spark, dir, "documents")
     assert(cm.values.sum == docs.count())
