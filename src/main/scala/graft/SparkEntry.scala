@@ -454,9 +454,7 @@ object SparkEntry {
     // serve_analytics' deep-page twin (VERDICT r9 #5): the same
     // retention grid sought by composite keyset — (cohort_day,
     // day_offset) lexicographically after (19723, 5), the fixed first
-    // cohort day at every test SF — no offset sort-and-discard; the
-    // streaming stage-6 surface (Pipeline.serveRetentionKeyset) runs
-    // the identical Serve.keyset2 shape over the maintained snapshot
+    // cohort day at every test SF — no offset sort-and-discard
     QuerySpec("serve_analytics_keyset", (s, dir) =>
       analyticsRetentionCols(Serve.keyset2(analyticsRetentionFrame(s, dir),
         col("cohort_day"), col("day_offset"), lit(19723L), lit(5L), 20)),
@@ -1034,9 +1032,7 @@ object SparkEntry {
     // so the whole z-score is deterministic. The day-count grid is tiny
     // (types × days) — raw events collapse at the mappers, the stats
     // table is a broadcast.
-    // The rollup below the daily grid lives in ops/Analytics so the
-    // incrementally-maintained streaming twin (StreamingAnalytics)
-    // provably runs the identical expressions over its snapshot.
+    // The rollup below the daily grid lives in ops/Analytics.
     QuerySpec("anomaly_daily", (s, dir) => {
       val daily = Ingest.events(s, dir)
         .groupBy(col("event_type"),

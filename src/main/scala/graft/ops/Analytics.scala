@@ -5,15 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.ops.Exact.round6
 
 /** The analytics rollup tails shared by the batch queries
-  * (`retention_cohorts`, `anomaly_daily` in SparkEntry) and their
-  * incrementally-maintained streaming twins
-  * ([[graft.streaming.StreamingAnalytics]]): the streaming side
-  * maintains the SMALL intermediate grid (per-user cohort deltas / the
-  * (event_type, day) count table) incrementally — the part whose input
-  * is 100 TB of raw events — and both sides run the identical tiny
-  * rollup below it, so "streamed view == batch query" is equality by
-  * construction once the grids agree (StreamingAnalyticsSpec asserts
-  * exactly that).
+  * (`retention_cohorts`, `anomaly_daily`, `serve_analytics*` in
+  * SparkEntry): each query reduces raw events to a SMALL intermediate
+  * grid (the distinct (user, day) activity / the (event_type, day)
+  * count table) and runs the tiny rollup below over it.
   */
 object Analytics {
 
@@ -411,8 +406,8 @@ object Analytics {
   }
 
   /** Daily volume anomaly z-scores over the (`key`, day, c) count grid
-    * (`key` is the series column — `event_type` for the batch query,
-    * `group_id` for the pipeline view). Variance comes from EXACT
+    * (`key` is the series column — `event_type` for the batch query).
+    * Variance comes from EXACT
     * integer sums (n, Σc, Σc²) combined in one fixed IEEE expression —
     * deliberately NOT stddev_samp, whose Welford-style accumulation is
     * engine- and order-dependent and would break the hash-exact oracle.

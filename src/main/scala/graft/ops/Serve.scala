@@ -40,8 +40,7 @@ object Serve {
     * `k1 >= a1 AND (k1 > a1 OR k2 > a2)` rather than a struct compare:
     * the leading-key bound is a plain conjunct Catalyst can push below
     * aggregates to the scan, so a deep page still prunes on the leading
-    * key — the shape the stage-6 dashboard surfaces use
-    * ([[graft.streaming.Pipeline.serveRetentionKeyset]]).
+    * key — the shape `serve_analytics_keyset` pages with.
     */
   def keyset2(df: DataFrame, k1: Column, k2: Column,
               a1: Column, a2: Column, n: Int): DataFrame =

@@ -117,26 +117,6 @@ object Metrics {
       .select(col("max_updated_at"),
         (lit(asOfMs) - col("max_updated_at")).as("lag_ms"))
 
-  /** Freshness of the MAINTAINED retention view behind
-    * [[Pipeline.serveRetention]] (stage 6): lag from `asOfMs` to the
-    * newest snapshot's write time, plus the snapshot version. One
-    * driver-side file-status probe — no scan, no job — so the dashboard
-    * can poll it at any rate. One row:
-    * (snapshot_version, snapshot_ts_ms, lag_ms).
-    */
-  def retentionFreshness(spark: SparkSession, cfg: Pipeline.Config,
-                         asOfMs: Long): DataFrame = {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(cfg.baseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = Pipeline.currentRetentionSnapshot(fs, cfg)
-    require(cur.nonEmpty, s"retention view under ${cfg.baseDir} has no data yet")
-    val (version, path) = cur.get
-    val ts = fs.getFileStatus(path).getModificationTime
-    Seq((version, ts, asOfMs - ts))
-      .toDF("snapshot_version", "snapshot_ts_ms", "lag_ms")
-  }
-
   /** Freshness of a STANDING-INDEX search surface (VERDICT r12 #8): the
     * query-side search streams
     * ([[StreamingSimilarity.startIvfSearchStream]]/[[StreamingSimilarity
@@ -144,14 +124,14 @@ object Metrics {
     * tables the admission loops append into — a result returned now
     * reflects the index as of its NEWEST committed data file, so lag =
     * `asOfMs - max(file modification time)` is the search-side "Data
-    * Lag", the sibling of [[retentionFreshness]]'s snapshot probe. One
+    * Lag", the sibling of [[freshness]]'s serve-table probe. One
     * driver-side recursive file-status listing over the table's fixed
     * warehouse location — no scan, no job, pollable at any rate. One
     * row: (index_table, index_ts_ms, lag_ms).
     *
-    * Fails loudly on a missing/empty location (same contract as
-    * `retentionFreshness` and the index-exists guards: a mis-set shape
-    * must not report a permanently-fresh ghost index).
+    * Fails loudly on a missing/empty location (same contract as the
+    * index-exists guards: a mis-set shape must not report a
+    * permanently-fresh ghost index).
     */
   def searchFreshness(spark: SparkSession, table: String,
                       asOfMs: Long): DataFrame = {
@@ -177,31 +157,6 @@ object Metrics {
     require(ts > 0, s"searchFreshness: no data files under $loc")
     Seq((table, ts, asOfMs - ts))
       .toDF("index_table", "index_ts_ms", "lag_ms")
-  }
-
-  /** [[searchFreshness]] of the standing IVF cell table at the default
-    * build shape — what [[StreamingSimilarity.startIvfSearchStream]]
-    * probes.
-    */
-  def ivfSearchFreshness(spark: SparkSession, dir: String, nQueries: Int,
-                         nCentroids: Int, asOfMs: Long): DataFrame =
-    searchFreshness(spark, graft.ext.Similarity.ivfCellsTable(dir,
-      graft.ext.Similarity.ivfKey(nQueries, nCentroids, 2, 3,
-        graft.ext.Similarity.defaultIvfSampleCap)), asOfMs)
-
-  /** [[searchFreshness]] of the three standing compression-rung tables
-    * ([[graft.ext.Rung]]) — one row per rung, the staleness probe the
-    * scan-search family lacked while its stage-1 payload was derived on
-    * the fly (VERDICT r13 missing #2).
-    */
-  def rungSearchFreshness(spark: SparkSession, dir: String, nQueries: Int,
-                          dPrefix: Int, asOfMs: Long): DataFrame = {
-    import graft.ext.Rung
-    Seq(Rung.binTable(dir, Rung.binKey(nQueries)),
-      Rung.mrlTable(dir, Rung.mrlKey(nQueries, dPrefix)),
-      Rung.i8Table(dir, Rung.i8Key(nQueries)))
-      .map(searchFreshness(spark, _, asOfMs))
-      .reduce(_ unionByName _)
   }
 
   /** The one-stop operator health query (VERDICT r13 next #8) — the

@@ -335,6 +335,11 @@ object Pipeline {
     * is. Readers racing the rename→delete window can transiently see a
     * row twice — the same read-uncommitted window the whole-dir swap has;
     * streaming gold is immune via invariants 1–2.
+    *
+    * Invariant 2 reads only GOLD's checkpoint, so this is safe only
+    * because gold is the one stream that reads silver: any other file
+    * source on silver keeps its own seen-files log, and a part file gold
+    * committed but it had not yet read would be deleted under it.
     */
   def compactSilverLive(spark: SparkSession, cfg: Config,
                         rowFilter: Option[DataFrame => DataFrame] = None)
@@ -578,31 +583,28 @@ object Pipeline {
     all
   }
 
-  /** A file-source directory that is vacuumed/compacted out-of-band can
-    * lose a file BETWEEN a reader's parent-directory listing and the
-    * child listing/read — Hadoop's recursive listing then throws
-    * FileNotFoundException and kills the stream, even though the vacuum
-    * contract ([[vacuumGoldChanges]], [[compactSilverLive]],
-    * [[compactServe]]) only ever deletes files whose rows every consumer
-    * has already committed (or that live on in a compact-* rewrite). With
-    * no transaction log to serialize readers against deletes (Delta's
-    * answer), the correct plain-parquet semantics is Spark's
-    * `ignoreMissingFiles`: a vanished file is SKIPPED, which under the
-    * committed-cutoff invariant never hides unread data. Session-wide by
-    * design — batch readers of vacuumed history get the same "history is
-    * gone after vacuum" semantics Delta gives past its retention window.
-    */
-  private def tolerateVacuumedFiles(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
-
   /** Stage-2 source: the silver table's insert feed (insert-only ⇒ new
     * files ARE the change feed — the Delta-CDF-insert analog).
+    *
+    * This source, [[goldChangeStream]] and [[serveLog]] read directories
+    * that are compacted or vacuumed out-of-band, so a file can vanish
+    * between a reader's listing and its read; Hadoop then throws
+    * FileNotFoundException and kills the stream, although the reclaim
+    * contract ([[compactSilverLive]], [[vacuumGoldChanges]],
+    * [[compactServe]]) only deletes files whose rows every consumer has
+    * already committed (or that live on in a compact-* rewrite). With no
+    * transaction log to serialize readers against deletes (Delta's
+    * answer), the plain-parquet semantics is to SKIP a vanished file,
+    * which under that committed-cutoff invariant never hides unread
+    * data. Each of the three sets Spark's per-read `ignoreMissingFiles`
+    * option; the session conf is left alone, so every other reader —
+    * the silver MERGE probe above all, where a skipped file could
+    * re-admit a duplicate id — still fails loudly on a missing file.
     */
   def silverInsertStream(spark: SparkSession, cfg: Config): DataFrame = {
     val silverDir = new Path(cfg.silverPath)
     val fs = silverDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(silverDir) // allow starting before stage 1's first commit
-    tolerateVacuumedFiles(spark)
     spark.readStream
       // the hb partition column is DECLARED (not inferred): a stream
       // started on the pre-first-commit empty dir would otherwise plan a
@@ -612,6 +614,7 @@ object Pipeline {
           org.apache.spark.sql.types.StructField("hb",
             org.apache.spark.sql.types.LongType)))
       .option("maxFilesPerTrigger", 50)
+      .option("ignoreMissingFiles", "true")
       // the compaction contract: gold folds ONLY part-* files, so
       // [[compactSilverLive]]'s compact-* rewrites of already-committed
       // files are invisible to this source (no double-fold, no re-read)
@@ -877,258 +880,6 @@ object Pipeline {
       .start()
   }
 
-  // ——————————— stage 4: analytics maintenance (retention view) ———————————
-
-  private def retentionBase(cfg: Config): String = s"${cfg.baseDir}/retention"
-
-  /** Newest retention snapshot `retention/v=<batchId>` with id < `below`. */
-  private[streaming] def currentRetentionSnapshot(
-      fs: org.apache.hadoop.fs.FileSystem,
-      cfg: Config, below: Long = Long.MaxValue): Option[(Long, Path)] =
-    numberedDirs(fs, new Path(retentionBase(cfg)), "v=")
-      .filter(_._1 < below).lastOption
-
-  /** Stage 4 — the reference's incremental-aggregate pattern
-    * (`gold.py:7-46`) applied to the retention view: the silver insert
-    * feed drives per-entity cohort deltas
-    * ([[StreamingAnalytics.retentionDeltasByEntity]], O(active days)
-    * state per group_id), and each micro-batch folds its delta counts
-    * into a tiny versioned activity snapshot. The serving read is
-    * [[retentionActivity]] + `Analytics.retentionFromActivity` — the
-    * identical rollup the batch `retention_cohorts` query runs, so the
-    * live view equals the batch backfill on in-order streams
-    * (PipelineSpec pins it over the real silver chain).
-    */
-  def startRetention(spark: SparkSession, cfg: Config): StreamingQuery = {
-    import spark.implicits._
-    val acts = silverInsertStream(spark, cfg)
-      .select(col("group_id").as("entity"),
-        col("event_timestamp").as("ems"))
-      .as[graft.streaming.StreamingAnalytics.Activity]
-    graft.streaming.StreamingAnalytics.retentionDeltasByEntity(acts).toDF()
-      .writeStream
-      .queryName("graft_retention")
-      .option("checkpointLocation", cfg.checkpoint("retention"))
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldRetention(spark, batch, batchId, cfg)
-      }
-      .start()
-  }
-
-  /** Replay-safe snapshot fold: version `v=<batchId>` is computed from
-    * the newest snapshot STRICTLY OLDER than this batch plus the batch's
-    * delta counts — a batch replayed after a crash recomputes its own
-    * version rather than compounding onto it. One generation back is
-    * retained for that guard; older versions are vacuumed. The snapshot
-    * is (cohort_day, day_offset, n_active) — cohorts × offsets rows,
-    * tiny by construction, so the rewrite is O(view), never O(events).
-    */
-  private[graft] def foldRetention(spark: SparkSession, batch: DataFrame,
-                                   batchId: Long, cfg: Config): Unit = {
-    val base = new Path(retentionBase(cfg))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delta = batch.groupBy(col("cohort_day"), col("day_offset"))
-      .agg(count(lit(1)).as("n_active"))
-    val prev = currentRetentionSnapshot(fs, cfg, below = batchId)
-    val merged = prev match {
-      case Some((_, p)) =>
-        spark.read.parquet(p.toString).unionByName(delta)
-          .groupBy(col("cohort_day"), col("day_offset"))
-          .agg(sum(col("n_active")).as("n_active"))
-      case None => delta
-    }
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(s"${retentionBase(cfg)}/v=$batchId")
-    vacuumSnapshots(fs, base)
-  }
-
-  /** How many snapshot generations a versioned view retains. More than
-    * the single replay-guard generation on purpose (ADVICE r7): a
-    * serving reader holds a LAZY frame over the newest `v=` dir, so a
-    * one-generation window let a read that executes (or re-executes)
-    * after two further micro-batches hit FileNotFoundException on the
-    * vacuumed path. Each snapshot is O(view) — cohorts × offsets / live
-    * grid cells — so the cost of the wider window is a few tiny files,
-    * and readers get `retain − 1` micro-batches to materialize. Callers
-    * that hold results across many batches should still copy promptly
-    * (the specs localCheckpoint).
-    */
-  private[graft] val snapshotRetain = 4
-
-  /** Keep the newest [[snapshotRetain]] `v=<id>` generations, delete the
-    * rest. The newest version strictly older than any replayed batch id
-    * survives inside the window, so the strictly-older-prev replay guard
-    * in the folds is unaffected.
-    */
-  private def vacuumSnapshots(fs: org.apache.hadoop.fs.FileSystem,
-                              base: Path): Unit =
-    numberedDirs(fs, base, "v=").dropRight(snapshotRetain)
-      .foreach { case (_, p) => fs.delete(p, true) }
-
-  /** The maintained (cohort_day, day_offset, n_active) activity view —
-    * feed it to `Analytics.retentionFromActivity` for the serving shape.
-    * The frame is LAZY over the newest retained snapshot; it stays
-    * readable for [[snapshotRetain]]−1 further micro-batches — execute
-    * (or copy) within that window.
-    */
-  def retentionActivity(spark: SparkSession, cfg: Config): DataFrame = {
-    val fs = new Path(retentionBase(cfg))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentRetentionSnapshot(fs, cfg)
-    require(cur.nonEmpty, s"retention view ${retentionBase(cfg)} has no data yet")
-    spark.read.parquet(cur.get._2.toString)
-  }
-
-  // ———————————— stage 5: analytics maintenance (anomaly view) ————————————
-
-  private def anomalyBase(cfg: Config): String = s"${cfg.baseDir}/anomaly"
-
-  private def currentAnomalySnapshot(fs: org.apache.hadoop.fs.FileSystem,
-      cfg: Config, below: Long = Long.MaxValue): Option[(Long, Path)] =
-    numberedDirs(fs, new Path(anomalyBase(cfg)), "v=")
-      .filter(_._1 < below).lastOption
-
-  /** Stage 5 — the anomaly sibling of [[startRetention]]: an update-mode
-    * streaming aggregation maintains the per-(group_id, day) running
-    * count grid over the silver insert feed; each micro-batch emits new
-    * TOTALS for its touched cells, and the fold REPLACES those cells in
-    * the versioned snapshot (totals are authoritative, so replay is
-    * naturally idempotent under the strictly-older-prev guard). The
-    * serving read is `Analytics.anomalyOf(anomalyDailyCounts(...),
-    * "group_id")` — the identical z-score rollup as the batch query.
-    * State is one sum per live (group, day) cell — the grid, not the
-    * events.
-    */
-  def startAnomaly(spark: SparkSession, cfg: Config): StreamingQuery = {
-    silverInsertStream(spark, cfg)
-      .groupBy(col("group_id"),
-        floor(col("event_timestamp") / lit(86400000L)).cast("long").as("day"))
-      .agg(count(lit(1)).as("c"))
-      .writeStream
-      .queryName("graft_anomaly")
-      .option("checkpointLocation", cfg.checkpoint("anomaly"))
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldAnomaly(spark, batch, batchId, cfg)
-      }
-      .start()
-  }
-
-  private[graft] def foldAnomaly(spark: SparkSession, batch: DataFrame,
-                                 batchId: Long, cfg: Config): Unit = {
-    val base = new Path(anomalyBase(cfg))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delta = batch.select(col("group_id"), col("day"), col("c"))
-    val prev = currentAnomalySnapshot(fs, cfg, below = batchId)
-    val merged = prev match {
-      case Some((_, p)) =>
-        val cur = spark.read.parquet(p.toString)
-        // replace-by-key: untouched cells carry over, touched cells take
-        // the batch's new totals
-        cur.join(delta.select(col("group_id"), col("day")).distinct(),
-            Seq("group_id", "day"), "left_anti")
-          .unionByName(delta)
-      case None => delta
-    }
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(s"${anomalyBase(cfg)}/v=$batchId")
-    vacuumSnapshots(fs, base)
-  }
-
-  /** The maintained (group_id, day, c) count grid — feed it to
-    * `Analytics.anomalyOf(_, "group_id")` for the z-score view. Lazy
-    * over the newest retained snapshot; readable for
-    * [[snapshotRetain]]−1 further micro-batches (see [[snapshotRetain]]).
-    */
-  def anomalyDailyCounts(spark: SparkSession, cfg: Config): DataFrame = {
-    val fs = new Path(anomalyBase(cfg))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentAnomalySnapshot(fs, cfg)
-    require(cur.nonEmpty, s"anomaly view ${anomalyBase(cfg)} has no data yet")
-    spark.read.parquet(cur.get._2.toString)
-  }
-
-  // ———————————— stage 6: analytics serving (dashboard read path) ————————————
-
-  /** The dashboard read path over the MAINTAINED retention view (VERDICT
-    * r7 #6): the same `Serve.page` + `_id` surface the batch
-    * `serve_analytics` query applies, fed by the stream-maintained
-    * snapshot — so the live pipeline serves the identical page the batch
-    * backfill computes (PipelineSpec pins page-equality after N batches).
-    * With [[Metrics.retentionFreshness]] alongside, this closes the
-    * reference's gold→Mongo→dashboard loop (processing/tomongo.py:6-17 →
-    * webapp/app/api/data/route.ts:9-17) over the analytics chain.
-    *
-    * The activity read is EAGER and strict (ADVICE r8): rows pin at call
-    * time via localCheckpoint — the snapshot is O(cohorts × offsets),
-    * tiny by construction — and the per-read `ignoreMissingFiles=false`
-    * option overrides the session-wide lenient conf, so a race with the
-    * snapshot vacuum fails loudly here instead of returning
-    * silently-partial rows to the dashboard.
-    */
-  def serveRetention(spark: SparkSession, cfg: Config,
-                     pageNo: Int, pageSize: Int): DataFrame =
-    serveRetentionCols(graft.ops.Serve.page(servedRetentionFrame(spark, cfg),
-      Seq(col("cohort_day"), col("day_offset")), pageNo, pageSize))
-
-  /** The ONE retention frame both page forms serve: snapshot lookup,
-    * eager + strict read (see the class of docstring above), rollup,
-    * `_id`. Extracted so a future change to the read discipline cannot
-    * silently diverge between the offset and keyset surfaces.
-    */
-  private def servedRetentionFrame(spark: SparkSession,
-                                   cfg: Config): DataFrame = {
-    val fs = new Path(retentionBase(cfg))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentRetentionSnapshot(fs, cfg)
-    require(cur.nonEmpty, s"retention view ${retentionBase(cfg)} has no data yet")
-    val act = spark.read.option("ignoreMissingFiles", "false")
-      .parquet(cur.get._2.toString).localCheckpoint(true)
-    graft.ops.Analytics.retentionFromActivity(act)
-      .withColumn("_id", concat_ws(":", col("cohort_day"), col("day_offset")))
-  }
-
-  private def serveRetentionCols(page: DataFrame): DataFrame =
-    page.select(col("_id"), col("cohort_day"), col("day_offset"),
-      col("n_active"), col("cohort_size"), col("retention"))
-
-  /** [[serveRetention]]'s deep-page form (VERDICT r9 #5): the SAME
-    * served frame, but the page is sought by the last key of the
-    * previous page — `(cohort_day, day_offset)` lexicographically after
-    * `(afterCohort, afterOffset)` via [[graft.ops.Serve.keyset2]] — so
-    * there is NO offset sort-and-discard anywhere in the plan and a
-    * page deep into a 100× dashboard history costs O(page).
-    * PipelineSpec pins the no-offset plan and page-chaining equality
-    * with the offset form.
-    */
-  def serveRetentionKeyset(spark: SparkSession, cfg: Config,
-                           afterCohort: Long, afterOffset: Long,
-                           pageSize: Int): DataFrame =
-    serveRetentionCols(graft.ops.Serve.keyset2(
-      servedRetentionFrame(spark, cfg),
-      col("cohort_day"), col("day_offset"),
-      lit(afterCohort), lit(afterOffset), pageSize))
-
-  /** [[serveRetention]]'s anomaly sibling: the maintained daily-count
-    * grid through `Analytics.anomalyOf` and the same paginated `_id`
-    * surface. Same eager + strict read discipline.
-    */
-  def serveAnomaly(spark: SparkSession, cfg: Config,
-                   pageNo: Int, pageSize: Int): DataFrame = {
-    val fs = new Path(anomalyBase(cfg))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentAnomalySnapshot(fs, cfg)
-    require(cur.nonEmpty, s"anomaly view ${anomalyBase(cfg)} has no data yet")
-    val daily = spark.read.option("ignoreMissingFiles", "false")
-      .parquet(cur.get._2.toString).localCheckpoint(true)
-    graft.ops.Serve.page(graft.ops.Analytics.anomalyOf(daily, "group_id")
-        .withColumn("_id", concat_ws(":", col("group_id"), col("day"))),
-      Seq(col("group_id"), col("day")), pageNo, pageSize)
-  }
-
   /** Stage-3 source: the gold change feed as a streaming DataFrame
     * (`_change_type` / `_commit_version` carried — the CDF-read analog).
     */
@@ -1136,10 +887,10 @@ object Pipeline {
     val changesDir = new Path(cfg.goldChangesPath)
     val fs = changesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(changesDir) // file stream needs the dir to exist up front
-    tolerateVacuumedFiles(spark)
     spark.readStream
       .schema(goldChangeSchema)
       .option("maxFilesPerTrigger", 100)
+      .option("ignoreMissingFiles", "true") // see [[silverInsertStream]]
       .option("basePath", cfg.goldChangesPath)
       .parquet(cfg.goldChangesPath)
   }
@@ -1172,15 +923,16 @@ object Pipeline {
   def serveLog(spark: SparkSession, cfg: Config): DataFrame = {
     val fs = new Path(cfg.servePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tolerateVacuumedFiles(spark) // a scan outliving two compactions
-    // skips the files reclaimed under it instead of failing
     val snap = currentServeSnapshot(fs, cfg).map(_._2)
     val folded = snap.map(foldedTails(fs, _)).getOrElse(Set.empty)
     val tail = serveBatchDirs(fs, cfg).map(_._2)
       .filterNot(p => folded.contains(p.getName))
     val parts = (snap.toSeq ++ tail).map(_.toString)
     require(parts.nonEmpty, s"serve log ${cfg.servePath} has no data yet")
-    spark.read.schema(serveRowSchema).parquet(parts: _*)
+    // a scan outliving two compactions skips the files reclaimed under
+    // it instead of failing (see [[silverInsertStream]])
+    spark.read.schema(serveRowSchema).option("ignoreMissingFiles", "true")
+      .parquet(parts: _*)
   }
 
   /** Names of the `_serve_batch=<id>` partitions a snapshot version
@@ -1305,9 +1057,8 @@ object Pipeline {
     * the query-side rung search stream serving each query batch against
     * the SAME standing tables the ingest appends into, so a query
     * arriving after a vector's ingest batch sees it, exact rescore
-    * included. Pair it with any event-side stage set: StreamBench's
-    * search soak runs it next to [[startAll]], and PipelineSpec runs it
-    * beside all five event stages.
+    * included. StreamBench's search soak and PipelineSpec both run it
+    * next to [[startAll]]'s three event stages.
     */
   def searchStages(spark: SparkSession, corpusDir: String, vecs: DataFrame,
                    queries: DataFrame, vecCheckpoint: String,

@@ -55,13 +55,6 @@ import graft.streaming.Pipeline.Config
   *     DELETE-then-MOVE manifest replayed on entry.
   *   - SERVE (and its compacted `serve_snapshot/v=*` versions) has no
   *     streaming reader accounting — filtered whole-dir swaps.
-  *   - RETENTION snapshots are deliberately NOT scrubbed: their rows
-  *     are (cohort_day, day_offset, n_active) — anonymous aggregate
-  *     counts carrying no user key. Erasing a user's historical +1
-  *     from an anonymous count is not a deletion-of-personal-data
-  *     operation, and decrementing would silently falsify published
-  *     analytics; deployments that want it rebuild the view from the
-  *     scrubbed silver (`Analytics.retentionFromActivity` backfill).
   *
   * Re-registration semantics: the erase removes HISTORY; a user whose
   * events arrive after the apply accumulates a fresh gold row from

@@ -99,9 +99,7 @@ object StreamBench {
     // search mode pairs the SAME three event stages `full` runs with the
     // two vector stages, so its events/sec is comparable to full-mode
     // numbers and the delta is attributable to the vector lifecycle
-    // (PipelineSpec pins the seven-stage shape — the five event stages
-    // plus searchStages; benching it would fold retention+anomaly cost
-    // into the event rate and misprice the search side)
+    // (PipelineSpec pins the same five-stage shape)
     val forgetInput = MemoryStream[String](96, spark, None)
     val queries =
       if (search)

@@ -36,8 +36,10 @@ class IvfIndexSpec extends SparkTestBase {
     try {
       Similarity.ensureIvfIndex(spark, dir, nQueries = 10, nCentroids = 16)
       val asOf = System.currentTimeMillis() + 5000
+      def cells(nCentroids: Int) = Similarity.ivfCellsTable(dir,
+        Similarity.ivfKey(10, nCentroids, 2, 3, Similarity.defaultIvfSampleCap))
       val row = graft.streaming.Metrics
-        .ivfSearchFreshness(spark, dir, 10, 16, asOf).collect().head
+        .searchFreshness(spark, cells(16), asOf).collect().head
       assert(row.getAs[String]("index_table").contains("graft_ivf_"))
       assert(row.getAs[Long]("index_ts_ms") > 0L)
       val lag = row.getAs[Long]("lag_ms")
@@ -46,8 +48,8 @@ class IvfIndexSpec extends SparkTestBase {
       // the index-absent contract: a shape that was never built must
       // throw, not report permanently-fresh nothing
       intercept[IllegalArgumentException] {
-        graft.streaming.Metrics.ivfSearchFreshness(spark, dir, 10, 999,
-          asOf).collect()
+        graft.streaming.Metrics.searchFreshness(spark, cells(999), asOf)
+          .collect()
       }
     } finally purge()
   }

@@ -115,196 +115,6 @@ class PipelineSpec extends SparkTestBase {
     } finally silverQ.stop()
   }
 
-  test("retention stage maintains the cohort view incrementally over the " +
-    "real silver chain") {
-    val cfg = freshCfg()
-    val D = 86400000L
-    val t0 = 1700006400000L // day-aligned-ish base; alignment irrelevant
-    val input = MemoryStream[Event](40, spark, None)
-    val silverQ = Pipeline.startSilver(spark, input.toDF(), cfg)
-    try {
-      input.addData(
-        ev("r1", "g1", 1f, t0), ev("r2", "g2", 1f, t0 + D))
-      silverQ.processAllAvailable()
-      val retQ = Pipeline.startRetention(spark, cfg)
-      try {
-        retQ.processAllAvailable()
-        input.addData( // g1 returns next day; g3 is a new cohort
-          ev("r3", "g1", 1f, t0 + D), ev("r4", "g2", 1f, t0 + 2 * D),
-          ev("r5", "g3", 1f, t0 + 2 * D))
-        silverQ.processAllAvailable(); retQ.processAllAvailable()
-        input.addData( // same-day repeat (must not re-count) + late riser
-          ev("r6", "g1", 1f, t0 + D + 1000), ev("r7", "g3", 1f, t0 + 3 * D))
-        silverQ.processAllAvailable(); retQ.processAllAvailable()
-
-        val streamed = graft.ops.Analytics.retentionFromActivity(
-          Pipeline.retentionActivity(spark, cfg).localCheckpoint(true))
-          .collect().toSeq.map(_.toSeq)
-        val grid = spark.read.parquet(cfg.silverPath)
-          .select(col("group_id").as("user_id"),
-            floor(col("event_timestamp") / lit(D)).cast("long").as("day"))
-          .distinct()
-        val batch = graft.ops.Analytics.retentionOf(grid)
-          .collect().toSeq.map(_.toSeq)
-        assert(streamed.nonEmpty && streamed == batch,
-          s"streamed $streamed vs batch $batch")
-      } finally retQ.stop()
-    } finally silverQ.stop()
-  }
-
-  test("stage 6 serves the maintained retention view through the same " +
-    "paginated surface as the batch query, with a freshness probe") {
-    val cfg = freshCfg()
-    val D = 86400000L
-    val t0 = 1700006400000L
-    val input = MemoryStream[Event](45, spark, None)
-    val silverQ = Pipeline.startSilver(spark, input.toDF(), cfg)
-    try {
-      val retQ = Pipeline.startRetention(spark, cfg)
-      try {
-        Seq(
-          Seq(ev("s1", "g1", 1f, t0), ev("s2", "g2", 1f, t0 + D)),
-          Seq(ev("s3", "g1", 1f, t0 + D), ev("s4", "g3", 1f, t0 + 2 * D)),
-          Seq(ev("s5", "g2", 1f, t0 + 2 * D), ev("s6", "g1", 1f, t0 + 2 * D))
-        ).foreach { b =>
-          input.addData(b)
-          silverQ.processAllAvailable(); retQ.processAllAvailable()
-        }
-
-        val served = Pipeline.serveRetention(spark, cfg, pageNo = 1, pageSize = 3)
-          .collect().toSeq.map(_.toSeq)
-
-        // the batch equivalent: the same rollup + page over the silver
-        // log's distinct (entity, day) grid — what serve_analytics runs
-        val grid = spark.read.parquet(cfg.silverPath)
-          .select(col("group_id").as("user_id"),
-            floor(col("event_timestamp") / lit(D)).cast("long").as("day"))
-          .distinct()
-        val ret = graft.ops.Analytics.retentionOf(grid)
-          .withColumn("_id",
-            concat_ws(":", col("cohort_day"), col("day_offset")))
-        val batch = graft.ops.Serve.page(ret,
-            Seq(col("cohort_day"), col("day_offset")), 1, 3)
-          .select(col("_id"), col("cohort_day"), col("day_offset"),
-            col("n_active"), col("cohort_size"), col("retention"))
-          .collect().toSeq.map(_.toSeq)
-        assert(served.nonEmpty && served == batch,
-          s"served $served vs batch $batch")
-
-        // deep-page twin (VERDICT r9 #5): seeking after page-1's last
-        // (cohort_day, day_offset) must serve exactly offset-page 2,
-        // with NO offset sort-and-discard anywhere in the plan
-        val last = served.last
-        val (lastC, lastO) = (last(1).asInstanceOf[Long],
-          last(2).asInstanceOf[Long])
-        val keysetDf = Pipeline.serveRetentionKeyset(spark, cfg,
-          lastC, lastO, pageSize = 3)
-        // "offset=" matches the limit-node parameter, not the
-        // day_offset column name
-        val keysetPlan = keysetDf.queryExecution.executedPlan.toString
-        assert(!keysetPlan.toLowerCase.contains("offset="),
-          s"stage-6 keyset page planned an offset:\n$keysetPlan")
-        val page2 = graft.ops.Serve.page(ret,
-            Seq(col("cohort_day"), col("day_offset")), 2, 3)
-          .select(col("_id"), col("cohort_day"), col("day_offset"),
-            col("n_active"), col("cohort_size"), col("retention"))
-          .collect().toSeq.map(_.toSeq)
-        assert(keysetDf.collect().toSeq.map(_.toSeq) == page2,
-          "keyset page must chain to exactly the next offset page")
-
-        val f = graft.streaming.Metrics
-          .retentionFreshness(spark, cfg, System.currentTimeMillis())
-          .collect().head
-        assert(f.getAs[Long]("lag_ms") >= 0L &&
-          f.getAs[Long]("snapshot_version") >= 0L, s"freshness row: $f")
-      } finally retQ.stop()
-    } finally silverQ.stop()
-  }
-
-  test("retention stage survives a checkpoint restart: committed batches " +
-    "are not re-folded, the view still equals the batch rollup") {
-    val cfg = freshCfg()
-    val D = 86400000L
-    val t0 = 1700006400000L
-    val input = MemoryStream[Event](46, spark, None)
-    val silverQ = Pipeline.startSilver(spark, input.toDF(), cfg)
-    try {
-      val ret1 = Pipeline.startRetention(spark, cfg)
-      try {
-        input.addData(ev("r1", "g1", 1f, t0), ev("r2", "g2", 1f, t0 + D))
-        silverQ.processAllAvailable(); ret1.processAllAvailable()
-      } finally ret1.stop()
-
-      // restart stage 4 from its checkpoint; feed more days
-      val ret2 = Pipeline.startRetention(spark, cfg)
-      try {
-        input.addData(ev("r3", "g1", 1f, t0 + D), ev("r4", "g3", 1f, t0 + 2 * D))
-        silverQ.processAllAvailable(); ret2.processAllAvailable()
-
-        val streamed = graft.ops.Analytics.retentionFromActivity(
-          Pipeline.retentionActivity(spark, cfg).localCheckpoint(true))
-          .collect().toSeq.map(_.toSeq)
-        val grid = spark.read.parquet(cfg.silverPath)
-          .select(col("group_id").as("user_id"),
-            floor(col("event_timestamp") / lit(D)).cast("long").as("day"))
-          .distinct()
-        val batch = graft.ops.Analytics.retentionOf(grid)
-          .collect().toSeq.map(_.toSeq)
-        assert(streamed.nonEmpty && streamed == batch,
-          s"after restart: streamed $streamed vs batch $batch")
-      } finally ret2.stop()
-    } finally silverQ.stop()
-  }
-
-  test("anomaly stage maintains the daily-count grid incrementally over " +
-    "the real silver chain") {
-    val cfg = freshCfg()
-    val D = 86400000L
-    val t0 = 1700006400000L
-    val input = MemoryStream[Event](41, spark, None)
-    val silverQ = Pipeline.startSilver(spark, input.toDF(), cfg)
-    try {
-      input.addData(
-        ev("a1", "g1", 1f, t0), ev("a2", "g1", 1f, t0 + 1000),
-        ev("a3", "g2", 1f, t0 + D))
-      silverQ.processAllAvailable()
-      val anomQ = Pipeline.startAnomaly(spark, cfg)
-      try {
-        anomQ.processAllAvailable()
-        input.addData( // g1 day-0 grows (same cell updated), new days
-          ev("a4", "g1", 1f, t0 + 2000), ev("a5", "g1", 1f, t0 + D),
-          ev("a6", "g2", 1f, t0 + 2 * D))
-        silverQ.processAllAvailable(); anomQ.processAllAvailable()
-        input.addData(ev("a7", "g1", 1f, t0 + 2 * D))
-        silverQ.processAllAvailable(); anomQ.processAllAvailable()
-
-        val streamed = graft.ops.Analytics.anomalyOf(
-          Pipeline.anomalyDailyCounts(spark, cfg), "group_id")
-          .collect().toSeq.map(_.toSeq)
-        val batchDaily = spark.read.parquet(cfg.silverPath)
-          .groupBy(col("group_id"),
-            floor(col("event_timestamp") / lit(D)).cast("long").as("day"))
-          .agg(count(lit(1)).as("c"))
-        val batch = graft.ops.Analytics.anomalyOf(batchDaily, "group_id")
-          .collect().toSeq.map(_.toSeq)
-        assert(streamed.nonEmpty && streamed == batch,
-          s"streamed $streamed vs batch $batch")
-
-        // stage 6's anomaly sibling serves the same page the batch
-        // query computes
-        val servedPage = Pipeline.serveAnomaly(spark, cfg, 1, 4)
-          .collect().toSeq.map(_.toSeq)
-        val batchPage = graft.ops.Serve.page(
-            graft.ops.Analytics.anomalyOf(batchDaily, "group_id")
-              .withColumn("_id", concat_ws(":", col("group_id"), col("day"))),
-            Seq(col("group_id"), col("day")), 1, 4)
-          .collect().toSeq.map(_.toSeq)
-        assert(servedPage.nonEmpty && servedPage == batchPage,
-          s"served $servedPage vs batch $batchPage")
-      } finally anomQ.stop()
-    } finally silverQ.stop()
-  }
-
   test("streaming tumbling-window aggregation emits finalized windows (append mode)") {
     val input = MemoryStream[Event](4, spark, None)
     val t0 = 1700000000000L // aligned to epoch minutes
@@ -634,60 +444,7 @@ class PipelineSpec extends SparkTestBase {
     } finally qs.foreach(_.stop())
   }
 
-  test("five concurrent stages: serving, retention, and anomaly views all " +
-    "equal their batch oracles") {
-    val cfg = freshCfg()
-    val D = 86400000L
-    val t0 = 1700006400000L
-    val input = MemoryStream[Event](14, spark, None)
-    val qs = Pipeline.startAll(spark, input.toDF(), cfg) ++
-      Seq(Pipeline.startRetention(spark, cfg), Pipeline.startAnomaly(spark, cfg))
-    def settle(): Unit = { qs.foreach(_.processAllAvailable()) }
-    try {
-      input.addData(
-        ev("f1", "g1", 1.0f, t0), ev("f2", "g2", 2.0f, t0 + D))
-      settle()
-      input.addData(
-        ev("f3", "g1", 3.0f, t0 + D), ev("f4", "g3", 4.0f, t0 + 2 * D),
-        ev("f1", "g1", 1.0f, t0)) // duplicate — must not double anywhere
-      settle()
-
-      // serving view == batch projection
-      val streamed = Pipeline.serveSnapshot(spark, cfg)
-        .select(col("_id"), col("event_count")).orderBy("_id")
-        .collect().map(_.toSeq).toSeq
-      val batch = Pipeline.serveProjection(spark, cfg)
-        .select(col("_id"), col("event_count")).orderBy("_id")
-        .collect().map(_.toSeq).toSeq
-      assert(streamed.nonEmpty && streamed == batch)
-
-      // retention view == batch rollup over the silver grid
-      val ret = graft.ops.Analytics.retentionFromActivity(
-        Pipeline.retentionActivity(spark, cfg).localCheckpoint(true))
-        .collect().map(_.toSeq).toSeq
-      val grid = spark.read.parquet(cfg.silverPath)
-        .select(col("group_id").as("user_id"),
-          floor(col("event_timestamp") / lit(D)).cast("long").as("day"))
-        .distinct()
-      val retBatch = graft.ops.Analytics.retentionOf(grid)
-        .collect().map(_.toSeq).toSeq
-      assert(ret.nonEmpty && ret == retBatch)
-
-      // anomaly view == batch z-scores over the silver daily counts
-      val anom = graft.ops.Analytics.anomalyOf(
-        Pipeline.anomalyDailyCounts(spark, cfg), "group_id")
-        .collect().map(_.toSeq).toSeq
-      val daily = spark.read.parquet(cfg.silverPath)
-        .groupBy(col("group_id"),
-          floor(col("event_timestamp") / lit(D)).cast("long").as("day"))
-        .agg(count(lit(1)).as("c"))
-      val anomBatch = graft.ops.Analytics.anomalyOf(daily, "group_id")
-        .collect().map(_.toSeq).toSeq
-      assert(anom.nonEmpty && anom == anomBatch)
-    } finally qs.foreach(_.stop())
-  }
-
-  test("seven concurrent stages (five event stages + searchStages): the event views " +
+  test("five concurrent stages (three event stages + searchStages): the event views " +
     "hold AND a stream-ingested vector is served through the rung search " +
     "stream, exact rescore included (VERDICT r14 next #6)") {
     import java.nio.file.Files
@@ -701,7 +458,6 @@ class PipelineSpec extends SparkTestBase {
     val panel = MemoryStream[(Long, Seq[Double])](18, spark, None)
     val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
     val qs = Pipeline.startAll(spark, input.toDF(), cfg) ++
-      Seq(Pipeline.startRetention(spark, cfg), Pipeline.startAnomaly(spark, cfg)) ++
       Pipeline.searchStages(spark, corpus,
         vecs.toDF().toDF("vec_id", "embedding"),
         panel.toDF().toDF("qid", "qe"),
@@ -1039,6 +795,39 @@ class PipelineSpec extends SparkTestBase {
       assert(rows(resolved) == before)
       assert(rows(Pipeline.serveSnapshot(spark, cfg)) == before)
     } finally qs.foreach(_.stop())
+  }
+
+  test("the chain leaves the session's ignoreMissingFiles off; serveLog " +
+    "skips a vanished tail file through its own read option") {
+    val key = "spark.sql.files.ignoreMissingFiles"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val cfg = freshCfg()
+    val input = MemoryStream[Event](36, spark, None)
+    val qs = Pipeline.startAll(spark, input.toDF(), cfg)
+    val t0 = 1700000000000L
+    try {
+      (1 to 2).foreach { b =>
+        input.addData(ev(s"i$b-1", "g1", 1.0f, t0 + b * 1000),
+          ev(s"i$b-2", "g2", 2.0f, t0 + b * 1000 + 1))
+        qs.foreach(_.processAllAvailable())
+      }
+      assert(spark.conf.get(key) == "false",
+        "starting the chain changed the shared session's conf")
+
+      // the listing is taken now; the file vanishes before the scan runs
+      val log = Pipeline.serveLog(spark, cfg)
+      val victim = log.inputFiles.filter(_.contains("/_serve_batch=")).max
+      val victimRows = spark.read.parquet(victim).count()
+      val before = log.count()
+      val path = new org.apache.hadoop.fs.Path(victim)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(path, false)
+      assert(log.count() == before - victimRows)
+    } finally {
+      qs.foreach(_.stop())
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("the chain's micro-batch plans are codegen-stable: after warm-up a " +

@@ -794,8 +794,12 @@ class RungSpec extends SparkTestBase {
       Rung.ensureBinaryIndex(spark, dir, 10)
       Rung.ensureMatryoshkaIndex(spark, dir, 10, 16)
       Rung.ensureInt8Index(spark, dir, 10)
-      val rows = graft.streaming.Metrics.rungSearchFreshness(spark, dir,
-        10, 16, System.currentTimeMillis()).collect()
+      val asOf = System.currentTimeMillis()
+      val rows = Seq(Rung.binTable(dir, Rung.binKey(10)),
+          Rung.mrlTable(dir, Rung.mrlKey(10, 16)),
+          Rung.i8Table(dir, Rung.i8Key(10)))
+        .flatMap(graft.streaming.Metrics.searchFreshness(spark, _, asOf)
+          .collect())
       assert(rows.length == 3)
       rows.foreach { r =>
         assert(r.getLong(1) > 0)

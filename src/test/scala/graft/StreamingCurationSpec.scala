@@ -670,55 +670,6 @@ class StreamingCurationSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("streaming funnel matches the batch greedy scan on in-order batches") {
-    import graft.streaming.StreamingFunnel
-    import graft.streaming.StreamingFunnel.Ev
-    // hand-built users exercising every shape: full conversion, stalled
-    // at click, wrong order, same-ms tie (strict > blocks progression),
-    // repeat steps, cross-batch progression
-    val batch1 = Seq(
-      Ev(1, "view", 10), Ev(1, "click", 20),          // -> purchase in b2
-      Ev(2, "click", 10), Ev(2, "purchase", 20),      // never views: stage 0
-      Ev(3, "view", 10), Ev(3, "click", 10),          // same ms: click blocked
-      Ev(4, "view", 10), Ev(4, "view", 15),           // repeat view: stage 1
-      Ev(5, "view", 30))                              // view only
-    val batch2 = Seq(
-      Ev(1, "purchase", 40),                          // completes: stage 3
-      Ev(3, "click", 25), Ev(3, "purchase", 30),      // recovers: stage 3
-      Ev(4, "click", 20),                             // advances: stage 2
-      Ev(2, "view", 50), Ev(2, "click", 60))          // view late: stage 2
-
-    // batch truth: greedy scan over ALL events in time order
-    def greedyStage(evs: Seq[Ev]): Int = {
-      var stage = 0; var t = Long.MinValue
-      evs.sortBy(e => (e.ems, e.event_type)).foreach { e =>
-        if (stage < 3 && e.event_type == StreamingFunnel.defaultSteps(stage)
-          && e.ems > t) { stage += 1; t = e.ems }
-      }
-      stage
-    }
-    val expected = (batch1 ++ batch2).groupBy(_.user_id)
-      .map { case (u, evs) => u -> greedyStage(evs) }
-
-    val input = MemoryStream[Ev](27, spark, None)
-    val q = StreamingFunnel.funnelStream(input.toDS())
-      .writeStream.outputMode("update")
-      .format("memory").queryName("graft_stream_funnel").start()
-    try {
-      input.addData(batch1)
-      q.processAllAvailable()
-      input.addData(batch2)
-      q.processAllAvailable()
-      val streamed = spark.table("graft_stream_funnel")
-        .groupBy(col("user_id"))
-        .agg(max(col("stage")).as("stage"))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(streamed == expected, s"streamed $streamed vs batch $expected")
-      // the same-ms tie really was blocked in batch semantics too
-      assert(expected(3L) == 3 && greedyStage(batch1.filter(_.user_id == 3)) == 1)
-    } finally q.stop()
-  }
-
   test("streaming scorecard counters converge to the batch scorecard " +
     "whatever the batch split") {
     import StreamingCuration.SrcCounts
