@@ -572,7 +572,7 @@ object ExtEntry {
 
     // IVF index health: occupancy distribution, exact order-statistic
     // assignment-similarity quantiles, drifted fraction — the inputs to
-    // StreamingSimilarity.shouldRetrain's purge+rebuild decision rule
+    // Similarity.shouldRetrain's purge+rebuild decision rule
     // oracle: the trained assignment re-derived, then the same occupancy /
     // order-statistic / drift rollups as Similarity.ivfStats
     { val (nQueries, nCentroids, simThreshold) = (10, 16, 0.1)

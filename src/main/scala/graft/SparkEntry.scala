@@ -1085,9 +1085,8 @@ object SparkEntry {
         |FROM e JOIN b USING (event_type) ORDER BY event_id""".stripMargin),
 
     // realized clip rate under FROZEN bounds — the drift metric behind
-    // the streaming re-freeze rule (StreamingCuration.refreezeBounds
-    // IfNeeded): bounds frozen on the even-id half of history, measured
-    // against the whole table
+    // the re-freeze rule (Analytics.shouldRefreezeBounds): bounds frozen
+    // on the even-id half of history, measured against the whole table
     // oracle: bounds frozen on the even-id half (the same exact
     // order-statistic chain as clean_winsorize), realized clip rate over the
     // whole table

@@ -40,9 +40,8 @@ object Curation {
   def sampleKey: org.apache.spark.sql.Column =
     substring(md5(col("doc_id").cast("string")), 1, 4)
 
-  /** The admit predicate — a pure function of (doc_id, lang), shared
-    * verbatim by the batch query and the streaming twin
-    * ([[graft.streaming.StreamingCuration.sampleStream]]).
+  /** The admit predicate — a pure function of (doc_id, lang), so the
+    * same doc is admitted or rejected whichever run sees it.
     */
   def samplePredicate(rates: Seq[(String, String)],
                       defaultTh: String): org.apache.spark.sql.Column = {
@@ -70,8 +69,7 @@ object Curation {
     * the corpus is repartitioned or incrementally extended. Scan-local
     * projection, zero shuffles.
     */
-  /** The split decision column — shared verbatim by the batch query and
-    * the streaming twin ([[graft.streaming.StreamingCuration.splitStream]]).
+  /** The split decision column — a pure function of the doc id.
     */
   def splitColumn(testTh: String = "0ccc",
                   valTh: String = "1999"): org.apache.spark.sql.Column =
@@ -821,11 +819,8 @@ object Curation {
     * REAL construction.
     */
   /** The priority-sampling projection — (doc_id, n_tokens, draw) as
-    * pure functions of (doc_id, text), shared verbatim by the batch
-    * query and the streaming twin
-    * ([[graft.streaming.StreamingCuration.prioritySampleStream]]);
-    * both derive the BIGINT `pkey` from these with the same
-    * `(draw * 2^20) div n_tokens` expression.
+    * pure functions of (doc_id, text); the BIGINT `pkey` derives from
+    * these with the `(draw * 2^20) div n_tokens` expression.
     */
   private[graft] def priorityColumns: Seq[org.apache.spark.sql.Column] = {
     // 32-bit draw in [1, 2^32]: zero excluded so w/u and the key are

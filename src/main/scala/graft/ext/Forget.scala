@@ -290,95 +290,6 @@ object Forget {
     Rung.exactRescore(spark, dir, pool, q, nQueries, k)
   }
 
-  /** [[Rung.matryoshkaIndexedTopK]] over the live corpus — the prefix
-    * rung's live form; same filter-before-rank composition as
-    * [[binaryIndexedTopKLive]] (ForgetSpec pins the counterfactual
-    * identity for every rung).
-    */
-  def matryoshkaIndexedTopKLive(spark: SparkSession, dir: String,
-                                nQueries: Int, k: Int, dPrefix: Int = 16,
-                                rescoreFactor: Int = 4): DataFrame = {
-    Rung.ensureMatryoshkaIndex(spark, dir, nQueries, dPrefix)
-    val q = Rung.headQueries(spark, dir, nQueries)
-      .withColumn("qpe", slice(col("qe"), 1, dPrefix))
-      .withColumn("qpn", Similarity.norm(col("qpe")))
-    val liveScan = excludeForgotten(spark, dir,
-      spark.table(Rung.mrlTable(dir, Rung.mrlKey(nQueries, dPrefix))),
-      "cid")
-    val pool = Rung.matryoshkaPoolFrom(liveScan,
-      q.select(col("qid"), col("qpe"), col("qpn")), rescoreFactor * k)
-    Rung.exactRescore(spark, dir, pool, q, nQueries, k)
-  }
-
-  /** [[Rung.int8IndexedTopK]] over the live corpus. */
-  def int8IndexedTopKLive(spark: SparkSession, dir: String, nQueries: Int,
-                          k: Int, rescoreFactor: Int = 4): DataFrame = {
-    Rung.ensureInt8Index(spark, dir, nQueries)
-    val liveScan = excludeForgotten(spark, dir,
-      spark.table(Rung.i8Table(dir, Rung.i8Key(nQueries))), "cid")
-    val pool = Rung.int8PoolFrom(liveScan,
-      Rung.int8Queries(spark, dir, nQueries), rescoreFactor * k)
-    Rung.exactRescore(spark, dir, pool,
-      Rung.headQueries(spark, dir, nQueries), nQueries, k)
-  }
-
-  /** [[Rung.cascadeTopK]] over the live corpus: the tombstone filter
-    * composes ONCE, on the stage-1 binary scan — stages 2 and 3 fetch
-    * only pool cids, and the pool is already live, so the funnel's
-    * later reads need no second filter.
-    */
-  def cascadeTopKLive(spark: SparkSession, dir: String, nQueries: Int,
-                      k: Int, rescoreInt8: Int = 4,
-                      rescoreBinary: Int = 2): DataFrame = {
-    Rung.ensureBinaryIndex(spark, dir, nQueries)
-    Rung.ensureInt8Index(spark, dir, nQueries)
-    val q = Rung.headQueries(spark, dir, nQueries)
-      .withColumn("qh1", packSigns(col("qe"), 1, 32))
-      .withColumn("qh2", packSigns(col("qe"), 33, 64))
-    val liveScan = excludeForgotten(spark, dir,
-      spark.table(Rung.binTable(dir, Rung.binKey(nQueries))), "cid")
-    val pool1 = Rung.binaryPoolFrom(liveScan,
-      q.select(col("qid"), col("qh1"), col("qh2")),
-      rescoreBinary * rescoreInt8 * k)
-    val pool2 = Rung.cascadeStage2(spark, dir, pool1,
-      Rung.int8Queries(spark, dir, nQueries), nQueries, rescoreInt8 * k)
-    Rung.exactRescore(spark, dir, pool2, q, nQueries, k)
-  }
-
-  // ——————— live forms of the TRAINED-index searches (IVF / PQ / IVF-PQ) ———————
-  // One honesty distinction vs the rung family: tombstone filtering
-  // excludes the deleted vectors' CONTENT from every result immediately
-  // (the cell/code row never reaches a rank window), but the trained
-  // state — centroids, codebooks — retains their statistical influence
-  // until the next [[applyForgetIfNeeded]], which rewrites the raw
-  // store and RETRAINS. So the counterfactual-identity pin for these
-  // forms is the degradation identity (full probe / corpus-covering
-  // pool == exact scan of the LIVE corpus), not never-admitted equality
-  // — exactly the semantics deletion carries in any production ANN
-  // system with frozen trained state.
-
-  /** [[Similarity.ivfIndexedTopK]] over the live corpus. */
-  def ivfIndexedTopKLive(spark: SparkSession, dir: String, nQueries: Int,
-                         nCentroids: Int, nProbe: Int,
-                         k: Int): DataFrame =
-    Similarity.ivfIndexedTopK(spark, dir, nQueries, nCentroids, nProbe, k,
-      corpusFilter = f => excludeForgotten(spark, dir, f, "cid"))
-
-  /** [[Pq.pqIndexedTopK]] over the live corpus. */
-  def pqIndexedTopKLive(spark: SparkSession, dir: String, nQueries: Int,
-                        k: Int, rescoreFactor: Int = 4): DataFrame =
-    Pq.pqIndexedTopK(spark, dir, nQueries, k,
-      rescoreFactor = rescoreFactor,
-      corpusFilter = f => excludeForgotten(spark, dir, f, "cid"))
-
-  /** [[Pq.ivfpqTopK]] over the live corpus. */
-  def ivfpqTopKLive(spark: SparkSession, dir: String, nQueries: Int,
-                    nProbe: Int, k: Int,
-                    rescoreFactor: Int = 4): DataFrame =
-    Pq.ivfpqTopK(spark, dir, nQueries, nProbe, k,
-      rescoreFactor = rescoreFactor,
-      corpusFilter = f => excludeForgotten(spark, dir, f, "cid"))
-
   // ————————————————————————————— the dashboard face —————————————————————————————
 
   /** Per-surface deletion audit — one row per standing surface of the
@@ -637,7 +548,8 @@ object Forget {
     * contract as [[applyForgetIfNeeded]].
     *
     * Trained-state deletion semantics, doc side (r15 VERDICT next #8 —
-    * the [[ivfIndexedTopKLive]] frozen-centroid note's text twin).
+    * the text twin of frozen IVF centroids and PQ codebooks, which keep
+    * a deleted vector's statistical influence until the next retrain).
     * Doc-derived trained state falls in three classes, each with its
     * own erase moment: (1) per-query-trained artifacts (DSIR weights,
     * langid/quality scores) train from the store on every call, so the

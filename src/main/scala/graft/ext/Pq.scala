@@ -401,17 +401,16 @@ object Pq {
       .forall(IndexCatalog.hasCommittedData(spark, _))
   }
 
-  /** File-growth maintenance rule for the standing PQ index: streaming
-    * admission ([[graft.streaming.StreamingSimilarity.startPqAdmission]])
-    * appends one bucketed file set per micro-batch, so the codes
-    * table's file count grows without bound at stream cadence. When it
+  /** File-growth maintenance rule for the standing PQ index: appended
+    * code rows land as one bucketed file set per append, so the codes
+    * table's file count grows with every append. When it
     * exceeds `maxFiles`, the offline rebuild (purge + ensure — retrain
     * + re-encode from the embeddings table, the source of truth) IS the
     * compaction: codes are derived state, so unlike the gram log there
     * is nothing to fold — rewriting from truth is both simpler and
     * refreshes codebook drift in the same pass. Returns whether a
     * rebuild ran. Same single-maintainer contract as the other passes:
-    * run quiesced (admission streams stopped or between batches).
+    * run quiesced.
     */
   def compactPqIndexIfNeeded(spark: SparkSession, dir: String,
                              nQueries: Int, maxFiles: Int = 64,
@@ -475,17 +474,12 @@ object Pq {
   def pqIndexedTopK(spark: SparkSession, dir: String, nQueries: Int, k: Int,
                     nSub: Int = 8, kSub: Int = 16, iters: Int = 2,
                     sampleMod: Int = 3, sampleCap: Int = defaultIvfSampleCap,
-                    rescoreFactor: Int = 4,
-                    corpusFilter: DataFrame => DataFrame = identity)
-      : DataFrame = {
+                    rescoreFactor: Int = 4): DataFrame = {
     ensurePqIndex(spark, dir, nQueries, nSub, kSub, iters, sampleMod,
       sampleCap)
     val key = pqKey(nQueries, nSub, kSub, iters, sampleMod, sampleCap)
     val books = readBooks(spark, pqBooksTable(dir, key), nSub, kSub)
-    // corpusFilter composes onto the codes scan BEFORE the ADC rank
-    // window (the Similarity.ivfIndexedSearch seam; identity = no-op)
-    val pool = adcPool(spark, dir,
-      corpusFilter(spark.table(pqCodesTable(dir, key))),
+    val pool = adcPool(spark, dir, spark.table(pqCodesTable(dir, key)),
       books, nQueries, rescoreFactor * k)
     exactRescore(spark, dir, pool, nQueries, k)
   }
@@ -512,68 +506,6 @@ object Pq {
       lutFrameOf(qf.select(col("qid"), col("qe")), books), books,
       rescoreFactor * k)
     exactRescoreOf(spark, dir, pool, qf, nQueries, k)
-  }
-
-  /** Admit newly arrived vectors into the STANDING PQ index: encode
-    * each against the (broadcast) frozen codebook table and append the
-    * code rows. Idempotent at vector granularity — an anti-join on cid
-    * drops already-present rows, its codes-table probe pruned to the
-    * batch's cids by a literal IN when the batch is small enough for
-    * the pushed-predicate plan to win (the adaptive
-    * [[TextDedup.indexPruneMaxKeys]] policy). Codebooks stay FROZEN
-    * between rebuilds ([[purgePqIndex]] + [[ensurePqIndex]]), the same
-    * deployment shape as [[Similarity.appendToIvfIndex]].
-    *
-    * Note the raw-store split every real PQ deployment has: the index
-    * carries CODES only, so admitted vectors surface in the ADC stage;
-    * exact rescoring needs the caller's raw-vector store to also carry
-    * them (for the registered queries, the base embeddings table).
-    */
-  def appendToPqIndex(spark: SparkSession, dir: String, newVecs: DataFrame,
-                      nQueries: Int, nSub: Int = 8, kSub: Int = 16,
-                      iters: Int = 2, sampleMod: Int = 3,
-                      sampleCap: Int = defaultIvfSampleCap): Unit = {
-    // fail fast on a shape mismatch rather than silently training and
-    // admitting into a brand-new index under a different key while the
-    // searched index never sees the admitted vectors — the same guard
-    // class as compactPqIndexIfNeeded (ensurePqIndex here would BUILD)
-    require(pqIndexExists(spark, dir, nQueries, nSub, kSub, iters,
-      sampleMod, sampleCap),
-      s"appendToPqIndex: no standing PQ index for dir=$dir, " +
-        s"nQueries=$nQueries, nSub=$nSub, kSub=$kSub — build it with " +
-        "ensurePqIndex (with the SAME parameters) before admitting")
-    val key = pqKey(nQueries, nSub, kSub, iters, sampleMod, sampleCap)
-    if (!spark.catalog.tableExists(pqCodesTable(dir, key))) {
-      // data survives but the catalog entry was lost: reattach, the
-      // IndexCatalog lifecycle every standing index follows
-      ensurePqIndex(spark, dir, nQueries, nSub, kSub, iters, sampleMod,
-        sampleCap)
-    }
-    val kt = pqCodesTable(dir, key)
-    pqAppendFrame(spark, newVecs, pqBooksTable(dir, key), kt, nSub)
-      .write.mode("append")
-      .bucketBy(8, "cid").sortBy("cid")
-      .saveAsTable(kt)
-    spark.catalog.refreshTable(kt)
-  }
-
-  /** The frame [[appendToPqIndex]] appends — split out so the spec
-    * asserts the executed plan (pruned idempotency probe, broadcast
-    * codebook).
-    */
-  private[graft] def pqAppendFrame(spark: SparkSession, newVecs: DataFrame,
-                                   bt: String, kt: String,
-                                   nSub: Int): DataFrame = {
-    // checkpointed: read by the touched-cid collect and the append plan
-    // — one narrow row per batch vector
-    val batchCodes = groupCodes(argminByDist(encodeScored(
-      newVecs.select(col("vec_id").as("cid"), col("embedding")),
-      spark.table(bt), nSub)))
-      .localCheckpoint(true)
-    val cids = IndexCatalog.collectKeys(batchCodes, "cid")
-    batchCodes.join(
-      IndexCatalog.pruneToKeys(spark.table(kt), "cid", cids)
-        .select(col("cid")), Seq("cid"), "left_anti")
   }
 
   // ——————— IVF-PQ: coarse cells over compressed codes (the faiss shape) ———————
@@ -685,15 +617,13 @@ object Pq {
                 nProbe: Int, k: Int, nCentroids: Int = 16, nSub: Int = 8,
                 kSub: Int = 16, iters: Int = 2, sampleMod: Int = 3,
                 sampleCap: Int = defaultIvfSampleCap,
-                rescoreFactor: Int = 4,
-                corpusFilter: DataFrame => DataFrame = identity)
-      : DataFrame =
+                rescoreFactor: Int = 4): DataFrame =
     ivfpqSearch(spark, dir,
       embeddings(spark, dir).filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           norm(col("embedding")).as("qn")),
       nQueries, nProbe, k, nCentroids, nSub, kSub, iters, sampleMod,
-      sampleCap, rescoreFactor, corpusFilter)
+      sampleCap, rescoreFactor)
 
   /** [[ivfpqTopK]] for a CALLER-SUPPLIED query frame (qid, qe) —
     * out-of-corpus vectors against the SAME standing coarse-cell +
@@ -720,9 +650,7 @@ object Pq {
                           nQueries: Int, nProbe: Int, k: Int,
                           nCentroids: Int, nSub: Int, kSub: Int,
                           iters: Int, sampleMod: Int, sampleCap: Int,
-                          rescoreFactor: Int,
-                          corpusFilter: DataFrame => DataFrame = identity)
-      : DataFrame = {
+                          rescoreFactor: Int): DataFrame = {
     ensureIvfPqIndex(spark, dir, nQueries, nCentroids, nSub, kSub, iters,
       sampleMod, sampleCap)
     val key = ivfpqKey(nQueries, nCentroids, nSub, kSub, iters, sampleMod,
@@ -739,8 +667,7 @@ object Pq {
       .filter(col("rk") <= nProbe)
       .select(col("qid"), col("cent_id"))
     val members = broadcast(probed)
-      .join(corpusFilter(spark.table(ivfpqCellsTable(dir, key))),
-        Seq("cent_id"))
+      .join(spark.table(ivfpqCellsTable(dir, key)), Seq("cent_id"))
       .select(col("qid"), col("cid"), col("codes"))
     val pool = topPoolOf(
       members.join(

@@ -34,12 +34,11 @@ import graft.ops.Exact.round6
   * registered `ann_*_indexed` queries reuse the `ann_*_topk` oracles
   * verbatim, the ann_ivf_indexed/ann_pq_indexed convention.
   *
-  * Raw-store split (same caveat as [[Pq.appendToPqIndex]]): the rung
-  * tables carry derived payloads only, so stream-admitted vectors
-  * surface in stage 1; the exact stage-2 rescore fetches from the
-  * caller's raw-vector store (here the embeddings table), which the
-  * ingest must also feed. The contract is CODE, not a caveat:
-  * [[graft.streaming.StreamingSimilarity.startEmbeddingIngest]] lands
+  * Raw-store split: the rung tables carry derived payloads only, so
+  * admitted vectors surface in stage 1; the exact stage-2 rescore
+  * fetches from the caller's raw-vector store (here the embeddings
+  * table), which the ingest must also feed. The contract is CODE, not
+  * a caveat: [[graft.streaming.Pipeline.startEmbeddingIngest]] lands
   * raw + all derived rows in one idempotent batch body.
   */
 object Rung {
@@ -169,7 +168,7 @@ object Rung {
   }
 
   /** File-growth maintenance for the rung tables — the
-    * [[Pq.compactPqIndexIfNeeded]] rule verbatim: stream admission
+    * [[Pq.compactPqIndexIfNeeded]] rule verbatim: the composed ingest
     * appends one bucketed file set per micro-batch; past `maxFiles` on
     * ANY of the three tables, purge+ensure from the embeddings table IS
     * the compaction (rung payloads are derived state — nothing to
@@ -253,8 +252,7 @@ object Rung {
     * offline build ran, anti-join out already-present cids (probe
     * pruned to the batch's cids by a literal IN when small — the
     * adaptive [[TextDedup.indexPruneMaxKeys]] policy), append.
-    * Idempotent at vector granularity, so a replayed batch is a no-op —
-    * the [[Pq.appendToPqIndex]] contract.
+    * Idempotent at vector granularity, so a replayed batch is a no-op.
     */
   private def appendToTable(spark: SparkSession, table: String,
                             batch: DataFrame, cids: Seq[Long]): Unit = {
@@ -266,8 +264,7 @@ object Rung {
   }
 
   /** The frame an admission appends — split out so the spec asserts the
-    * executed plan (pruned idempotency probe), the [[Pq.pqAppendFrame]]
-    * pattern. `cids` carries the batch's precollected key set when the
+    * executed plan (pruned idempotency probe). `cids` carries the batch's precollected key set when the
     * caller already has it (the three per-table appends share ONE
     * collect — review r15); without it the frame is checkpointed and
     * its keys collected here.
@@ -289,10 +286,10 @@ object Rung {
   }
 
   /** Admit a (vec_id, embedding) batch into ALL THREE standing rung
-    * tables — the admission loop's per-batch body
-    * ([[graft.streaming.StreamingSimilarity.startRungAdmission]]).
-    * Fails fast on a shape mismatch rather than building a spurious
-    * index under a different key, the [[Pq.appendToPqIndex]] guard.
+    * tables — the derived half of the composed ingest's per-batch body
+    * ([[graft.streaming.Pipeline.startEmbeddingIngest]]). Fails fast on
+    * a shape mismatch rather than building a spurious index under a
+    * different key.
     *
     * Admission is a SET operation per batch: the batch is deduped on
     * vec_id before the frame builders run (ADVICE r14), so an
@@ -332,10 +329,7 @@ object Rung {
 
   /** The admission stream's OBSERVABILITY face (VERDICT r14 next #5).
     *
-    * Why no ORDER counters here, unlike
-    * [[graft.streaming.StreamingDedup.admissionOrderStats]] /
-    * [[graft.streaming.StreamingCuration.orderGuardStats]]: rung
-    * admission is a SET UNION — each batch anti-joins out
+    * Why no ORDER counters here: rung admission is a SET UNION — each batch anti-joins out
     * already-present cids and appends pure per-row derivations, so the
     * final table state is the union of all admitted cids REGARDLESS of
     * arrival order, and no per-key decision (which dup survives, which
@@ -503,16 +497,9 @@ object Rung {
   private[graft] def matryoshkaPool(spark: SparkSession, dir: String,
                                     nQueries: Int, dPrefix: Int,
                                     qp: DataFrame, poolK: Int): DataFrame =
-    matryoshkaPoolFrom(
-      spark.table(mrlTable(dir, mrlKey(nQueries, dPrefix))), qp, poolK)
-
-  /** [[matryoshkaPool]] over a caller-supplied scan — the
-    * [[binaryPoolFrom]] seam for the prefix rung.
-    */
-  private[graft] def matryoshkaPoolFrom(scan: DataFrame, qp: DataFrame,
-                                        poolK: Int): DataFrame =
     poolOf(
-      scan.crossJoin(broadcast(qp))
+      spark.table(mrlTable(dir, mrlKey(nQueries, dPrefix)))
+        .crossJoin(broadcast(qp))
         .select(col("qid"), col("cid"),
           (dot(col("qpe"), col("cpe")) / (col("qpn") * col("cpn")))
             .as("ascore")),
@@ -542,15 +529,8 @@ object Rung {
   private[graft] def int8Pool(spark: SparkSession, dir: String,
                               nQueries: Int, q8: DataFrame,
                               poolK: Int): DataFrame =
-    int8PoolFrom(spark.table(i8Table(dir, i8Key(nQueries))), q8, poolK)
-
-  /** [[int8Pool]] over a caller-supplied scan — the [[binaryPoolFrom]]
-    * seam for the int8 rung.
-    */
-  private[graft] def int8PoolFrom(scan: DataFrame, q8: DataFrame,
-                                  poolK: Int): DataFrame =
     poolOf(
-      scan.crossJoin(broadcast(q8))
+      spark.table(i8Table(dir, i8Key(nQueries))).crossJoin(broadcast(q8))
         .select(col("qid"), col("cid"),
           (HashExpressions.dotInt8(col("qq8"), col("q8")) *
             col("qscale") * col("cscale") /

@@ -136,7 +136,7 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  private[graft] def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Deterministic random-hyperplane directions: component (p, i) is ±1
     * by the parity of the first hex digit of md5("p:i") — reproducible in
@@ -1794,15 +1794,12 @@ object Similarity {
   def ivfIndexedTopK(spark: SparkSession, dir: String, nQueries: Int,
                      nCentroids: Int, nProbe: Int, k: Int,
                      iters: Int = 2, sampleMod: Int = 3,
-                     sampleCap: Int = defaultIvfSampleCap,
-                     corpusFilter: DataFrame => DataFrame = identity)
-      : DataFrame =
+                     sampleCap: Int = defaultIvfSampleCap): DataFrame =
     ivfIndexedSearch(spark, dir,
       embeddings(spark, dir).filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           norm(col("embedding")).as("qn")),
-      nQueries, nCentroids, nProbe, k, iters, sampleMod, sampleCap,
-      corpusFilter)
+      nQueries, nCentroids, nProbe, k, iters, sampleMod, sampleCap)
 
   /** [[ivfIndexedTopK]] for a CALLER-SUPPLIED query frame (qid, qe) —
     * vectors from OUTSIDE the corpus probe the SAME standing index
@@ -1820,17 +1817,10 @@ object Similarity {
     ivfIndexedSearch(spark, dir, normQueries(queries), nQueries, nCentroids,
       nProbe, k, iters, sampleMod, sampleCap)
 
-  /** `corpusFilter` composes a caller predicate onto the CELL-TABLE
-    * scan (before the per-query rank window — the filter-before-rank
-    * contract): the seam [[Forget.ivfIndexedTopKLive]] threads its
-    * tombstone anti-join through. Identity leaves the plan untouched.
-    */
   private def ivfIndexedSearch(spark: SparkSession, dir: String,
                                q: DataFrame, nQueries: Int, nCentroids: Int,
                                nProbe: Int, k: Int, iters: Int,
-                               sampleMod: Int, sampleCap: Int,
-                               corpusFilter: DataFrame => DataFrame =
-                                 identity): DataFrame = {
+                               sampleMod: Int, sampleCap: Int): DataFrame = {
     ensureIvfIndex(spark, dir, nQueries, nCentroids, iters, sampleMod,
       sampleCap)
     val key = ivfKey(nQueries, nCentroids, iters, sampleMod, sampleCap)
@@ -1839,72 +1829,11 @@ object Similarity {
     // caller-supplied frame is often a join result with no stats, and
     // without the hint this join plans sort-merge, shuffling the
     // cell-side rows (r12 plan audit)
-    rankTopK(probed.join(corpusFilter(spark.table(ivfCellsTable(dir, key))),
-        Seq("cent_id"))
+    rankTopK(probed.join(spark.table(ivfCellsTable(dir, key)), Seq("cent_id"))
       .join(broadcast(q), Seq("qid"))
       .select(col("qid"), col("cid"),
         (dot(col("qe"), col("ce")) / (col("qn") * col("en"))).as("sim")),
       k, Seq("qid", "cid"))
-  }
-
-  /** Admit newly arrived vectors into the STANDING IVF index: assign
-    * each against the (broadcast) frozen centroid table and append to
-    * the cell table's touched buckets. Idempotent at vector granularity
-    * — an anti-join on (cent_id, cid) drops already-present rows reading
-    * only the touched buckets in place, so a replayed admission batch
-    * cannot double-insert (the [[graft.ext.TextDedup.appendBandRows]]
-    * pattern). Centroids stay FROZEN between rebuilds — the standard IVF
-    * deployment shape: admission cost is batch × centroids, and centroid
-    * drift is handled by periodic offline retraining
-    * ([[purgeIvfIndex]] + [[ensureIvfIndex]]), not per-batch.
-    */
-  def appendToIvfIndex(spark: SparkSession, dir: String,
-                       newVecs: DataFrame, nQueries: Int, nCentroids: Int,
-                       iters: Int = 2, sampleMod: Int = 3,
-                       sampleCap: Int = defaultIvfSampleCap): Unit = {
-    val key = ivfKey(nQueries, nCentroids, iters, sampleMod, sampleCap)
-    ivfAppendFrame(spark, dir, newVecs, key)
-      .write.mode("append")
-      .bucketBy(8, "cent_id").sortBy("cent_id")
-      .saveAsTable(ivfCellsTable(dir, key))
-    spark.catalog.refreshTable(ivfCellsTable(dir, key))
-  }
-
-  /** The frame [[appendToIvfIndex]] appends — split out so the spec
-    * asserts the plan the append actually executes. The idempotency
-    * anti-join's cell-table scan carries a literal IN prune on the
-    * batch's assigned cent_ids (≤ nCentroids values — truly
-    * constant-bounded), so a replay probe reads ONLY the touched cells'
-    * row groups / buckets instead of the whole posting table
-    * (VERDICT r9 #2).
-    */
-  private[graft] def ivfAppendFrame(spark: SparkSession, dir: String,
-                                    newVecs: DataFrame,
-                                    key: String): DataFrame = {
-    val cents = spark.table(ivfCentsTable(dir, key))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cid"))
-      .orderBy(col("acos").desc, col("cent_id").asc)
-    // checkpointed: read by the touched-cell collect and the append plan
-    // — one narrow row per batch vector
-    val assigned = newVecs
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        norm(col("embedding")).as("en"))
-      .crossJoin(broadcast(cents))
-      .select(col("cid"), col("ce"), col("en"),
-        (dot(col("ce"), col("cemb")) / (col("en") * col("cn"))).as("acos"),
-        col("cent_id"))
-      .withColumn("rk", row_number().over(wAssign))
-      .filter(col("rk") === 1)
-      .select(col("cent_id"), col("cid"), col("ce"), col("en"))
-      .localCheckpoint(true)
-    val touched = assigned.select(col("cent_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    assigned.join(
-      spark.table(ivfCellsTable(dir, key))
-        .filter(col("cent_id").isin(touched: _*))
-        .select(col("cent_id"), col("cid")),
-      Seq("cent_id", "cid"), "left_anti")
   }
 
   /** Health metrics of the STANDING IVF index — the numbers that decide
@@ -1913,8 +1842,8 @@ object Similarity {
     * means some probes pay far more than cells/nProbe), exact
     * order-statistic quantiles of each member's similarity to its own
     * centroid, and the drifted fraction (members whose best-centroid
-    * similarity fell below `simThreshold` — as stream admission shifts
-    * the distribution, this is the number that silently degrades
+    * similarity fell below `simThreshold` — as the data drifts from the
+    * frozen centroids, this is the number that silently degrades
     * recall). One row out.
     *
     * Scale shape: one scan of the cell table against the broadcast
@@ -1983,7 +1912,7 @@ object Similarity {
   /** True when the standing IVF index for this (dir, shape) EXISTS — as
     * catalog entries or as complete (`_SUCCESS`-committed) data at the
     * fixed locations. The health/retrain rule checks this before
-    * reading stats ([[graft.streaming.StreamingSimilarity]]): a mis-set
+    * reading stats ([[shouldRetrain]]): a mis-set
     * shape must fail loudly, not silently train a fresh spurious index
     * and then forever monitor it as "calm" while the real one drifts —
     * the same guard class as
@@ -2007,5 +1936,72 @@ object Similarity {
     val key = ivfKey(nQueries, nCentroids, iters, sampleMod, sampleCap)
     Seq(ivfCentsTable(dir, key), ivfCellsTable(dir, key))
       .foreach(IndexCatalog.purge(spark, _))
+  }
+
+  /** The RETRAIN DECISION RULE for the frozen-centroid deployment: an
+    * index whose cells no longer describe the data degrades SILENTLY —
+    * nothing in the search path ever fails. This measures the standing
+    * index's health via [[ivfStats]] and says when to pay the offline
+    * rebuild ([[purgeIvfIndex]] + [[ensureIvfIndex]], run quiesced like
+    * the other maintenance passes):
+    *
+    *   - `frac_drifted > maxDriftFrac` — too many members sit below
+    *     `simThreshold` similarity to their own centroid: the centroids
+    *     no longer describe the data, recall is quietly gone;
+    *   - `cell_skew > maxSkew` (max cell over mean cell) — vectors piled
+    *     into few cells: probes of a hot cell cost far more than
+    *     cells/nProbe, and its members' true neighbors increasingly
+    *     live OUTSIDE the probed cell.
+    *
+    * Both thresholds are deliberately coarse: this is a maintenance
+    * trigger evaluated between batches (one cell-table scan), not a
+    * per-query guard. IvfIndexSpec pins that drifted cell rows flip it.
+    */
+  def shouldRetrain(spark: SparkSession, dir: String, nQueries: Int,
+                    nCentroids: Int, simThreshold: Double = 0.1,
+                    maxDriftFrac: Double = 0.2,
+                    maxSkew: Double = 4.0, iters: Int = 2,
+                    sampleMod: Int = 3,
+                    sampleCap: Int = defaultIvfSampleCap): Boolean = {
+    // fail fast on a shape/dir misconfiguration: health-checking an
+    // index that was never built would silently BUILD a fresh spurious
+    // one (ivfStats -> ensureIvfIndex) and then forever monitor it as
+    // calm while the real index drifts — the gram-compaction guard's
+    // sibling hazard
+    require(ivfIndexExists(spark, dir, nQueries, nCentroids,
+      iters, sampleMod, sampleCap),
+      s"shouldRetrain: no standing IVF index for dir=$dir, " +
+        s"nQueries=$nQueries, nCentroids=$nCentroids (check " +
+        "SPARK_GRAFT_IVF_DIR/_NQ/_NC/_ITERS/_SAMPLE_MOD/_SAMPLE_CAP " +
+        "against the built index's shape) — the health rule monitors " +
+        "an existing index, it does not build one")
+    val s = ivfStats(spark, dir, nQueries, nCentroids,
+      simThreshold, iters, sampleMod, sampleCap).collect().head
+    s.getAs[Double]("frac_drifted") > maxDriftFrac ||
+      s.getAs[Double]("cell_skew") > maxSkew
+  }
+
+  /** The maintenance-loop face of the rule: evaluate [[shouldRetrain]]
+    * and, when it fires, execute the offline rebuild (purge + retrain +
+    * reassign from the source-of-truth embeddings table). Returns
+    * whether a rebuild ran. Same single-maintainer contract as the
+    * other compaction passes — run it quiesced, since purge momentarily
+    * leaves no cell table to search.
+    */
+  def retrainIfNeeded(spark: SparkSession, dir: String, nQueries: Int,
+                      nCentroids: Int, simThreshold: Double = 0.1,
+                      maxDriftFrac: Double = 0.2,
+                      maxSkew: Double = 4.0, iters: Int = 2,
+                      sampleMod: Int = 3,
+                      sampleCap: Int = defaultIvfSampleCap): Boolean = {
+    val fire = shouldRetrain(spark, dir, nQueries, nCentroids,
+      simThreshold, maxDriftFrac, maxSkew, iters, sampleMod, sampleCap)
+    if (fire) {
+      purgeIvfIndex(spark, dir, nQueries, nCentroids, iters, sampleMod,
+        sampleCap)
+      ensureIvfIndex(spark, dir, nQueries, nCentroids, iters, sampleMod,
+        sampleCap)
+    }
+    fire
   }
 }

@@ -312,10 +312,8 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
 
   /** [[repetitionMass]] as a frame transformer over any frame with a
-    * `text` column — a pure row function like [[gopherFlags]], shared
-    * verbatim by the streaming twin
-    * ([[graft.streaming.StreamingCuration.repetitionMassStream]]).
-    * Appends the metric, flag, and `keep` columns.
+    * `text` column — a pure row function like [[gopherFlags]]. Appends
+    * the metric, flag, and `keep` columns.
     */
   def repetitionMassFlags(docs: DataFrame, spanLen: Int = 8, topN: Int = 2,
                           dupN: Int = 5): DataFrame = {
@@ -362,11 +360,9 @@ object TextAnalysis {
   }
 
   /** The rule computation as a frame transformer over any frame with a
-    * `text` column — a PURE ROW FUNCTION, so the streaming twin
-    * ([[graft.streaming.StreamingCuration.gopherStream]]) applies the
-    * SAME definition to arriving documents and the ingest-time gate can
-    * never diverge from the backfill. Appends the metric, flag, and
-    * `keep` columns.
+    * `text` column — a PURE ROW FUNCTION, so an ingest-time gate that
+    * applies it to arriving documents can never diverge from the
+    * backfill. Appends the metric, flag, and `keep` columns.
     */
   def gopherFlags(docs: DataFrame,
                   minWords: Int = 30, maxWords: Int = 90,
@@ -838,7 +834,7 @@ object TextAnalysis {
 
   /** [[chunkWindows]] over any (doc_id, text) frame — sort-free, so it
     * applies to a STREAMING frame verbatim (stateless projection +
-    * explode; see [[graft.streaming.StreamingCuration.chunkStream]]).
+    * explode).
     */
   private[graft] def chunkWindowsOf(docs: DataFrame, window: Int,
                                     stride: Int): DataFrame = {

@@ -471,8 +471,8 @@ object TextDedup {
     * corpus match by verified Jaccard (ties → smaller id), and
     * keep = no corpus match reached `threshold`.
     */
-  def incrementalDedup(spark: SparkSession, dir: String,
-                       threshold: Double): DataFrame = {
+  private[graft] def incrementalDedup(spark: SparkSession, dir: String,
+                                      threshold: Double): DataFrame = {
     val isNew = col("doc_id") % 10 >= 8
     val docs = documents(spark, dir)
     admit(docs.filter(!isNew), docs.filter(isNew), threshold)

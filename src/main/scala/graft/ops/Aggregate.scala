@@ -39,8 +39,9 @@ object Aggregate {
   /** One-shot gold: the batch equivalent of running every event through the
     * incremental pipeline (dedup assumed done upstream).
     */
-  def oneShotGold(events: DataFrame, groupCol: String, scoreCol: String,
-                  tsCol: String): DataFrame = {
+  private[graft] def oneShotGold(events: DataFrame, groupCol: String,
+                                 scoreCol: String,
+                                 tsCol: String): DataFrame = {
     val exact = sum(col(scoreCol).cast(DecimalType(27, 4)))
     events.groupBy(col(groupCol)).agg(
       exact.cast("double").as("cumulative_score"),

@@ -42,10 +42,9 @@ object Analytics {
   }
 
   /** The per-group [p05, p95] bounds table (group, lo_v, hi_v) the clip
-    * pass consumes — exposed separately so the streaming twin
-    * ([[graft.streaming.StreamingCuration.winsorizeStream]]) can freeze
-    * batch-history bounds and broadcast them against the live stream,
-    * the same frozen-statistics deployment as the classifier model.
+    * pass consumes — exposed separately so the standing bounds table
+    * ([[ensureBoundsIndex]]) can freeze batch-history bounds, the same
+    * frozen-statistics deployment as the classifier model.
     *
     * Scale shape: the cumulative count over the per-group DISTINCT
     * rounded-value grid rides [[blockedCumCount]] — a distributed block
@@ -75,7 +74,7 @@ object Analytics {
 
   /** Realized clip rate of `events` under a FROZEN bounds table — the
     * health metric behind the bounds re-freeze rule
-    * ([[graft.streaming.StreamingCuration.refreezeBoundsIfNeeded]]):
+    * ([[shouldRefreezeBounds]]):
     * bounds frozen from batch history clip EXACTLY `lo + (1 − hi)` of
     * that history by construction, so the realized clip fraction of the
     * CURRENT data drifting away from that expectation is the signal
@@ -138,11 +137,10 @@ object Analytics {
       s"${group}_l${(lo * 1000).round}_h${(hi * 1000).round}"
 
   /** Build (or reattach) the STANDING frozen-bounds table for `dir`'s
-    * events — the persisted form of the freeze
-    * [[graft.streaming.StreamingCuration.winsorizeStream]] consumes: a
-    * restarted stream reads the SAME bounds it was clipping with
-    * instead of silently re-freezing on whatever history exists at
-    * restart, and the maintenance loop re-freezes out-of-band via
+    * events — the persisted form of the freeze: a restarted reader
+    * clips with the SAME bounds instead of silently re-freezing on
+    * whatever history exists at restart, and the maintenance loop
+    * re-freezes out-of-band via
     * [[refreezeBoundsIndexIfNeeded]]. Same [[graft.ext.IndexCatalog]]
     * lifecycle as every standing index (external bucketed parquet,
     * catalog-loss reattach, purge+ensure rebuild).
@@ -176,8 +174,7 @@ object Analytics {
   }
 
   /** The persisted frozen bounds (built on first use, reattached across
-    * sessions) — the frame [[graft.streaming.StreamingCuration.winsorizeStream]]
-    * binds against.
+    * sessions) — the frame the drift rule reads.
     */
   def frozenBounds(spark: org.apache.spark.sql.SparkSession, dir: String,
                    group: String = "event_type", lo: Double = 0.05,
@@ -204,15 +201,44 @@ object Analytics {
                        lo: Double = 0.05, hi: Double = 0.95): Unit =
     graft.ext.IndexCatalog.purge(spark, boundsTable(dir, group, lo, hi))
 
+  /** The RE-FREEZE DECISION RULE for frozen winsorize bounds: bounds
+    * frozen from history never fail as the value distribution shifts —
+    * the clip just silently stops doing its job (clipping far too much
+    * after an upward shift, or nothing at all after the tails move
+    * inside the frozen window). Fire when any group's realized clip
+    * fraction over `history` ([[clipDrift]]) deviates from the frozen
+    * expectation by more than `tol`, or when a group in the data is
+    * absent from the bounds table entirely.
+    *
+    * Evaluate it between batches over the history table (one scan,
+    * groups-sized rollup — a maintenance trigger, not a per-row guard),
+    * like the IVF drift rule [[graft.ext.Similarity.shouldRetrain]].
+    */
+  def shouldRefreezeBounds(history: DataFrame, group: String,
+                           bounds: DataFrame, lo: Double = 0.05,
+                           hi: Double = 0.95,
+                           tol: Double = 0.05): Boolean = {
+    val d = clipDrift(history, group, bounds, lo, hi)
+      .agg(
+        max(when(col("uncovered"), lit(1.0)).otherwise(lit(0.0)))
+          .as("any_uncovered"),
+        max(abs(col("clip_frac") - col("expected_frac"))).as("max_dev"))
+      .collect().head
+    // empty history → both aggregates null: nothing observed, nothing
+    // drifted — read calm instead of NPE-crashing the maintenance tick
+    val anyUncovered = !d.isNullAt(0) && d.getDouble(0) > 0.0
+    val maxDev = if (d.isNullAt(1)) 0.0 else d.getDouble(1)
+    anyUncovered || maxDev > tol
+  }
+
   /** The maintenance-loop face of the PERSISTED freeze: evaluate the
-    * drift rule ([[graft.streaming.StreamingCuration.shouldRefreezeBounds]])
-    * over the current events history against the standing bounds table
-    * and, when it fires, rebuild the table from history (purge +
-    * ensure — the [[graft.streaming.StreamingSimilarity.retrainIfNeeded]]
-    * contract: run quiesced, the consuming stream restarts against the
-    * refreshed table). Fails fast when no standing table exists for the
-    * configured shape — monitoring would otherwise silently BUILD a
-    * fresh table and forever read it as calm.
+    * drift rule ([[shouldRefreezeBounds]]) over the current events
+    * history against the standing bounds table and, when it fires,
+    * rebuild the table from history (purge + ensure — the
+    * [[graft.ext.Similarity.retrainIfNeeded]] contract: run quiesced,
+    * readers pick up the refreshed table). Fails fast when no standing
+    * table exists for the configured shape — monitoring would otherwise
+    * silently BUILD a fresh table and forever read it as calm.
     */
   def refreezeBoundsIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
                                   dir: String, group: String = "event_type",
@@ -223,9 +249,8 @@ object Analytics {
         s"dir=$dir, group=$group, lo=$lo, hi=$hi (check " +
         "SPARK_GRAFT_WINSOR_DIR/_GROUP against the built table's shape) " +
         "— the rule monitors an existing freeze, it does not build one")
-    val fire = graft.streaming.StreamingCuration.shouldRefreezeBounds(
-      graft.ops.Ingest.events(spark, dir), group,
-      frozenBounds(spark, dir, group, lo, hi), lo, hi, tol)
+    val fire = shouldRefreezeBounds(graft.ops.Ingest.events(spark, dir),
+      group, frozenBounds(spark, dir, group, lo, hi), lo, hi, tol)
     if (fire) {
       purgeBoundsIndex(spark, dir, group, lo, hi)
       ensureBoundsIndex(spark, dir, group, lo, hi)
@@ -378,7 +403,8 @@ object Analytics {
 
   /** Cohort retention over the distinct (user_id, day) activity grid:
     * cohort = first active day; each (cohort, day-offset) cell counts
-    * users still active that many days later.
+    * users still active that many days later. The activity table is
+    * tiny (cohorts × offsets), so the cohort-size frame broadcasts.
     */
   def retentionOf(grid: DataFrame): DataFrame = {
     val cohorts = grid.groupBy(col("user_id"))
@@ -387,14 +413,6 @@ object Analytics {
       .groupBy(col("cohort_day"),
         (col("day") - col("cohort_day")).as("day_offset"))
       .agg(count_distinct(col("user_id")).as("n_active"))
-    retentionFromActivity(act)
-  }
-
-  /** The tail below the (cohort_day, day_offset) → n_active activity
-    * table — cohort sizes and retention fractions. The activity table is
-    * tiny (cohorts × offsets), so the size frame broadcasts.
-    */
-  def retentionFromActivity(act: DataFrame): DataFrame = {
     val sizes = act.filter(col("day_offset") === 0)
       .select(col("cohort_day"), col("n_active").as("cohort_size"))
     act.join(broadcast(sizes), Seq("cohort_day"))
@@ -405,33 +423,32 @@ object Analytics {
       .orderBy(col("cohort_day"), col("day_offset"))
   }
 
-  /** Daily volume anomaly z-scores over the (`key`, day, c) count grid
-    * (`key` is the series column — `event_type` for the batch query).
-    * Variance comes from EXACT
+  /** Daily volume anomaly z-scores over the (event_type, day, c) count
+    * grid. Variance comes from EXACT
     * integer sums (n, Σc, Σc²) combined in one fixed IEEE expression —
     * deliberately NOT stddev_samp, whose Welford-style accumulation is
     * engine- and order-dependent and would break the hash-exact oracle.
     * n = 1 (single observed day) has no dispersion estimate: std := 0,
     * so z = 0 and is_anomaly = false.
     */
-  def anomalyOf(daily: DataFrame, key: String = "event_type"): DataFrame = {
-    val stats = daily.groupBy(col(key))
+  def anomalyOf(daily: DataFrame): DataFrame = {
+    val stats = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
         sum(col("c") * col("c")).as("sq"))
-      .select(col(key),
+      .select(col("event_type"),
         (col("s").cast("double") / col("n")).as("mean"),
         when(col("n") > 1,
           sqrt((col("sq").cast("double") -
             col("s").cast("double") * col("s").cast("double") / col("n")) /
             (col("n") - 1))).otherwise(lit(0.0)).as("std"))
-    daily.join(broadcast(stats), Seq(key))
-      .select(col(key), col("day"), col("c").as("n_events"),
+    daily.join(broadcast(stats), Seq("event_type"))
+      .select(col("event_type"), col("day"), col("c").as("n_events"),
         when(col("std") === 0.0, lit(0.0))
           .otherwise(round6((col("c") - col("mean")) / col("std")))
           .as("z"),
         (col("std") > 0.0 &&
           abs((col("c") - col("mean")) / col("std")) > 2.0)
           .as("is_anomaly"))
-      .orderBy(col(key), col("day"))
+      .orderBy(col("event_type"), col("day"))
   }
 }

@@ -66,12 +66,12 @@ object Exact {
     * (ADVICE r14). On the registry's domain (every oracle value is
     * finite with |x·1e6| ≪ 2^63) the two parses agree bit-for-bit,
     * which is why this one string can serve as the shared oracle text. */
-  def sqlRound6(e: String): String =
+  private[graft] def sqlRound6(e: String): String =
     s"floor(CAST(($e) AS DOUBLE)*1000000 + 0.5)/1000000"
 
   /** Oracle-SQL text form of [[round9]] — same bounded-domain note as
     * [[sqlRound6]] when Spark parses it. */
-  def sqlRound9(e: String): String =
+  private[graft] def sqlRound9(e: String): String =
     s"floor(CAST(($e) AS DOUBLE)*1000000000 + 0.5)/1000000000"
 
   /** SPARK-SQL text form of [[round6]] that keeps the Column form's
@@ -79,10 +79,10 @@ object Exact {
     * `graft_floor_double` (double → double `Math.floor`), so NaN/±Inf/
     * huge inputs behave exactly like [[round6]]. NOT valid DuckDB —
     * use [[sqlRound6]] for oracle text. */
-  def sqlRound6Spark(e: String): String =
+  private[graft] def sqlRound6Spark(e: String): String =
     s"graft_floor_double(CAST(($e) AS DOUBLE)*1000000 + 0.5)/1000000"
 
   /** The 9-digit sibling of [[sqlRound6Spark]]. */
-  def sqlRound9Spark(e: String): String =
+  private[graft] def sqlRound9Spark(e: String): String =
     s"graft_floor_double(CAST(($e) AS DOUBLE)*1000000000 + 0.5)/1000000000"
 }

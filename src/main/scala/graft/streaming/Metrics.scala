@@ -12,16 +12,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * of `updated_at` between polls, webapp/hooks/useData.ts:19,45,
   * webapp/components/DataTable.tsx:95-107).
   *
-  * Two probes:
-  *   - [[ProgressLog]]: a [[StreamingQueryListener]] that keeps each
-  *     stage's per-batch progress (rows, rates, trigger duration,
-  *     watermark) in a bounded in-memory ring — the numbers behind the
-  *     reference's Grafana/webapp charts, queryable as a DataFrame.
-  *     Listener callbacks are driver-side and O(1) per batch: nothing
-  *     here touches executors or adds work to the streaming queries.
-  *   - [[Metrics.freshness]]: end-to-end data lag measured from the
-  *     serving table itself (`asOf - max(updated_at)`), the poll-to-poll
-  *     lag the dashboard shows, computed with one max aggregation.
+  * [[ProgressLog]] is a [[StreamingQueryListener]] that keeps each
+  * stage's per-batch progress (rows, rates, trigger duration,
+  * watermark) in a bounded in-memory ring — the numbers behind the
+  * reference's Grafana/webapp charts, queryable as a DataFrame.
+  * Listener callbacks are driver-side and O(1) per batch: nothing here
+  * touches executors or adds work to the streaming queries. The
+  * standing-index surfaces get the same dashboard face through
+  * [[searchFreshness]], [[serveHealth]] and [[indexCoverage]].
   */
 object Metrics {
 
@@ -104,27 +102,11 @@ object Metrics {
     }
   }
 
-  /** End-to-end freshness of the serving table as of `asOfMs`: the
-    * dashboard's "Data Lag" = how stale the newest served row is. One
-    * row: (max_updated_at, lag_ms). Scale shape: a single max over the
-    * serve log's `updated_at` column — column-pruned scan, no shuffle
-    * beyond the final reduce.
-    */
-  def freshness(spark: SparkSession, cfg: Pipeline.Config,
-                asOfMs: Long): DataFrame =
-    Pipeline.serveLog(spark, cfg)
-      .agg(max(col("updated_at")).as("max_updated_at"))
-      .select(col("max_updated_at"),
-        (lit(asOfMs) - col("max_updated_at")).as("lag_ms"))
-
-  /** Freshness of a STANDING-INDEX search surface (VERDICT r12 #8): the
-    * query-side search streams
-    * ([[StreamingSimilarity.startIvfSearchStream]]/[[StreamingSimilarity
-    * .startPqSearchStream]]) serve results against the persisted index
-    * tables the admission loops append into — a result returned now
-    * reflects the index as of its NEWEST committed data file, so lag =
-    * `asOfMs - max(file modification time)` is the search-side "Data
-    * Lag", the sibling of [[freshness]]'s serve-table probe. One
+  /** Freshness of a STANDING-INDEX search surface (VERDICT r12 #8):
+    * searches serve results against the persisted index tables — a
+    * result returned now reflects the index as of its NEWEST committed
+    * data file, so lag = `asOfMs - max(file modification time)` is the
+    * search-side "Data Lag" the dashboard charts. One
     * driver-side recursive file-status listing over the table's fixed
     * warehouse location — no scan, no job, pollable at any rate. One
     * row: (index_table, index_ts_ms, lag_ms).
@@ -188,23 +170,6 @@ object Metrics {
     * that deployment actually serves from, never a parallel
     * default-shape set nobody uses.
     *
-    * The streaming-guard surfaces ([[graft.ext.Curation]] quota streams'
-    * order-guard counters) roll in through `guards`: each
-    * (surface, checkpoint, primaryState) names a quota/token-budget
-    * stream checkpoint whose
-    * [[graft.streaming.StreamingCuration.orderGuardStats]] counters
-    * become one row — `index_present` = the state store is readable,
-    * `has_data` = ≥1 key tracked, `healthy` = ZERO cross-batch
-    * out-of-order drops recorded across keys (a nonzero `ooo_dropped`
-    * IS the stream-vs-backfill divergence signal; benign in-batch
-    * replays count in the separate `dup_dropped` and never flip this).
-    * The counter is monotone, so `healthy` is a strict
-    * has-never-diverged latch by design: clearing it is an operator
-    * decision, not something a poll should do. ONE signature carries
-    * both guards and shapes (review r15: a separate guards overload
-    * hardwired the default shapes, reintroducing the ghost-table
-    * failure mode on its callers).
-    *
     * `forgetSla` = Some((pipelineCfg, slaMs)) adds the takedown-SLA
     * guard row (r15 VERDICT next #1) — `user_forget_sla`:
     * `index_present` = the user tombstone log exists, `has_data` =
@@ -218,10 +183,9 @@ object Metrics {
     * the log's own oldest registration — the warehouse-age-invariant
     * form the registered `serve_health` query pins, ADVICE r16).
     */
-  def serveHealth(spark: SparkSession, dir: String,
-                  guards: Seq[(String, String, String)] = Seq.empty,
-                  gramN: Int = 5, ivfNq: Int = 10, ivfNc: Int = 16,
-                  pqNq: Int = 10, rungNq: Int = 10, rungPrefix: Int = 16,
+  def serveHealth(spark: SparkSession, dir: String, gramN: Int = 5,
+                  ivfNq: Int = 10, ivfNc: Int = 16, pqNq: Int = 10,
+                  rungNq: Int = 10, rungPrefix: Int = 16,
                   winsorGroup: String = "event_type",
                   shapes: graft.tools.Maintenance.Shapes =
                     graft.tools.Maintenance.Shapes(),
@@ -270,7 +234,7 @@ object Metrics {
           .select(col("lag_ms")).collect().head.getLong(0))
       (surface, present, lag.isSuccess, lag.toOption.exists(_ >= 0L))
     }.toDF("surface", "index_present", "has_data", "healthy")
-    val withSla = forgetSla.fold(batchFace) { case (cfg, slaMs) =>
+    forgetSla.fold(batchFace) { case (cfg, slaMs) =>
       val audit = UserForget.forgetUsersAudit(spark, cfg,
         asOfMs = forgetSlaAsOfMs, slaMs = slaMs)
         .collect().head
@@ -280,10 +244,7 @@ object Metrics {
         audit.getAs[Long]("pending_users") > 0L,
         audit.getAs[Boolean]("sla_ok")))
         .toDF("surface", "index_present", "has_data", "healthy"))
-    }
-    (if (guards.isEmpty) withSla
-     else withSla.unionByName(guardHealth(spark, guards)))
-      .orderBy(col("surface"))
+    }.orderBy(col("surface"))
   }
 
   /** Row-level COMPLETENESS of every per-vector standing index (round
@@ -363,22 +324,5 @@ object Metrics {
       .select(col("surface"), col("n_indexed"), col("n_candidates"),
         (col("n_indexed") === col("n_candidates")).as("complete"))
       .orderBy(col("surface"))
-  }
-
-  /** The streaming-guard rows of [[serveHealth]] alone — also callable
-    * directly when a dashboard wants the guard surfaces without
-    * re-probing (and possibly re-building) the standing indexes.
-    */
-  def guardHealth(spark: SparkSession,
-                  guards: Seq[(String, String, String)]): DataFrame = {
-    import spark.implicits._
-    guards.map { case (surface, checkpoint, primary) =>
-      val stats = scala.util.Try(
-        StreamingCuration.orderGuardStats(spark, checkpoint, primary)
-          .select(col("ooo_dropped")).collect())
-      (surface, stats.isSuccess, stats.toOption.exists(_.nonEmpty),
-        stats.toOption.exists(rows =>
-          rows.nonEmpty && rows.forall(r => r.isNullAt(0) || r.getLong(0) == 0L)))
-    }.toDF("surface", "index_present", "has_data", "healthy")
   }
 }

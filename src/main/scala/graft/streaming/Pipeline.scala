@@ -1052,23 +1052,82 @@ object Pipeline {
       startServe(spark, cfg, format))
 
   /** The similarity-serving stages: the composed raw+rung ingest
-    * ([[StreamingSimilarity.startEmbeddingIngest]]: raw embeddings store
-    * and all three standing rung tables, one idempotent batch body) and
-    * the query-side rung search stream serving each query batch against
-    * the SAME standing tables the ingest appends into, so a query
-    * arriving after a vector's ingest batch sees it, exact rescore
-    * included. StreamBench's search soak and PipelineSpec both run it
-    * next to [[startAll]]'s three event stages.
+    * ([[startEmbeddingIngest]]: raw embeddings store and all three
+    * standing rung tables, one idempotent batch body) and the query-side
+    * rung search stream ([[startScanSearchStream]]) serving each query
+    * batch against the SAME standing tables the ingest appends into, so
+    * a query arriving after a vector's ingest batch sees it, exact
+    * rescore included. StreamBench's search soak and PipelineSpec both
+    * run it next to [[startAll]]'s three event stages.
     */
   def searchStages(spark: SparkSession, corpusDir: String, vecs: DataFrame,
                    queries: DataFrame, vecCheckpoint: String,
                    searchCheckpoint: String, nQueries: Int, k: Int)
                   (sink: DataFrame => Unit): Seq[StreamingQuery] = Seq(
-    StreamingSimilarity.startEmbeddingIngest(spark, corpusDir, vecs,
-      vecCheckpoint, nQueries),
-    StreamingSimilarity.startScanSearchStream(queries, searchCheckpoint)(
+    startEmbeddingIngest(spark, corpusDir, vecs, vecCheckpoint, nQueries),
+    startScanSearchStream(queries, searchCheckpoint)(
       b => graft.ext.Rung.binaryIndexedTopK(spark, corpusDir, b,
         nQueries, k, rescoreFactor = 4))(sink))
+
+  /** The composed vector-ingest loop: ONE foreachBatch body that lands a
+    * micro-batch's RAW (vec_id, embedding[, label]) rows in the corpus
+    * embeddings store ([[graft.ext.Similarity.appendToEmbeddings]]) AND
+    * its derived rows in the three standing rung tables
+    * ([[graft.ext.Rung.appendToRungIndexes]]), all idempotent at vector
+    * granularity — so exact stage-2 rescores see stream-admitted vectors
+    * with no side agreement, and a later purge+rebuild/compaction (which
+    * retrains from the embeddings table) RETAINS them.
+    *
+    * Raw rows land FIRST: a crash anywhere in the window replays into
+    * anti-join no-ops for whatever already committed, and no committed
+    * derived row ever lacks its raw backing. Requires a directory-backed
+    * embeddings store (the appendToEmbeddings contract; a single-file
+    * corpus snapshot fails loudly).
+    */
+  private[graft] def startEmbeddingIngest(spark: SparkSession, dir: String,
+                                          vecs: DataFrame,
+                                          checkpoint: String,
+                                          nQueries: Int): StreamingQuery = {
+    import graft.ext.{Rung, Similarity}
+    Rung.ensureBinaryIndex(spark, dir, nQueries)
+    Rung.ensureMatryoshkaIndex(spark, dir, nQueries)
+    Rung.ensureInt8Index(spark, dir, nQueries)
+    vecs.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // dedup ONCE and checkpoint, so every store sees the SAME
+        // survivor when a batch carries one vec_id twice with different
+        // payloads (per-store dropDuplicates could keep different rows —
+        // a permanent raw-vs-derived disagreement the consistency probe
+        // cannot see); each append's own dedup is a no-op on the
+        // already-unique frame
+        val b = batch.dropDuplicates("vec_id").localCheckpoint(true)
+        Similarity.appendToEmbeddings(spark, dir, b)
+        Rung.appendToRungIndexes(spark, dir, b, nQueries)
+        ()
+      }
+      .start()
+  }
+
+  /** Query-side search stream: each micro-batch of caller query vectors
+    * (qid, qe) runs through `search` (e.g. a closure over
+    * `Rung.binaryIndexedTopK`'s external form) and the result frame goes
+    * to `sink`. The search is PURE (no index mutation), so replay after a
+    * crash merely re-emits a batch's results — the sink owns dedup, which
+    * a qid-keyed upsert gets for free.
+    */
+  private[graft] def startScanSearchStream(queries: DataFrame,
+                                           checkpoint: String)
+                                          (search: DataFrame => DataFrame)
+                                          (sink: DataFrame => Unit)
+      : StreamingQuery =
+    queries.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) sink(search(batch))
+        ()
+      }
+      .start()
 
   /** Tiny markers for gold-fold replay protection: one global batch id
     * (fast path: whole batch already applied) plus one per gold bucket

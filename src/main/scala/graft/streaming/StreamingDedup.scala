@@ -236,8 +236,8 @@ object StreamingDedup {
       .start()
   }
 
-  /** The order-observability face of [[startIndexedAdmission]] — the
-    * [[StreamingCuration.orderGuardStats]] sibling, derived from the
+  /** The order-observability face of [[startIndexedAdmission]],
+    * derived from the
     * recorded verdict markers instead of a state store (the markers ARE
     * a durable per-batch admission log, so no new state is needed): one
     * row per recorded batch with its doc/keeper counts, max doc_id, the
@@ -294,8 +294,7 @@ object StreamingDedup {
     * replayed tag a no-op). Interleaved batch admissions and stream
     * batches see one corpus, both directions.
     */
-  /** The DOCUMENT deletion feed — the takedown twin of the vector
-    * stream ([[StreamingSimilarity.startForgetStream]]): each
+  /** The DOCUMENT deletion feed: each
     * micro-batch of deletion requests (`doc_id` column) registers doc
     * tombstones ([[graft.ext.Forget.forgetDocs]]), which the live dedup
     * forms ([[graft.ext.Forget.candidatePairsLive]]) exclude before

@@ -282,33 +282,6 @@ object UserForget {
         "sla_ok")
   }
 
-  /** The maintenance-window orchestration (VERDICT r16 next #7): the
-    * erase is gated behind quiescence because it rewrites the stores
-    * the stages read and write — which left SLA compliance depending on
-    * an operator remembering the drain-stop-apply-restart dance. This
-    * entry point IS that dance, runnable from a scheduler: drain the
-    * running queries in dependency order (two ordered passes — the
-    * second absorbs files a concurrent trigger produced during the
-    * first), stop them, run the quiesced apply, and hand back the
-    * restarted chain from `restart`. Returns (erase result, restarted
-    * queries); the erase result is [[applyForgetUsersIfNeeded]]'s —
-    * rows erased, -1 nothing pending, -2 deferred (possible even after
-    * the drain when an EXTERNAL co-consumer's checkpoint lags; the
-    * chain still restarts, and the SLA audit keeps reporting the
-    * reason).
-    */
-  def applyForgetUsersMaintenanceWindow(spark: SparkSession, cfg: Config,
-      running: Seq[org.apache.spark.sql.streaming.StreamingQuery],
-      minTombstones: Long = 1L)
-      (restart: => Seq[org.apache.spark.sql.streaming.StreamingQuery])
-      : (Long, Seq[org.apache.spark.sql.streaming.StreamingQuery]) = {
-    running.foreach(_.processAllAvailable())
-    running.foreach(_.processAllAvailable())
-    running.foreach(_.stop())
-    val erased = applyForgetUsersIfNeeded(spark, cfg, minTombstones)
-    (erased, restart)
-  }
-
   // ————————————————————————————— the physical erase —————————————————————————————
 
   private def committed(fs: FileSystem, p: Path): Boolean =

@@ -208,9 +208,9 @@ object Maintenance {
     // Optional: IVF index health check + conditional offline rebuild
     // (round 10) — pass the indexed corpus dir as SPARK_GRAFT_IVF_DIR
     // (+ _NQ/_NC when built with non-default shape). Runs
-    // StreamingSimilarity.retrainIfNeeded: the drift/skew rule decides,
-    // the rebuild retrains from the embeddings table. Quiesce admission
-    // streams around the tick, like the other passes.
+    // Similarity.retrainIfNeeded: the drift/skew rule decides, the
+    // rebuild retrains from the embeddings table. Quiesce searches
+    // around the tick, like the other passes.
     val ivfDir = sys.env.get("SPARK_GRAFT_IVF_DIR")
     val ivfNq = sys.env.getOrElse("SPARK_GRAFT_IVF_NQ", "10").toInt
     val ivfNc = sys.env.getOrElse("SPARK_GRAFT_IVF_NC", "16").toInt
@@ -220,7 +220,7 @@ object Maintenance {
     val shapes = Shapes.fromEnv()
     // Optional: PQ codes-table file-growth compaction (round 10) — pass
     // the indexed corpus dir as SPARK_GRAFT_PQ_DIR (+ _NQ / _MAX_FILES).
-    // Stream admission appends one file set per micro-batch; past the
+    // Each append adds one file set; past the
     // threshold the offline purge+rebuild IS the compaction (codes are
     // derived state — rewriting from the embeddings table both compacts
     // and refreshes codebook drift). Fails fast when no index exists
@@ -233,16 +233,16 @@ object Maintenance {
     // SPARK_GRAFT_WINSOR_DIR (+ _GROUP for a non-default group column).
     // Runs Analytics.refreezeBoundsIndexIfNeeded: the realized-clip
     // drift rule decides, the rebuild re-freezes from the events table.
-    // Quiesce the consuming winsorize stream around the tick.
+    // Quiesce readers of the bounds table around the tick.
     val winsorDir = sys.env.get("SPARK_GRAFT_WINSOR_DIR")
     val winsorGroup = sys.env.getOrElse("SPARK_GRAFT_WINSOR_GROUP",
       "event_type")
     // Optional: compression-rung table file-growth compaction (round
     // 14) — pass the indexed corpus dir as SPARK_GRAFT_RUNG_DIR
-    // (+ _NQ/_PREFIX/_MAX_FILES). Stream admission
-    // (StreamingSimilarity.startRungAdmission) appends one file set per
-    // micro-batch per table; past the threshold the purge+rebuild IS
-    // the compaction (rung payloads are derived state, like PQ codes).
+    // (+ _NQ/_PREFIX/_MAX_FILES). The composed embedding ingest
+    // (Pipeline.searchStages) appends one file set per micro-batch per
+    // table; past the threshold the purge+rebuild IS the compaction
+    // (rung payloads are derived state, like PQ codes).
     val rungDir = sys.env.get("SPARK_GRAFT_RUNG_DIR")
     val rungNq = sys.env.getOrElse("SPARK_GRAFT_RUNG_NQ", "10").toInt
     val rungPrefix = sys.env.getOrElse("SPARK_GRAFT_RUNG_PREFIX", "16").toInt
@@ -296,7 +296,7 @@ object Maintenance {
       format.optimizeServe(spark, cfg)
       format.vacuumChangeFeed(spark, cfg)
       gramDir.foreach(graft.ext.TextDedup.compactSubstringIndex(spark, _, gramN))
-      val retrained = ivfDir.exists(d => graft.streaming.StreamingSimilarity
+      val retrained = ivfDir.exists(d => graft.ext.Similarity
         .retrainIfNeeded(spark, d, ivfNq, ivfNc, iters = shapes.ivfIters,
           sampleMod = shapes.ivfSampleMod, sampleCap = shapes.ivfSampleCap))
       val pqCompacted = pqDir.exists(d => graft.ext.Pq

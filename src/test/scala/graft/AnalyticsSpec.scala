@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.ops.Analytics
 
 /** The `ops.Analytics` building blocks the batch analytics queries share:
-  * per-group winsorizing against a naive driver reference, and the
-  * blocked running count against the single-reducer window form it
-  * replaces.
+  * per-group winsorizing against a naive driver reference, the frozen
+  * bounds' re-freeze rule, and the blocked running count against the
+  * single-reducer window form it replaces.
   */
 class AnalyticsSpec extends SparkTestBase {
   import spark.implicits._
@@ -121,5 +121,103 @@ class AnalyticsSpec extends SparkTestBase {
         .map(r => (r.getString(0), Option(r.get(1)), r.getLong(3))).toSet
       assert(blocked == windowed, s"iter $iter (nBlocks=$nBlocks)")
     }
+  }
+
+  test("bounds re-freeze rule: calm on the freezing history, fires on a " +
+    "shifted distribution and on an uncovered group, and the refreshed " +
+    "bounds read calm again") {
+    val sf = "/root/testdata/sf0.001"
+    val events = graft.ops.Ingest.events(spark, sf)
+      .select(col("event_id"), col("event_type"), col("value"))
+    val bounds = Analytics.winsorizeBounds(events, "event_type")
+      .localCheckpoint(true)
+    // frozen on this exact history: realized clip == the quantile mass
+    assert(!Analytics.shouldRefreezeBounds(events, "event_type", bounds),
+      "rule fired on the distribution the bounds were frozen on")
+    // a wholesale upward shift puts ~everything above hi_v
+    val shifted = events.withColumn("value", col("value") + lit(1e6))
+    assert(Analytics.shouldRefreezeBounds(shifted, "event_type", bounds),
+      "shifted distribution must fire the drift half")
+    // a group the bounds never saw fires the coverage half even when the
+    // covered groups are calm
+    val withNew = events.unionByName(
+      Seq((888888L, "brand_new_type", 1.0))
+        .toDF("event_id", "event_type", "value"))
+    assert(Analytics.shouldRefreezeBounds(withNew, "event_type", bounds),
+      "uncovered group must fire the coverage half")
+    // the re-freeze on the shifted history reads calm under the
+    // refreshed bounds
+    val fresh = Analytics.winsorizeBounds(shifted, "event_type")
+    assert(!Analytics.shouldRefreezeBounds(shifted, "event_type", fresh),
+      "post-refreeze bounds must read calm on the new history")
+  }
+
+  test("trained-state deletion semantics (winsor bounds, r15 VERDICT " +
+    "next #8): frozen bounds retain a scrubbed user's statistical " +
+    "influence until the refreeze cycle — and the post-scrub refreeze " +
+    "equals bounds frozen on a history the user never entered") {
+    // user B's extreme tail sets the frozen hi bound; the deletion
+    // scrub removes B's rows (row CONTENT gone from any clip apply
+    // immediately), but the FROZEN state still carries B's quantiles —
+    // the same honesty note as IVF's frozen centroids
+    val aRows = (1 to 100).map(i => (i.toLong, "t", i.toDouble))
+    // B carries 90% of the mass, so the frozen p05/p95 land deep inside
+    // B's range — after the scrub the realized clip on A-only history
+    // deviates far past the rule's tolerance
+    val bRows = (1 to 900).map(i => (1000L + i, "t", 1e6 + i))
+    val full = (aRows ++ bRows).toDF("event_id", "event_type", "value")
+    val scrubbed = aRows.toDF("event_id", "event_type", "value")
+    // the standing freeze over a directory-backed events table: built on
+    // the full history, then the scrub rewrites the table without B
+    val dir = java.nio.file.Files.createTempDirectory("graft_winsor_scrub")
+      .toString
+    def writeEvents(df: org.apache.spark.sql.DataFrame): Unit =
+      df.withColumn("ts", lit(0L).cast("timestamp"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    writeEvents(full)
+    Analytics.purgeBoundsIndex(spark, dir)
+    try {
+      Analytics.ensureBoundsIndex(spark, dir)
+      val frozen = Analytics.frozenBounds(spark, dir).localCheckpoint(true)
+      writeEvents(scrubbed)
+      // the maintenance drift rule IS the refreeze cycle: the scrubbed
+      // history's realized clip collapses under B-inflated bounds, so
+      // the rule fires and the retrain lands on the next tick
+      assert(Analytics.shouldRefreezeBounds(scrubbed, "event_type",
+        frozen), "post-scrub history must fire the drift rule")
+      assert(Analytics.refreezeBoundsIndexIfNeeded(spark, dir))
+      // the retrain excludes the scrubbed rows: bit-identical to bounds
+      // frozen on a history the user never entered
+      val cf = Analytics.winsorizeBounds(scrubbed, "event_type")
+        .orderBy(col("event_type")).collect().toSeq
+      assert(Analytics.frozenBounds(spark, dir)
+        .select(col("event_type"), col("lo_v"), col("hi_v"))
+        .orderBy(col("event_type")).collect().toSeq == cf,
+        "post-scrub refreeze must equal the never-admitted freeze")
+    } finally Analytics.purgeBoundsIndex(spark, dir)
+  }
+
+  test("a tied/constant group reads calm under a freeze carrying its " +
+    "realized clip rate — the theoretical quantile mass alone would " +
+    "re-freeze such a group forever (r12 review)") {
+    // constant distribution: bounds collapse to [v, v], nothing clips —
+    // the theoretical 10% mass NEVER realizes
+    val ev = Seq.tabulate(50)(i => (i.toLong, "t", 1.0))
+      .toDF("event_id", "event_type", "value")
+    val plain = Analytics.winsorizeBounds(ev, "event_type")
+      .localCheckpoint(true)
+    assert(Analytics.shouldRefreezeBounds(ev, "event_type", plain),
+      "plain bounds anchored to the theoretical mass must fire (the " +
+        "documented fallback behavior)")
+    // the standing-table form stores the freeze-time REALIZED rate: calm
+    val withExp = plain.join(
+      Analytics.clipDrift(ev, "event_type", plain)
+        .select(col("event_type"), col("clip_frac").as("expected_frac")),
+      Seq("event_type"))
+    assert(!Analytics.shouldRefreezeBounds(ev, "event_type", withExp),
+      "stored-expected bounds must read calm on the freezing history")
+    // and empty history decides calm instead of NPE-crashing the tick
+    assert(!Analytics.shouldRefreezeBounds(
+      ev.filter(col("event_id") < 0), "event_type", withExp))
   }
 }

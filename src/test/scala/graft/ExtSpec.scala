@@ -706,7 +706,7 @@ class ExtSpec extends SparkTestBase {
       val emitted = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
       val input = MemoryStream[(Long, Seq[Double])](
         if (tag == "bin") 96 else 97, spark, None)
-      val q = graft.streaming.StreamingSimilarity.startScanSearchStream(
+      val q = graft.streaming.Pipeline.startScanSearchStream(
         input.toDF().toDF("qid", "qe"), ckpt)(search) { res =>
         emitted.synchronized { emitted ++= res.collect().map(_.toSeq) }
       }

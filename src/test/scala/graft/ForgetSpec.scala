@@ -12,7 +12,7 @@ import graft.ext.{Forget, Rung, Similarity}
   * (broadcast anti-join, rung-table-only stage 1, rank-limit pushdown
   * intact), the physical apply (raw store rewritten, derived surfaces
   * rebuilt, log cleared, audit reads zero residue), the crash-window
-  * recovery of the raw-store swap, and the streaming deletion feed.
+  * recovery of the raw-store swap, and the streaming doc deletion feed.
   */
 class ForgetSpec extends SparkTestBase {
 
@@ -52,18 +52,6 @@ class ForgetSpec extends SparkTestBase {
       assert(
         Forget.binaryIndexedTopKLive(spark, a, 10, 5).collect().toSeq ==
           Rung.binaryIndexedTopK(spark, b, 10, 5).collect().toSeq)
-      // every rung carries the live form — same one-filter composition
-      assert(
-        Forget.matryoshkaIndexedTopKLive(spark, a, 10, 5)
-          .collect().toSeq ==
-          Rung.matryoshkaIndexedTopK(spark, b, 10, 5).collect().toSeq)
-      assert(
-        Forget.int8IndexedTopKLive(spark, a, 10, 5).collect().toSeq ==
-          Rung.int8IndexedTopK(spark, b, 10, 5).collect().toSeq)
-      // the cascade filters ONCE at stage 1; later stages fetch only
-      // (already-live) pool cids
-      assert(Forget.cascadeTopKLive(spark, a, 10, 5).collect().toSeq ==
-        Rung.cascadeTopK(spark, b, 10, 5).collect().toSeq)
     } finally cleanup(a, b)
   }
 
@@ -212,40 +200,6 @@ class ForgetSpec extends SparkTestBase {
     } finally cleanup(a)
   }
 
-  test("trained-index live forms (IVF / PQ / IVF-PQ): content exclusion " +
-    "is immediate — at full probe / corpus-covering pool each equals " +
-    "the exact scan of the LIVE corpus, while the frozen trained state " +
-    "retains only statistical influence until the next apply") {
-    import graft.ext.Pq
-    val a = copyCorpus("trained", keepAll = true)
-    try {
-      Forget.forgetVectors(spark, a,
-        Similarity.embeddings(spark, a).filter(forgetCond)
-          .select(col("vec_id")))
-      val exactLive = Forget.bruteForceTopKLive(spark, a, 10, 5)
-        .collect().toSeq
-      // IVF at nProbe = nCentroids degrades to the exact live scan
-      assert(Forget.ivfIndexedTopKLive(spark, a, 10, 16, 16, 5)
-        .collect().toSeq == exactLive)
-      // PQ with a corpus-covering ADC pool: the exact rescore tail
-      // makes the live top-k exact
-      assert(Forget.pqIndexedTopKLive(spark, a, 10, 5,
-        rescoreFactor = 200).collect().toSeq == exactLive)
-      // IVF-PQ with full probe AND covering pool
-      assert(Forget.ivfpqTopKLive(spark, a, 10, 16, 5,
-        rescoreFactor = 200).collect().toSeq == exactLive)
-      // and a narrow live search never emits a tombstoned cid
-      val narrow = Forget.ivfIndexedTopKLive(spark, a, 10, 16, 2, 5)
-        .collect()
-      assert(!narrow.exists(r => r.getLong(1) % 23 == 5))
-    } finally {
-      cleanup(a)
-      Similarity.purgeIvfIndex(spark, a)
-      Pq.purgePqIndex(spark, a)
-      Pq.purgeIvfPqIndex(spark, a)
-    }
-  }
-
   private def docForgetCond = col("doc_id") % 31 === 7
 
   private def copyDocs(tag: String, keepAll: Boolean): String = {
@@ -373,34 +327,5 @@ class ForgetSpec extends SparkTestBase {
           r.getLong(0) == victim || r.getLong(1) == victim))
       } finally sq.stop()
     } finally cleanupDocs(dir)
-  }
-
-  test("streaming deletion feed: tombstones land through the stream, " +
-    "searches exclude them immediately, and redelivery — in-batch or " +
-    "across batches — never duplicates the log") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    cleanup(dir)
-    val ckpt = Files.createTempDirectory("graft_forget_ckpt").toString
-    try {
-      Rung.ensureBinaryIndex(spark, dir, 10)
-      val victim = Rung.binaryIndexedTopK(spark, dir, 10, 5)
-        .filter(col("qid") === 0L && col("rank") === 1L)
-        .collect().head.getLong(1)
-      val input = MemoryStream[Long](101, spark, None)
-      val sq = graft.streaming.StreamingSimilarity.startForgetStream(
-        spark, dir, input.toDF().toDF("vec_id"), ckpt)
-      try {
-        input.addData(victim, victim) // in-batch redelivery
-        sq.processAllAvailable()
-        input.addData(victim) // cross-batch redelivery
-        sq.processAllAvailable()
-        assert(Forget.forgottenIds(spark, dir)
-          .collect().map(_.getLong(0)).toSeq == Seq(victim))
-        val live = Forget.binaryIndexedTopKLive(spark, dir, 10, 5)
-          .collect()
-        assert(!live.exists(_.getLong(1) == victim))
-      } finally sq.stop()
-    } finally cleanup(dir)
   }
 }

@@ -71,100 +71,6 @@ class IvfIndexSpec extends SparkTestBase {
     } finally purge()
   }
 
-  test("admitted vectors join the standing index and become searchable; " +
-    "a replayed admission is a no-op") {
-    import spark.implicits._
-    purge()
-    try {
-      Similarity.ensureIvfIndex(spark, dir, nQueries = 10, nCentroids = 16)
-      // a synthetic vector equal to query 0's embedding — its top-1 must
-      // become this new vector with sim 1.0 once admitted
-      val q0 = Similarity.embeddings(spark, dir)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val newVec = Seq((900001L, q0)).toDF("vec_id", "embedding")
-      Similarity.appendToIvfIndex(spark, dir, newVec, nQueries = 10, nCentroids = 16)
-      val n = spark.table(Similarity.ivfCellsTable(dir, Similarity.ivfKey(10, 16, 2, 3, Similarity.defaultIvfSampleCap))).count()
-      Similarity.appendToIvfIndex(spark, dir, newVec, nQueries = 10, nCentroids = 16) // replay
-      assert(spark.table(Similarity.ivfCellsTable(dir, Similarity.ivfKey(10, 16, 2, 3, Similarity.defaultIvfSampleCap))).count() == n,
-        "replayed admission duplicated cell rows")
-
-      val top = Similarity.ivfIndexedTopK(spark, dir,
-          nQueries = 10, nCentroids = 16, nProbe = 2, k = 3)
-        .filter(col("qid") === 0L && col("rank") === 1L)
-        .collect().head
-      assert(top.getAs[Long]("cid") == 900001L &&
-        top.getAs[Double]("sim") == 1.0,
-        s"admitted identical vector must be query 0's top-1: $top")
-    } finally purge()
-  }
-
-  test("stream-admitted vectors land in the shared standing index and " +
-    "batch searches see them") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    purge()
-    try {
-      val q0 = Similarity.embeddings(spark, dir)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val ckpt = Files.createTempDirectory("graft_ivf_ckpt").toString
-      val input = MemoryStream[(Long, Seq[Float])](93, spark, None)
-      val q = graft.streaming.StreamingSimilarity.startIvfAdmission(
-        spark, dir, input.toDF().toDF("vec_id", "embedding"), ckpt,
-        nQueries = 10, nCentroids = 16)
-      try {
-        input.addData((900002L, q0))
-        q.processAllAvailable()
-        val top = Similarity.ivfIndexedTopK(spark, dir,
-            nQueries = 10, nCentroids = 16, nProbe = 2, k = 3)
-          .filter(col("qid") === 0L && col("rank") === 1L)
-          .collect().head
-        assert(top.getAs[Long]("cid") == 900002L &&
-          top.getAs[Double]("sim") == 1.0,
-          s"stream-admitted vector must be query 0's top-1: $top")
-      } finally q.stop()
-    } finally purge()
-  }
-
-  test("streamed queries search the standing index and emit exactly " +
-    "the batch external-form results") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    purge()
-    try {
-      val panel = Similarity.externalQueryPanel(spark, dir, nPanel = 5)
-      val expected = rows(Similarity.ivfIndexedTopK(spark, dir, panel,
-        nQueries = 10, nCentroids = 16, nProbe = 4, k = 3,
-        iters = 2, sampleMod = 3,
-        sampleCap = Similarity.defaultIvfSampleCap))
-      val panelRows = panel.collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      val ckpt = Files.createTempDirectory("graft_ivf_q_ckpt").toString
-      val emitted = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-      val input = MemoryStream[(Long, Seq[Double])](94, spark, None)
-      val q = graft.streaming.StreamingSimilarity.startIvfSearchStream(
-        spark, dir, input.toDF().toDF("qid", "qe"), ckpt,
-        nQueries = 10, nCentroids = 16, nProbe = 4, k = 3) { res =>
-        emitted.synchronized { emitted ++= res.collect().map(_.toSeq) }
-      }
-      try {
-        // two micro-batches: the serving loop is per-batch pure
-        input.addData(panelRows.take(2))
-        q.processAllAvailable()
-        input.addData(panelRows.drop(2))
-        q.processAllAvailable()
-        val got = emitted.synchronized(emitted.toSeq)
-          .sortBy(r => (r(0).asInstanceOf[Long], r(2).asInstanceOf[Long]))
-        assert(got == expected.sortBy(r =>
-          (r(0).asInstanceOf[Long], r(2).asInstanceOf[Long])),
-          s"streamed results diverged: $got vs $expected")
-      } finally q.stop()
-    } finally purge()
-  }
-
   test("indexed hard-negative mining at nProbe = nCentroids equals the " +
     "brute-force form; partial probes stay label-disjoint") {
     purge()
@@ -298,31 +204,10 @@ class IvfIndexSpec extends SparkTestBase {
     } finally purge()
   }
 
-  test("the append replay-probe prunes the cell-table scan to the " +
-    "batch's assigned cells (pushed IN predicate on cent_id)") {
-    import spark.implicits._
-    purge()
-    try {
-      Similarity.ensureIvfIndex(spark, dir, nQueries = 10, nCentroids = 16)
-      val q0 = Similarity.embeddings(spark, dir)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val newVec = Seq((910001L, q0)).toDF("vec_id", "embedding")
-      val frame = Similarity.ivfAppendFrame(spark, dir, newVec,
-        Similarity.ivfKey(10, 16, 2, 3, Similarity.defaultIvfSampleCap))
-      // a one-vector batch touches one cell, so the IN-list folds to
-      // EqualTo — the same pushed prune
-      val plan = frame.queryExecution.executedPlan.toString
-      assert(plan.contains("In(cent_id,") || plan.contains("EqualTo(cent_id,"),
-        s"cell-table replay probe not pruned:\n$plan")
-    } finally purge()
-  }
-
   test("drifted admissions flip the retrain trigger: shouldRetrain is " +
     "calm on the pristine index and fires after off-distribution " +
     "vectors stream in") {
     import spark.implicits._
-    import graft.streaming.StreamingSimilarity
     purge()
     try {
       Similarity.ensureIvfIndex(spark, dir, nQueries = 10, nCentroids = 16)
@@ -334,7 +219,7 @@ class IvfIndexSpec extends SparkTestBase {
       assert(frac0 < 0.5, s"pristine index already half-drifted: $stats0")
       // thresholds relative to the pristine index, so the test pins the
       // DELTA the drifted admissions cause, not a data-dependent absolute
-      val calm = StreamingSimilarity.shouldRetrain(spark, dir,
+      val calm = Similarity.shouldRetrain(spark, dir,
         nQueries = 10, nCentroids = 16, simThreshold = 0.1,
         maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0)
       assert(!calm, "retrain trigger fired on the pristine index")
@@ -361,11 +246,19 @@ class IvfIndexSpec extends SparkTestBase {
         "basis vector degenerate w.r.t. centroid span")
       val junkVec = junkDir.map(_.toFloat).toSeq
       val nJunk = math.ceil(n0 * 0.3).toInt
-      val junk = (0 until nJunk).map(i => (900000L + i, junkVec))
-        .toDF("vec_id", "embedding")
-      Similarity.appendToIvfIndex(spark, dir, junk,
-        nQueries = 10, nCentroids = 16)
-      val fired = StreamingSimilarity.shouldRetrain(spark, dir,
+      // the drifted rows land in the cell table as (cent_id, cid, ce,
+      // en) posting rows of cell 0 — every cell is equally far from them
+      val cellsT = Similarity.ivfCellsTable(dir,
+        Similarity.ivfKey(10, 16, 2, 3, Similarity.defaultIvfSampleCap))
+      (0 until nJunk).map(i => (0L, 900000L + i, junkVec))
+        .toDF("cent_id", "cid", "ce")
+        .select(col("cent_id"), col("cid"), col("ce"),
+          Similarity.norm(col("ce")).as("en"))
+        .write.mode("append")
+        .bucketBy(8, "cent_id").sortBy("cent_id")
+        .saveAsTable(cellsT)
+      spark.catalog.refreshTable(cellsT)
+      val fired = Similarity.shouldRetrain(spark, dir,
         nQueries = 10, nCentroids = 16, simThreshold = 0.1,
         maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0)
       assert(fired, "30% off-distribution admissions must flip the " +
@@ -375,15 +268,15 @@ class IvfIndexSpec extends SparkTestBase {
       // the index retrains from the embeddings table (derived state vs
       // source of truth), so the drifted cell rows fold out and the
       // trigger reads calm again
-      val retrained = StreamingSimilarity.retrainIfNeeded(spark, dir,
+      val retrained = Similarity.retrainIfNeeded(spark, dir,
         nQueries = 10, nCentroids = 16, simThreshold = 0.1,
         maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0)
       assert(retrained, "retrainIfNeeded must rebuild when the rule fires")
-      assert(!StreamingSimilarity.shouldRetrain(spark, dir,
+      assert(!Similarity.shouldRetrain(spark, dir,
         nQueries = 10, nCentroids = 16, simThreshold = 0.1,
         maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0),
         "post-rebuild index must read healthy again")
-      assert(!StreamingSimilarity.retrainIfNeeded(spark, dir,
+      assert(!Similarity.retrainIfNeeded(spark, dir,
         nQueries = 10, nCentroids = 16, simThreshold = 0.1,
         maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0),
         "a healthy index must not rebuild")

@@ -647,7 +647,11 @@ class PipelineSpec extends SparkTestBase {
         .agg(sum(col("num_input_rows"))).collect().head.getLong(0) == 3L)
       // end-to-end freshness: newest served row is at most "now" old
       val now = System.currentTimeMillis()
-      val fr = graft.streaming.Metrics.freshness(spark, cfg, now).collect().head
+      val fr = Pipeline.serveLog(spark, cfg)
+        .agg(max(col("updated_at")).as("max_updated_at"))
+        .select(col("max_updated_at"),
+          (lit(now) - col("max_updated_at")).as("lag_ms"))
+        .collect().head
       assert(fr.getAs[Long]("max_updated_at") > 0L)
       assert(fr.getAs[Long]("lag_ms") >= 0L && fr.getAs[Long]("lag_ms") < 3600000L)
     } finally {

@@ -247,41 +247,6 @@ class PqSpec extends SparkTestBase {
     }
   }
 
-  test("streamed queries ADC-search the standing codes index and emit " +
-    "exactly the batch external-form results") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    purgeIdx()
-    try {
-      val panel = Similarity.externalQueryPanel(spark, dir, nPanel = 4)
-      val expected = Pq.pqIndexedTopK(spark, dir, panel, nQueries = 10,
-        k = 3, nSub = 8, kSub = 16, iters = 2, sampleMod = 3,
-        sampleCap = Similarity.defaultIvfSampleCap, rescoreFactor = 4)
-        .collect().toSeq.map(_.toSeq)
-      val panelRows = panel.collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      val ckpt = Files.createTempDirectory("graft_pq_q_ckpt").toString
-      val emitted = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-      val input = MemoryStream[(Long, Seq[Double])](95, spark, None)
-      val q = graft.streaming.StreamingSimilarity.startPqSearchStream(
-        spark, dir, input.toDF().toDF("qid", "qe"), ckpt,
-        nQueries = 10, k = 3) { res =>
-        emitted.synchronized { emitted ++= res.collect().map(_.toSeq) }
-      }
-      try {
-        input.addData(panelRows.take(2))
-        q.processAllAvailable()
-        input.addData(panelRows.drop(2))
-        q.processAllAvailable()
-        val ord = (r: Seq[Any]) =>
-          (r(0).asInstanceOf[Long], r(2).asInstanceOf[Long])
-        assert(emitted.synchronized(emitted.toSeq).sortBy(ord) ==
-          expected.sortBy(ord))
-      } finally q.stop()
-    } finally purgeIdx()
-  }
-
   test("catalog loss reattaches the surviving PQ tables; results " +
     "unchanged") {
     purgeIdx()
@@ -297,38 +262,6 @@ class PqSpec extends SparkTestBase {
         Pq.pqIndexedTopK(spark, dir, nQueries = 10, k = 3).collect().toSeq
       assert(after == before)
       assert(spark.table(Pq.pqCodesTable(dir, key)).count() == codesBefore)
-    } finally purgeIdx()
-  }
-
-  test("stream-admitted vectors land in the shared codes table and " +
-    "batch ADC searches see them") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    purgeIdx()
-    try {
-      val q0 = Similarity.embeddings(spark, dir)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val ckpt = Files.createTempDirectory("graft_pq_ckpt").toString
-      val input = MemoryStream[(Long, Seq[Float])](97, spark, None)
-      val q = graft.streaming.StreamingSimilarity.startPqAdmission(
-        spark, dir, input.toDF().toDF("vec_id", "embedding"), ckpt,
-        nQueries = 10)
-      try {
-        input.addData((900001L, q0))
-        q.processAllAvailable()
-        val key = Pq.pqKey(10, 8, 16, 2, 3, Similarity.defaultIvfSampleCap)
-        val books = Pq.assignments(spark, dir, nQueries = 10, nSub = 8,
-          kSub = 16, iters = 2, sampleMod = 3,
-          sampleCap = Similarity.defaultIvfSampleCap)._1
-        val pool = Pq.adcPool(spark, dir,
-          spark.table(Pq.pqCodesTable(dir, key)), books,
-          nQueries = 10, poolK = 12)
-          .filter(col("qid") === 0L).collect().map(_.getLong(1))
-        assert(pool.contains(900001L),
-          s"stream-admitted vector missing from q0's ADC pool: ${pool.toSeq}")
-      } finally q.stop()
     } finally purgeIdx()
   }
 
@@ -387,7 +320,6 @@ class PqSpec extends SparkTestBase {
 
   test("file-growth compaction: appends past the threshold trigger the " +
     "rebuild, a fresh index stays untouched, a missing index fails fast") {
-    import spark.implicits._
     purgeIdx()
     try {
       intercept[IllegalArgumentException] {
@@ -396,18 +328,19 @@ class PqSpec extends SparkTestBase {
       Pq.ensurePqIndex(spark, dir, nQueries = 10)
       assert(!Pq.compactPqIndexIfNeeded(spark, dir, nQueries = 10,
         maxFiles = 64))
-      val v0 = Similarity.embeddings(spark, dir)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      // three admission batches = three appended bucketed file sets
-      (1 to 3).foreach { i =>
-        Pq.appendToPqIndex(spark, dir,
-          Seq((910000L + i, v0)).toDF("vec_id", "embedding")
-            .select(col("vec_id"),
-              col("embedding").cast("array<float>").as("embedding")),
-          nQueries = 10)
-      }
       val key = Pq.pqKey(10, 8, 16, 2, 3, Similarity.defaultIvfSampleCap)
+      val kt = Pq.pqCodesTable(dir, key)
+      // three appends = three appended bucketed file sets: each one a
+      // code row, copied from an indexed vector, under a new cid
+      val row0 = spark.table(kt).orderBy(col("cid")).limit(1)
+        .localCheckpoint(true)
+      (1 to 3).foreach { i =>
+        row0.withColumn("cid", lit(910000L + i))
+          .write.mode("append")
+          .bucketBy(8, "cid").sortBy("cid")
+          .saveAsTable(kt)
+      }
+      spark.catalog.refreshTable(kt)
       val withAdmits = spark.table(Pq.pqCodesTable(dir, key)).count()
       // threshold 1 file: the grown table must fire the rebuild
       assert(Pq.compactPqIndexIfNeeded(spark, dir, nQueries = 10,
@@ -419,40 +352,6 @@ class PqSpec extends SparkTestBase {
       assert(after == withAdmits - 3)
       assert(!Pq.compactPqIndexIfNeeded(spark, dir, nQueries = 10,
         maxFiles = 64))
-    } finally purgeIdx()
-  }
-
-  test("admitted vectors land in the codes table and surface in the ADC " +
-    "pool; a replayed admission is a no-op") {
-    import spark.implicits._
-    purgeIdx()
-    try {
-      Pq.ensurePqIndex(spark, dir, nQueries = 10)
-      val key = Pq.pqKey(10, 8, 16, 2, 3, Similarity.defaultIvfSampleCap)
-      val kt = Pq.pqCodesTable(dir, key)
-      val n0 = spark.table(kt).count()
-      // a synthetic vector equal to query 0's embedding — its codes are
-      // the codes of q0's nearest sub-centroids, so it must enter q0's
-      // ADC pool at the top
-      val q0 = Similarity.embeddings(spark, dir)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val newId = 900000L
-      val batch = Seq((newId, q0)).toDF("vec_id", "embedding")
-        .select(col("vec_id"), col("embedding").cast("array<float>")
-          .as("embedding"))
-      Pq.appendToPqIndex(spark, dir, batch, nQueries = 10)
-      assert(spark.table(kt).count() == n0 + 1)
-      Pq.appendToPqIndex(spark, dir, batch, nQueries = 10) // replay
-      assert(spark.table(kt).count() == n0 + 1)
-      val books = Pq.assignments(spark, dir, nQueries = 10, nSub = 8,
-        kSub = 16, iters = 2, sampleMod = 3,
-        sampleCap = Similarity.defaultIvfSampleCap)._1
-      val pool = Pq.adcPool(spark, dir, spark.table(kt), books,
-        nQueries = 10, poolK = 12)
-        .filter(col("qid") === 0L).collect().map(_.getLong(1))
-      assert(pool.contains(newId),
-        s"admitted vector missing from q0's ADC pool: ${pool.toSeq}")
     } finally purgeIdx()
   }
 }

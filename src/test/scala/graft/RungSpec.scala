@@ -345,53 +345,6 @@ class RungSpec extends SparkTestBase {
     } finally purgeIdx()
   }
 
-  test("streamed admission lands in the shared rung tables and batch " +
-    "searches see it") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    purgeIdx()
-    try {
-      val q0 = Similarity.embeddings(spark, dir)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val ckpt = Files.createTempDirectory("graft_rung_ckpt").toString
-      val input = MemoryStream[(Long, Seq[Float])](98, spark, None)
-      val sq = graft.streaming.StreamingSimilarity.startRungAdmission(
-        spark, dir, input.toDF().toDF("vec_id", "embedding"), ckpt,
-        nQueries = 10)
-      try {
-        input.addData((910001L, q0))
-        sq.processAllAvailable()
-        val q = Similarity.embeddings(spark, dir)
-          .filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"),
-            Similarity.packSigns(col("embedding"), 1, 32).as("qh1"),
-            Similarity.packSigns(col("embedding"), 33, 64).as("qh2"))
-        val stage1 = Rung.binaryPool(spark, dir, 10, q, 12)
-          .filter(col("qid") === 0L).collect().map(_.getLong(1))
-        assert(stage1.contains(910001L),
-          s"stream-admitted vector missing from q0's pool: ${stage1.toSeq}")
-        // batch recompute over embeddings ∪ the admitted row equals the
-        // standing-table search's stage-1 world (the admit ≡ rebuild
-        // contract, VERDICT r13 next #2)
-        val rebuilt = Rung.binFrame(
-          Similarity.embeddings(spark, dir)
-            .filter(col("vec_id") >= 10)
-            .select(col("vec_id").as("cid"), col("embedding"))
-            .unionByName(Seq((910001L, q0)).toDF("cid", "embedding")
-              .select(col("cid"),
-                col("embedding").cast("array<float>").as("embedding"))))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          .toSet
-        val standing = spark.table(Rung.binTable(dir, Rung.binKey(10)))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          .toSet
-        assert(standing == rebuilt)
-      } finally sq.stop()
-    } finally purgeIdx()
-  }
-
   test("streamed query vectors search the standing binary rung table " +
     "through the generic scan-search stream and emit the batch result") {
     import java.nio.file.Files
@@ -408,7 +361,7 @@ class RungSpec extends SparkTestBase {
       val ckpt = Files.createTempDirectory("graft_rung_search_ckpt").toString
       val input = MemoryStream[(Long, Seq[Double])](99, spark, None)
       val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-      val sq = graft.streaming.StreamingSimilarity.startScanSearchStream(
+      val sq = graft.streaming.Pipeline.startScanSearchStream(
         input.toDF().toDF("qid", "qe"), ckpt)(
         batch => Rung.binaryIndexedTopK(spark, dir, batch, 10, 3, 4))(
         res => got.synchronized { got ++= res.collect() })
@@ -444,7 +397,7 @@ class RungSpec extends SparkTestBase {
         .collect().head.getSeq[Float](0)
       val ckpt = Files.createTempDirectory("graft_ingest_ckpt").toString
       val input = MemoryStream[(Long, Seq[Float])](96, spark, None)
-      val sq = graft.streaming.StreamingSimilarity.startEmbeddingIngest(
+      val sq = graft.streaming.Pipeline.startEmbeddingIngest(
         spark, tmp, input.toDF().toDF("vec_id", "embedding"), ckpt,
         nQueries = 10)
       try {
@@ -623,41 +576,37 @@ class RungSpec extends SparkTestBase {
     } finally purgeIdx()
   }
 
-  test("composed ingest with alsoPq lands the PQ codes row too, and a " +
-    "same-batch vec_id collision with DIFFERENT payloads keeps ONE " +
-    "survivor whose raw row and derived rung payload AGREE (review r15)") {
+  test("composed ingest: a same-batch vec_id collision with DIFFERENT " +
+    "payloads keeps ONE survivor whose raw row and derived rung payload " +
+    "AGREE (review r15)") {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    import graft.ext.Pq
-    val tmp = Files.createTempDirectory("graft_ingest_pq").toString
+    val tmp = Files.createTempDirectory("graft_ingest_dup").toString
     Similarity.embeddings(spark, dir)
       .write.parquet(s"$tmp/embeddings.parquet")
     try {
-      Pq.ensurePqIndex(spark, tmp, 10)
       val e1 = Similarity.embeddings(spark, tmp)
         .filter(col("vec_id") === 0L).select(col("embedding"))
         .collect().head.getSeq[Float](0)
       val e2 = Similarity.embeddings(spark, tmp)
         .filter(col("vec_id") === 1L).select(col("embedding"))
         .collect().head.getSeq[Float](0)
-      val ckpt = Files.createTempDirectory("graft_ingest_pq_ck").toString
+      val ckpt = Files.createTempDirectory("graft_ingest_dup_ck").toString
       val input = MemoryStream[(Long, Seq[Float])](94, spark, None)
-      val sq = graft.streaming.StreamingSimilarity.startEmbeddingIngest(
+      val sq = graft.streaming.Pipeline.startEmbeddingIngest(
         spark, tmp, input.toDF().toDF("vec_id", "embedding"), ckpt,
-        nQueries = 10, alsoPq = true)
+        nQueries = 10)
       try {
         // the pathological batch: one vec_id, two DIFFERENT payloads
         input.addData((952000L, e1), (952000L, e2))
         sq.processAllAvailable()
       } finally sq.stop()
-      // exactly one survivor everywhere, PQ included
+      // exactly one survivor in the raw store and the rung table
       val rawRows = spark.read.parquet(s"$tmp/embeddings.parquet")
         .filter(col("vec_id") === 952000L).collect()
       assert(rawRows.length == 1)
-      val pqKey = Pq.pqKey(10, 8, 16, 2, 3,
-        Similarity.defaultIvfSampleCap)
-      assert(spark.table(Pq.pqCodesTable(tmp, pqKey))
+      assert(spark.table(Rung.binTable(tmp, Rung.binKey(10)))
         .filter(col("cid") === 952000L).count() == 1L)
       // raw and derived AGREE: the rung row equals the frame builder
       // applied to whichever raw payload survived
@@ -673,10 +622,7 @@ class RungSpec extends SparkTestBase {
       assert(got.getLong(1) == want.getLong(1) &&
         got.getLong(2) == want.getLong(2),
         s"raw survivor and rung payload diverge: $got vs $want")
-    } finally {
-      Rung.purgeRungIndexes(spark, tmp)
-      graft.ext.Pq.purgePqIndex(spark, tmp, 10)
-    }
+    } finally Rung.purgeRungIndexes(spark, tmp)
   }
 
   test("composed ingest survives a checkpoint restart: cross-restart " +
@@ -694,7 +640,7 @@ class RungSpec extends SparkTestBase {
         .collect().head.getSeq[Float](0)
       val ckpt = Files.createTempDirectory("graft_ingest_restart_ck").toString
       val input = MemoryStream[(Long, Seq[Float])](95, spark, None)
-      def start() = graft.streaming.StreamingSimilarity.startEmbeddingIngest(
+      def start() = graft.streaming.Pipeline.startEmbeddingIngest(
         spark, tmp, input.toDF().toDF("vec_id", "embedding"), ckpt,
         nQueries = 10)
       val nRaw0 = spark.read.parquet(s"$tmp/embeddings.parquet").count()

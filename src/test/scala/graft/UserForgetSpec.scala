@@ -105,48 +105,6 @@ class UserForgetSpec extends SparkTestBase {
     }
   }
 
-  test("maintenance-window orchestration: drain → stop → apply → restart " +
-    "erases the user end-to-end (coalesced fold cadence included) and " +
-    "the restarted chain keeps serving") {
-    import spark.implicits._
-    val cfg = freshCfg()
-    val input = MemoryStream[Event](115, spark, None)
-    val t0 = 1700000000000L
-    val qs = Pipeline.startAll(spark, input.toDF(), cfg)
-    try {
-      input.addData(
-        ev("m1", "u1", 1.0f, t0), ev("m2", "u2", 2.0f, t0 + 1000))
-      qs.foreach(_.processAllAvailable())
-      input.addData(
-        ev("m3", "u2", 3.0f, t0 + 2000), ev("m4", "u3", 4.0f, t0 + 3000))
-      qs.foreach(_.processAllAvailable())
-      UserForget.forgetUsers(spark, cfg.baseDir, Seq("u2").toDF("group_id"))
-
-      val (erased, restarted) = UserForget
-        .applyForgetUsersMaintenanceWindow(spark, cfg, qs) {
-          Pipeline.startAll(spark, input.toDF(), cfg)
-        }
-      try {
-        assert(erased == 2L, s"erased=$erased (u2 has 2 silver rows)")
-        def u2In(path: String): Long =
-          spark.read.option("basePath", path).parquet(path)
-            .filter(col("group_id") === "u2").count()
-        Seq(cfg.silverPath, cfg.goldPath, cfg.goldChangesPath,
-          cfg.servePath).foreach(p => assert(u2In(p) == 0L, s"$p not clean"))
-        // the restarted chain ingests and serves new traffic
-        input.addData(ev("m5", "u1", 5.0f, t0 + 4000))
-        restarted.foreach(_.processAllAvailable())
-        val got = Pipeline.serveSnapshot(spark, cfg)
-          .select(col("_id"), col("event_count")).orderBy("_id")
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        assert(got == Seq("u1" -> 2L, "u3" -> 1L), got.toString)
-      } finally restarted.foreach(_.stop())
-    } finally {
-      qs.foreach(q => if (q.isActive) q.stop())
-      UserForget.purgeForgetUsersTable(spark, cfg.baseDir)
-    }
-  }
-
   test("req_ms log migration is crash-safe: the rewrite stages beside " +
     "the live log and swaps, and a crash in any window heals without " +
     "losing a pending deletion (ADVICE r16)") {
