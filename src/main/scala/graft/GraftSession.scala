@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one place a Spark session is configured. Every entry point (Bench,
   * Verify, the tools) and the test suites build their session here, so
   * they all run one configuration: `local[cpus]` with as many shuffle
-  * partitions, UTC, no UI, and the RocksDB state store with changelog
-  * checkpointing ([[graft.streaming.Pipeline.rocksDbConfigs]]). A
+  * partitions, UTC, no UI, the RocksDB state store with changelog
+  * checkpointing and checkpoint and local-file I/O that forks no shell
+  * command ([[graft.streaming.Pipeline.rocksDbConfigs]]). A
   * streaming query restarted on an existing checkpoint keeps the
   * state-store provider its offset log recorded, so a checkpoint written
   * under the default provider still resumes under this session.

@@ -370,6 +370,21 @@ class PipelineSpec extends SparkTestBase {
         (r.getAs[Double]("cumulative_score"), r.getAs[Long]("event_count"))).toMap
     assert(gold(gA) == (4.0, 2L))
     assert(gold(gB) == (2.0, 1L))
+    // a fold that rewrites gB's bucket for another group stamps only that
+    // group: gB keeps its updated_at, as the reference MERGE leaves an
+    // unmatched target row alone
+    val gC = Iterator.from(0).map(i => s"h$i")
+      .find(goldBucketOf(_, cfg.goldBuckets) == goldBucketOf(gB, cfg.goldBuckets)).get
+    def stamps(): Map[String, Long] = spark.read.parquet(cfg.goldPath)
+      .collect().map(r => r.getAs[String]("group_id") -> r.getAs[Long]("updated_at")).toMap
+    val bStamp = stamps()(gB)
+    // the fold clock counts whole seconds: let it move past gB's stamp
+    while (System.currentTimeMillis() / 1000L * 1000L <= bStamp) Thread.sleep(50)
+    fold(gC, 5.0f, 500L, 3L)
+    assert(bucketFiles(gB) != bFilesAfter1)
+    val after = stamps()
+    assert(after(gB) == bStamp, s"untouched gB restamped: $bStamp -> ${after(gB)}")
+    assert(after(gC) > bStamp)
   }
 
   test("gold fold emits an insert/preimage/postimage change feed") {
@@ -585,6 +600,35 @@ class PipelineSpec extends SparkTestBase {
     Pipeline.vacuumGoldChanges(spark, cfg, keepVersions = 1)
     // no serve checkpoint → blind max-keepVersions retention (= round 3)
     assert(versions() == Seq("_commit_version=2", "_commit_version=3"))
+  }
+
+  test("fullyCommitted keeps a version whose directory vanishes mid-walk") {
+    import org.apache.hadoop.fs.{FilterFileSystem, Path}
+    val root = new Path(freshCfg().goldChangesPath)
+    val local = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val version = local.makeQualified(new Path(root, "_commit_version=3"))
+    val part = new Path(version, "part-0.parquet")
+    val staging = new Path(version, "_temporary/0")
+    val staged = new Path(staging, "part-1.parquet")
+    Seq(part, new Path(version, "_SUCCESS"), staged)
+      .foreach(p => local.create(p).close())
+    val committed = Set(part, staged).map(_.toUri.getPath)
+    // every data file committed, hidden and `_` files skipped: reclaimable
+    assert(Pipeline.fullyCommitted(local, version, committed))
+    // an in-flight write's staging dir removed between the version's
+    // listing and its own: not committed, and no exception
+    val racing = new FilterFileSystem(local) {
+      override def listStatus(f: Path) = {
+        val entries = super.listStatus(f)
+        if (f == version) local.delete(staging.getParent, true)
+        entries
+      }
+    }
+    assert(!Pipeline.fullyCommitted(racing, version, committed))
+    assert(!local.exists(staging))
+    // a version dir already gone when the walk reaches it: kept too
+    assert(!Pipeline.fullyCommitted(local,
+      new Path(root, "_commit_version=4"), committed))
   }
 
   test("committedSourcePaths survives source-log compaction cleanup") {
@@ -857,5 +901,113 @@ class PipelineSpec extends SparkTestBase {
       assert(compiles.drop(2).forall(_ <= 2),
         s"Janino compilations per batch: ${compiles.mkString(", ")}")
     } finally qs.foreach(_.stop())
+  }
+
+  /** The operating-system process starts (`jdk.ProcessStart`, with call
+    * stacks) the JVM made while `body` ran. Hadoop's local filesystem
+    * forks a shell command for some calls when the native libhadoop is
+    * absent. A plain JFR recording, dumped on stop, rather than a
+    * `RecordingStream`: JDK 17's stream has no stop that flushes, so
+    * closing it may drop the last second's events.
+    */
+  private def processStarts(body: => Unit): Seq[jdk.jfr.consumer.RecordedEvent] = {
+    import scala.jdk.CollectionConverters._
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart").withStackTrace()
+    recording.start()
+    val f = Files.createTempFile("graft-process-starts", ".jfr")
+    try {
+      body
+      recording.stop()
+      recording.dump(f)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+    } finally {
+      recording.close()
+      Files.deleteIfExists(f)
+    }
+  }
+
+  /** The `Class.method` names on a recorded process start's call stack. */
+  private def frames(e: jdk.jfr.consumer.RecordedEvent): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+      .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+  }
+
+  test("the chain forks no process for checkpoint writes or permission " +
+    "changes") {
+    val file = new org.apache.hadoop.fs.Path("file:///")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(file.isInstanceOf[graft.storage.NioLocalFileSystem], file.getClass.getName)
+    val cfg = freshCfg()
+    // the in-process chmod sets the same mode bits as the forked one
+    val probe = new org.apache.hadoop.fs.Path(cfg.baseDir, "probe")
+    file.create(probe).close()
+    file.setPermission(probe, new org.apache.hadoop.fs.permission.FsPermission("750"))
+    assert(java.nio.file.attribute.PosixFilePermissions.toString(Files
+      .getPosixFilePermissions(java.nio.file.Paths.get(cfg.baseDir, "probe"))) ==
+      "rwxr-x---")
+    val input = MemoryStream[Event](37, spark, None)
+    val t0 = 1700000000000L
+    val starts = processStarts {
+      val qs = Pipeline.startAll(spark, input.toDF(), cfg)
+      try {
+        (1 to 3).foreach { b =>
+          input.addData((0 until 8).map(i => ev(s"f$b-$i", s"g$i", i.toFloat, t0 + b * 1000L + i)))
+          qs.foreach(_.processAllAvailable())
+        }
+      } finally qs.foreach(_.stop())
+    }
+    // Spark's own `rm -rf` (JavaUtils.deleteRecursively, RocksDB cleanup)
+    // is not storage I/O of the chain and stays out of the assertion
+    val forked = starts.filter(e => frames(e).exists(f =>
+      f.contains("CheckpointFileManager") ||
+        f == "org.apache.hadoop.fs.RawLocalFileSystem.setPermission"))
+    assert(forked.size == 0, s"of ${starts.size} process starts, e.g. " +
+      forked.take(2).map(e => e.getString("command") + "\n  " +
+        frames(e).mkString("\n  ")).mkString("\n"))
+  }
+
+  test("a chain checkpointed under Spark's FileContext checkpoint manager " +
+    "resumes under the FileSystem one with exact serve state") {
+    val cfg = freshCfg()
+    val t0 = 1700000000000L
+    val before = Seq(
+      Seq(ev("m1", "g1", 1.0f, t0), ev("m2", "g2", 2.0f, t0 + 1000)),
+      Seq(ev("m3", "g1", 3.0f, t0 + 2000)))
+    val old = spark.newSession()
+    old.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
+    val in1 = MemoryStream[Event](38, old, None)
+    val firstRun = processStarts {
+      val qs1 = Pipeline.startAll(old, in1.toDF(), cfg)
+      try before.foreach { b => in1.addData(b); qs1.foreach(_.processAllAvailable()) }
+      finally qs1.foreach(_.stop())
+    }
+    // without native libhadoop the FileContext manager forks `readlink`
+    // per rename: its frames show the first run really used it
+    val viaFileContext = firstRun.count(e =>
+      frames(e).exists(_.contains("FileContextBasedCheckpointFileManager")))
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+      assert(viaFileContext > 0, "the first run did not use the FileContext manager")
+
+    // resume in the suite's session: the committed offsets are re-added
+    // in the same chunks, then a re-send of m1 and new events follow
+    val in2 = MemoryStream[Event](39, spark, None)
+    before.foreach(in2.addData(_))
+    val qs2 = Pipeline.startAll(spark, in2.toDF(), cfg)
+    try {
+      in2.addData(ev("m4", "g2", 4.0f, t0 + 3000), ev("m1", "g1", 1.0f, t0),
+        ev("m5", "g3", 5.0f, t0 + 4000))
+      qs2.foreach(_.processAllAvailable())
+      val ids = spark.read.parquet(cfg.silverPath).select("id").as[String]
+        .collect().sorted.toSeq
+      assert(ids == Seq("m1", "m2", "m3", "m4", "m5"), ids.toString)
+      val served = Pipeline.serveSnapshot(spark, cfg)
+        .select(col("_id"), col("event_count"), col("cumulative_score"))
+        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(served == Map("g1" -> ((2L, 4.0)), "g2" -> ((2L, 6.0)),
+        "g3" -> ((1L, 5.0))), served.toString)
+    } finally qs2.foreach(_.stop())
   }
 }
