@@ -571,8 +571,8 @@ object ExtEntry {
       }),
 
     // IVF index health: occupancy distribution, exact order-statistic
-    // assignment-similarity quantiles, drifted fraction — the inputs to
-    // Similarity.shouldRetrain's purge+rebuild decision rule
+    // assignment-similarity quantiles, drifted fraction — what tells an
+    // operator that a purge+rebuild of the standing index is due
     // oracle: the trained assignment re-derived, then the same occupancy /
     // order-statistic / drift rollups as Similarity.ivfStats
     { val (nQueries, nCentroids, simThreshold) = (10, 16, 0.1)

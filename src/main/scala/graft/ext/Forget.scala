@@ -412,7 +412,7 @@ object Forget {
     * read-path filter serves correctness at broadcast cost. Shape
     * parameters mirror [[graft.streaming.Metrics.serveHealth]] (env
     * derivation via [[graft.tools.Maintenance.Shapes.fromEnv]]), so the
-    * maintenance loop erases exactly the surfaces it maintains.
+    * maintenance loop erases exactly the surfaces the deployment serves.
     * Single-maintainer contract: run quiesced — no admission stream,
     * search, or sibling maintenance pass may touch the corpus dir or
     * its standing tables during the apply. Requires a directory-backed
@@ -515,9 +515,9 @@ object Forget {
     * store, the standing dedup band table (ensured; it covers the
     * STANDING-corpus partition [[TextDedup.ensureDedupIndex]] builds —
     * doc_id % 10 in 0..7 — so its counts carry that predicate), and the
-    * tombstone log itself. The substring gram log is audited by its own
-    * compaction cycle and is rebuilt by [[applyForgetDocsIfNeeded]]
-    * when present.
+    * tombstone log itself. The substring gram index is not a surface
+    * here: it holds per-gram counts, no doc keys, and
+    * [[applyForgetDocsIfNeeded]] rebuilds it when present.
     */
   def forgetDocsAudit(spark: SparkSession, dir: String): DataFrame = {
     TextDedup.ensureDedupIndex(spark, dir)
@@ -542,7 +542,7 @@ object Forget {
   /** The doc-side physical erase: rewrite the documents store without
     * the tombstoned rows (same crash-safe swap), rebuild the
     * doc-derived standing surfaces present for `dir` (the dedup band
-    * table; the substring gram log at `gramN` when one exists — both
+    * table; the substring gram index at `gramN` when one exists — both
     * re-derive from the rewritten store), clear the doc log LAST. Same
     * threshold economics, replay safety, and single-maintainer
     * contract as [[applyForgetIfNeeded]].

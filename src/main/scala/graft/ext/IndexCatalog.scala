@@ -173,14 +173,16 @@ private[graft] object IndexCatalog {
     * is deleted so the caller rebuilds. Returns true on reattach.
     *
     * INVARIANT the caller owns: a DERIVED index (dedup bands/shingles,
-    * grams, IVF/PQ/rung) is only valid while its source corpus evolves
-    * IN-BAND — through the admission appenders that keep index and
-    * corpus in step. Reattach does not fingerprint the corpus, so an
+    * grams, IVF/PQ/rung) is only valid while its source corpus changes
+    * IN-BAND — through the forget applies, which rebuild every derived
+    * index present, or the composed embedding ingest, which appends to
+    * the store and the rung tables together. Reattach does not
+    * fingerprint the corpus, so an
     * OUT-OF-BAND replacement of the source parquet (e.g. regenerating
     * a scale corpus at the same path) silently serves a stale index;
     * the remedy is the family's `purge*` entry point (or deleting the
     * warehouse dirs [[listIndexDirs]] reports) before the next ensure.
-    * Log-of-record tables (tombstone/contribution logs) are exempt:
+    * Log-of-record tables (the tombstone logs) are exempt:
     * they ARE the source of truth, and reattaching them is always
     * correct.
     */

@@ -384,11 +384,10 @@ object Pq {
     }
   }
 
-  /** Guard for the maintenance rules: true iff both PQ tables exist in
-    * the catalog or have committed data at their fixed location — the
-    * [[Similarity.ivfIndexExists]] fail-fast class (maintaining an
-    * index that was never built would silently build a spurious one and
-    * then forever monitor it as calm).
+  /** True iff both PQ tables exist in the catalog or have committed
+    * data at their fixed location — the [[Similarity.ivfIndexExists]]
+    * class: the vector-forget apply rebuilds only an index that was
+    * built, never a spurious one for a shape nothing serves.
     */
   private[graft] def pqIndexExists(spark: SparkSession, dir: String,
                                    nQueries: Int, nSub: Int = 8,
@@ -399,44 +398,6 @@ object Pq {
     val key = pqKey(nQueries, nSub, kSub, iters, sampleMod, sampleCap)
     Seq(pqBooksTable(dir, key), pqCodesTable(dir, key))
       .forall(IndexCatalog.hasCommittedData(spark, _))
-  }
-
-  /** File-growth maintenance rule for the standing PQ index: appended
-    * code rows land as one bucketed file set per append, so the codes
-    * table's file count grows with every append. When it
-    * exceeds `maxFiles`, the offline rebuild (purge + ensure — retrain
-    * + re-encode from the embeddings table, the source of truth) IS the
-    * compaction: codes are derived state, so unlike the gram log there
-    * is nothing to fold — rewriting from truth is both simpler and
-    * refreshes codebook drift in the same pass. Returns whether a
-    * rebuild ran. Same single-maintainer contract as the other passes:
-    * run quiesced.
-    */
-  def compactPqIndexIfNeeded(spark: SparkSession, dir: String,
-                             nQueries: Int, maxFiles: Int = 64,
-                             nSub: Int = 8, kSub: Int = 16, iters: Int = 2,
-                             sampleMod: Int = 3,
-                             sampleCap: Int = defaultIvfSampleCap)
-      : Boolean = {
-    require(pqIndexExists(spark, dir, nQueries, nSub, kSub, iters,
-      sampleMod, sampleCap),
-      s"compactPqIndexIfNeeded: no standing PQ index for dir=$dir, " +
-        s"nQueries=$nQueries (check SPARK_GRAFT_PQ_DIR/_NQ against the " +
-        "built index's shape) — the maintenance rule compacts an " +
-        "existing index, it does not build one")
-    val key = pqKey(nQueries, nSub, kSub, iters, sampleMod, sampleCap)
-    val loc = IndexCatalog.tableLocation(spark, pqCodesTable(dir, key))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = fs.listStatus(loc)
-      .count(_.getPath.getName.startsWith("part-"))
-    val fire = nFiles > maxFiles
-    if (fire) {
-      purgePqIndex(spark, dir, nQueries, nSub, kSub, iters, sampleMod,
-        sampleCap)
-      ensurePqIndex(spark, dir, nQueries, nSub, kSub, iters, sampleMod,
-        sampleCap)
-    }
-    fire
   }
 
   /** Drop the standing PQ index (catalog entries and data) — the

@@ -167,13 +167,12 @@ object Rung {
     IndexCatalog.purge(spark, i8Table(dir, i8Key(nQueries)))
   }
 
-  /** File-growth maintenance for the rung tables — the
-    * [[Pq.compactPqIndexIfNeeded]] rule verbatim: the composed ingest
-    * appends one bucketed file set per micro-batch; past `maxFiles` on
-    * ANY of the three tables, purge+ensure from the embeddings table IS
-    * the compaction (rung payloads are derived state — nothing to
-    * fold). Returns whether a rebuild ran. Single-maintainer contract:
-    * run quiesced.
+  /** File-growth maintenance for the rung tables: the composed ingest
+    * appends one bucketed file set per micro-batch, so when ANY of the
+    * three tables holds more than `maxFiles` `part-` files, the rule
+    * fires and purge+ensure from the embeddings table IS the compaction
+    * (rung payloads are derived state — nothing to fold). Returns
+    * whether a rebuild ran. Single-maintainer contract: run quiesced.
     */
   def compactRungIndexesIfNeeded(spark: SparkSession, dir: String,
                                  nQueries: Int, maxFiles: Int = 64,

@@ -18,8 +18,9 @@ import graft.ops.Exact.round6
   * top-k plans, so an edit that defeats the pushdown (a second window
   * column, a moved rank filter) fails a test instead of silently falling
   * back to full-sort windows. For a 100 TB corpus the scale
-  * path is LSH/IVF bucketing (same bucket-join shape as
-  * [[TextDedup.candidatePairs]]) — planned as the next increment.
+  * paths are sign-LSH bucketing ([[lshTopK]], the same bucket-join
+  * shape as [[TextDedup.candidatePairs]]) and IVF cells ([[ivfTopK]],
+  * and the standing index [[ensureIvfIndex]] builds once).
   *
   * Float arithmetic: embeddings are float32; both engines up-cast each
   * element to double and fold left-to-right, so dot products and norms are
@@ -1911,11 +1912,9 @@ object Similarity {
 
   /** True when the standing IVF index for this (dir, shape) EXISTS — as
     * catalog entries or as complete (`_SUCCESS`-committed) data at the
-    * fixed locations. The health/retrain rule checks this before
-    * reading stats ([[shouldRetrain]]): a mis-set
-    * shape must fail loudly, not silently train a fresh spurious index
-    * and then forever monitor it as "calm" while the real one drifts —
-    * the same guard class as
+    * fixed locations. The vector-forget apply checks this so that it
+    * rebuilds only an index that was built, never a spurious one for a
+    * shape nothing serves — the same guard class as
     * [[graft.ext.TextDedup.substringIndexExists]].
     */
   private[graft] def ivfIndexExists(spark: SparkSession, dir: String,
@@ -1936,72 +1935,5 @@ object Similarity {
     val key = ivfKey(nQueries, nCentroids, iters, sampleMod, sampleCap)
     Seq(ivfCentsTable(dir, key), ivfCellsTable(dir, key))
       .foreach(IndexCatalog.purge(spark, _))
-  }
-
-  /** The RETRAIN DECISION RULE for the frozen-centroid deployment: an
-    * index whose cells no longer describe the data degrades SILENTLY —
-    * nothing in the search path ever fails. This measures the standing
-    * index's health via [[ivfStats]] and says when to pay the offline
-    * rebuild ([[purgeIvfIndex]] + [[ensureIvfIndex]], run quiesced like
-    * the other maintenance passes):
-    *
-    *   - `frac_drifted > maxDriftFrac` — too many members sit below
-    *     `simThreshold` similarity to their own centroid: the centroids
-    *     no longer describe the data, recall is quietly gone;
-    *   - `cell_skew > maxSkew` (max cell over mean cell) — vectors piled
-    *     into few cells: probes of a hot cell cost far more than
-    *     cells/nProbe, and its members' true neighbors increasingly
-    *     live OUTSIDE the probed cell.
-    *
-    * Both thresholds are deliberately coarse: this is a maintenance
-    * trigger evaluated between batches (one cell-table scan), not a
-    * per-query guard. IvfIndexSpec pins that drifted cell rows flip it.
-    */
-  def shouldRetrain(spark: SparkSession, dir: String, nQueries: Int,
-                    nCentroids: Int, simThreshold: Double = 0.1,
-                    maxDriftFrac: Double = 0.2,
-                    maxSkew: Double = 4.0, iters: Int = 2,
-                    sampleMod: Int = 3,
-                    sampleCap: Int = defaultIvfSampleCap): Boolean = {
-    // fail fast on a shape/dir misconfiguration: health-checking an
-    // index that was never built would silently BUILD a fresh spurious
-    // one (ivfStats -> ensureIvfIndex) and then forever monitor it as
-    // calm while the real index drifts — the gram-compaction guard's
-    // sibling hazard
-    require(ivfIndexExists(spark, dir, nQueries, nCentroids,
-      iters, sampleMod, sampleCap),
-      s"shouldRetrain: no standing IVF index for dir=$dir, " +
-        s"nQueries=$nQueries, nCentroids=$nCentroids (check " +
-        "SPARK_GRAFT_IVF_DIR/_NQ/_NC/_ITERS/_SAMPLE_MOD/_SAMPLE_CAP " +
-        "against the built index's shape) — the health rule monitors " +
-        "an existing index, it does not build one")
-    val s = ivfStats(spark, dir, nQueries, nCentroids,
-      simThreshold, iters, sampleMod, sampleCap).collect().head
-    s.getAs[Double]("frac_drifted") > maxDriftFrac ||
-      s.getAs[Double]("cell_skew") > maxSkew
-  }
-
-  /** The maintenance-loop face of the rule: evaluate [[shouldRetrain]]
-    * and, when it fires, execute the offline rebuild (purge + retrain +
-    * reassign from the source-of-truth embeddings table). Returns
-    * whether a rebuild ran. Same single-maintainer contract as the
-    * other compaction passes — run it quiesced, since purge momentarily
-    * leaves no cell table to search.
-    */
-  def retrainIfNeeded(spark: SparkSession, dir: String, nQueries: Int,
-                      nCentroids: Int, simThreshold: Double = 0.1,
-                      maxDriftFrac: Double = 0.2,
-                      maxSkew: Double = 4.0, iters: Int = 2,
-                      sampleMod: Int = 3,
-                      sampleCap: Int = defaultIvfSampleCap): Boolean = {
-    val fire = shouldRetrain(spark, dir, nQueries, nCentroids,
-      simThreshold, maxDriftFrac, maxSkew, iters, sampleMod, sampleCap)
-    if (fire) {
-      purgeIvfIndex(spark, dir, nQueries, nCentroids, iters, sampleMod,
-        sampleCap)
-      ensureIvfIndex(spark, dir, nQueries, nCentroids, iters, sampleMod,
-        sampleCap)
-    }
-    fire
   }
 }

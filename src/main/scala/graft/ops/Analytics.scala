@@ -211,8 +211,7 @@ object Analytics {
     * absent from the bounds table entirely.
     *
     * Evaluate it between batches over the history table (one scan,
-    * groups-sized rollup — a maintenance trigger, not a per-row guard),
-    * like the IVF drift rule [[graft.ext.Similarity.shouldRetrain]].
+    * groups-sized rollup — a maintenance trigger, not a per-row guard).
     */
   def shouldRefreezeBounds(history: DataFrame, group: String,
                            bounds: DataFrame, lo: Double = 0.05,
@@ -234,8 +233,7 @@ object Analytics {
   /** The maintenance-loop face of the PERSISTED freeze: evaluate the
     * drift rule ([[shouldRefreezeBounds]]) over the current events
     * history against the standing bounds table and, when it fires,
-    * rebuild the table from history (purge + ensure — the
-    * [[graft.ext.Similarity.retrainIfNeeded]] contract: run quiesced,
+    * rebuild the table from history (purge + ensure, run quiesced;
     * readers pick up the refreshed table). Fails fast when no standing
     * table exists for the configured shape — monitoring would otherwise
     * silently BUILD a fresh table and forever read it as calm.

@@ -5,25 +5,40 @@ import org.apache.spark.sql.SparkSession
 import graft.streaming.Pipeline
 
 /** Out-of-band maintenance entry point — the scheduled OPTIMIZE+VACUUM
-  * analog (reference utils.py:111-135, bootstrap.py:58-62) for when the
-  * stream is NOT running:
+  * analog (reference utils.py:111-135, bootstrap.py:58-62):
   * `runMain graft.tools.Maintenance <pipelineBaseDir> [intervalSec]`.
   * With an interval it loops (cron-style service); without, it runs once
-  * and exits. Each pass compacts silver (OPTIMIZE) and vacuums consumed
-  * change-feed versions (VACUUM — cutoff derived from the serve
-  * checkpoint's committed progress when present, else the 168-version
-  * retention matching the reference's 168 h; the newest version is
-  * always retained). While a silver stream IS running, use
-  * [[Pipeline.Config.compactEvery]] instead — compaction must not race a
-  * concurrent micro-batch append.
+  * and exits.
   *
-  * Compaction variant is picked by [[Pipeline.compactSilverAuto]]:
-  * silver-terminal deployments get the whole-directory swap; once a gold
-  * stage has consumed the directory as a file stream, the manifest-based
-  * [[Pipeline.compactSilverLive]] rewrites only gold-committed `part-*`
-  * files into `compact-*` names gold's glob filter ignores — the
-  * plain-parquet analog of Delta's dataChange=false OPTIMIZE, legal even
-  * mid-stream. Vacuuming the change feed is safe in every deployment.
+  * Run it with the silver, gold and serve streams QUIESCED. Its silver
+  * pass ([[Pipeline.compactSilverAuto]]) picks the manifest variant
+  * [[Pipeline.compactSilverLive]] once a gold stage has consumed silver,
+  * and that variant rewrites only gold-committed `part-*` files — but it
+  * still deletes part files a live silver MERGE may be reading
+  * (`FAILED_READ_FILE.FILE_NOT_EXIST`), so it is not safe beside a
+  * running chain. While a silver stream runs, compact inside it with
+  * [[Pipeline.Config.compactEvery]], which runs between batches.
+  *
+  * Each pass maintains the families that grow or drift:
+  *   - silver part files: compacted (OPTIMIZE);
+  *   - serve batch directories: folded ([[graft.storage.TableFormat
+  *     .optimizeServe]]);
+  *   - the gold change feed: consumed versions vacuumed (cutoff derived
+  *     from the serve checkpoint's committed progress when present,
+  *     else the 168-version retention matching the reference's 168 h;
+  *     the newest version is always retained);
+  *   - the frozen winsorize bounds (`SPARK_GRAFT_WINSOR_DIR`):
+  *     re-frozen when the clip-drift rule fires;
+  *   - the compression-rung tables (`SPARK_GRAFT_RUNG_DIR`), which the
+  *     composed embedding ingest appends to: rebuilt past a file-count
+  *     threshold, or when the three tables disagree;
+  *   - the vector and document tombstone logs (`SPARK_GRAFT_FORGET_DIR`):
+  *     applied, which rebuilds every derived index present;
+  *   - the user tombstone log (`SPARK_GRAFT_USER_FORGET=1`): applied.
+  *
+  * The dedup band/shingle, substring gram, IVF and PQ indexes are
+  * build-once: nothing appends to them, so no pass maintains them.
+  * `purge*` + `ensure*` rebuilds one, and the forget applies do so.
   */
 object Maintenance {
 
@@ -38,22 +53,21 @@ object Maintenance {
     *   - every configured index must exist on disk with the configured
     *     shape (throws — a mis-set dir/shape must stop the loop before
     *     the first compaction, same contract as the per-pass guards);
-    *   - every maintainable index family found under the warehouse
-    *     (gram logs, IVF cells, PQ codes — the families this loop has a
-    *     pass for) must be covered by the configured set; uncovered
-    *     ones come back as warning lines the loop prints every pass.
+    *   - every maintainable family found under the warehouse (winsor
+    *     bounds, rung tables, tombstone logs — the families this loop
+    *     has a pass for) must be covered by the configured set;
+    *     uncovered ones come back as warning lines the loop prints every
+    *     pass.
     *
-    * Dedup band/shingle and IVF-PQ indexes have no scheduled pass here
-    * (append-capped at build; rebuilt via purge+ensure) and are listed
-    * for visibility only, never warned.
+    * The build-once families (dedup band/shingle, substring gram, IVF,
+    * IVF-PQ and PQ) have no pass here and are listed for visibility
+    * only, never warned.
     */
-  /** The full shape manifest the loop reads from `SPARK_GRAFT_*` env
-    * vars — ONE record threaded through the guards, the coverage keys,
-    * and the passes themselves, so the key the manifest derives is BY
-    * CONSTRUCTION the key the passes maintain (VERDICT r13 next #4:
-    * r12/r13 hardcoded default shape parameters here and warned
-    * permanently on any non-default index; now a non-default shape is
-    * coverable by setting the matching vars).
+  /** The IVF and PQ training shapes the loop reads from `SPARK_GRAFT_*`
+    * env vars — ONE record threaded through the forget pass, which
+    * rebuilds those indexes with it, so a non-default deployment's
+    * indexes are rebuilt at the shape it serves (VERDICT r13 next #4:
+    * r12/r13 hardcoded default shape parameters here).
     */
   final case class Shapes(
       ivfIters: Int = 2, ivfSampleMod: Int = 3,
@@ -63,11 +77,11 @@ object Maintenance {
       pqSampleCap: Int = graft.ext.Similarity.defaultIvfSampleCap)
 
   object Shapes {
-    /** The ONE derivation of the shape manifest from `SPARK_GRAFT_*`
-      * env vars — shared by the maintenance loop's passes, its coverage
-      * keys, AND [[graft.streaming.Metrics.serveHealth]] (VERDICT r14
-      * next #3), so the health face and the maintenance manifest probe
-      * the same tables by construction.
+    /** The ONE derivation of the shapes from `SPARK_GRAFT_*` env vars —
+      * shared by the maintenance loop's forget pass AND
+      * [[graft.streaming.Metrics.serveHealth]] (VERDICT r14 next #3), so
+      * the health face probes the tables the loop rebuilds by
+      * construction.
       */
     def fromEnv(env: Map[String, String] = sys.env): Shapes = Shapes(
       ivfIters = env.getOrElse("SPARK_GRAFT_IVF_ITERS", "2").toInt,
@@ -85,44 +99,14 @@ object Maintenance {
   }
 
   private[graft] def manifestReport(spark: SparkSession,
-      gramDir: Option[String], gramN: Int,
-      ivfDir: Option[String], ivfNq: Int, ivfNc: Int,
-      pqDir: Option[String], pqNq: Int,
       winsorDir: Option[String] = None,
       winsorGroup: String = "event_type",
       rungDir: Option[String] = None, rungNq: Int = 10,
       rungPrefix: Int = 16,
-      shapes: Shapes = Shapes(),
       forgetDir: Option[String] = None,
       userForgetBase: Option[String] = None): Seq[String] = {
-    import graft.ext.{IndexCatalog, Pq, Rung, Similarity, TextDedup}
+    import graft.ext.{IndexCatalog, Rung}
     import graft.ops.Analytics
-    gramDir.foreach { d =>
-      require(TextDedup.substringIndexExists(spark, d, gramN),
-        s"maintenance manifest: SPARK_GRAFT_GRAM_INDEX_DIR=$d but no " +
-          s"standing gram index for n=$gramN exists — check " +
-          "SPARK_GRAFT_GRAM_INDEX_N against the built index's width")
-    }
-    ivfDir.foreach { d =>
-      require(Similarity.ivfIndexExists(spark, d, ivfNq, ivfNc,
-        shapes.ivfIters, shapes.ivfSampleMod, shapes.ivfSampleCap),
-        s"maintenance manifest: SPARK_GRAFT_IVF_DIR=$d but no standing " +
-          s"IVF index for nQueries=$ivfNq, nCentroids=$ivfNc, " +
-          s"iters=${shapes.ivfIters}, sampleMod=${shapes.ivfSampleMod}, " +
-          s"sampleCap=${shapes.ivfSampleCap} exists — check " +
-          "SPARK_GRAFT_IVF_NQ/_NC/_ITERS/_SAMPLE_MOD/_SAMPLE_CAP " +
-          "against the built index's shape")
-    }
-    pqDir.foreach { d =>
-      require(Pq.pqIndexExists(spark, d, pqNq, shapes.pqNSub,
-        shapes.pqKSub, shapes.pqIters, shapes.pqSampleMod,
-        shapes.pqSampleCap),
-        s"maintenance manifest: SPARK_GRAFT_PQ_DIR=$d but no standing " +
-          s"PQ index for nQueries=$pqNq, nSub=${shapes.pqNSub}, " +
-          s"kSub=${shapes.pqKSub} exists — check " +
-          "SPARK_GRAFT_PQ_NQ/_NSUB/_KSUB/_ITERS/_SAMPLE_MOD/_SAMPLE_CAP " +
-          "against the built index's shape")
-    }
     winsorDir.foreach { d =>
       require(Analytics.boundsIndexExists(spark, d, winsorGroup),
         s"maintenance manifest: SPARK_GRAFT_WINSOR_DIR=$d but no " +
@@ -139,41 +123,23 @@ object Maintenance {
           "tables' shape")
     }
     val covered: Set[String] =
-      gramDir.map(d => TextDedup.gramsTable(d, gramN)).toSet ++
-        ivfDir.toSeq.flatMap { d =>
-          val key = Similarity.ivfKey(ivfNq, ivfNc, shapes.ivfIters,
-            shapes.ivfSampleMod, shapes.ivfSampleCap)
-          Seq(Similarity.ivfCentsTable(d, key),
-            Similarity.ivfCellsTable(d, key))
-        } ++
-        pqDir.toSeq.flatMap { d =>
-          val key = Pq.pqKey(pqNq, shapes.pqNSub, shapes.pqKSub,
-            shapes.pqIters, shapes.pqSampleMod, shapes.pqSampleCap)
-          Seq(Pq.pqBooksTable(d, key), Pq.pqCodesTable(d, key))
-        } ++
-        winsorDir.map(d => Analytics.boundsTable(d, winsorGroup, 0.05, 0.95)) ++
-        rungDir.toSeq.flatMap { d =>
-          Seq(Rung.binTable(d, Rung.binKey(rungNq)),
-            Rung.mrlTable(d, Rung.mrlKey(rungNq, rungPrefix)),
-            Rung.i8Table(d, Rung.i8Key(rungNq)))
-        } ++
-        // no existence require: the tombstone logs are CREATED by the
-        // first deletion — configured-but-absent is the healthy steady
-        // state, unlike the built-once indexes above
-        forgetDir.toSeq.flatMap(d => Seq(graft.ext.Forget.forgetTable(d),
-          graft.ext.Forget.forgetDocsTable(d))) ++
-        userForgetBase.map(b =>
-          graft.streaming.UserForget.forgetUsersTable(b))
-    val maintainable = Set("grams", "ivf", "pq", "winsor", "rung",
-      "forget")
+      winsorDir.map(d => Analytics.boundsTable(d, winsorGroup, 0.05, 0.95))
+        .toSet ++
+      rungDir.toSeq.flatMap { d =>
+        Seq(Rung.binTable(d, Rung.binKey(rungNq)),
+          Rung.mrlTable(d, Rung.mrlKey(rungNq, rungPrefix)),
+          Rung.i8Table(d, Rung.i8Key(rungNq)))
+      } ++
+      // no existence require: the tombstone logs are CREATED by the
+      // first deletion — configured-but-absent is the healthy steady
+      // state, unlike the built tables above
+      forgetDir.toSeq.flatMap(d => Seq(graft.ext.Forget.forgetTable(d),
+        graft.ext.Forget.forgetDocsTable(d))) ++
+      userForgetBase.map(b =>
+        graft.streaming.UserForget.forgetUsersTable(b))
+    val maintainable = Set("winsor", "rung", "forget")
     IndexCatalog.listIndexDirs(spark)
-      .filter { case (fam, name) =>
-        // exact name or a "_"-separated suffix of it (the gram log's
-        // `_tags` sibling) — a bare prefix test would let `..._n42`
-        // hide behind a covered `..._n4` (r12 review)
-        maintainable(fam) &&
-          !covered.exists(c => name == c || name.startsWith(c + "_"))
-      }
+      .filter { case (fam, name) => maintainable(fam) && !covered(name) }
       .map { case (fam, name) =>
         // since r14 the manifest derives its keys from the SAME
         // SPARK_GRAFT_* shape vars the passes run with, so ANY shape is
@@ -195,39 +161,15 @@ object Maintenance {
     val spark = graft.GraftSession.local()
     val cfg = Pipeline.Config(baseDir)
     val format = graft.storage.TableFormat.parquet
-    // Optional: also fold the substring gram index's per-batch
-    // contribution log (round 9) — pass the indexed corpus dir as
-    // SPARK_GRAFT_GRAM_INDEX_DIR and, if the index was built with a
-    // non-default gram width, SPARK_GRAFT_GRAM_INDEX_N (the tables are
-    // keyed by n; compactSubstringIndex FAILS FAST when no index exists
-    // for the configured n, so a mis-set width cannot silently build a
-    // spurious corpus index from inside this loop). Same
-    // single-maintainer contract as silver compaction: run it quiesced.
-    val gramDir = sys.env.get("SPARK_GRAFT_GRAM_INDEX_DIR")
+    // The shapes the forget pass rebuilds the build-once indexes with:
+    // the gram width (SPARK_GRAFT_GRAM_INDEX_N), the IVF and PQ query
+    // counts and centroid count (SPARK_GRAFT_IVF_NQ/_NC,
+    // SPARK_GRAFT_PQ_NQ) and the training shapes ([[Shapes.fromEnv]])
     val gramN = sys.env.getOrElse("SPARK_GRAFT_GRAM_INDEX_N", "5").toInt
-    // Optional: IVF index health check + conditional offline rebuild
-    // (round 10) — pass the indexed corpus dir as SPARK_GRAFT_IVF_DIR
-    // (+ _NQ/_NC when built with non-default shape). Runs
-    // Similarity.retrainIfNeeded: the drift/skew rule decides, the
-    // rebuild retrains from the embeddings table. Quiesce searches
-    // around the tick, like the other passes.
-    val ivfDir = sys.env.get("SPARK_GRAFT_IVF_DIR")
     val ivfNq = sys.env.getOrElse("SPARK_GRAFT_IVF_NQ", "10").toInt
     val ivfNc = sys.env.getOrElse("SPARK_GRAFT_IVF_NC", "16").toInt
-    // full shape manifest (VERDICT r13 #4): the same vars feed the
-    // coverage keys AND the passes, so a non-default-shape index is
-    // maintainable by configuring them — not purge-and-rebuild-only
-    val shapes = Shapes.fromEnv()
-    // Optional: PQ codes-table file-growth compaction (round 10) — pass
-    // the indexed corpus dir as SPARK_GRAFT_PQ_DIR (+ _NQ / _MAX_FILES).
-    // Each append adds one file set; past the
-    // threshold the offline purge+rebuild IS the compaction (codes are
-    // derived state — rewriting from the embeddings table both compacts
-    // and refreshes codebook drift). Fails fast when no index exists
-    // for the configured shape, like the gram guard.
-    val pqDir = sys.env.get("SPARK_GRAFT_PQ_DIR")
     val pqNq = sys.env.getOrElse("SPARK_GRAFT_PQ_NQ", "10").toInt
-    val pqMaxFiles = sys.env.getOrElse("SPARK_GRAFT_PQ_MAX_FILES", "64").toInt
+    val shapes = Shapes.fromEnv()
     // Optional: frozen winsorize-bounds drift check + conditional
     // re-freeze (round 12) — pass the events dir as
     // SPARK_GRAFT_WINSOR_DIR (+ _GROUP for a non-default group column).
@@ -261,8 +203,8 @@ object Maintenance {
     val forgetMin = sys.env.getOrElse("SPARK_GRAFT_FORGET_MIN", "1").toLong
     // The USER-deletion pass runs against THIS pipeline's baseDir (it
     // is the store set this loop maintains) but ONLY under the explicit
-    // SPARK_GRAFT_USER_FORGET=1 opt-in (r15 ADVICE): unlike the loop's
-    // other passes it is NOT safe beside live streams — the gold-bucket
+    // SPARK_GRAFT_USER_FORGET=1 opt-in (r15 ADVICE): like the silver
+    // pass it is NOT safe beside live streams — the gold-bucket
     // dirSwap can race a concurrent foldToGold swap, and the drain
     // guard is check-then-act (a silver/change file committed between
     // the guard and the scrub would fold the user back in). Enable it
@@ -284,9 +226,8 @@ object Maintenance {
     // when the user-erase pass is disabled, its log is NOT covered —
     // a tombstone log growing on disk with no pass to apply it is
     // exactly the unmaintained-surface drift the warning exists for
-    def uncovered() = manifestReport(spark, gramDir, gramN, ivfDir, ivfNq,
-      ivfNc, pqDir, pqNq, winsorDir, winsorGroup, rungDir, rungNq,
-      rungPrefix, shapes, forgetDir,
+    def uncovered() = manifestReport(spark, winsorDir, winsorGroup,
+      rungDir, rungNq, rungPrefix, forgetDir,
       if (userForgetEnabled) Some(baseDir) else None)
     uncovered()
     do {
@@ -295,14 +236,6 @@ object Maintenance {
       format.optimize(spark, cfg)
       format.optimizeServe(spark, cfg)
       format.vacuumChangeFeed(spark, cfg)
-      gramDir.foreach(graft.ext.TextDedup.compactSubstringIndex(spark, _, gramN))
-      val retrained = ivfDir.exists(d => graft.ext.Similarity
-        .retrainIfNeeded(spark, d, ivfNq, ivfNc, iters = shapes.ivfIters,
-          sampleMod = shapes.ivfSampleMod, sampleCap = shapes.ivfSampleCap))
-      val pqCompacted = pqDir.exists(d => graft.ext.Pq
-        .compactPqIndexIfNeeded(spark, d, pqNq, pqMaxFiles, shapes.pqNSub,
-          shapes.pqKSub, shapes.pqIters, shapes.pqSampleMod,
-          shapes.pqSampleCap))
       val refroze = winsorDir.exists(d => graft.ops.Analytics
         .refreezeBoundsIndexIfNeeded(spark, d, winsorGroup))
       val rungCompacted = rungDir.exists(d => graft.ext.Rung
@@ -326,11 +259,6 @@ object Maintenance {
       else None
       println(s"[maintenance] compacted ${cfg.silverPath} + " +
         f"vacuumed ${cfg.goldChangesPath}" +
-        gramDir.fold("")(d => s" + folded gram log for $d") +
-        ivfDir.fold("")(d =>
-          s" + ivf health for $d (retrained=$retrained)") +
-        pqDir.fold("")(d =>
-          s" + pq file growth for $d (compacted=$pqCompacted)") +
         winsorDir.fold("")(d =>
           s" + winsor bounds drift for $d (refroze=$refroze)") +
         rungDir.fold("")(d =>

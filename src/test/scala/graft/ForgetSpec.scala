@@ -12,7 +12,7 @@ import graft.ext.{Forget, Rung, Similarity}
   * (broadcast anti-join, rung-table-only stage 1, rank-limit pushdown
   * intact), the physical apply (raw store rewritten, derived surfaces
   * rebuilt, log cleared, audit reads zero residue), the crash-window
-  * recovery of the raw-store swap, and the streaming doc deletion feed.
+  * recovery of the raw-store swap, and doc deletion registration.
   */
 class ForgetSpec extends SparkTestBase {
 
@@ -301,31 +301,23 @@ class ForgetSpec extends SparkTestBase {
     } finally cleanupDocs(a, b)
   }
 
-  test("streaming doc deletion feed registers tombstones idempotently " +
-    "and the live pairs drop the doc's pairs immediately") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  test("doc deletion requests register tombstones idempotently and " +
+    "the live pairs drop the doc's pairs immediately") {
     import graft.ext.TextDedup
     import spark.implicits._
     cleanupDocs(dir)
-    val ckpt = Files.createTempDirectory("graft_forgetdoc_ckpt").toString
     try {
       // pick a doc that participates in at least one candidate pair
       val victim = TextDedup.candidatePairs(spark, dir)
         .select(col("d1")).limit(1).collect().head.getLong(0)
-      val input = MemoryStream[Long](102, spark, None)
-      val sq = graft.streaming.StreamingDedup.startDocForgetStream(
-        spark, dir, input.toDF().toDF("doc_id"), ckpt)
-      try {
-        input.addData(victim, victim)
-        sq.processAllAvailable()
-        input.addData(victim)
-        sq.processAllAvailable()
-        assert(Forget.forgottenDocIds(spark, dir)
-          .collect().map(_.getLong(0)).toSeq == Seq(victim))
-        val live = Forget.candidatePairsLive(spark, dir).collect()
-        assert(!live.exists(r =>
-          r.getLong(0) == victim || r.getLong(1) == victim))
-      } finally sq.stop()
+      // a request repeated within one call, then replayed in a second
+      Forget.forgetDocs(spark, dir, Seq(victim, victim).toDF("doc_id"))
+      Forget.forgetDocs(spark, dir, Seq(victim).toDF("doc_id"))
+      assert(Forget.forgottenDocIds(spark, dir)
+        .collect().map(_.getLong(0)).toSeq == Seq(victim))
+      val live = Forget.candidatePairsLive(spark, dir).collect()
+      assert(!live.exists(r =>
+        r.getLong(0) == victim || r.getLong(1) == victim))
     } finally cleanupDocs(dir)
   }
 }

@@ -203,83 +203,4 @@ class IvfIndexSpec extends SparkTestBase {
         s"indexed query re-ran the corpus assignment:\n$plan")
     } finally purge()
   }
-
-  test("drifted admissions flip the retrain trigger: shouldRetrain is " +
-    "calm on the pristine index and fires after off-distribution " +
-    "vectors stream in") {
-    import spark.implicits._
-    purge()
-    try {
-      Similarity.ensureIvfIndex(spark, dir, nQueries = 10, nCentroids = 16)
-      val stats0 = Similarity.ivfStats(spark, dir, nQueries = 10,
-        nCentroids = 16, simThreshold = 0.1).collect().head
-      val frac0 = stats0.getAs[Double]("frac_drifted")
-      val skew0 = stats0.getAs[Double]("cell_skew")
-      val n0 = stats0.getAs[Long]("n_vectors")
-      assert(frac0 < 0.5, s"pristine index already half-drifted: $stats0")
-      // thresholds relative to the pristine index, so the test pins the
-      // DELTA the drifted admissions cause, not a data-dependent absolute
-      val calm = Similarity.shouldRetrain(spark, dir,
-        nQueries = 10, nCentroids = 16, simThreshold = 0.1,
-        maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0)
-      assert(!calm, "retrain trigger fired on the pristine index")
-      // off-distribution admissions: a direction ORTHOGONAL to the whole
-      // centroid span (Gram-Schmidt over the 16 collected centroids) has
-      // ~zero cosine to every centroid — below any positive threshold
-      val cents = spark.table(Similarity.ivfCentsTable(dir,
-          Similarity.ivfKey(10, 16, 2, 3, Similarity.defaultIvfSampleCap)))
-        .select(col("cemb")).collect().map(_.getSeq[Double](0).toArray)
-      def dotA(a: Array[Double], b: Array[Double]): Double =
-        a.indices.map(i => a(i) * b(i)).sum
-      def subIn(a: Array[Double], b: Array[Double], f: Double): Unit =
-        a.indices.foreach(i => a(i) -= f * b(i))
-      val ortho = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-      for (c <- cents) {
-        val v = c.clone()
-        ortho.foreach(o => subIn(v, o, dotA(v, o)))
-        val n = math.sqrt(dotA(v, v))
-        if (n > 1e-9) ortho += v.map(_ / n)
-      }
-      val junkDir = Array.tabulate(64)(i => if (i == 63) 1.0 else 0.0)
-      for (_ <- 0 until 2) ortho.foreach(o => subIn(junkDir, o, dotA(junkDir, o)))
-      assert(math.sqrt(dotA(junkDir, junkDir)) > 1e-6,
-        "basis vector degenerate w.r.t. centroid span")
-      val junkVec = junkDir.map(_.toFloat).toSeq
-      val nJunk = math.ceil(n0 * 0.3).toInt
-      // the drifted rows land in the cell table as (cent_id, cid, ce,
-      // en) posting rows of cell 0 — every cell is equally far from them
-      val cellsT = Similarity.ivfCellsTable(dir,
-        Similarity.ivfKey(10, 16, 2, 3, Similarity.defaultIvfSampleCap))
-      (0 until nJunk).map(i => (0L, 900000L + i, junkVec))
-        .toDF("cent_id", "cid", "ce")
-        .select(col("cent_id"), col("cid"), col("ce"),
-          Similarity.norm(col("ce")).as("en"))
-        .write.mode("append")
-        .bucketBy(8, "cent_id").sortBy("cent_id")
-        .saveAsTable(cellsT)
-      spark.catalog.refreshTable(cellsT)
-      val fired = Similarity.shouldRetrain(spark, dir,
-        nQueries = 10, nCentroids = 16, simThreshold = 0.1,
-        maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0)
-      assert(fired, "30% off-distribution admissions must flip the " +
-        "drift half of the retrain rule")
-
-      // the maintenance face executes the rebuild when the rule fires:
-      // the index retrains from the embeddings table (derived state vs
-      // source of truth), so the drifted cell rows fold out and the
-      // trigger reads calm again
-      val retrained = Similarity.retrainIfNeeded(spark, dir,
-        nQueries = 10, nCentroids = 16, simThreshold = 0.1,
-        maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0)
-      assert(retrained, "retrainIfNeeded must rebuild when the rule fires")
-      assert(!Similarity.shouldRetrain(spark, dir,
-        nQueries = 10, nCentroids = 16, simThreshold = 0.1,
-        maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0),
-        "post-rebuild index must read healthy again")
-      assert(!Similarity.retrainIfNeeded(spark, dir,
-        nQueries = 10, nCentroids = 16, simThreshold = 0.1,
-        maxDriftFrac = frac0 + 0.1, maxSkew = skew0 + 100.0),
-        "a healthy index must not rebuild")
-    } finally purge()
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.{IndexCatalog, Pq, TextDedup}
+import graft.ext.{IndexCatalog, Pq, Rung, Similarity, TextDedup}
 import graft.tools.Maintenance
 
 /** The maintenance loop's whole-set manifest validation (VERDICT r10
@@ -13,51 +13,57 @@ class MaintenanceManifestSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private def ensureRung(): Unit = {
+    Rung.ensureBinaryIndex(spark, dir, 10)
+    Rung.ensureMatryoshkaIndex(spark, dir, 10, 16)
+    Rung.ensureInt8Index(spark, dir, 10)
+  }
+
+  private val rungTables = Seq(Rung.binTable(dir, Rung.binKey(10)),
+    Rung.mrlTable(dir, Rung.mrlKey(10, 16)),
+    Rung.i8Table(dir, Rung.i8Key(10)))
+
   test("configured-but-absent indexes throw up front; a built index " +
     "with the configured shape passes clean") {
-    Pq.purgePqIndex(spark, dir, nQueries = 10)
+    Rung.purgeRungIndexes(spark, dir, 10, 16)
     try {
-      // configured PQ dir, nothing built: fail fast before any pass
+      // configured rung dir, nothing built: fail fast before any pass
       val e = intercept[IllegalArgumentException] {
-        Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-          Some(dir), 10)
+        Maintenance.manifestReport(spark, rungDir = Some(dir), rungNq = 10)
       }
-      assert(e.getMessage.contains("SPARK_GRAFT_PQ_DIR"))
-      Pq.ensurePqIndex(spark, dir, nQueries = 10)
-      // right shape: no throw, and the pq tables are covered (no pq
+      assert(e.getMessage.contains("SPARK_GRAFT_RUNG_DIR"))
+      ensureRung()
+      // right shape: no throw, and the rung tables are covered (no
       // warnings about this dir's tables)
-      val warns = Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        Some(dir), 10)
-      assert(!warns.exists(_.contains("graft_pq_")), warns.mkString("\n"))
+      val warns = Maintenance.manifestReport(spark, rungDir = Some(dir),
+        rungNq = 10)
+      assert(!warns.exists(w => rungTables.exists(w.contains)),
+        warns.mkString("\n"))
       // wrong shape (nQueries mismatch): the guard catches it up front
       val e2 = intercept[IllegalArgumentException] {
-        Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-          Some(dir), 99)
+        Maintenance.manifestReport(spark, rungDir = Some(dir), rungNq = 99)
       }
       assert(e2.getMessage.contains("nQueries=99"))
-    } finally Pq.purgePqIndex(spark, dir, nQueries = 10)
+    } finally Rung.purgeRungIndexes(spark, dir, 10, 16)
   }
 
   test("an on-disk maintainable index absent from the configured set " +
     "warns; covering it or purging it clears the warning") {
-    Pq.purgePqIndex(spark, dir, nQueries = 10)
-    Pq.ensurePqIndex(spark, dir, nQueries = 10)
+    Rung.purgeRungIndexes(spark, dir, 10, 16)
+    ensureRung()
     try {
-      val key = Pq.pqKey(10, 8, 16, 2, 3,
-        graft.ext.Similarity.defaultIvfSampleCap)
-      val codes = Pq.pqCodesTable(dir, key)
-      // not configured at all: both pq tables warn
-      val warns = Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        None, 10)
-      assert(warns.exists(_.contains(codes)), warns.mkString("\n"))
+      val bin = Rung.binTable(dir, Rung.binKey(10))
+      // not configured at all: the rung tables warn
+      val warns = Maintenance.manifestReport(spark)
+      assert(warns.exists(_.contains(bin)), warns.mkString("\n"))
       // configured: covered, silent for this index
-      val covered = Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        Some(dir), 10)
-      assert(!covered.exists(_.contains(codes)), covered.mkString("\n"))
+      val covered = Maintenance.manifestReport(spark, rungDir = Some(dir),
+        rungNq = 10)
+      assert(!covered.exists(_.contains(bin)), covered.mkString("\n"))
       // the inventory itself reports the family
       val inv = IndexCatalog.listIndexDirs(spark)
-      assert(inv.contains(("pq", codes)), inv.mkString(", "))
-    } finally Pq.purgePqIndex(spark, dir, nQueries = 10)
+      assert(inv.contains(("rung", bin)), inv.mkString(", "))
+    } finally Rung.purgeRungIndexes(spark, dir, 10, 16)
   }
 
   test("winsor bounds freeze: configured-but-absent fails fast, a fresh " +
@@ -68,18 +74,17 @@ class MaintenanceManifestSpec extends SparkTestBase {
     Analytics.purgeBoundsIndex(spark, dir)
     try {
       intercept[IllegalArgumentException] {
-        Maintenance.manifestReport(spark, None, 5, None, 10, 16, None, 10,
-          Some(dir))
+        Maintenance.manifestReport(spark, winsorDir = Some(dir))
       }
       intercept[IllegalArgumentException] {
         Analytics.refreezeBoundsIndexIfNeeded(spark, dir)
       }
       Analytics.ensureBoundsIndex(spark, dir)
       // covered: silent; unconfigured: the on-disk freeze warns
-      assert(!Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        None, 10, Some(dir)).exists(_.contains("graft_winsor_bounds_")))
-      assert(Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        None, 10, None).exists(_.contains("graft_winsor_bounds_")))
+      assert(!Maintenance.manifestReport(spark, winsorDir = Some(dir))
+        .exists(_.contains("graft_winsor_bounds_")))
+      assert(Maintenance.manifestReport(spark)
+        .exists(_.contains("graft_winsor_bounds_")))
       // frozen on the current history: calm
       assert(!Analytics.refreezeBoundsIndexIfNeeded(spark, dir))
       // doctor the standing freeze with bounds from a shifted history —
@@ -103,18 +108,37 @@ class MaintenanceManifestSpec extends SparkTestBase {
 
   test("dedup band/shingle indexes are listed for visibility but never " +
     "warned — no scheduled pass exists for them") {
-    TextDedup.purgeDedupIndex(spark, dir)
+    // the other build-once families (gram, IVF, PQ) alike
+    def purgeAll(): Unit = {
+      TextDedup.purgeDedupIndex(spark, dir)
+      TextDedup.purgeSubstringIndex(spark, dir)
+      Similarity.purgeIvfIndex(spark, dir)
+      Pq.purgePqIndex(spark, dir, nQueries = 10)
+    }
+    purgeAll()
     TextDedup.ensureDedupIndex(spark, dir)
+    TextDedup.ensureSubstringIndex(spark, dir)
+    Similarity.ensureIvfIndex(spark, dir, nQueries = 10, nCentroids = 16)
+    Pq.ensurePqIndex(spark, dir, nQueries = 10)
     try {
       val inv = IndexCatalog.listIndexDirs(spark)
       assert(inv.exists { case (f, n) =>
         f == "dedup" && n.startsWith("graft_dedup_bands_") },
         inv.mkString(", "))
-      val warns = Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        None, 10)
+      val cap = Similarity.defaultIvfSampleCap
+      val built = Seq(
+        "grams" -> TextDedup.gramsTable(dir, 5),
+        "ivf" -> Similarity.ivfCellsTable(dir,
+          Similarity.ivfKey(10, 16, 2, 3, cap)),
+        "pq" -> Pq.pqCodesTable(dir, Pq.pqKey(10, 8, 16, 2, 3, cap)))
+      built.foreach(fn => assert(inv.contains(fn), inv.mkString(", ")))
+      val warns = Maintenance.manifestReport(spark)
       assert(!warns.exists(_.contains("graft_dedup_")),
         warns.mkString("\n"))
-    } finally TextDedup.purgeDedupIndex(spark, dir)
+      Seq("graft_substr_grams_", "graft_ivf_", "graft_pq_").foreach { p =>
+        assert(!warns.exists(_.contains(p)), warns.mkString("\n"))
+      }
+    } finally purgeAll()
   }
 
   test("an on-disk tombstone log warns when no forget dir is configured " +
@@ -137,8 +161,8 @@ class MaintenanceManifestSpec extends SparkTestBase {
     purgeAll()
     try {
       // absent + configured: steady state, neither throw nor warning
-      val calm = Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        None, 10, forgetDir = Some(dir), userForgetBase = Some(dir))
+      val calm = Maintenance.manifestReport(spark, forgetDir = Some(dir),
+        userForgetBase = Some(dir))
       assert(!calm.exists(w => mine.exists(w.contains)),
         calm.mkString("\n"))
       Forget.forgetVectors(spark, dir, Seq(42L).toDF("vec_id"))
@@ -149,13 +173,12 @@ class MaintenanceManifestSpec extends SparkTestBase {
       assert(inv.contains(("forget", t)), inv.mkString(", "))
       assert(inv.contains(("forget", ut)), inv.mkString(", "))
       // on disk, not configured: warns (both logs)
-      val warns = Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        None, 10)
+      val warns = Maintenance.manifestReport(spark)
       assert(warns.exists(_.contains(t)), warns.mkString("\n"))
       assert(warns.exists(_.contains(ut)), warns.mkString("\n"))
       // configured: covered
-      val covered = Maintenance.manifestReport(spark, None, 5, None, 10, 16,
-        None, 10, forgetDir = Some(dir), userForgetBase = Some(dir))
+      val covered = Maintenance.manifestReport(spark, forgetDir = Some(dir),
+        userForgetBase = Some(dir))
       assert(!covered.exists(w => mine.exists(w.contains)),
         covered.mkString("\n"))
     } finally purgeAll()
@@ -174,7 +197,6 @@ class MaintenanceManifestSpec extends SparkTestBase {
   test("serveHealth parameterized with a non-default shape probes THAT " +
     "deployment's tables and builds no default-shape ghosts " +
     "(VERDICT r14 next #3)") {
-    import graft.ext.Rung
     // distinguishable families that are cheap to build twice: the rung
     // tables (keyed by nQueries/dPrefix) and the gram index (keyed by n)
     Rung.purgeRungIndexes(spark, dir, 10, 16)

@@ -317,41 +317,4 @@ class PqSpec extends SparkTestBase {
       assert(all == pq)
     } finally Pq.purgeIvfPqIndex(spark, dir, nQueries = 10)
   }
-
-  test("file-growth compaction: appends past the threshold trigger the " +
-    "rebuild, a fresh index stays untouched, a missing index fails fast") {
-    purgeIdx()
-    try {
-      intercept[IllegalArgumentException] {
-        Pq.compactPqIndexIfNeeded(spark, dir, nQueries = 10)
-      }
-      Pq.ensurePqIndex(spark, dir, nQueries = 10)
-      assert(!Pq.compactPqIndexIfNeeded(spark, dir, nQueries = 10,
-        maxFiles = 64))
-      val key = Pq.pqKey(10, 8, 16, 2, 3, Similarity.defaultIvfSampleCap)
-      val kt = Pq.pqCodesTable(dir, key)
-      // three appends = three appended bucketed file sets: each one a
-      // code row, copied from an indexed vector, under a new cid
-      val row0 = spark.table(kt).orderBy(col("cid")).limit(1)
-        .localCheckpoint(true)
-      (1 to 3).foreach { i =>
-        row0.withColumn("cid", lit(910000L + i))
-          .write.mode("append")
-          .bucketBy(8, "cid").sortBy("cid")
-          .saveAsTable(kt)
-      }
-      spark.catalog.refreshTable(kt)
-      val withAdmits = spark.table(Pq.pqCodesTable(dir, key)).count()
-      // threshold 1 file: the grown table must fire the rebuild
-      assert(Pq.compactPqIndexIfNeeded(spark, dir, nQueries = 10,
-        maxFiles = 1))
-      // rebuilt from the embeddings table (the source of truth): the
-      // admitted-only vectors drop out — the documented derived-state
-      // contract — and the table is back to one committed file set
-      val after = spark.table(Pq.pqCodesTable(dir, key)).count()
-      assert(after == withAdmits - 3)
-      assert(!Pq.compactPqIndexIfNeeded(spark, dir, nQueries = 10,
-        maxFiles = 64))
-    } finally purgeIdx()
-  }
 }

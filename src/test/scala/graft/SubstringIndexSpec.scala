@@ -6,12 +6,11 @@ import graft.ext.TextDedup
 
 /** The standing gram-frequency index behind `dedup_substring_admit`:
   * indexed admission must equal the recompute over (corpus ∪ batch)
-  * restricted to the batch, appends must make earlier waves visible to
-  * later ones (with replay a no-op), and a session that lost its
-  * catalog entry must reattach the surviving data.
+  * restricted to the batch, a session that lost its catalog entry must
+  * reattach the surviving data (also in the earlier three-column
+  * layout), and a small batch's probe must read only its grams.
   */
 class SubstringIndexSpec extends SparkTestBase {
-  import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -35,109 +34,37 @@ class SubstringIndexSpec extends SparkTestBase {
     } finally purge()
   }
 
-  test("append path: wave-2 admission sees wave-1's cleaned text; a " +
-    "replayed append is a no-op") {
-    purge()
-    try {
-      val novel = "granite lighthouses archive the comet schedules " +
-        "while distant ferries rehearse their winter routes" // 13 tokens
-      val w1 = Seq((90001L, novel)).toDF("doc_id", "text")
-      val v1 = TextDedup.admitSubstringIndexed(spark, dir, w1, 5, 2)
-        .collect().head
-      assert(v1.getAs[Long]("n_removed") == 0L &&
-        v1.getAs[String]("clean_text") == novel,
-        s"novel wave-1 doc must admit verbatim: $v1")
-
-      TextDedup.appendToSubstringIndex(spark, dir,
-        Seq((90001L, novel)).toDF("doc_id", "clean_text"), "wave1")
-      val n = spark.table(TextDedup.gramsTable(dir, 5)).count()
-      TextDedup.appendToSubstringIndex(spark, dir,
-        Seq((90001L, novel)).toDF("doc_id", "clean_text"), "wave1")
-      assert(spark.table(TextDedup.gramsTable(dir, 5)).count() == n,
-        "replayed append added contribution rows")
-
-      // a wave-2 copy of the admitted text is now fully covered
-      val v2 = TextDedup.admitSubstringIndexed(spark, dir,
-          Seq((90002L, novel)).toDF("doc_id", "text"), 5, 2)
-        .collect().head
-      assert(v2.getAs[Long]("n_removed") == v2.getAs[Long]("n_tokens") &&
-        v2.getAs[String]("clean_text") == "",
-        s"wave-2 copy must vanish wholesale: $v2")
-    } finally purge()
-  }
-
-  test("compaction folds the contribution log without changing any gram " +
-    "total, and compacted-away tags stay replay-proof") {
-    import spark.implicits._
-    purge()
-    try {
-      val novel = "porcelain satellites monitor the orchard frequencies " +
-        "beyond the ninth meridian every sidereal week"
-      TextDedup.ensureSubstringIndex(spark, dir)
-      TextDedup.appendToSubstringIndex(spark, dir,
-        Seq((91001L, novel)).toDF("doc_id", "clean_text"), "waveA")
-      val totalsBefore = spark.table(TextDedup.gramsTable(dir, 5))
-        .groupBy("g").agg(sum("n_docs").as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val rowsBefore = spark.table(TextDedup.gramsTable(dir, 5)).count()
-
-      TextDedup.compactSubstringIndex(spark, dir)
-
-      val after = spark.table(TextDedup.gramsTable(dir, 5))
-      val totalsAfter = after.groupBy("g").agg(sum("n_docs").as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(totalsAfter == totalsBefore,
-        "compaction changed a gram total")
-      assert(after.count() < rowsBefore || rowsBefore == after.count(),
-        "row count sanity")
-      assert(after.filter(col("src") =!= "corpus").count() == 0,
-        "compaction left non-corpus contribution rows")
-
-      // the folded-away tag must still be replay-proof (marker survives)
-      TextDedup.appendToSubstringIndex(spark, dir,
-        Seq((91001L, novel)).toDF("doc_id", "clean_text"), "waveA")
-      val replayTotals = spark.table(TextDedup.gramsTable(dir, 5))
-        .groupBy("g").agg(sum("n_docs").as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(replayTotals == totalsBefore,
-        "replayed compacted tag double-counted")
-
-      // and admission still sees the folded contributions
-      val v = TextDedup.admitSubstringIndexed(spark, dir,
-          Seq((91002L, novel)).toDF("doc_id", "text"), 5, 2)
-        .collect().head
-      assert(v.getAs[String]("clean_text") == "",
-        s"post-compaction admission missed folded contributions: $v")
-    } finally purge()
-  }
-
   test("a session that lost its catalog entry reattaches the surviving " +
     "gram data instead of rebuilding") {
     purge()
     try {
       TextDedup.ensureSubstringIndex(spark, dir)
-      val before = spark.table(TextDedup.gramsTable(dir, 5)).count()
+      val t = TextDedup.gramsTable(dir, 5)
+      val before = spark.table(t).count()
       // external table: DROP keeps the files, like a died JVM would
-      spark.sql(s"DROP TABLE ${TextDedup.gramsTable(dir, 5)}")
+      spark.sql(s"DROP TABLE $t")
       TextDedup.ensureSubstringIndex(spark, dir)
-      assert(spark.table(TextDedup.gramsTable(dir, 5)).count() == before)
-    } finally purge()
-  }
+      assert(spark.table(t).count() == before)
 
-  test("compaction fails fast on a gram width with no built index " +
-    "instead of building a spurious corpus index") {
-    purge()
-    try {
-      TextDedup.ensureSubstringIndex(spark, dir, n = 5)
-      // wrong width: no n=7 index exists — must refuse, not build
-      val err = intercept[IllegalArgumentException](
-        TextDedup.compactSubstringIndex(spark, dir, n = 7))
-      assert(err.getMessage.contains("no standing gram index") &&
-        err.getMessage.contains("n=7"), err.getMessage)
-      assert(!spark.catalog.tableExists(TextDedup.gramsTable(dir, 7)),
-        "refusal must not leave an n=7 table behind")
-      // the right width still compacts
-      TextDedup.compactSubstringIndex(spark, dir, n = 5)
+      // a table an earlier build wrote carries a third column, `src`,
+      // equal to `corpus` on every row: it reattaches and admits alike
+      val batch = TextDedup.documents(spark, dir)
+        .filter(col("doc_id") % 10 >= 8)
+      def admitted = rows(
+        TextDedup.admitSubstringIndexed(spark, dir, batch, 5, 2)
+          .orderBy(col("doc_id")))
+      val current = admitted
+      val legacy = spark.table(t).withColumn("src", lit("corpus"))
+        .localCheckpoint(true)
+      purge()
+      legacy.write.bucketBy(8, "g").sortBy("g")
+        .option("path",
+          graft.ext.IndexCatalog.tableLocation(spark, t).toString)
+        .saveAsTable(t)
+      spark.sql(s"DROP TABLE $t")
+      TextDedup.ensureSubstringIndex(spark, dir)
+      assert(spark.table(t).columns.toSeq == Seq("g", "n_docs", "src"))
+      assert(current.nonEmpty && admitted == current)
     } finally purge()
   }
 
