@@ -2189,9 +2189,9 @@ object ExtEntry {
         |  UNION ALL SELECT 'vectors', v.n, 'none', TRUE FROM v)
         |ORDER BY log""".stripMargin),
 
-    // the rung-admission observability face (VERDICT r14 #5): the three
+    // the rung tables' consistency probe (VERDICT r14 #5): the three
     // standing tables' cross-table cid agreement — the drift an
-    // unreplayed crash window leaves; on a freshly ensured corpus every
+    // out-of-band write leaves; on a freshly ensured corpus every
     // count equals the candidate partition's row count, which the
     // oracle computes from the raw embeddings table cross-engine
     QuerySpec("rung_consistency", (s, dir) =>

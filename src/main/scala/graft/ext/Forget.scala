@@ -16,10 +16,9 @@ import graft.ext.Similarity.packSigns
   *
   *   - a STANDING tombstone table (`graft_forget_<dir>`, one `cid` per
   *     forgotten vector, cid-bucketed) that [[forgetVectors]] appends to
-  *     idempotently — the [[Rung.appendToRungIndexes]] replay contract:
-  *     in-batch dedup + anti-join against the table (probe pruned to the
-  *     batch's ids by a literal IN), so an at-least-once deletion feed
-  *     redelivering a request is a no-op;
+  *     idempotently: in-batch dedup + anti-join against the table
+  *     (probe pruned to the batch's ids by a literal IN), so an
+  *     at-least-once deletion feed redelivering a request is a no-op;
   *   - a READ-PATH filter ([[excludeForgotten]]): a broadcast LEFT-ANTI
   *     join of a scan against the tombstone set. The tombstone side is
   *     bounded by the apply threshold (deletions between compactions),
@@ -114,7 +113,7 @@ object Forget {
     * other columns ignored). Idempotent at vector granularity — the
     * admission-loop contract: the batch is deduped on vec_id, the
     * standing table is anti-joined with its probe pruned to the batch's
-    * ids (adaptive [[TextDedup.indexPruneMaxKeys]] policy), and only
+    * ids (adaptive [[IndexCatalog.indexPruneMaxKeys]] policy), and only
     * genuinely new tombstones append. An empty batch (or an
     * all-duplicates replay) writes nothing, so the table is only ever
     * created by the first real deletion. New tombstones record `reqMs`
@@ -218,11 +217,11 @@ object Forget {
   }
 
   /** The frame a tombstone append writes — split out so the spec pins
-    * the pruned idempotency probe, the [[Rung.appendFrame]] pattern.
+    * the pruned idempotency probe.
     */
   private[graft] def forgetAppendFrame(spark: SparkSession, table: String,
                                        batchRows: DataFrame,
-                                       keys: Seq[Long]): DataFrame =
+                                       keys: Seq[Any]): DataFrame =
     batchRows.join(
       IndexCatalog.pruneToKeys(spark.table(table), "cid", keys)
         .select(col("cid")),
@@ -408,15 +407,15 @@ object Forget {
     * when below threshold / nothing pending.
     *
     * This is the corpus-proportional pass deletions amortize into —
-    * same economics as file-growth compaction; between applies the
+    * same economics as silver compaction; between applies the
     * read-path filter serves correctness at broadcast cost. Shape
     * parameters mirror [[graft.streaming.Metrics.serveHealth]] (env
     * derivation via [[graft.tools.Maintenance.Shapes.fromEnv]]), so the
     * maintenance loop erases exactly the surfaces the deployment serves.
-    * Single-maintainer contract: run quiesced — no admission stream,
-    * search, or sibling maintenance pass may touch the corpus dir or
-    * its standing tables during the apply. Requires a directory-backed
-    * store (the [[Similarity.appendToEmbeddings]] contract). Replay
+    * Single-maintainer contract: run quiesced — no search or sibling
+    * maintenance pass may touch the corpus dir or its standing tables
+    * during the apply. Requires a directory-backed store
+    * ([[rewriteStore]] refuses a single-file snapshot). Replay
     * safety: a crash anywhere re-runs into the recovery preamble plus
     * idempotent rebuilds — the tombstone log is cleared LAST, so no
     * crash window can lose a pending deletion.

@@ -34,12 +34,11 @@ import graft.ops.Exact.round6
   * registered `ann_*_indexed` queries reuse the `ann_*_topk` oracles
   * verbatim, the ann_ivf_indexed/ann_pq_indexed convention.
   *
-  * Raw-store split: the rung tables carry derived payloads only, so
-  * admitted vectors surface in stage 1; the exact stage-2 rescore
-  * fetches from the caller's raw-vector store (here the embeddings
-  * table), which the ingest must also feed. The contract is CODE, not
-  * a caveat: [[graft.streaming.Pipeline.startEmbeddingIngest]] lands
-  * raw + all derived rows in one idempotent batch body.
+  * Build-once: `ensure*` builds each table from the embeddings table
+  * (the source of truth the exact stage-2 rescore also fetches from),
+  * and nothing appends to it afterwards. `purgeRungIndexes` + `ensure*`
+  * rebuilds all three, which the vector forget apply does after it
+  * rewrites the raw store.
   */
 object Rung {
 
@@ -61,9 +60,9 @@ object Rung {
   private[graft] def i8Table(dir: String, key: String): String =
     s"graft_rung_i8_${IndexCatalog.indexKey(dir)}_$key"
 
-  // ——————————— the ONE derivation each family's build AND admission run ———————————
-  // (the Pq.encodeScored lesson: one definition, so build-time and
-  // admitted rows can never diverge)
+  // ————————————————— the ONE derivation of each table's payload —————————————————
+  // (the Pq.encodeScored lesson: one definition, so the int8 table rows
+  // and the int8 query panel can never diverge)
 
   /** (cid, ch1, ch2) — the two 32-bit MSB-first sign packs of
     * [[Similarity.binaryRescoreTopK]], 16 B of payload per vector.
@@ -99,7 +98,7 @@ object Rung {
         col("scale").as("cscale"),
         norm(col("embedding")).as("cn"))
 
-  // ————————————————————— ensure / exists / purge / compact —————————————————————
+  // ————————————————————————— ensure / exists / purge —————————————————————————
 
   /** The shared ensure-if-absent lifecycle every standing index here
     * follows: reattach a prior session's committed data, else build
@@ -167,185 +166,21 @@ object Rung {
     IndexCatalog.purge(spark, i8Table(dir, i8Key(nQueries)))
   }
 
-  /** File-growth maintenance for the rung tables: the composed ingest
-    * appends one bucketed file set per micro-batch, so when ANY of the
-    * three tables holds more than `maxFiles` `part-` files, the rule
-    * fires and purge+ensure from the embeddings table IS the compaction
-    * (rung payloads are derived state — nothing to fold). Returns
-    * whether a rebuild ran. Single-maintainer contract: run quiesced.
-    */
-  def compactRungIndexesIfNeeded(spark: SparkSession, dir: String,
-                                 nQueries: Int, maxFiles: Int = 64,
-                                 dPrefix: Int = 16): Boolean = {
-    require(binaryIndexExists(spark, dir, nQueries) &&
-      matryoshkaIndexExists(spark, dir, nQueries, dPrefix) &&
-      int8IndexExists(spark, dir, nQueries),
-      s"compactRungIndexesIfNeeded: no standing rung tables for dir=$dir, " +
-        s"nQueries=$nQueries, dPrefix=$dPrefix (check SPARK_GRAFT_RUNG_* " +
-        "against the built tables' shape) — the maintenance rule compacts " +
-        "existing tables, it does not build them")
-    val tables = Seq(binTable(dir, binKey(nQueries)),
-      mrlTable(dir, mrlKey(nQueries, dPrefix)),
-      i8Table(dir, i8Key(nQueries)))
-    val fire = tables.exists { t =>
-      val loc = IndexCatalog.tableLocation(spark, t)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(loc).count(_.getPath.getName.startsWith("part-")) > maxFiles
-    }
-    if (fire) rebuildRungIndexes(spark, dir, nQueries, dPrefix)
-    fire
-  }
-
-  /** The HEAL half of [[rungConsistency]] — the maintenance pass that
-    * turns the probe into a closed loop: when the three tables disagree
-    * (an unreplayed crash window from a decommissioned stream, or an
-    * out-of-band write), the rung payloads are DERIVED state, so the
-    * purge+rebuild from the embeddings store IS the repair — exactly
-    * the file-growth compaction's mechanism with a different trigger.
-    * Returns whether a rebuild ran. Same guards and single-maintainer
-    * contract as [[compactRungIndexesIfNeeded]]: run quiesced.
-    */
-  def repairRungIndexesIfNeeded(spark: SparkSession, dir: String,
-                                nQueries: Int,
-                                dPrefix: Int = 16): Boolean = {
-    require(binaryIndexExists(spark, dir, nQueries) &&
-      matryoshkaIndexExists(spark, dir, nQueries, dPrefix) &&
-      int8IndexExists(spark, dir, nQueries),
-      s"repairRungIndexesIfNeeded: no standing rung tables for dir=$dir, " +
-        s"nQueries=$nQueries, dPrefix=$dPrefix (check SPARK_GRAFT_RUNG_* " +
-        "against the built tables' shape) — the repair rule heals " +
-        "existing tables, it does not build them")
-    val fire = !rungConsistency(spark, dir, nQueries, dPrefix)
-      .collect().head.getBoolean(5)
-    if (fire) {
-      rebuildRungIndexes(spark, dir, nQueries, dPrefix)
-      // re-probe (review r15): a rebuild can only heal drift that
-      // ORIGINATED in the derived tables. If the raw store itself is
-      // inconsistent (duplicate vec_ids from a bad backfill), the
-      // rebuild faithfully reproduces the inconsistency and a silent
-      // `true` here would have every maintenance tick pay a full
-      // purge+rebuild forever while logging successful healing.
-      val healed = rungConsistency(spark, dir, nQueries, dPrefix)
-        .collect().head.getBoolean(5)
-      require(healed,
-        s"repairRungIndexesIfNeeded: rebuild did NOT restore consistency " +
-          s"for dir=$dir — the inconsistency originates in the raw " +
-          "embeddings store (duplicate vec_ids?); repair the store, the " +
-          "derived rung tables only mirror it")
-    }
-    fire
-  }
-
-  private def rebuildRungIndexes(spark: SparkSession, dir: String,
-                                 nQueries: Int, dPrefix: Int): Unit = {
-    purgeRungIndexes(spark, dir, nQueries, dPrefix)
-    ensureBinaryIndex(spark, dir, nQueries)
-    ensureMatryoshkaIndex(spark, dir, nQueries, dPrefix)
-    ensureInt8Index(spark, dir, nQueries)
-  }
-
-  // ————————————————————————— streaming admission —————————————————————————
-
-  /** Admit newly arrived vectors into ONE standing rung table: derive
-    * the batch's payload rows through the SAME frame builder the
-    * offline build ran, anti-join out already-present cids (probe
-    * pruned to the batch's cids by a literal IN when small — the
-    * adaptive [[TextDedup.indexPruneMaxKeys]] policy), append.
-    * Idempotent at vector granularity, so a replayed batch is a no-op.
-    */
-  private def appendToTable(spark: SparkSession, table: String,
-                            batch: DataFrame, cids: Seq[Long]): Unit = {
-    val appendRows = appendFrame(spark, table, batch, Some(cids))
-    appendRows.write.mode("append")
-      .bucketBy(8, "cid").sortBy("cid")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
-  }
-
-  /** The frame an admission appends — split out so the spec asserts the
-    * executed plan (pruned idempotency probe). `cids` carries the batch's precollected key set when the
-    * caller already has it (the three per-table appends share ONE
-    * collect — review r15); without it the frame is checkpointed and
-    * its keys collected here.
-    */
-  private[graft] def appendFrame(spark: SparkSession, table: String,
-                                 batchRows: DataFrame,
-                                 cids: Option[Seq[Long]] = None)
-      : DataFrame = {
-    val (b, keys) = cids match {
-      // derived from an already-checkpointed deduped batch and read
-      // exactly once below — no second checkpoint needed
-      case Some(ks) => (batchRows, ks)
-      case None =>
-        val c = batchRows.localCheckpoint(true)
-        (c, IndexCatalog.collectKeys(c, "cid"))
-    }
-    b.join(IndexCatalog.pruneToKeys(spark.table(table), "cid", keys)
-      .select(col("cid")), Seq("cid"), "left_anti")
-  }
-
-  /** Admit a (vec_id, embedding) batch into ALL THREE standing rung
-    * tables — the derived half of the composed ingest's per-batch body
-    * ([[graft.streaming.Pipeline.startEmbeddingIngest]]). Fails fast on
-    * a shape mismatch rather than building a spurious index under a
-    * different key.
+  /** The rung tables' consistency probe (VERDICT r14 next #5).
     *
-    * Admission is a SET operation per batch: the batch is deduped on
-    * vec_id before the frame builders run (ADVICE r14), so an
-    * at-least-once source redelivering a vector twice WITHIN one
-    * micro-batch appends it once — the anti-join only guards against
-    * rows already IN the table, not against siblings in the same
-    * append. (PQ and IVF admission collapse in-batch duplicates
-    * structurally — the per-(cid,sub) argmin and the rk=1 assignment
-    * window each emit one row per cid — so only this family needs the
-    * explicit dedup.)
-    */
-  def appendToRungIndexes(spark: SparkSession, dir: String,
-                          newVecs: DataFrame, nQueries: Int,
-                          dPrefix: Int = 16): Unit = {
-    require(binaryIndexExists(spark, dir, nQueries) &&
-      matryoshkaIndexExists(spark, dir, nQueries, dPrefix) &&
-      int8IndexExists(spark, dir, nQueries),
-      s"appendToRungIndexes: no standing rung tables for dir=$dir, " +
-        s"nQueries=$nQueries, dPrefix=$dPrefix — build them with " +
-        "ensure*Index (with the SAME parameters) before admitting")
-    // catalog loss with surviving data: reattach via the ensure path
-    ensureBinaryIndex(spark, dir, nQueries)
-    ensureMatryoshkaIndex(spark, dir, nQueries, dPrefix)
-    ensureInt8Index(spark, dir, nQueries)
-    val rows = newVecs.select(col("vec_id").as("cid"), col("embedding"))
-      .dropDuplicates("cid")
-      .localCheckpoint(true)
-    // the three tables share the batch's key set — collect it ONCE
-    val cids = IndexCatalog.collectKeys(rows, "cid")
-    appendToTable(spark, binTable(dir, binKey(nQueries)), binFrame(rows),
-      cids)
-    appendToTable(spark, mrlTable(dir, mrlKey(nQueries, dPrefix)),
-      mrlFrame(rows, dPrefix), cids)
-    appendToTable(spark, i8Table(dir, i8Key(nQueries)), i8Frame(rows),
-      cids)
-  }
-
-  /** The admission stream's OBSERVABILITY face (VERDICT r14 next #5).
-    *
-    * Why no ORDER counters here: rung admission is a SET UNION — each batch anti-joins out
-    * already-present cids and appends pure per-row derivations, so the
-    * final table state is the union of all admitted cids REGARDLESS of
-    * arrival order, and no per-key decision (which dup survives, which
-    * doc charges quota) ever depends on it. Order observability would
-    * measure a quantity nothing downstream is sensitive to.
-    *
-    * What CAN diverge is the three tables drifting apart: a crash
-    * window whose stream is decommissioned before replaying (the
-    * binary append landed, the others never caught up), or an
-    * out-of-band write. This probe makes that visible: one row with
-    * each table's row count, the count of cids present EXACTLY ONCE in
-    * all three, the max per-table multiplicity, and `consistent` —
-    * true iff every cid appears exactly once in each table (so row
-    * counts == n_common and multiplicity == 1). Scale shape: three
-    * cid-only column-pruned scans unioned into ONE groupBy(cid) rollup
-    * (the tables are cid-bucketed, so the agg is co-partitioned) and a
-    * single-row reduce — no joins, no window.
+    * The three tables are built from the same embeddings rows, so a
+    * healthy set holds the same cids, once each. What CAN make them
+    * diverge is an out-of-band write to one table, a torn rebuild, or a
+    * raw store that itself holds a vec_id twice. This probe makes that
+    * visible: one row with each table's row count, the count of cids
+    * present EXACTLY ONCE in all three, the max per-table multiplicity,
+    * and `consistent` — true iff every cid appears exactly once in each
+    * table (so row counts == n_common and multiplicity == 1). The remedy
+    * is `purgeRungIndexes` + `ensure*`, which re-derives all three from
+    * the raw store. Scale shape: three cid-only column-pruned scans
+    * unioned into ONE groupBy(cid) rollup (the tables are cid-bucketed,
+    * so the agg is co-partitioned) and a single-row reduce — no joins,
+    * no window.
     */
   def rungConsistency(spark: SparkSession, dir: String, nQueries: Int = 10,
                       dPrefix: Int = 16): DataFrame = {
@@ -405,6 +240,19 @@ object Rung {
       .filter(col("ark") <= poolK)
       .select(col("qid"), col("cid"))
 
+  /** Prune `base` to a CHECKPOINTED pool's distinct cids via a literal
+    * IN on `keyCol` — the fetch-only-pool-rows move every rung stage
+    * past stage 1 rides: the pool is constant-bounded
+    * (rescoreFactor·k·nQueries rows), so its cids collect cheaply and
+    * push into the scan as row-group-prunable predicates; an oversized
+    * pool (past [[IndexCatalog.indexPruneMaxKeys]]) falls back to the flat
+    * scan+broadcast-join plan, which is then the right plan anyway.
+    */
+  private def poolPruned(base: DataFrame, keyCol: String,
+                         pool: DataFrame): DataFrame =
+    IndexCatalog.pruneToKeys(base, keyCol,
+      IndexCatalog.collectKeys(pool, "cid"))
+
   /** Exact float32-cosine rescore of a (qid, cid) pool against the raw
     * embeddings table, final top `k` — the stage-2 tail every rung
     * shares ([[Pq]]'s exactRescore shape), with one deployment upgrade:
@@ -413,24 +261,11 @@ object Rung {
     * the float scan as a literal IN — at 100 TB the fetch reads only
     * the row groups containing pool members instead of scanning the
     * whole 256 B/row table to feed a broadcast join (the adaptive
-    * [[TextDedup.indexPruneMaxKeys]] policy the standing-index probes
+    * [[IndexCatalog.indexPruneMaxKeys]] policy the standing-index probes
     * ride; an oversized pool falls back to the flat scan+join plan).
     * The pool frame is checkpointed once — read by the cid collect and
     * the join, never recomputed.
     */
-  /** Prune `base` to a CHECKPOINTED pool's distinct cids via a literal
-    * IN on `keyCol` — the fetch-only-pool-rows move every rung stage
-    * past stage 1 rides: the pool is constant-bounded
-    * (rescoreFactor·k·nQueries rows), so its cids collect cheaply and
-    * push into the scan as row-group-prunable predicates; an oversized
-    * pool (past [[TextDedup.indexPruneMaxKeys]]) falls back to the flat
-    * scan+broadcast-join plan, which is then the right plan anyway.
-    */
-  private def poolPruned(base: DataFrame, keyCol: String,
-                         pool: DataFrame): DataFrame =
-    IndexCatalog.pruneToKeys(base, keyCol,
-      IndexCatalog.collectKeys(pool, "cid"))
-
   private[graft] def exactRescore(spark: SparkSession, dir: String,
                                   pool: DataFrame, qf: DataFrame,
                                   nQueries: Int, k: Int): DataFrame = {

@@ -32,48 +32,6 @@ object Similarity {
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     Ingest.table(spark, dir, "embeddings")
 
-  /** Append newly embedded RAW vectors to the corpus embeddings store —
-    * the truth-table half of the composed ingest (VERDICT r14 next #4).
-    * The standing indexes (IVF cells, PQ codes, rung payloads) are
-    * DERIVED state; this store is what exact rescores fetch from and
-    * what every purge+rebuild retrains on, so an ingest that lands only
-    * derived rows silently (a) drops admitted vectors from exact
-    * stage-2 results and (b) loses them entirely at the next
-    * compaction. Idempotent at vector granularity — in-batch duplicates
-    * collapse and an anti-join on vec_id (probe pruned to the batch's
-    * ids by a literal IN when small, the adaptive
-    * [[TextDedup.indexPruneMaxKeys]] policy) drops already-present
-    * rows, so a replayed batch is a no-op. Single-writer contract like
-    * the index appends.
-    *
-    * Requires a DIRECTORY-backed store (a parquet dir of part files —
-    * every real deployment's shape): a single-file `embeddings.parquet`
-    * is a read-only corpus and fails loudly rather than being clobbered.
-    */
-  def appendToEmbeddings(spark: SparkSession, dir: String,
-                         newVecs: DataFrame): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(path) || fs.getFileStatus(path).isDirectory,
-      s"appendToEmbeddings: $path is a single parquet FILE — a read-only " +
-        "corpus snapshot; the ingest needs a directory-backed store " +
-        "(copy the snapshot into a directory first)")
-    val base = embeddings(spark, dir)
-    val batch = newVecs
-      .withColumn("vec_id", col("vec_id").cast("long"))
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-      .withColumn("label",
-        (if (newVecs.columns.contains("label")) col("label")
-         else lit(null)).cast("integer"))
-      .select(base.columns.map(col): _*)
-      .dropDuplicates("vec_id")
-      .localCheckpoint(true)
-    val ids = IndexCatalog.collectKeys(batch, "vec_id")
-    batch.join(IndexCatalog.pruneToKeys(base, "vec_id", ids)
-        .select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .write.mode("append").parquet(path.toString)
-  }
-
   /** Symmetric int8 quantization of the embedding column — the standard
     * 4× storage/scan reduction for shipping an embedding table at 100 TB
     * (int8 rows also dot-product ~4× faster per cache line in a SIMD

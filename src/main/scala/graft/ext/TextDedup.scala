@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.IndexCatalog.{collectKeys, indexPruneMaxKeys, pruneToKeys}
 import graft.ops.Ingest
 import graft.ops.Exact.round6
 
@@ -755,16 +756,16 @@ object TextDedup {
       admissionVerdicts(
         newDocs,
         newBands =>
-          prunedOn(spark.table(bandsTable(dir)), "band_hash",
-            touchedKeys(newBands, "band_hash"))
+          pruneToKeys(spark.table(bandsTable(dir)), "band_hash",
+            collectKeys(newBands, "band_hash"))
             .select(col("band"), col("band_hash"), col("doc_id").as("d_old")),
         cand =>
           // cand = checkpointed newBands ⋈ the PRUNED band scan — cheap
           // to run once extra for the collect, and leaving it lazy keeps
           // the band scan (with its pushed filter) visible in the
           // returned plan
-          prunedOn(spark.table(shinglesTable(dir)), "doc_id",
-            touchedKeys(cand, "d_old")),
+          pruneToKeys(spark.table(shinglesTable(dir)), "doc_id",
+            collectKeys(cand, "d_old")),
         threshold, checkpointBands = true)
   }
 
@@ -1391,50 +1392,6 @@ object TextDedup {
                                           n: Int): Boolean =
     IndexCatalog.hasCommittedData(spark, gramsTable(dir, n))
 
-  /** The standing per-gram distinct-doc counts. `onlyGrams` (the
-    * admission path) prunes the scan to the batch's touched grams via a
-    * literal IN predicate — the table is `sortBy g`, so row groups
-    * holding only untouched grams never read (VERDICT r9 #2). A table
-    * written by an earlier build carries a third column, `src`, equal
-    * to `corpus` on every row; the projection reads it the same way.
-    */
-  private def gramCounts(spark: SparkSession, dir: String, n: Int,
-                         onlyGrams: Option[Seq[String]] = None): DataFrame = {
-    val base = spark.table(gramsTable(dir, n))
-    onlyGrams.fold(base)(gs => base.filter(col("g").isin(gs: _*)))
-      .select(col("g"), col("n_docs"))
-  }
-
-  /** Above this many distinct touched keys, a standing-index IN-list
-    * prune is skipped (full-scan fallback). The break-even is LOW:
-    * every literal is walked by each optimizer pass and the pushed
-    * filter is re-evaluated against row-group stats, so a
-    * tens-of-thousands-key predicate costs more than the scan it
-    * saves — measured directly on `dedup_incremental`, whose 20%-of-
-    * corpus batch ran 0.7 → 2.5 s under an uncapped prune (~48k keys)
-    * and was still 0.7 → 2.0 s at ~5k keys; the flat bucketed scan IS
-    * the right plan for a corpus-fraction batch. Micro-batch admission
-    * (stream ticks, daily increments of tens-to-hundreds of docs) sits
-    * comfortably under this bound and keeps the pruned plan.
-    */
-  private[graft] val indexPruneMaxKeys = 1024
-
-  /** The batch's distinct touched keys in column `c`, or None when they
-    * exceed [[indexPruneMaxKeys]].
-    */
-  private def touchedKeys(df: DataFrame, c: String): Option[Seq[Any]] = {
-    val vals = df.select(col(c)).distinct().limit(indexPruneMaxKeys + 1)
-      .collect().map(_.get(0)).toSeq
-    if (vals.length <= indexPruneMaxKeys) Some(vals) else None
-  }
-
-  /** `base` pruned to `keys` in column `c` (pushed literal IN), or the
-    * full scan when the cap waived the prune.
-    */
-  private def prunedOn(base: DataFrame, c: String,
-                       keys: Option[Seq[Any]]): DataFrame =
-    keys.fold(base)(ks => base.filter(col(c).isin(ks: _*)))
-
   /** Admit a new-docs batch against the STANDING gram index: a position
     * is covered when its gram's total distinct-doc count — the standing
     * corpus count plus distinct docs within THIS batch — meets
@@ -1466,13 +1423,19 @@ object TextDedup {
     val g =
       if (small) gramRows(newDocs, n).localCheckpoint(true)
       else gramRows(newDocs, n)
-    val prune =
-      if (small) touchedKeys(g, "g").map(_.map(_.asInstanceOf[String]))
-      else None
+    // the standing per-gram distinct-doc counts, pruned on the small
+    // path to the batch's touched grams (the table is `sortBy g`, so row
+    // groups holding only untouched grams never read — VERDICT r9 #2).
+    // A table written by an earlier build carries a third column, `src`,
+    // equal to `corpus` on every row; the projection drops it.
+    val grams = spark.table(gramsTable(dir, n))
+    val counts =
+      (if (small) pruneToKeys(grams, "g", collectKeys(g, "g")) else grams)
+        .select(col("g"), col("n_docs"))
     val batchCounts = g.groupBy(col("g"))
       .agg(count_distinct(col("doc_id")).as("b_docs"))
     val totals = batchCounts
-      .join(gramCounts(spark, dir, n, prune), Seq("g"), "left")
+      .join(counts, Seq("g"), "left")
       .filter(col("b_docs") + coalesce(col("n_docs"), lit(0L)) >= minDocs)
       .select(col("g"))
     val cov = g.join(totals, Seq("g"))

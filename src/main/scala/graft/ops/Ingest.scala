@@ -35,7 +35,7 @@ object Ingest {
     *
     * Deliberately NOT applied to standing-index build inputs (bucketed
     * `saveAsTable` writes): fanning the build input multiplies
-    * per-bucket files, changing the file-growth compaction baselines.
+    * per-bucket files.
     */
   def fanOut(df: DataFrame, key: String): DataFrame = {
     val spark = df.sparkSession

@@ -123,19 +123,13 @@ object Metrics {
     require(fs.exists(loc),
       s"searchFreshness: no standing index data at $loc — check the " +
         "index shape parameters against what was built")
-    val it = fs.listFiles(loc, true)
-    var ts = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      // data files only — the standard Hadoop hidden-file predicate
-      // ("_" AND "." prefixes; ADVICE r13): _SUCCESS markers are
-      // rewritten by reattach checks, and on ChecksumFileSystem every
-      // such rewrite also rewrites ._SUCCESS.crc, so a "_"-only filter
-      // still inflated index_ts_ms through the crc sibling
-      val n = st.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith("."))
-        ts = math.max(ts, st.getModificationTime)
-    }
+    // data files only — the standard Hadoop hidden-file predicate
+    // ("_" AND "." prefixes; ADVICE r13): _SUCCESS markers are
+    // rewritten by reattach checks, and on ChecksumFileSystem every
+    // such rewrite also rewrites ._SUCCESS.crc, so a "_"-only filter
+    // still inflated index_ts_ms through the crc sibling
+    val ts = Pipeline.dataFiles(fs, loc).map(_.getModificationTime)
+      .foldLeft(0L)(math.max)
     require(ts > 0, s"searchFreshness: no data files under $loc")
     Seq((table, ts, asOfMs - ts))
       .toDF("index_table", "index_ts_ms", "lag_ms")

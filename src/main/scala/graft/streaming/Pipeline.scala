@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.Schemas
 import graft.ops.{Aggregate, Dedup}
@@ -45,7 +45,6 @@ object Pipeline {
   final case class Config(
       baseDir: String,
       watermarkDelay: String = "30 seconds",
-      triggerMs: Long = 0L,
       goldBuckets: Int = 64,
       compactEvery: Long = 0L) {
     def silverPath: String = s"$baseDir/silver"
@@ -167,7 +166,6 @@ object Pipeline {
       .queryName("graft_silver")
       .option("checkpointLocation", cfg.checkpoint("silver"))
       .outputMode("update")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // batchUnique: dropDuplicatesWithinWatermark upstream guarantees
         // one row per id within the batch
@@ -588,6 +586,27 @@ object Pipeline {
         .map(_ -> s.getPath))
       .sortBy(_._1)
 
+  /** The data files under `dir` at any depth: every file whose name
+    * starts with neither `.` nor `_` (Hadoop's hidden-file convention,
+    * which skips `_SUCCESS` markers and `.crc` siblings); empty when
+    * `dir` does not exist. Walks with `listStatus`, as [[fullyCommitted]]
+    * does: the `LocatedFileStatus` entries of a recursive `listFiles`
+    * load each file's permissions, which the local filesystem does by
+    * forking `ls -ld` when the native libhadoop is absent.
+    */
+  private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                               dir: Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    def walk(d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.flatMap { s =>
+        val name = s.getPath.getName
+        if (s.isDirectory) walk(s.getPath)
+        else if (name.startsWith(".") || name.startsWith("_")) Nil
+        else Seq(s)
+      }
+    if (fs.exists(dir)) walk(dir) else Nil
+  }
+
   /** Every data file under the version directory is in the committed set
     * (hidden/metadata files excluded). Walks with `listStatus`: the
     * `LocatedFileStatus` entries of `listFiles` load each file's
@@ -669,7 +688,6 @@ object Pipeline {
       .queryName("graft_gold")
       .option("checkpointLocation", cfg.checkpoint("gold"))
       .outputMode("update")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         format.upsertFold(spark, batch, batchId, cfg)
       }
@@ -900,7 +918,6 @@ object Pipeline {
       .queryName("graft_serve")
       .option("checkpointLocation", cfg.checkpoint("serve"))
       .outputMode("append")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the batch id names the partition directory (no literal column:
         // the plan compiles once); overwrite replaces a replay's own dir
@@ -1080,84 +1097,6 @@ object Pipeline {
                  graft.storage.TableFormat.parquet): Seq[StreamingQuery] =
     Seq(startSilver(spark, raw, cfg, format), startGold(spark, cfg, format),
       startServe(spark, cfg, format))
-
-  /** The similarity-serving stages: the composed raw+rung ingest
-    * ([[startEmbeddingIngest]]: raw embeddings store and all three
-    * standing rung tables, one idempotent batch body) and the query-side
-    * rung search stream ([[startScanSearchStream]]) serving each query
-    * batch against the SAME standing tables the ingest appends into, so
-    * a query arriving after a vector's ingest batch sees it, exact
-    * rescore included. StreamBench's search soak and PipelineSpec both
-    * run it next to [[startAll]]'s three event stages.
-    */
-  def searchStages(spark: SparkSession, corpusDir: String, vecs: DataFrame,
-                   queries: DataFrame, vecCheckpoint: String,
-                   searchCheckpoint: String, nQueries: Int, k: Int)
-                  (sink: DataFrame => Unit): Seq[StreamingQuery] = Seq(
-    startEmbeddingIngest(spark, corpusDir, vecs, vecCheckpoint, nQueries),
-    startScanSearchStream(queries, searchCheckpoint)(
-      b => graft.ext.Rung.binaryIndexedTopK(spark, corpusDir, b,
-        nQueries, k, rescoreFactor = 4))(sink))
-
-  /** The composed vector-ingest loop: ONE foreachBatch body that lands a
-    * micro-batch's RAW (vec_id, embedding[, label]) rows in the corpus
-    * embeddings store ([[graft.ext.Similarity.appendToEmbeddings]]) AND
-    * its derived rows in the three standing rung tables
-    * ([[graft.ext.Rung.appendToRungIndexes]]), all idempotent at vector
-    * granularity — so exact stage-2 rescores see stream-admitted vectors
-    * with no side agreement, and a later purge+rebuild/compaction (which
-    * retrains from the embeddings table) RETAINS them.
-    *
-    * Raw rows land FIRST: a crash anywhere in the window replays into
-    * anti-join no-ops for whatever already committed, and no committed
-    * derived row ever lacks its raw backing. Requires a directory-backed
-    * embeddings store (the appendToEmbeddings contract; a single-file
-    * corpus snapshot fails loudly).
-    */
-  private[graft] def startEmbeddingIngest(spark: SparkSession, dir: String,
-                                          vecs: DataFrame,
-                                          checkpoint: String,
-                                          nQueries: Int): StreamingQuery = {
-    import graft.ext.{Rung, Similarity}
-    Rung.ensureBinaryIndex(spark, dir, nQueries)
-    Rung.ensureMatryoshkaIndex(spark, dir, nQueries)
-    Rung.ensureInt8Index(spark, dir, nQueries)
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // dedup ONCE and checkpoint, so every store sees the SAME
-        // survivor when a batch carries one vec_id twice with different
-        // payloads (per-store dropDuplicates could keep different rows —
-        // a permanent raw-vs-derived disagreement the consistency probe
-        // cannot see); each append's own dedup is a no-op on the
-        // already-unique frame
-        val b = batch.dropDuplicates("vec_id").localCheckpoint(true)
-        Similarity.appendToEmbeddings(spark, dir, b)
-        Rung.appendToRungIndexes(spark, dir, b, nQueries)
-        ()
-      }
-      .start()
-  }
-
-  /** Query-side search stream: each micro-batch of caller query vectors
-    * (qid, qe) runs through `search` (e.g. a closure over
-    * `Rung.binaryIndexedTopK`'s external form) and the result frame goes
-    * to `sink`. The search is PURE (no index mutation), so replay after a
-    * crash merely re-emits a batch's results — the sink owns dedup, which
-    * a qid-keyed upsert gets for free.
-    */
-  private[graft] def startScanSearchStream(queries: DataFrame,
-                                           checkpoint: String)
-                                          (search: DataFrame => DataFrame)
-                                          (sink: DataFrame => Unit)
-      : StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) sink(search(batch))
-        ()
-      }
-      .start()
 
   /** Tiny markers for gold-fold replay protection: one global batch id
     * (fast path: whole batch already applied) plus one per gold bucket

@@ -172,28 +172,17 @@ object UserForget {
     * write). Same no-marker replay contract as every registration:
     * idempotent at user granularity, so at-least-once redelivery is a
     * no-op.
-    *
-    * `triggerMs` > 0 paces the feed (deletion requests are rare — an
-    * unthrottled feed spins empty micro-batches whose registration
-    * probes burn cores the event stages need; the 1M soak measured the
-    * full chain 2× slower under an unpaced feed); 0 keeps the default
-    * trigger for processAllAvailable-driven tests.
     */
   def startForgetUsersStream(spark: SparkSession, baseDir: String,
-                             ids: DataFrame, checkpoint: String,
-                             triggerMs: Long = 0L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = ids.writeStream
+                             ids: DataFrame, checkpoint: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ids.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         forgetUsers(spark, baseDir, batch)
         ()
       }
-    (if (triggerMs > 0)
-      w.trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-     else w).start()
-  }
+      .start()
 
   // ———————————————————————————— the takedown-SLA probe ————————————————————————————
 
@@ -222,7 +211,7 @@ object UserForget {
       Pipeline.committedSourcePaths(fs, cfg.checkpoint("gold"))
     val silverDir = new Path(cfg.silverPath)
     val goldOwes = goldCommitted.exists { c =>
-      listDataFiles(fs, silverDir)
+      Pipeline.dataFiles(fs, silverDir).map(_.getPath)
         .filter(_.getName.startsWith("part-"))
         .exists(p => !c.contains(p.toUri.getPath))
     }
@@ -231,8 +220,8 @@ object UserForget {
       Pipeline.committedSourcePaths(fs, cfg.checkpoint("serve"))
     val changesDir = new Path(cfg.goldChangesPath)
     val serveOwes = serveCommitted.exists { c =>
-      listDataFiles(fs, changesDir)
-        .exists(p => !c.contains(p.toUri.getPath))
+      Pipeline.dataFiles(fs, changesDir)
+        .exists(f => !c.contains(f.getPath.toUri.getPath))
     }
     if (serveOwes) Some("serve_owes_change_files") else None
   }
@@ -455,7 +444,7 @@ object UserForget {
       }
     }
     // ——— gold change feed ———
-    if (fs.exists(changesDir) && listDataFiles(fs, changesDir).nonEmpty) {
+    if (Pipeline.dataFiles(fs, changesDir).nonEmpty) {
       if (serveCommitted.isDefined) scrubChangesInPlace(spark, fs, cfg, tomb)
       else dirSwap(fs, changesDir) { tmp =>
         scrub(spark.read.option("basePath", cfg.goldChangesPath)
@@ -465,7 +454,7 @@ object UserForget {
     }
     // ——— serve store + compacted snapshots ———
     val serveDir = new Path(cfg.servePath)
-    if (fs.exists(serveDir) && listDataFiles(fs, serveDir).nonEmpty)
+    if (Pipeline.dataFiles(fs, serveDir).nonEmpty)
       dirSwap(fs, serveDir) { tmp =>
         scrub(spark.read.option("basePath", cfg.servePath)
           .parquet(cfg.servePath), "group_id")
@@ -584,18 +573,6 @@ object UserForget {
     if (fs.exists(manifest)) fs.delete(manifest, false)
     fs.rename(tmpManifest, manifest)
     replayScrubManifest(fs, cfg)
-  }
-
-  private def listDataFiles(fs: FileSystem, dir: Path): Seq[Path] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val it = fs.listFiles(dir, true)
-    val buf = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (!f.getName.startsWith(".") && !f.getName.startsWith("_"))
-        buf += f
-    }
-    buf.toSeq
   }
 
   private def snapshotDirs(fs: FileSystem, cfg: Config): Seq[Path] = {

@@ -29,40 +29,18 @@ import graft.streaming.Pipeline
   *     the newest version is always retained);
   *   - the frozen winsorize bounds (`SPARK_GRAFT_WINSOR_DIR`):
   *     re-frozen when the clip-drift rule fires;
-  *   - the compression-rung tables (`SPARK_GRAFT_RUNG_DIR`), which the
-  *     composed embedding ingest appends to: rebuilt past a file-count
-  *     threshold, or when the three tables disagree;
   *   - the vector and document tombstone logs (`SPARK_GRAFT_FORGET_DIR`):
   *     applied, which rebuilds every derived index present;
   *   - the user tombstone log (`SPARK_GRAFT_USER_FORGET=1`): applied.
   *
-  * The dedup band/shingle, substring gram, IVF and PQ indexes are
-  * build-once: nothing appends to them, so no pass maintains them.
-  * `purge*` + `ensure*` rebuilds one, and the forget applies do so.
+  * Every standing index (dedup band/shingle, substring gram, IVF, PQ,
+  * IVF-PQ and the three compression-rung tables) is build-once:
+  * nothing appends to one, so no pass maintains it. `purge*` +
+  * `ensure*` rebuilds one, and the forget applies do so with the
+  * shapes below.
   */
 object Maintenance {
 
-  /** Whole-set manifest validation (VERDICT r10 #6): the per-pass
-    * guards fail fast on a configured-but-absent index, but only when
-    * their pass RUNS — after earlier passes already mutated state — and
-    * nothing at all notices the inverse error, a standing index ON DISK
-    * that the configured env manifest does not cover (it silently
-    * grows/drifts forever while this loop reports success). Check both
-    * directions up front, before any pass runs:
-    *
-    *   - every configured index must exist on disk with the configured
-    *     shape (throws — a mis-set dir/shape must stop the loop before
-    *     the first compaction, same contract as the per-pass guards);
-    *   - every maintainable family found under the warehouse (winsor
-    *     bounds, rung tables, tombstone logs — the families this loop
-    *     has a pass for) must be covered by the configured set;
-    *     uncovered ones come back as warning lines the loop prints every
-    *     pass.
-    *
-    * The build-once families (dedup band/shingle, substring gram, IVF,
-    * IVF-PQ and PQ) have no pass here and are listed for visibility
-    * only, never warned.
-    */
   /** The IVF and PQ training shapes the loop reads from `SPARK_GRAFT_*`
     * env vars — ONE record threaded through the forget pass, which
     * rebuilds those indexes with it, so a non-default deployment's
@@ -98,14 +76,32 @@ object Maintenance {
         graft.ext.Similarity.defaultIvfSampleCap.toString).toInt)
   }
 
+  /** Whole-set manifest validation (VERDICT r10 #6): the per-pass
+    * guards fail fast on a configured-but-absent index, but only when
+    * their pass RUNS — after earlier passes already mutated state — and
+    * nothing at all notices the inverse error, a standing index ON DISK
+    * that the configured env manifest does not cover (it silently
+    * grows/drifts forever while this loop reports success). Check both
+    * directions up front, before any pass runs:
+    *
+    *   - every configured index must exist on disk with the configured
+    *     shape (throws — a mis-set dir/shape must stop the loop before
+    *     the first compaction, same contract as the per-pass guards);
+    *   - every maintainable family found under the warehouse (winsor
+    *     bounds, tombstone logs — the families this loop has a pass
+    *     for) must be covered by the configured set; uncovered ones come
+    *     back as warning lines the loop prints every pass.
+    *
+    * The build-once families (dedup band/shingle, substring gram, IVF,
+    * IVF-PQ, PQ and rung) have no pass here and are listed for
+    * visibility only, never warned.
+    */
   private[graft] def manifestReport(spark: SparkSession,
       winsorDir: Option[String] = None,
       winsorGroup: String = "event_type",
-      rungDir: Option[String] = None, rungNq: Int = 10,
-      rungPrefix: Int = 16,
       forgetDir: Option[String] = None,
       userForgetBase: Option[String] = None): Seq[String] = {
-    import graft.ext.{IndexCatalog, Rung}
+    import graft.ext.IndexCatalog
     import graft.ops.Analytics
     winsorDir.foreach { d =>
       require(Analytics.boundsIndexExists(spark, d, winsorGroup),
@@ -113,31 +109,17 @@ object Maintenance {
           s"standing bounds table for group=$winsorGroup exists — check " +
           "SPARK_GRAFT_WINSOR_GROUP against the built table's shape")
     }
-    rungDir.foreach { d =>
-      require(Rung.binaryIndexExists(spark, d, rungNq) &&
-        Rung.matryoshkaIndexExists(spark, d, rungNq, rungPrefix) &&
-        Rung.int8IndexExists(spark, d, rungNq),
-        s"maintenance manifest: SPARK_GRAFT_RUNG_DIR=$d but no standing " +
-          s"rung tables for nQueries=$rungNq, dPrefix=$rungPrefix exist " +
-          "— check SPARK_GRAFT_RUNG_NQ/_PREFIX against the built " +
-          "tables' shape")
-    }
     val covered: Set[String] =
       winsorDir.map(d => Analytics.boundsTable(d, winsorGroup, 0.05, 0.95))
         .toSet ++
-      rungDir.toSeq.flatMap { d =>
-        Seq(Rung.binTable(d, Rung.binKey(rungNq)),
-          Rung.mrlTable(d, Rung.mrlKey(rungNq, rungPrefix)),
-          Rung.i8Table(d, Rung.i8Key(rungNq)))
-      } ++
       // no existence require: the tombstone logs are CREATED by the
       // first deletion — configured-but-absent is the healthy steady
-      // state, unlike the built tables above
+      // state, unlike the built bounds table above
       forgetDir.toSeq.flatMap(d => Seq(graft.ext.Forget.forgetTable(d),
         graft.ext.Forget.forgetDocsTable(d))) ++
       userForgetBase.map(b =>
         graft.streaming.UserForget.forgetUsersTable(b))
-    val maintainable = Set("winsor", "rung", "forget")
+    val maintainable = Set("winsor", "forget")
     IndexCatalog.listIndexDirs(spark)
       .filter { case (fam, name) => maintainable(fam) && !covered(name) }
       .map { case (fam, name) =>
@@ -164,11 +146,15 @@ object Maintenance {
     // The shapes the forget pass rebuilds the build-once indexes with:
     // the gram width (SPARK_GRAFT_GRAM_INDEX_N), the IVF and PQ query
     // counts and centroid count (SPARK_GRAFT_IVF_NQ/_NC,
-    // SPARK_GRAFT_PQ_NQ) and the training shapes ([[Shapes.fromEnv]])
+    // SPARK_GRAFT_PQ_NQ), the rung tables' query count and prefix
+    // width (SPARK_GRAFT_RUNG_NQ/_PREFIX) and the training shapes
+    // ([[Shapes.fromEnv]])
     val gramN = sys.env.getOrElse("SPARK_GRAFT_GRAM_INDEX_N", "5").toInt
     val ivfNq = sys.env.getOrElse("SPARK_GRAFT_IVF_NQ", "10").toInt
     val ivfNc = sys.env.getOrElse("SPARK_GRAFT_IVF_NC", "16").toInt
     val pqNq = sys.env.getOrElse("SPARK_GRAFT_PQ_NQ", "10").toInt
+    val rungNq = sys.env.getOrElse("SPARK_GRAFT_RUNG_NQ", "10").toInt
+    val rungPrefix = sys.env.getOrElse("SPARK_GRAFT_RUNG_PREFIX", "16").toInt
     val shapes = Shapes.fromEnv()
     // Optional: frozen winsorize-bounds drift check + conditional
     // re-freeze (round 12) — pass the events dir as
@@ -179,17 +165,6 @@ object Maintenance {
     val winsorDir = sys.env.get("SPARK_GRAFT_WINSOR_DIR")
     val winsorGroup = sys.env.getOrElse("SPARK_GRAFT_WINSOR_GROUP",
       "event_type")
-    // Optional: compression-rung table file-growth compaction (round
-    // 14) — pass the indexed corpus dir as SPARK_GRAFT_RUNG_DIR
-    // (+ _NQ/_PREFIX/_MAX_FILES). The composed embedding ingest
-    // (Pipeline.searchStages) appends one file set per micro-batch per
-    // table; past the threshold the purge+rebuild IS the compaction
-    // (rung payloads are derived state, like PQ codes).
-    val rungDir = sys.env.get("SPARK_GRAFT_RUNG_DIR")
-    val rungNq = sys.env.getOrElse("SPARK_GRAFT_RUNG_NQ", "10").toInt
-    val rungPrefix = sys.env.getOrElse("SPARK_GRAFT_RUNG_PREFIX", "16").toInt
-    val rungMaxFiles =
-      sys.env.getOrElse("SPARK_GRAFT_RUNG_MAX_FILES", "64").toInt
     // Optional: tombstone apply — the physical right-to-be-forgotten
     // pass (round 15). Pass the corpus dir as SPARK_GRAFT_FORGET_DIR
     // (+ _MIN for the amortization threshold): when the standing
@@ -197,8 +172,8 @@ object Maintenance {
     // rewritten without them, every vector-derived index present for
     // the configured shape is purged+rebuilt, and the log is cleared.
     // Between applies the read-path filter serves deletion correctness
-    // at broadcast cost. Quiesce searches and admission streams around
-    // the tick — the pass swaps the raw store they scan.
+    // at broadcast cost. Quiesce searches around the tick — the pass
+    // swaps the raw store they scan.
     val forgetDir = sys.env.get("SPARK_GRAFT_FORGET_DIR")
     val forgetMin = sys.env.getOrElse("SPARK_GRAFT_FORGET_MIN", "1").toLong
     // The USER-deletion pass runs against THIS pipeline's baseDir (it
@@ -227,8 +202,7 @@ object Maintenance {
     // a tombstone log growing on disk with no pass to apply it is
     // exactly the unmaintained-surface drift the warning exists for
     def uncovered() = manifestReport(spark, winsorDir, winsorGroup,
-      rungDir, rungNq, rungPrefix, forgetDir,
-      if (userForgetEnabled) Some(baseDir) else None)
+      forgetDir, if (userForgetEnabled) Some(baseDir) else None)
     uncovered()
     do {
       uncovered().foreach(println)
@@ -238,16 +212,6 @@ object Maintenance {
       format.vacuumChangeFeed(spark, cfg)
       val refroze = winsorDir.exists(d => graft.ops.Analytics
         .refreezeBoundsIndexIfNeeded(spark, d, winsorGroup))
-      val rungCompacted = rungDir.exists(d => graft.ext.Rung
-        .compactRungIndexesIfNeeded(spark, d, rungNq, rungMaxFiles,
-          rungPrefix))
-      // consistency heal (round 15): an unreplayed admission crash
-      // window leaves the three rung tables disagreeing — the probe
-      // detects it, and since rung payloads are derived state the
-      // purge+rebuild is the repair. Skipped when this tick's
-      // compaction already rebuilt (trivially consistent).
-      val rungRepaired = !rungCompacted && rungDir.exists(d => graft.ext
-        .Rung.repairRungIndexesIfNeeded(spark, d, rungNq, rungPrefix))
       val forgetErased = forgetDir.map(d => graft.ext.Forget
         .applyForgetIfNeeded(spark, d, ivfNq, ivfNc, pqNq, rungNq,
           rungPrefix, shapes, forgetMin))
@@ -261,9 +225,6 @@ object Maintenance {
         f"vacuumed ${cfg.goldChangesPath}" +
         winsorDir.fold("")(d =>
           s" + winsor bounds drift for $d (refroze=$refroze)") +
-        rungDir.fold("")(d =>
-          s" + rung file growth for $d (compacted=$rungCompacted, " +
-            s"repaired=$rungRepaired)") +
         forgetDir.fold("")(d =>
           s" + tombstone apply for $d (vectors=${forgetErased.get}, " +
             s"docs=${forgetDocsErased.get})") +

@@ -23,16 +23,6 @@ import graft.streaming.Pipeline
   * default measures stage 1 only, which is what the published baseline
   * covers.
   *
-  * `StreamBench <events> search` (VERDICT r14 next #6) co-deploys the
-  * VECTOR lifecycle with the same three event stages `full` runs
-  * ([[Pipeline.startAll]] ++ [[Pipeline.searchStages]]): per event
-  * batch, 100 new vectors ride the composed raw+rung ingest and 10
-  * query vectors ride the rung search stream against the same standing
-  * tables — the admit-and-search soak, with events/sec directly
-  * comparable to full-mode numbers so the delta prices the vector
-  * side. Vec/query counts and emitted result rows ride along in the
-  * JSON.
-  *
   * `StreamBench <events> forget` co-deploys the TAKEDOWN feed with the
   * same three event stages: one existing user tombstones every 5th
   * event batch through [[UserForget.startForgetUsersStream]] (the
@@ -53,9 +43,8 @@ import graft.streaming.Pipeline
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val totalEvents = args.headOption.map(_.toInt).getOrElse(200000)
-    val search = args.contains("search")
     val forget = args.contains("forget")
-    val full = args.contains("full") || search || forget
+    val full = args.contains("full") || forget
     val batchSize = 10000
     val spark = graft.GraftSession.local()
     // Micro-batches of ~10k rows want FEW shuffle partitions: every state
@@ -80,40 +69,13 @@ object StreamBench {
     val progress = new graft.streaming.Metrics.ProgressLog()
     spark.streams.addListener(progress)
     val input = MemoryStream[Event](99, spark, None)
-    // the vector side of `search` mode: a directory-backed copy of the
-    // corpus (the ingest's raw store must accept appends), the two
-    // MemoryStreams, and a counting sink for emitted search results
-    val corpusSrc = sys.env.getOrElse("SPARK_GRAFT_SEARCH_CORPUS",
-      "/root/testdata/sf0.001")
-    val vecInput = MemoryStream[(Long, Seq[Float])](98, spark, None)
-    val qInput = MemoryStream[(Long, Seq[Double])](97, spark, None)
-    val searchRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val corpusDir =
-      if (!search) "" else {
-        val cd = java.nio.file.Files
-          .createTempDirectory("graft_sbench_corpus").toString
-        spark.read.parquet(s"$corpusSrc/embeddings.parquet")
-          .write.parquet(s"$cd/embeddings.parquet")
-        cd
-      }
-    // search mode pairs the SAME three event stages `full` runs with the
-    // two vector stages, so its events/sec is comparable to full-mode
-    // numbers and the delta is attributable to the vector lifecycle
-    // (PipelineSpec pins the same five-stage shape)
     val forgetInput = MemoryStream[String](96, spark, None)
     val queries =
-      if (search)
-        Pipeline.startAll(spark, input.toDF(), cfg) ++
-          Pipeline.searchStages(spark, corpusDir,
-            vecInput.toDF().toDF("vec_id", "embedding"),
-            qInput.toDF().toDF("qid", "qe"),
-            s"${cfg.baseDir}/vec_ckpt", s"${cfg.baseDir}/search_ckpt",
-            nQueries = 10, k = 5)(res => searchRows.addAndGet(res.count()))
-      else if (forget)
+      if (forget)
         Pipeline.startAll(spark, input.toDF(), cfg) :+
           graft.streaming.UserForget.startForgetUsersStream(spark,
             cfg.baseDir, forgetInput.toDF().toDF("group_id"),
-            s"${cfg.baseDir}/forget_ckpt", triggerMs = cfg.triggerMs)
+            s"${cfg.baseDir}/forget_ckpt")
       else if (full) Pipeline.startAll(spark, input.toDF(), cfg)
       else Seq(Pipeline.startSilver(spark, input.toDF(), cfg))
     // drain the chain in dependency order: silver files feed gold, gold
@@ -185,8 +147,6 @@ object StreamBench {
     drainAll()
 
     val perBatch = sys.env.get("SPARK_GRAFT_STREAMBENCH_DEBUG").isDefined
-    var vecsSent = 0L
-    var queriesSent = 0L
     val compiles0 = graft.streaming.Metrics.compileCounters()
     val start = System.nanoTime()
     while (sent < effectiveTotal) {
@@ -201,18 +161,6 @@ object StreamBench {
       val dupes = (0 until n / 20).map(k => fresh(rnd.nextInt(n)))
       val b0 = System.nanoTime()
       input.addData(rnd.shuffle(fresh ++ dupes))
-      if (search) {
-        // the vector side rides every event batch: 100 new vectors
-        // through the composed ingest, 10 queries through the search
-        // stream — both concurrent with the event stages
-        vecInput.addData((0 until 100).map(j =>
-          (10000000L + vecsSent + j,
-            Seq.fill(64)(rnd.nextFloat() * 2 - 1))))
-        vecsSent += 100
-        qInput.addData((0 until 10).map(j =>
-          (queriesSent + j, Seq.fill(64)(rnd.nextDouble() * 2 - 1))))
-        queriesSent += 10
-      }
       if (forget && batchNo % 5 == 0) {
         // one takedown request every 5th event batch — a user already
         // in the corpus, so the erase has real rows to remove
@@ -261,15 +209,7 @@ object StreamBench {
     val stageRates = Seq("graft_silver", "graft_gold", "graft_serve")
       .map(q => q -> progress.sustainedRate(q)).filter(_._2 > 0)
       .map { case (q, r) => f""""$q":${r}%.1f""" }.mkString("{", ",", "}")
-    if (search) {
-      val serveRows = Pipeline.serveSnapshot(spark, cfg).count()
-      val admitted = spark.table(graft.ext.Rung.binTable(corpusDir,
-        graft.ext.Rung.binKey(10)))
-        .filter(org.apache.spark.sql.functions.col("cid") >= 10000000L)
-        .count()
-      println(s"""{"metric":"pipeline_search_throughput","value":${effectiveTotal / secs},"unit":"events/sec","events":$effectiveTotal,"batches":$batchNo,"secs":$secs,"silver_rows":$silverRows,"serve_rows":$serveRows,"vecs_ingested":$vecsSent,"vecs_in_rung":$admitted,"search_queries":$queriesSent,"search_rows":${searchRows.get()},$compileCost,"stage_rates":$stageRates,"baseline_events_per_sec":4000}""")
-    } else if (forget) {
-      import org.apache.spark.sql.functions.col
+    if (forget) {
       val uf = graft.streaming.UserForget
       val tombstoned = uf.forgottenUserIds(spark, cfg.baseDir).count()
       // the chain is drained and stopped — the quiesced single-pass

@@ -691,50 +691,6 @@ class ExtSpec extends SparkTestBase {
     assert(rows("binary_int8")._1 == (casTopK & truth).size.toLong)
   }
 
-  test("streamed queries through the scan-based rungs emit exactly the " +
-    "batch external-form results (binary and matryoshka)") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
-    val panel = Similarity.externalQueryPanel(spark, dir, nPanel = 4)
-    val panelRows = panel.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    def drive(tag: String, search: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame): Seq[Seq[Any]] = {
-      val ckpt = Files.createTempDirectory(s"graft_scan_q_$tag").toString
-      val emitted = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-      val input = MemoryStream[(Long, Seq[Double])](
-        if (tag == "bin") 96 else 97, spark, None)
-      val q = graft.streaming.Pipeline.startScanSearchStream(
-        input.toDF().toDF("qid", "qe"), ckpt)(search) { res =>
-        emitted.synchronized { emitted ++= res.collect().map(_.toSeq) }
-      }
-      try {
-        input.addData(panelRows.take(2)); q.processAllAvailable()
-        input.addData(panelRows.drop(2)); q.processAllAvailable()
-      } finally q.stop()
-      emitted.toSeq
-    }
-    // per-query independence: the union of per-batch results equals the
-    // whole-panel batch call row-for-row
-    val gotBin = drive("bin",
-      b => Similarity.binaryRescoreTopK(spark, dir, b, k = 3,
-        rescoreFactor = 4, minCid = Long.MinValue)).sortBy(_.toString)
-    val wantBin = Similarity.binaryRescoreTopK(spark, dir, panel, k = 3,
-      rescoreFactor = 4, minCid = Long.MinValue)
-      .collect().toSeq.map(_.toSeq).sortBy(_.toString)
-    assert(gotBin.nonEmpty && gotBin == wantBin)
-    val gotMat = drive("mat",
-      b => Similarity.matryoshkaRescoreTopK(spark, dir, b, k = 3,
-        dPrefix = 16, rescoreFactor = 4, minCid = Long.MinValue))
-      .sortBy(_.toString)
-    val wantMat = Similarity.matryoshkaRescoreTopK(spark, dir, panel,
-      k = 3, dPrefix = 16, rescoreFactor = 4, minCid = Long.MinValue)
-      .collect().toSeq.map(_.toSeq).sortBy(_.toString)
-    assert(gotMat.nonEmpty && gotMat == wantMat)
-  }
-
   test("nProbe sweep with a truncated grid: true neighbors whose cell " +
     "ranks past max(probes) fall out of the left join (null prk) and " +
     "count as unreachable, never as rows") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.{IndexCatalog, Pq, Rung, Similarity, TextDedup}
+import graft.ops.Analytics
 import graft.tools.Maintenance
 
 /** The maintenance loop's whole-set manifest validation (VERDICT r10
@@ -12,6 +13,9 @@ import graft.tools.Maintenance
 class MaintenanceManifestSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
+
+  private val boundsTable =
+    Analytics.boundsTable(dir, "event_type", 0.05, 0.95)
 
   private def ensureRung(): Unit = {
     Rung.ensureBinaryIndex(spark, dir, 10)
@@ -25,52 +29,52 @@ class MaintenanceManifestSpec extends SparkTestBase {
 
   test("configured-but-absent indexes throw up front; a built index " +
     "with the configured shape passes clean") {
-    Rung.purgeRungIndexes(spark, dir, 10, 16)
+    Analytics.purgeBoundsIndex(spark, dir)
     try {
-      // configured rung dir, nothing built: fail fast before any pass
+      // configured winsor dir, nothing built: fail fast before any pass
       val e = intercept[IllegalArgumentException] {
-        Maintenance.manifestReport(spark, rungDir = Some(dir), rungNq = 10)
+        Maintenance.manifestReport(spark, winsorDir = Some(dir))
       }
-      assert(e.getMessage.contains("SPARK_GRAFT_RUNG_DIR"))
-      ensureRung()
-      // right shape: no throw, and the rung tables are covered (no
-      // warnings about this dir's tables)
-      val warns = Maintenance.manifestReport(spark, rungDir = Some(dir),
-        rungNq = 10)
-      assert(!warns.exists(w => rungTables.exists(w.contains)),
-        warns.mkString("\n"))
-      // wrong shape (nQueries mismatch): the guard catches it up front
+      assert(e.getMessage.contains("SPARK_GRAFT_WINSOR_DIR"))
+      Analytics.ensureBoundsIndex(spark, dir)
+      // right shape: no throw, and the bounds table is covered (no
+      // warning about it)
+      val warns = Maintenance.manifestReport(spark, winsorDir = Some(dir))
+      assert(!warns.exists(_.contains(boundsTable)), warns.mkString("\n"))
+      // wrong shape (group mismatch): the guard catches it up front
       val e2 = intercept[IllegalArgumentException] {
-        Maintenance.manifestReport(spark, rungDir = Some(dir), rungNq = 99)
+        Maintenance.manifestReport(spark, winsorDir = Some(dir),
+          winsorGroup = "user_id")
       }
-      assert(e2.getMessage.contains("nQueries=99"))
-    } finally Rung.purgeRungIndexes(spark, dir, 10, 16)
+      assert(e2.getMessage.contains("group=user_id"))
+    } finally Analytics.purgeBoundsIndex(spark, dir)
   }
 
   test("an on-disk maintainable index absent from the configured set " +
     "warns; covering it or purging it clears the warning") {
-    Rung.purgeRungIndexes(spark, dir, 10, 16)
-    ensureRung()
+    Analytics.purgeBoundsIndex(spark, dir)
+    Analytics.ensureBoundsIndex(spark, dir)
     try {
-      val bin = Rung.binTable(dir, Rung.binKey(10))
-      // not configured at all: the rung tables warn
+      // not configured at all: the bounds table warns
       val warns = Maintenance.manifestReport(spark)
-      assert(warns.exists(_.contains(bin)), warns.mkString("\n"))
+      assert(warns.exists(_.contains(boundsTable)), warns.mkString("\n"))
       // configured: covered, silent for this index
-      val covered = Maintenance.manifestReport(spark, rungDir = Some(dir),
-        rungNq = 10)
-      assert(!covered.exists(_.contains(bin)), covered.mkString("\n"))
+      val covered = Maintenance.manifestReport(spark, winsorDir = Some(dir))
+      assert(!covered.exists(_.contains(boundsTable)), covered.mkString("\n"))
       // the inventory itself reports the family
       val inv = IndexCatalog.listIndexDirs(spark)
-      assert(inv.contains(("rung", bin)), inv.mkString(", "))
-    } finally Rung.purgeRungIndexes(spark, dir, 10, 16)
+      assert(inv.contains(("winsor", boundsTable)), inv.mkString(", "))
+      // purged: nothing left on disk to warn about
+      Analytics.purgeBoundsIndex(spark, dir)
+      val purged = Maintenance.manifestReport(spark)
+      assert(!purged.exists(_.contains(boundsTable)), purged.mkString("\n"))
+    } finally Analytics.purgeBoundsIndex(spark, dir)
   }
 
   test("winsor bounds freeze: configured-but-absent fails fast, a fresh " +
     "freeze reads calm, a doctored freeze fires the re-freeze and " +
     "rebuilds calm") {
     import org.apache.spark.sql.functions._
-    import graft.ops.Analytics
     Analytics.purgeBoundsIndex(spark, dir)
     try {
       intercept[IllegalArgumentException] {
@@ -108,18 +112,20 @@ class MaintenanceManifestSpec extends SparkTestBase {
 
   test("dedup band/shingle indexes are listed for visibility but never " +
     "warned — no scheduled pass exists for them") {
-    // the other build-once families (gram, IVF, PQ) alike
+    // the other build-once families (gram, IVF, PQ, rung) alike
     def purgeAll(): Unit = {
       TextDedup.purgeDedupIndex(spark, dir)
       TextDedup.purgeSubstringIndex(spark, dir)
       Similarity.purgeIvfIndex(spark, dir)
       Pq.purgePqIndex(spark, dir, nQueries = 10)
+      Rung.purgeRungIndexes(spark, dir, 10, 16)
     }
     purgeAll()
     TextDedup.ensureDedupIndex(spark, dir)
     TextDedup.ensureSubstringIndex(spark, dir)
     Similarity.ensureIvfIndex(spark, dir, nQueries = 10, nCentroids = 16)
     Pq.ensurePqIndex(spark, dir, nQueries = 10)
+    ensureRung()
     try {
       val inv = IndexCatalog.listIndexDirs(spark)
       assert(inv.exists { case (f, n) =>
@@ -130,12 +136,14 @@ class MaintenanceManifestSpec extends SparkTestBase {
         "grams" -> TextDedup.gramsTable(dir, 5),
         "ivf" -> Similarity.ivfCellsTable(dir,
           Similarity.ivfKey(10, 16, 2, 3, cap)),
-        "pq" -> Pq.pqCodesTable(dir, Pq.pqKey(10, 8, 16, 2, 3, cap)))
+        "pq" -> Pq.pqCodesTable(dir, Pq.pqKey(10, 8, 16, 2, 3, cap))) ++
+        rungTables.map("rung" -> _)
       built.foreach(fn => assert(inv.contains(fn), inv.mkString(", ")))
       val warns = Maintenance.manifestReport(spark)
       assert(!warns.exists(_.contains("graft_dedup_")),
         warns.mkString("\n"))
-      Seq("graft_substr_grams_", "graft_ivf_", "graft_pq_").foreach { p =>
+      Seq("graft_substr_grams_", "graft_ivf_", "graft_pq_",
+        "graft_rung_").foreach { p =>
         assert(!warns.exists(_.contains(p)), warns.mkString("\n"))
       }
     } finally purgeAll()

@@ -459,53 +459,6 @@ class PipelineSpec extends SparkTestBase {
     } finally qs.foreach(_.stop())
   }
 
-  test("five concurrent stages (three event stages + searchStages): the event views " +
-    "hold AND a stream-ingested vector is served through the rung search " +
-    "stream, exact rescore included (VERDICT r14 next #6)") {
-    import java.nio.file.Files
-    val cfg = freshCfg()
-    val srcDir = "/root/testdata/sf0.001"
-    val corpus = Files.createTempDirectory("graft_search_corpus").toString
-    graft.ext.Similarity.embeddings(spark, srcDir)
-      .write.parquet(s"$corpus/embeddings.parquet")
-    val input = MemoryStream[Event](15, spark, None)
-    val vecs = MemoryStream[(Long, Seq[Float])](17, spark, None)
-    val panel = MemoryStream[(Long, Seq[Double])](18, spark, None)
-    val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    val qs = Pipeline.startAll(spark, input.toDF(), cfg) ++
-      Pipeline.searchStages(spark, corpus,
-        vecs.toDF().toDF("vec_id", "embedding"),
-        panel.toDF().toDF("qid", "qe"),
-        s"${cfg.baseDir}/vec_ckpt", s"${cfg.baseDir}/search_ckpt",
-        nQueries = 10, k = 3)(res => got.synchronized { got ++= res.collect() })
-    def settle(): Unit = qs.foreach(_.processAllAvailable())
-    try {
-      val t0 = 1700000000000L
-      val q0 = graft.ext.Similarity.embeddings(spark, corpus)
-        .filter(col("vec_id") === 0L).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      // batch 1: events + a new vector (a clone of corpus vec 0)
-      input.addData(ev("s1", "g1", 1.0f, t0), ev("s2", "g2", 2.0f, t0 + 10))
-      vecs.addData((970000L, q0))
-      settle()
-      // batch 2: a query equal to vec 0 — the freshly ingested clone
-      // must be its top hit THROUGH the exact rescore
-      panel.addData((0L, q0.map(_.toDouble)))
-      settle()
-      val silverIds = spark.read.parquet(cfg.silverPath)
-        .select("id").as[String].collect().sorted.toSeq
-      assert(silverIds == Seq("s1", "s2"), s"got $silverIds")
-      val hits = got.synchronized(got.toSeq)
-      assert(hits.nonEmpty, "search stream emitted nothing")
-      val top = hits.filter(r => r.getLong(0) == 0L && r.getLong(2) == 1L)
-      assert(top.map(_.getLong(1)) == Seq(970000L),
-        s"ingested vector not served as top-1: $hits")
-    } finally {
-      qs.foreach(_.stop())
-      graft.ext.Rung.purgeRungIndexes(spark, corpus)
-    }
-  }
-
   test("vacuumGoldChanges reclaims consumed versions; serve state intact") {
     val cfg = freshCfg()
     val input = MemoryStream[Event](19, spark, None)
@@ -901,37 +854,6 @@ class PipelineSpec extends SparkTestBase {
       assert(compiles.drop(2).forall(_ <= 2),
         s"Janino compilations per batch: ${compiles.mkString(", ")}")
     } finally qs.foreach(_.stop())
-  }
-
-  /** The operating-system process starts (`jdk.ProcessStart`, with call
-    * stacks) the JVM made while `body` ran. Hadoop's local filesystem
-    * forks a shell command for some calls when the native libhadoop is
-    * absent. A plain JFR recording, dumped on stop, rather than a
-    * `RecordingStream`: JDK 17's stream has no stop that flushes, so
-    * closing it may drop the last second's events.
-    */
-  private def processStarts(body: => Unit): Seq[jdk.jfr.consumer.RecordedEvent] = {
-    import scala.jdk.CollectionConverters._
-    val recording = new jdk.jfr.Recording()
-    recording.enable("jdk.ProcessStart").withStackTrace()
-    recording.start()
-    val f = Files.createTempFile("graft-process-starts", ".jfr")
-    try {
-      body
-      recording.stop()
-      recording.dump(f)
-      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
-    } finally {
-      recording.close()
-      Files.deleteIfExists(f)
-    }
-  }
-
-  /** The `Class.method` names on a recorded process start's call stack. */
-  private def frames(e: jdk.jfr.consumer.RecordedEvent): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
-      .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
   }
 
   test("the chain forks no process for checkpoint writes or permission " +

@@ -60,8 +60,19 @@ class UserForgetSpec extends SparkTestBase {
         .select(col("group_id")).collect().map(_.getString(0)).sorted
       assert(live.toSeq == Seq("g1", "g3"))
 
-      val erased = UserForget.applyForgetUsersIfNeeded(spark, cfg)
+      var erased = 0L
+      val starts = processStarts {
+        erased = UserForget.applyForgetUsersIfNeeded(spark, cfg)
+      }
       assert(erased == 4L, s"erased=$erased (g2 has 4 silver rows)")
+      // the erase walks the stores with listStatus: a recursive
+      // listFiles builds a LocatedFileStatus per file, which forks
+      // `ls -ld` when the native libhadoop is absent
+      val viaLocated = starts.filter(e =>
+        frames(e).exists(_.contains("LocatedFileStatus")))
+      assert(viaLocated.isEmpty, s"${viaLocated.size} of ${starts.size} " +
+        "process starts came from a LocatedFileStatus, e.g.\n  " +
+        viaLocated.take(1).flatMap(frames).mkString("\n  "))
       assert(!UserForget.forgetUsersTableExists(spark, cfg.baseDir))
       // every store scrubbed
       def g2In(path: String): Long =
