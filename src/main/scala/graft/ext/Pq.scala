@@ -137,35 +137,12 @@ object Pq {
       .select(col("cid"), col("sub_id"),
         col("m.code").as("code"), col("m.dist").as("dist"))
 
-  /** The one encode pipeline BOTH the offline build and batch admission
-    * run — one definition, so build-time and admitted codes can never
-    * diverge: subvector explode in micro-units, `‖sq‖²` hoisted, the
-    * broadcast codebook join, the exact-integer distance expansion.
-    * `vecs` must carry (cid, embedding); `cb` is a codebook frame with
-    * (sub_id, code, cq, cn2).
-    */
-  private def encodeScored(vecs: DataFrame, cb: DataFrame,
-                           nSub: Int): DataFrame = {
-    val subDim = dim / nSub
-    vecs
-      .select(col("cid"),
-        explode(array((0 until nSub).map { s =>
-          struct(lit(s.toLong).as("sub_id"),
-            microSub(col("embedding"), s, subDim).as("sq"))
-        }: _*)).as("ss"))
-      .select(col("cid"), col("ss.sub_id").as("sub_id"), col("ss.sq").as("sq"))
-      .withColumn("sn2", dot(col("sq"), col("sq")))
-      .join(broadcast(cb), Seq("sub_id"))
-      .select(col("cid"), col("sub_id"), col("code"),
-        (col("sn2") - lit(2.0) * dot(col("sq"), col("cq")) + col("cn2"))
-          .as("dist"))
-  }
-
   /** Trains the codebooks and encodes every candidate: one row per
     * (cid, sub_id) with the argmin-L2 `code` and its exact integer
-    * `dist` (micro² units). Broadcast codebook join, per-code work a
-    * single [[Similarity.dot]] with `‖sq‖²` hoisted per subvector,
-    * argmin via the combinable [[argminByDist]].
+    * `dist` (micro² units). Subvectors explode in micro-units, then a
+    * broadcast codebook join, per-code work a single [[Similarity.dot]]
+    * with `‖sq‖²` hoisted per subvector (the exact-integer distance
+    * expansion), argmin via the combinable [[argminByDist]].
     */
   private[graft] def assignments(spark: SparkSession, dir: String,
                                  nQueries: Int, nSub: Int, kSub: Int,
@@ -174,11 +151,20 @@ object Pq {
     val emb = embeddings(spark, dir)
     val books =
       trainPqCodebooks(emb, nQueries, nSub, kSub, iters, sampleMod, sampleCap)
-    val cand = emb.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("cid"), col("embedding"))
-    val enc = argminByDist(
-      encodeScored(cand, codebookDf(spark, books), nSub))
-    (books, enc)
+    val subDim = dim / nSub
+    val scored = emb.filter(col("vec_id") >= nQueries)
+      .select(col("vec_id").as("cid"),
+        explode(array((0 until nSub).map { s =>
+          struct(lit(s.toLong).as("sub_id"),
+            microSub(col("embedding"), s, subDim).as("sq"))
+        }: _*)).as("ss"))
+      .select(col("cid"), col("ss.sub_id").as("sub_id"), col("ss.sq").as("sq"))
+      .withColumn("sn2", dot(col("sq"), col("sq")))
+      .join(broadcast(codebookDf(spark, books)), Seq("sub_id"))
+      .select(col("cid"), col("sub_id"), col("code"),
+        (col("sn2") - lit(2.0) * dot(col("sq"), col("cq")) + col("cn2"))
+          .as("dist"))
+    (books, argminByDist(scored))
   }
 
   /** Per-candidate code rows from the (cid, sub_id, code) assignment:

@@ -61,8 +61,8 @@ object Rung {
     s"graft_rung_i8_${IndexCatalog.indexKey(dir)}_$key"
 
   // ————————————————— the ONE derivation of each table's payload —————————————————
-  // (the Pq.encodeScored lesson: one definition, so the int8 table rows
-  // and the int8 query panel can never diverge)
+  // (one definition, so the int8 table rows and the int8 query panel can
+  // never diverge)
 
   /** (cid, ch1, ch2) — the two 32-bit MSB-first sign packs of
     * [[Similarity.binaryRescoreTopK]], 16 B of payload per vector.

@@ -1,121 +1,24 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.streaming.Pipeline
 
-/** Table-format adapter boundary (SURVEY §7.7-4, VERDICT r4 next-round
-  * #6): the seven storage primitives the medallion pipeline needs from a
-  * Delta-like table layer, isolated behind one trait so a real
-  * `delta-spark` jar (absent from `/opt/spark/jars` — environmental)
-  * drops in as a second implementation without touching the pipeline:
-  *
-  *   - `mergeInsertOnly`  ↔ `MERGE WHEN NOT MATCHED THEN INSERT`
-  *     (reference silver.py:10-40)
-  *   - `upsertFold`       ↔ `MERGE WHEN MATCHED UPDATE / NOT MATCHED
-  *     INSERT` + Change Data Feed emission (reference gold.py:7-57)
-  *   - `streamInserts`    ↔ `spark.readStream.format("delta")` on an
-  *     insert-only table (reference gold.py:49-53)
-  *   - `streamChangeFeed` ↔ `.option("readChangeFeed","true")`
-  *     (reference tomongo.py:21-27)
-  *   - `optimize`         ↔ `OPTIMIZE` with dataChange=false semantics
-  *     (reference utils.py:111-124)
-  *   - `optimizeServe`    ↔ the serving store's own compaction (Mongo
-  *     replace-upsert is O(1)/key; the log analog needs folding)
-  *   - `vacuumChangeFeed` ↔ `VACUUM <retention>` (reference
-  *     utils.py:127-135, 168 h)
-  *
-  * The contract each implementation must honor (the parquet one proves
-  * it in PipelineSpec): merges idempotent under micro-batch replay,
-  * folds exactly-once per (batch, bucket), optimize legal while a
-  * downstream stream consumes the table, vacuum never reclaims data an
-  * active consumer still owes a read.
+/** The three storage calls perfbench's chain workload
+  * (`perfbench/src/main/scala/graftbench/Chain.scala`) compiles against,
+  * its only caller; each is one call into [[Pipeline]], which every
+  * program caller uses directly.
   */
-trait TableFormat {
-
-  /** Stage-1 sink: insert-only MERGE of a deduped micro-batch into the
-    * silver table (key = (minute_timestamp, id)). `batchUnique` attests
-    * the batch already carries one row per key (true for the streaming
-    * path, whose watermark dedup guarantees it) so the in-batch dedup
-    * shuffle can be skipped.
-    */
-  def mergeInsertOnly(spark: SparkSession, batch: DataFrame,
-                      cfg: Pipeline.Config,
-                      batchUnique: Boolean = false): Unit
-
-  /** Stage-2 sink: upsert-fold a micro-batch of silver rows into the
-    * gold snapshot and emit this fold's change feed (insert /
-    * update_preimage / update_postimage rows).
-    */
-  def upsertFold(spark: SparkSession, batch: DataFrame, batchId: Long,
-                 cfg: Pipeline.Config): Unit
-
-  /** Stage-2 source: the silver table's insert feed as a streaming
-    * DataFrame (silver is insert-only, so its change feed IS its new
-    * data).
-    */
-  def streamInserts(spark: SparkSession, cfg: Pipeline.Config): DataFrame
-
-  /** Stage-3 source: the gold table's change feed as a streaming
-    * DataFrame carrying `_change_type` / `_commit_version`.
-    */
-  def streamChangeFeed(spark: SparkSession, cfg: Pipeline.Config): DataFrame
-
-  /** OPTIMIZE analog over silver — must be legal while a gold stream
-    * consumes the table (dataChange=false semantics).
-    */
-  def optimize(spark: SparkSession, cfg: Pipeline.Config): Unit
-
-  /** Compaction of the serving store so point reads stay O(keys), not
-    * O(history).
-    */
-  def optimizeServe(spark: SparkSession, cfg: Pipeline.Config): Unit
-
-  /** VACUUM analog over the gold change feed: reclaim versions every
-    * consumer has committed, subject to a retention floor.
-    */
-  def vacuumChangeFeed(spark: SparkSession, cfg: Pipeline.Config,
-                       keepVersions: Int = 168): Unit
-}
-
 object TableFormat {
-  /** The default (and, while no delta jar ships in the image, only)
-    * implementation: plain partitioned parquet with the pipeline's
-    * manifest/marker protocols supplying the transactional semantics.
-    */
-  val parquet: TableFormat = ParquetTableFormat
-}
+  object parquet {
+    def optimize(spark: SparkSession, cfg: Pipeline.Config): Unit =
+      Pipeline.compactSilver(spark, cfg)
 
-/** Plain-parquet implementation — delegates to the pipeline's proven
-  * primitives (anti-join MERGE, bucket-swap fold, glob-filtered live
-  * compaction, checkpoint-aware vacuum). Stateless; safe to share.
-  */
-object ParquetTableFormat extends TableFormat {
-  override def mergeInsertOnly(spark: SparkSession, batch: DataFrame,
-                               cfg: Pipeline.Config,
-                               batchUnique: Boolean): Unit =
-    Pipeline.mergeToSilver(spark, batch, cfg, batchUnique)
+    def optimizeServe(spark: SparkSession, cfg: Pipeline.Config): Unit =
+      Pipeline.compactServe(spark, cfg)
 
-  override def upsertFold(spark: SparkSession, batch: DataFrame,
-                          batchId: Long, cfg: Pipeline.Config): Unit =
-    Pipeline.foldToGold(spark, batch, batchId, cfg)
-
-  override def streamInserts(spark: SparkSession,
-                             cfg: Pipeline.Config): DataFrame =
-    Pipeline.silverInsertStream(spark, cfg)
-
-  override def streamChangeFeed(spark: SparkSession,
-                                cfg: Pipeline.Config): DataFrame =
-    Pipeline.goldChangeStream(spark, cfg)
-
-  override def optimize(spark: SparkSession, cfg: Pipeline.Config): Unit =
-    Pipeline.compactSilverAuto(spark, cfg)
-
-  override def optimizeServe(spark: SparkSession,
-                             cfg: Pipeline.Config): Unit =
-    Pipeline.compactServe(spark, cfg)
-
-  override def vacuumChangeFeed(spark: SparkSession, cfg: Pipeline.Config,
-                                keepVersions: Int): Unit =
-    Pipeline.vacuumGoldChanges(spark, cfg, keepVersions)
+    def vacuumChangeFeed(spark: SparkSession, cfg: Pipeline.Config,
+                         keepVersions: Int = 168): Unit =
+      Pipeline.vacuumGoldChanges(spark, cfg, keepVersions)
+  }
 }

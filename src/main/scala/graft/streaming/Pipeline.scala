@@ -42,11 +42,7 @@ import graft.ops.{Aggregate, Dedup}
   */
 object Pipeline {
 
-  final case class Config(
-      baseDir: String,
-      watermarkDelay: String = "30 seconds",
-      goldBuckets: Int = 64,
-      compactEvery: Long = 0L) {
+  final case class Config(baseDir: String, goldBuckets: Int = 64) {
     def silverPath: String = s"$baseDir/silver"
     def goldPath: String = s"$baseDir/gold"
     def goldChangesPath: String = s"$baseDir/gold_changes"
@@ -150,36 +146,25 @@ object Pipeline {
       .withColumn("timestamp",
         (col("event_timestamp") / lit(1000)).cast("timestamp"))
 
-  /** Stage 1: raw → watermark dedup → insert-only MERGE into silver.
-    * The sink primitives dispatch through `format`
-    * ([[graft.storage.TableFormat]]) — parquet by default, a Delta
-    * implementation drop-in if its jar ever ships.
+  /** How far event time may lag before the dedup stage drops an event
+    * and evicts its state (reference silver.py:62-63, SURVEY T1).
     */
-  def startSilver(spark: SparkSession, raw: DataFrame, cfg: Config,
-                  format: graft.storage.TableFormat =
-                    graft.storage.TableFormat.parquet): StreamingQuery = {
+  private val watermarkDelay = "30 seconds"
+
+  /** Stage 1: raw → watermark dedup → insert-only MERGE into silver. */
+  def startSilver(spark: SparkSession, raw: DataFrame,
+                  cfg: Config): StreamingQuery = {
     val deduped = withDerived(raw)
-      .withWatermark("timestamp", cfg.watermarkDelay)
+      .withWatermark("timestamp", watermarkDelay)
       .dropDuplicatesWithinWatermark("id")
       .drop("timestamp")
     deduped.writeStream
       .queryName("graft_silver")
       .option("checkpointLocation", cfg.checkpoint("silver"))
       .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchUnique: dropDuplicatesWithinWatermark upstream guarantees
-        // one row per id within the batch
-        format.mergeInsertOnly(spark,
-          batch.withColumn("ingest_timestamp", batchClockSeconds()), cfg,
-          batchUnique = true)
-        // scheduled compaction (the OPTIMIZE-on-a-cadence analog,
-        // reference utils.py:111-124): run synchronously with the merge
-        // so the rewrite cannot race a concurrent append. Without a
-        // transaction log, "out-of-band" can only mean between batches.
-        // [[compactSilverAuto]] picks the gold-safe manifest variant when
-        // a gold stream has ever consumed this directory.
-        if (cfg.compactEvery > 0 && batchId > 0 && batchId % cfg.compactEvery == 0)
-          format.optimize(spark, cfg)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        mergeToSilver(spark,
+          batch.withColumn("ingest_timestamp", batchClockSeconds()), cfg)
       }
       .start()
   }
@@ -204,7 +189,9 @@ object Pipeline {
     floor(col("minute_timestamp") / lit(hbMinuteBuckets)).cast("long")
 
   /** J1: anti-join the batch against the already-written hour buckets
-    * only, then append. Idempotent per (minute_timestamp, id).
+    * only, then append. Idempotent per (minute_timestamp, id). The batch
+    * must carry one row per id, as the stream's
+    * `dropDuplicatesWithinWatermark` leaves it.
     *
     * The target prune is DIRECT-PATH, not a filter: the batch's touched
     * `hb` values name their partition directories outright, so the
@@ -213,23 +200,14 @@ object Pipeline {
     * re-listed every silver dir each batch, a cost that grew with
     * table age, not batch size).
     */
-  def mergeToSilver(spark: SparkSession, batch: DataFrame, cfg: Config,
-                    batchUnique: Boolean = false): Unit = {
+  def mergeToSilver(spark: SparkSession, batch: DataFrame,
+                    cfg: Config): Unit = {
     val out = new Path(cfg.silverPath)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // within-batch uniqueness: hash-dedup suffices (and costs no sort);
-    // the streaming path passes batchUnique=true because its upstream
-    // dropDuplicatesWithinWatermark already guarantees one row per id —
-    // re-shuffling every micro-batch for a no-op dedup was measurable
-    // pacing overhead. For a deterministic tie-break on conflicting
-    // payloads use Dedup.latestPerKey at the call site instead.
-    val batchDedup0 =
-      if (batchUnique) batch
-      else batch.dropDuplicates("minute_timestamp", "id")
     // two actions follow (bucket collect + the merge write); without a
     // persist each would re-execute the full batch plan — in the
     // streaming path that plan includes the RocksDB state-store read
-    val batchDedup = batchDedup0.withColumn("hb", silverHb).persist()
+    val batchDedup = batch.withColumn("hb", silverHb).persist()
     try {
       val hbs = batchDedup.select("hb").distinct()
         .collect().map(_.getLong(0)).toSeq.sorted
@@ -262,87 +240,38 @@ object Pipeline {
     } finally batchDedup.unpersist(false)
   }
 
-  /** Dispatch between the two OPTIMIZE analogs: the whole-directory swap
-    * ([[compactSilver]] — silver-terminal deployments, no reader to
-    * confuse) and the gold-safe manifest variant ([[compactSilverLive]] —
-    * some gold stream has consumed this directory as a file source, so
-    * only files it has committed may be rewritten, into names its glob
-    * filter ignores). The gold CHECKPOINT's existence is the switch: it
-    * outlives the query object, so "a gold stream ever consumed silver"
-    * is exactly what it witnesses.
-    *
-    * The switch is EVENTUALLY safe, not instantaneously: a gold stream
-    * whose very first start races this check can observe the
-    * whole-directory swap mid-listing (checkpoint dir not yet created →
-    * [[compactSilver]] chosen). Deployments that will add a gold
-    * consumer later should pre-create the gold checkpoint directory (or
-    * call [[compactSilverLive]] explicitly) before the first
-    * [[startGold]]; once the checkpoint exists — i.e. for the entire
-    * life of a running chain — the dispatch is stable and safe.
-    */
-  def compactSilverAuto(spark: SparkSession, cfg: Config): Unit = {
-    val ckpt = new Path(cfg.checkpoint("gold"))
-    val fs = ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ckpt)) compactSilverLive(spark, cfg)
-    else compactSilver(spark, cfg)
-  }
-
   /** Compaction (the OPTIMIZE analog, reference utils.py:111-124): each
-    * silver bucket's accumulated micro-batch files rewritten as one, via
-    * an atomic directory swap. The 1M-event soak shows why: the MERGE's
-    * target re-scan decays as small files accumulate. Run out-of-band
-    * (between or alongside batches — the swap is a rename).
+    * silver bucket's accumulated micro-batch files rewritten as one. The
+    * 1M-event soak shows why: the MERGE's target re-scan decays as small
+    * files accumulate. `rowFilter`, when given, rewrites the rows too
+    * (the user-deletion scrub, [[UserForget]]).
     *
-    * NOT safe while [[startGold]] is streaming the silver directory: the
-    * gold stage treats new silver files as the change feed (insert-only
-    * contract), and rewriting a NOT-yet-consumed file into a compact-*
-    * name would hide its rows from gold forever, while the whole-dir swap
-    * also yanks files mid-listing. Delta's OPTIMIZE solves this with
-    * dataChange=false commits; the plain-parquet analog is
-    * [[compactSilverLive]]: gold reads only `part-*` files (its source is
-    * glob-filtered, [[startGold]]), so a rewrite of files gold has
-    * ALREADY COMMITTED into a `compact-*` file is invisible to it — the
-    * rows stay exactly-once in gold and batch readers see the compacted
-    * layout. Use [[compactSilverAuto]] to pick the right variant.
-    */
-  def compactSilver(spark: SparkSession, cfg: Config,
-                    rowFilter: Option[DataFrame => DataFrame] = None)
-      : Unit = {
-    val dir = new Path(cfg.silverPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    val tmp = new Path(cfg.silverPath + "_compacting")
-    val base = spark.read.schema(Schemas.silverSchema)
-      .parquet(cfg.silverPath) // partition col hb appended from dir names
-    rowFilter.map(_(base)).getOrElse(base)
-      .repartition(col("hb"))
-      .write.mode("overwrite").partitionBy("hb")
-      .parquet(tmp.toString)
-    fs.delete(dir, true)
-    fs.rename(tmp, dir)
-  }
-
-  /** The OPTIMIZE analog that is legal WHILE a gold stream is consuming
-    * the silver directory (VERDICT r4 "What's missing" #1; the reference
-    * OPTIMIZEs live because Delta commits rewrites with
-    * dataChange=false, utils.py:111-124). The plain-parquet analog rests
-    * on two invariants:
+    * Which files may be rewritten depends on whether a gold stream
+    * consumes silver as a file source. The gold CHECKPOINT directory is
+    * the witness: [[startGold]] creates it before its stream starts, and
+    * it outlives the query object.
     *
-    *   1. [[startGold]]'s file source reads ONLY `part-*` files
-    *      (`pathGlobFilter`), so a file named `compact-*` is invisible to
-    *      the stream — it can appear, change, or vanish without the
-    *      source ever planning it into a batch.
-    *   2. Only files the gold checkpoint has COMMITTED
-    *      ([[committedSourcePaths]]) are rewritten. A committed file is
-    *      never re-read (the source's seen-files log outlives restarts;
-    *      only planned-but-uncommitted batches replay), so deleting it
-    *      after its rows land in a compact-* file loses nothing and
-    *      double-folds nothing. Not-yet-consumed part-* files are left
-    *      untouched — gold still owes them a fold.
+    *   - WITH a consumer (the reference OPTIMIZEs live because Delta
+    *     commits rewrites with dataChange=false): gold's source reads
+    *     ONLY `part-*` files ([[silverInsertStream]]'s `pathGlobFilter`),
+    *     so the rewrite takes the files gold has COMMITTED
+    *     ([[committedSourcePaths]]) plus prior `compact-*` outputs and
+    *     writes `compact-*` names gold never plans. A committed file is
+    *     never re-read (the source's seen-files log outlives restarts;
+    *     only planned-but-uncommitted batches replay), so its rows stay
+    *     exactly-once in gold. Not-yet-consumed part files are left
+    *     alone: gold still owes them a fold. Until gold's source log
+    *     (`sources/0`) exists, nothing is known committed and nothing is
+    *     rewritten. This reads only GOLD's checkpoint, so it is safe only
+    *     because gold is the one stream that reads silver.
+    *   - With NO consumer, every data file is eligible and the rewrite
+    *     writes `part-*` names, so a gold stream started later folds each
+    *     row exactly once. A gold stream whose first start races a
+    *     compaction in flight could see a row twice: start gold before
+    *     compacting, or with the compaction quiesced.
     *
-    * Prior `compact-*` outputs are always eligible for re-compaction
-    * (gold never reads them), so repeated runs converge each bucket to
-    * one file instead of accumulating one compact file per run.
+    * A bucket is rewritten when merging shrinks its file count, or,
+    * under a `rowFilter`, whenever it has any eligible file.
     *
     * Crash safety without a transaction log: the rewritten buckets are
     * staged to a `_compact_tmp` dir, then a MANIFEST (a sibling file,
@@ -352,30 +281,41 @@ object Pipeline {
     * renames are idempotent (skip when src is gone / dst exists), deletes
     * are idempotent, and the tmp dir is only removed after the manifest
     * is. Readers racing the rename→delete window can transiently see a
-    * row twice — the same read-uncommitted window the whole-dir swap has;
-    * streaming gold is immune via invariants 1–2.
+    * row twice; streaming gold is immune via the committed-only rule.
     *
-    * Invariant 2 reads only GOLD's checkpoint, so this is safe only
-    * because gold is the one stream that reads silver: any other file
-    * source on silver keeps its own seen-files log, and a part file gold
-    * committed but it had not yet read would be deleted under it.
+    * Not safe beside a running silver stream: it deletes part files the
+    * silver MERGE may be reading (ROADMAP item 2).
     */
-  def compactSilverLive(spark: SparkSession, cfg: Config,
-                        rowFilter: Option[DataFrame => DataFrame] = None)
+  def compactSilver(spark: SparkSession, cfg: Config,
+                    rowFilter: Option[DataFrame => DataFrame] = None)
       : Unit = {
     val dir = new Path(cfg.silverPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return
     replayCompactionManifest(fs, cfg) // finish any crashed prior run
-    val committed: Set[String] =
-      committedSourcePaths(fs, cfg.checkpoint("gold")) match {
-        case Some(c) => c
-        case None    => return // no gold source log yet — nothing is safe
+    if (stageSilverCompaction(spark, fs, cfg, rowFilter)) {
+      replayCompactionManifest(fs, cfg)
+      spark.catalog.refreshByPath(cfg.silverPath)
+    }
+  }
+
+  /** The staging half of [[compactSilver]]: writes the rewritten
+    * buckets to `_compact_tmp` and the plan to the manifest, and
+    * changes nothing a reader sees. False when no bucket qualifies.
+    */
+  private[graft] def stageSilverCompaction(
+      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem, cfg: Config,
+      rowFilter: Option[DataFrame => DataFrame]): Boolean = {
+    val dir = new Path(cfg.silverPath)
+    val goldCkpt = cfg.checkpoint("gold")
+    // None: no consumer; Some(c): gold's committed part files
+    val committed: Option[Set[String]] =
+      if (!fs.exists(new Path(goldCkpt))) None
+      else committedSourcePaths(fs, goldCkpt) match {
+        case None => return false // no gold source log yet — nothing is safe
+        case some => some
       }
-    // per bucket: committed part-* files plus any prior compact-* files;
-    // a bucket qualifies when merging actually shrinks its file count —
-    // or, under a rowFilter (the user-deletion scrub), whenever it has
-    // ANY eligible file: a single file still needs its rows rewritten
+    val outPrefix = if (committed.isDefined) "compact-" else "part-"
     val buckets = fs.listStatus(dir).toSeq.filter(s =>
       s.isDirectory && s.getPath.getName.startsWith("hb="))
     val doomed: Seq[Path] = buckets.flatMap { b =>
@@ -383,13 +323,14 @@ object Pipeline {
         .map(_.getPath)
         .filter { p =>
           val n = p.getName
-          (n.startsWith("part-") && committed.contains(p.toUri.getPath)) ||
+          (n.startsWith("part-") &&
+            committed.forall(_.contains(p.toUri.getPath))) ||
             n.startsWith("compact-")
         }
       if (files.size >= 2 || (rowFilter.isDefined && files.nonEmpty)) files
       else Nil
     }
-    if (doomed.isEmpty) return
+    if (doomed.isEmpty) return false
     val tmp = new Path(cfg.silverPath + "_compact_tmp")
     fs.delete(tmp, true)
     val doomedBase = spark.read.schema(Schemas.silverSchema)
@@ -399,8 +340,8 @@ object Pipeline {
       .repartition(col("hb"))
       .write.mode("overwrite").partitionBy("hb")
       .parquet(tmp.toString)
-    // stage the plan: every rename-in (tmp part file → live bucket under a
-    // compact- name gold ignores) and every delete of a merged source
+    // stage the plan: every rename-in (tmp part file → live bucket) and
+    // every delete of a merged source
     val moves = fs.listStatus(tmp).toSeq
       .filter(s => s.isDirectory &&
         s.getPath.getName.startsWith("hb="))
@@ -409,7 +350,7 @@ object Pipeline {
           .filter(_.getPath.getName.startsWith("part-"))
           .map { f =>
             val dst = new Path(new Path(dir, b.getPath.getName),
-              "compact-" + f.getPath.getName.stripPrefix("part-"))
+              outPrefix + f.getPath.getName.stripPrefix("part-"))
             (f.getPath, dst)
           }
       }
@@ -419,8 +360,7 @@ object Pipeline {
       moves.foreach { case (s, d) => out.write(s"MOVE\t$s\t$d\n".getBytes("UTF-8")) }
       doomed.foreach(p => out.write(s"DELETE\t$p\n".getBytes("UTF-8")))
     } finally out.close()
-    replayCompactionManifest(fs, cfg)
-    spark.catalog.refreshByPath(cfg.silverPath)
+    true
   }
 
   private def compactionManifestPath(cfg: Config): Path =
@@ -636,7 +576,7 @@ object Pipeline {
     * that are compacted or vacuumed out-of-band, so a file can vanish
     * between a reader's listing and its read; Hadoop then throws
     * FileNotFoundException and kills the stream, although the reclaim
-    * contract ([[compactSilverLive]], [[vacuumGoldChanges]],
+    * contract ([[compactSilver]], [[vacuumGoldChanges]],
     * [[compactServe]]) only deletes files whose rows every consumer has
     * already committed (or that live on in a compact-* rewrite). With no
     * transaction log to serialize readers against deletes (Delta's
@@ -662,34 +602,31 @@ object Pipeline {
       .option("maxFilesPerTrigger", 50)
       .option("ignoreMissingFiles", "true")
       // the compaction contract: gold folds ONLY part-* files, so
-      // [[compactSilverLive]]'s compact-* rewrites of already-committed
+      // [[compactSilver]]'s compact-* rewrites of already-committed
       // files are invisible to this source (no double-fold, no re-read)
       .option("pathGlobFilter", "part-*")
       .parquet(cfg.silverPath)
   }
 
   /** Stage 2: silver insert feed → per-batch partial agg → fold into the
-    * gold snapshot. Source and sink dispatch through `format`.
+    * gold snapshot.
     */
-  def startGold(spark: SparkSession, cfg: Config,
-                format: graft.storage.TableFormat =
-                  graft.storage.TableFormat.parquet): StreamingQuery = {
+  def startGold(spark: SparkSession, cfg: Config): StreamingQuery = {
     val fs = new Path(cfg.silverPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Pre-create the checkpoint dir BEFORE the stream's async start: it is
-    // [[compactSilverAuto]]'s witness that a gold consumer exists, and the
+    // [[compactSilver]]'s witness that a gold consumer exists, and the
     // stream's own lazy creation would leave a window where a concurrent
-    // compaction still picks the whole-directory swap. After this mkdirs
-    // the switch is safe for any compaction that starts after startGold
-    // returns; only a compaction already in flight at call time can race,
-    // which the synchronous-with-silver-batches scheduling rules out.
+    // compaction still writes part-* names gold would fold. After this
+    // mkdirs every compaction that starts later keeps to the files gold
+    // committed; only a compaction already in flight at call time can race.
     fs.mkdirs(new Path(cfg.checkpoint("gold")))
-    format.streamInserts(spark, cfg).writeStream
+    silverInsertStream(spark, cfg).writeStream
       .queryName("graft_gold")
       .option("checkpointLocation", cfg.checkpoint("gold"))
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        format.upsertFold(spark, batch, batchId, cfg)
+        foldToGold(spark, batch, batchId, cfg)
       }
       .start()
   }
@@ -907,10 +844,8 @@ object Pipeline {
     * what every snapshot read scans (the Mongo `replace_one(upsert)`
     * being O(1) per key is the behavior this mirrors).
     */
-  def startServe(spark: SparkSession, cfg: Config,
-                 format: graft.storage.TableFormat =
-                   graft.storage.TableFormat.parquet): StreamingQuery = {
-    format.streamChangeFeed(spark, cfg)
+  def startServe(spark: SparkSession, cfg: Config): StreamingQuery = {
+    goldChangeStream(spark, cfg)
       .filter(col("_change_type").isin("insert", "update_postimage"))
       .withColumn("_id", col("group_id"))
       .drop("gb", "_change_type")
@@ -1092,11 +1027,10 @@ object Pipeline {
   /** The reference's orchestration (main.py:12-20): all three stages as
     * concurrent StreamingQueries.
     */
-  def startAll(spark: SparkSession, raw: DataFrame, cfg: Config,
-               format: graft.storage.TableFormat =
-                 graft.storage.TableFormat.parquet): Seq[StreamingQuery] =
-    Seq(startSilver(spark, raw, cfg, format), startGold(spark, cfg, format),
-      startServe(spark, cfg, format))
+  def startAll(spark: SparkSession, raw: DataFrame,
+               cfg: Config): Seq[StreamingQuery] =
+    Seq(startSilver(spark, raw, cfg), startGold(spark, cfg),
+      startServe(spark, cfg))
 
   /** Tiny markers for gold-fold replay protection: one global batch id
     * (fast path: whole batch already applied) plus one per gold bucket

@@ -33,14 +33,15 @@ import graft.streaming.Pipeline.Config
   * compaction):
   *
   *   - SILVER is a gold-consumed file stream reading only `part-*`
-  *     names: the scrub reuses [[Pipeline.compactSilverLive]] with a
-  *     row filter — committed files rewrite into `compact-*` names the
-  *     gold glob ignores (the dataChange=false analog), crash-safe via
-  *     the same staged manifest. It runs ONLY when gold has committed
-  *     every silver file (else the pass holds back, returning -2): an
-  *     unconsumed file cannot be touched (gold still owes it a fold),
-  *     and scrubbing around it would let the user's rows fold into gold
-  *     AFTER the gold scrub.
+  *     names: the scrub is [[Pipeline.compactSilver]] with a row
+  *     filter — committed files rewrite into `compact-*` names the gold
+  *     glob ignores (the dataChange=false analog), or keep `part-*`
+  *     names when no gold stage exists yet, crash-safe via the staged
+  *     manifest. It runs ONLY when gold has committed every silver file
+  *     (else the pass holds back, returning -2): an unconsumed file
+  *     cannot be touched (gold still owes it a fold), and scrubbing
+  *     around it would let the user's rows fold into gold AFTER the
+  *     gold scrub.
   *   - GOLD is one row per group_id in `gb=` bucket dirs: deletion is
   *     dropping the users' rows from the touched buckets (no refold —
   *     the row is entirely theirs), a filtered per-bucket swap.
@@ -51,8 +52,10 @@ import graft.streaming.Pipeline.Config
   *     (version, bucket) dir, rows minus the users merge into ONE
   *     surviving original name, the rest delete — legal because the
   *     pass requires serve drained (every change file committed ⇒ no
-  *     name is ever re-read). Crash-safe via a staged mirror + a
-  *     DELETE-then-MOVE manifest replayed on entry.
+  *     name is ever re-read); with no serve checkpoint no consumer owes
+  *     a read, and a serve stage started later reads only scrubbed
+  *     rows. Crash-safe via a staged mirror + a DELETE-then-MOVE
+  *     manifest replayed on entry.
   *   - SERVE (and its compacted `serve_snapshot/v=*` versions) has no
   *     streaming reader accounting — filtered whole-dir swaps.
   *
@@ -207,10 +210,13 @@ object UserForget {
 
   private def deferralReasonOn(fs: FileSystem,
                                cfg: Config): Option[String] = {
-    val goldCommitted =
-      Pipeline.committedSourcePaths(fs, cfg.checkpoint("gold"))
+    // a gold checkpoint directory is the witness that a gold stage
+    // consumes silver, as for [[Pipeline.compactSilver]]: before its
+    // source log exists it has committed nothing
+    val goldCkpt = cfg.checkpoint("gold")
     val silverDir = new Path(cfg.silverPath)
-    val goldOwes = goldCommitted.exists { c =>
+    val goldOwes = fs.exists(new Path(goldCkpt)) && {
+      val c = Pipeline.committedSourcePaths(fs, goldCkpt).getOrElse(Set.empty)
       Pipeline.dataFiles(fs, silverDir).map(_.getPath)
         .filter(_.getName.startsWith("part-"))
         .exists(p => !c.contains(p.toUri.getPath))
@@ -399,8 +405,7 @@ object UserForget {
     // finish any crashed prior scrub before reading state
     Pipeline.replayCompactionManifest(fs, cfg)
     replayScrubManifest(fs, cfg)
-    Seq(new Path(cfg.goldChangesPath), new Path(cfg.servePath))
-      .foreach(recoverDirSwap(fs, _))
+    recoverDirSwap(fs, new Path(cfg.servePath))
     recoverGoldBuckets(fs, cfg)
     recoverSnapshots(fs, cfg)
     val tomb = forgottenUserIds(spark, cfg.baseDir).localCheckpoint(true)
@@ -408,10 +413,6 @@ object UserForget {
     // ——— drain guards (deferral, not failure) — the shared predicate
     // the SLA audit reports on, so a -2 here is never silent ———
     if (deferralReasonOn(fs, cfg).isDefined) return -2L
-    val goldCommitted =
-      Pipeline.committedSourcePaths(fs, cfg.checkpoint("gold"))
-    val serveCommitted =
-      Pipeline.committedSourcePaths(fs, cfg.checkpoint("serve"))
     val silverDir = new Path(cfg.silverPath)
     val changesDir = new Path(cfg.goldChangesPath)
     def scrub(df: DataFrame, keyCol: String): DataFrame =
@@ -425,10 +426,7 @@ object UserForget {
         val n = silver
           .join(broadcast(tomb), col("group_id") === col("gid"),
             "left_semi").count()
-        if (goldCommitted.isDefined)
-          Pipeline.compactSilverLive(spark, cfg, Some(scrub(_, "group_id")))
-        else
-          Pipeline.compactSilver(spark, cfg, Some(scrub(_, "group_id")))
+        Pipeline.compactSilver(spark, cfg, Some(scrub(_, "group_id")))
         n
       }
     // ——— gold: drop the users' rows from the touched buckets ———
@@ -444,14 +442,8 @@ object UserForget {
       }
     }
     // ——— gold change feed ———
-    if (Pipeline.dataFiles(fs, changesDir).nonEmpty) {
-      if (serveCommitted.isDefined) scrubChangesInPlace(spark, fs, cfg, tomb)
-      else dirSwap(fs, changesDir) { tmp =>
-        scrub(spark.read.option("basePath", cfg.goldChangesPath)
-          .parquet(cfg.goldChangesPath), "group_id")
-          .write.partitionBy("_commit_version", "gb").parquet(tmp)
-      }
-    }
+    if (Pipeline.dataFiles(fs, changesDir).nonEmpty)
+      scrubChangesInPlace(spark, fs, cfg, tomb)
     // ——— serve store + compacted snapshots ———
     val serveDir = new Path(cfg.servePath)
     if (Pipeline.dataFiles(fs, serveDir).nonEmpty)

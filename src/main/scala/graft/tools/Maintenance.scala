@@ -10,19 +10,16 @@ import graft.streaming.Pipeline
   * With an interval it loops (cron-style service); without, it runs once
   * and exits.
   *
-  * Run it with the silver, gold and serve streams QUIESCED. Its silver
-  * pass ([[Pipeline.compactSilverAuto]]) picks the manifest variant
-  * [[Pipeline.compactSilverLive]] once a gold stage has consumed silver,
-  * and that variant rewrites only gold-committed `part-*` files — but it
-  * still deletes part files a live silver MERGE may be reading
-  * (`FAILED_READ_FILE.FILE_NOT_EXIST`), so it is not safe beside a
-  * running chain. While a silver stream runs, compact inside it with
-  * [[Pipeline.Config.compactEvery]], which runs between batches.
+  * Run it with the silver, gold and serve streams QUIESCED until ROADMAP
+  * item 2 lands. Its silver pass ([[Pipeline.compactSilver]]) rewrites
+  * only gold-committed `part-*` files once a gold stage has consumed
+  * silver, but it still deletes part files a live silver MERGE may be
+  * reading (`FAILED_READ_FILE.FILE_NOT_EXIST`), so it is not safe beside
+  * a running chain.
   *
   * Each pass maintains the families that grow or drift:
   *   - silver part files: compacted (OPTIMIZE);
-  *   - serve batch directories: folded ([[graft.storage.TableFormat
-  *     .optimizeServe]]);
+  *   - serve batch directories: folded ([[Pipeline.compactServe]]);
   *   - the gold change feed: consumed versions vacuumed (cutoff derived
   *     from the serve checkpoint's committed progress when present,
   *     else the 168-version retention matching the reference's 168 h;
@@ -142,7 +139,6 @@ object Maintenance {
     val intervalSec = if (args.length > 1) args(1).toLong else 0L
     val spark = graft.GraftSession.local()
     val cfg = Pipeline.Config(baseDir)
-    val format = graft.storage.TableFormat.parquet
     // The shapes the forget pass rebuilds the build-once indexes with:
     // the gram width (SPARK_GRAFT_GRAM_INDEX_N), the IVF and PQ query
     // counts and centroid count (SPARK_GRAFT_IVF_NQ/_NC,
@@ -207,9 +203,9 @@ object Maintenance {
     do {
       uncovered().foreach(println)
       val t0 = System.nanoTime()
-      format.optimize(spark, cfg)
-      format.optimizeServe(spark, cfg)
-      format.vacuumChangeFeed(spark, cfg)
+      Pipeline.compactSilver(spark, cfg)
+      Pipeline.compactServe(spark, cfg)
+      Pipeline.vacuumGoldChanges(spark, cfg)
       val refroze = winsorDir.exists(d => graft.ops.Analytics
         .refreezeBoundsIndexIfNeeded(spark, d, winsorGroup))
       val forgetErased = forgetDir.map(d => graft.ext.Forget

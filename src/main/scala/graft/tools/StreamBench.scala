@@ -172,21 +172,20 @@ object StreamBench {
       sent += n
       batchNo += 1
       // periodic compaction (the OPTIMIZE analog) keeps the MERGE's
-      // target re-scan flat as the table grows. compactSilverAuto picks
-      // the full-chain-safe manifest variant when gold is streaming
-      // (rewrites land in compact-* names gold's glob filter ignores —
-      // the plain-parquet analog of Delta's dataChange=false OPTIMIZE).
+      // target re-scan flat as the table grows. With gold streaming,
+      // compactSilver rewrites only files gold committed, into compact-*
+      // names gold's glob filter ignores (the plain-parquet analog of
+      // Delta's dataChange=false OPTIMIZE).
       val compactEvery = sys.env.getOrElse("SPARK_GRAFT_COMPACT_EVERY", "0").toInt
       if (compactEvery > 0 && batchNo % compactEvery == 0) {
-        val fmt = graft.storage.TableFormat.parquet
-        fmt.optimize(spark, cfg)
+        Pipeline.compactSilver(spark, cfg)
         if (full) {
-          fmt.optimizeServe(spark, cfg) // keep serveSnapshot O(tail)
+          Pipeline.compactServe(spark, cfg) // keep serveSnapshot O(tail)
           // retention horizon on the change feed (the VACUUM analog):
           // serve-consumed versions beyond the floor are reclaimed, so
           // the feed's live tail — what a user-erase must stage — stays
           // bounded by the floor, not by the batch count so far
-          fmt.vacuumChangeFeed(spark, cfg,
+          Pipeline.vacuumGoldChanges(spark, cfg,
             keepVersions = 2 * compactEvery)
           // the flatness evidence: serving-view scan cost must track the
           // key count + uncompacted tail, NOT the batch count so far

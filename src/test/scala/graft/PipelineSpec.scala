@@ -209,16 +209,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("compactSilver coalesces files per bucket and preserves the data") {
     val cfg = freshCfg()
-    val input = MemoryStream[Event](12, spark, None)
-    val q = Pipeline.startSilver(spark, input.toDF(), cfg)
-    try {
-      val t0 = 1700000000000L
-      (1 to 3).foreach { b =>
-        input.addData((1 to 20).map(k => ev(s"c$b-$k", s"g${k % 3}", 1f,
-          t0 + b * 1000 + k)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    silverOnly(cfg, 12, 3)
     def files() = new java.io.File(cfg.silverPath).listFiles()
       .filter(_.getName.startsWith("hb="))
       .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
@@ -268,7 +259,7 @@ class PipelineSpec extends SparkTestBase {
     assert(spark.read.parquet(cfg.silverPath).count() == 3)
   }
 
-  test("compactSilverLive under a running gold stream: no double-fold, " +
+  test("compactSilver under a running gold stream: no double-fold, " +
     "no loss, fewer files") {
     val cfg = freshCfg()
     val input = MemoryStream[Event](32, spark, None)
@@ -291,7 +282,7 @@ class PipelineSpec extends SparkTestBase {
       val silverBefore = spark.read.parquet(cfg.silverPath)
         .orderBy("id").collect().map(_.toString).toSeq
 
-      Pipeline.compactSilverLive(spark, cfg)
+      Pipeline.compactSilver(spark, cfg)
 
       val filesAfter = silverFiles()
       assert(filesAfter < filesBefore,
@@ -314,11 +305,82 @@ class PipelineSpec extends SparkTestBase {
 
       // idempotent + converging: a second run with no new committed
       // part files may merge prior compact outputs but never changes data
-      Pipeline.compactSilverLive(spark, cfg)
+      Pipeline.compactSilver(spark, cfg)
       val silverFinal = spark.read.parquet(cfg.silverPath)
         .orderBy("id").collect().map(_.toString).toSeq
       assert(silverFinal.size == 50)
     } finally { silverQ.stop(); goldQ.stop() }
+  }
+
+  /** Silver written by `batches` micro-batches of 20 unique events over
+    * groups g0-g2, with no gold stage started: one part file per batch
+    * in the one hour bucket.
+    */
+  private def silverOnly(cfg: Pipeline.Config, memId: Int,
+                         batches: Int): Unit = {
+    val input = MemoryStream[Event](memId, spark, None)
+    val q = Pipeline.startSilver(spark, input.toDF(), cfg)
+    try {
+      val t0 = 1700000000000L
+      (1 to batches).foreach { b =>
+        input.addData((1 to 20).map(k => ev(s"c$b-$k", s"g${k % 3}", 1f,
+          t0 + b * 1000 + k)))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+  }
+
+  test("compactSilver replays a plan staged before a crash: the next run " +
+    "leaves the same rows once each and no manifest or staging dir") {
+    val cfg = freshCfg()
+    silverOnly(cfg, 42, 3)
+    val fs = new org.apache.hadoop.fs.Path(cfg.silverPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val manifest = new org.apache.hadoop.fs.Path(
+      cfg.silverPath + "_compact_manifest")
+    val tmp = new org.apache.hadoop.fs.Path(cfg.silverPath + "_compact_tmp")
+    def rows() = spark.read.parquet(cfg.silverPath)
+      .orderBy("id").collect().map(_.toString).toSeq
+    val before = rows()
+    // the crash: the plan is staged (rewrite + manifest), none of it run
+    assert(Pipeline.stageSilverCompaction(spark, fs, cfg, None))
+    assert(fs.exists(manifest) && fs.exists(tmp))
+    // the replay's first MOVE landed before the crash: a reader sees the
+    // rewritten rows beside the originals until the plan completes
+    val firstMove = Files.readAllLines(
+        java.nio.file.Paths.get(manifest.toUri.getPath)).toArray
+      .map(_.toString).find(_.startsWith("MOVE\t")).get.split('\t')
+    fs.rename(new org.apache.hadoop.fs.Path(firstMove(1)),
+      new org.apache.hadoop.fs.Path(firstMove(2)))
+    spark.catalog.refreshByPath(cfg.silverPath)
+    assert(rows().size == 2 * before.size)
+    Pipeline.compactSilver(spark, cfg)
+    val after = rows()
+    assert(after == before)
+    assert(spark.read.parquet(cfg.silverPath).select("id").distinct()
+      .count() == after.size, "a row survived twice")
+    assert(!fs.exists(manifest), "manifest left behind")
+    assert(!fs.exists(tmp), "staging dir left behind")
+  }
+
+  test("compactSilver with no gold stage keeps part- names: gold started " +
+    "afterwards folds every silver row exactly once") {
+    val cfg = freshCfg()
+    silverOnly(cfg, 43, 3)
+    Pipeline.compactSilver(spark, cfg)
+    val names = new java.io.File(cfg.silverPath).listFiles()
+      .filter(_.getName.startsWith("hb="))
+      .flatMap(_.listFiles()).map(_.getName).filter(_.endsWith(".parquet"))
+    assert(names.length == 1 && names.forall(_.startsWith("part-")),
+      names.toSeq.toString)
+    val goldQ = Pipeline.startGold(spark, cfg)
+    try goldQ.processAllAvailable() finally goldQ.stop()
+    val gold = spark.read.parquet(cfg.goldPath).collect()
+      .map(r => r.getAs[String]("group_id") -> r.getAs[Long]("event_count"))
+      .toMap
+    // 3 batches × 20 unique events: k % 3 puts 7, 7 and 6 of each batch
+    // in g1, g2 and g0
+    assert(gold == Map("g0" -> 18L, "g1" -> 21L, "g2" -> 21L), gold.toString)
   }
 
   test("gold fold is replay-safe via the batch-id marker") {
@@ -456,6 +518,11 @@ class PipelineSpec extends SparkTestBase {
         .orderBy("_id")
         .collect().map(_.toString).toSeq
       assert(streamed.nonEmpty && streamed == batch, s"\n$streamed\nvs\n$batch")
+      // one row per group, each event folded once and the duplicate none
+      val counts = Pipeline.serveSnapshot(spark, cfg).collect()
+        .map(r => r.getAs[String]("_id") -> r.getAs[Long]("event_count"))
+        .toMap
+      assert(counts == Map("g1" -> 2L, "g2" -> 2L), counts.toString)
     } finally qs.foreach(_.stop())
   }
 

@@ -116,6 +116,49 @@ class UserForgetSpec extends SparkTestBase {
     }
   }
 
+  test("an erase after gold ran but before serve ever started scrubs the " +
+    "change feed in place: a serve stage started afterwards serves no " +
+    "row of the erased user and every other group exactly") {
+    import spark.implicits._
+    val cfg = freshCfg()
+    val input = MemoryStream[Event](112, spark, None)
+    val silverQ = Pipeline.startSilver(spark, input.toDF(), cfg)
+    val t0 = 1700000000000L
+    try {
+      def silverThenGold(events: Event*): Unit = {
+        input.addData(events: _*)
+        silverQ.processAllAvailable()
+        val goldQ = Pipeline.startGold(spark, cfg)
+        try goldQ.processAllAvailable() finally goldQ.stop()
+      }
+      // two change-feed versions: inserts for g1-g3, then a pre- and
+      // postimage for g1 and g2
+      silverThenGold(
+        ev("e1", "g1", 1.5f, t0), ev("e2", "g2", 2.0f, t0 + 1000),
+        ev("e3", "g3", 4.0f, t0 + 2000))
+      silverThenGold(
+        ev("e4", "g2", 5.0f, t0 + 3000), ev("e5", "g1", 6.0f, t0 + 4000))
+      UserForget.forgetUsers(spark, cfg.baseDir, Seq("g2").toDF("group_id"))
+      assert(UserForget.applyForgetUsersIfNeeded(spark, cfg) == 2L)
+      val serveQ = Pipeline.startServe(spark, cfg)
+      try serveQ.processAllAvailable() finally serveQ.stop()
+      val cols = Seq("_id", "cumulative_score", "event_count",
+        "first_event_timestamp", "last_event_timestamp")
+      val served = Pipeline.serveSnapshot(spark, cfg)
+        .select(cols.map(col): _*).orderBy("_id").collect().toSeq
+      val gold = Pipeline.serveProjection(spark, cfg)
+        .select(cols.map(col): _*).orderBy("_id").collect().toSeq
+      assert(Pipeline.serveLog(spark, cfg)
+        .filter(col("group_id") === "g2").count() == 0L,
+        "serve read an erased user's change row")
+      assert(served.map(_.getString(0)) == Seq("g1", "g3"), served.toString)
+      assert(served == gold, s"\n$served\nvs\n$gold")
+    } finally {
+      silverQ.stop()
+      UserForget.purgeForgetUsersTable(spark, cfg.baseDir)
+    }
+  }
+
   test("req_ms log migration is crash-safe: the rewrite stages beside " +
     "the live log and swaps, and a crash in any window heals without " +
     "losing a pending deletion (ADVICE r16)") {
@@ -223,6 +266,38 @@ class UserForgetSpec extends SparkTestBase {
       assert(spark.read.option("basePath", cfg.goldPath)
         .parquet(cfg.goldPath).filter(col("group_id") === "u2")
         .count() == 0L)
+    } finally {
+      silverQ.stop()
+      UserForget.purgeForgetUsersTable(spark, cfg.baseDir)
+    }
+  }
+
+  test("drain guard: a gold checkpoint with no source log yet holds the " +
+    "apply back — compaction rewrites nothing there, and gold would fold " +
+    "the user back in — and the erase lands once gold has drained") {
+    import spark.implicits._
+    val cfg = freshCfg()
+    val input = MemoryStream[Event](113, spark, None)
+    val silverQ = Pipeline.startSilver(spark, input.toDF(), cfg)
+    val t0 = 1700000000000L
+    try {
+      input.addData(ev("e1", "u1", 1.0f, t0), ev("e2", "u2", 2.0f, t0 + 1000))
+      silverQ.processAllAvailable()
+      // what startGold leaves before its stream plans a batch
+      val fs = new org.apache.hadoop.fs.Path(cfg.baseDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(cfg.checkpoint("gold")))
+      UserForget.forgetUsers(spark, cfg.baseDir, Seq("u2").toDF("group_id"))
+      assert(UserForget.deferralReason(spark, cfg)
+        .contains("gold_owes_silver_files"))
+      assert(UserForget.applyForgetUsersIfNeeded(spark, cfg) == -2L)
+      val goldQ = Pipeline.startGold(spark, cfg)
+      try goldQ.processAllAvailable() finally goldQ.stop()
+      assert(UserForget.applyForgetUsersIfNeeded(spark, cfg) == 1L)
+      Seq(cfg.silverPath, cfg.goldPath).foreach { p =>
+        assert(spark.read.option("basePath", p).parquet(p)
+          .filter(col("group_id") === "u2").count() == 0L, p)
+      }
     } finally {
       silverQ.stop()
       UserForget.purgeForgetUsersTable(spark, cfg.baseDir)

@@ -40,6 +40,8 @@ ALLOWED = {
     ("Pipeline", "fromKafka"):
         "the reference's Kafka source, for a deployment that adds the "
         "spark-sql-kafka connector jar",
+    ("TableFormat", "TableFormat"):
+        "perfbench compiles against it",
 }
 
 
